@@ -105,15 +105,26 @@ object Bench {
       if (gc) { System.gc(); Thread.sleep(50) }
     }
 
-    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame, gc: Boolean): Double = {
+    // query -> exception class of its first failing run. A query whose
+    // first run fails reports -1 and stays out of the total; any query with
+    // a failing run is counted and named on both JSON lines, so a crash can
+    // never read as a faster suite
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+
+    def time(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+             gc: Boolean): Double = {
       isolate(gc)
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => return -1.0 }
+      try { fn(spark, sfDir).count() } catch {
+        case e: Throwable =>
+          failed.getOrElseUpdate(name, e.getClass.getName)
+          return -1.0
+      }
       (System.nanoTime() - t0) / 1e9
     }
 
     val results = ordered.map { case (name, fn) =>
-      val first = time(fn, gc = true)
+      val first = time(name, fn, gc = true)
       val measure =
         if (first < 0 || reps <= 1) first
         else {
@@ -132,13 +143,13 @@ object Bench {
             else reps - 1
           var runs = List(first)
           (1 to extraReps).foreach { _ =>
-            val r = time(fn, gc = false)
+            val r = time(name, fn, gc = false)
             if (r >= 0) runs ::= r
           }
           // stall flag: a >3x spread means at least one run caught a driver
           // stall — grant one extra (GC-preceded) retry before taking min
           if (runs.max > 3.0 * runs.min) {
-            val r = time(fn, gc = true)
+            val r = time(name, fn, gc = true)
             if (r >= 0) runs ::= r
           }
           runs.min
@@ -148,11 +159,13 @@ object Bench {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
+    val failures = s""""n_failed":${failed.size},"failed":""" +
+      failed.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }.mkString("{", ",", "}")
     // Field order matters operationally: the harness records only the tail of
     // stdout, and with 230+ per-query entries the line is ~6KB. Putting the
     // bulky `queries` map FIRST keeps metric/value/unit/sf inside the
     // captured tail (JSON object key order is semantically irrelevant).
-    val fullLine = s"""{"queries":$qs,"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","loadavg_before":"$loadBefore","cooldown":"$cooldownStatus","cooldown_waited_sec":${f"$cooldownWaitedSec%.1f"}}"""
+    val fullLine = s"""{"queries":$qs,"metric":"total","value":$total,"unit":"sec",$failures,"sf":"$sfDir","loadavg_before":"$loadBefore","cooldown":"$cooldownStatus","cooldown_waited_sec":${f"$cooldownWaitedSec%.1f"}}"""
     println(fullLine)
     // The ~12KB line above overflows the harness's stdout tail-capture (two
     // rounds of BENCH_r*.json carried parsed:null — the tail kept only the
@@ -164,7 +177,7 @@ object Bench {
       Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
       java.nio.file.Files.writeString(p, fullLine + "\n")
     } catch { case _: Throwable => () } // best-effort: cwd may not be the repo
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","cpus":"$cpus","n_queries":${results.size},"loadavg_before":"$loadBefore","cooldown":"$cooldownStatus","cooldown_waited_sec":${f"$cooldownWaitedSec%.1f"},"queries_file":"docs/bench_last.json"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec",$failures,"sf":"$sfDir","cpus":"$cpus","n_queries":${results.size},"loadavg_before":"$loadBefore","cooldown":"$cooldownStatus","cooldown_waited_sec":${f"$cooldownWaitedSec%.1f"},"queries_file":"docs/bench_last.json"}""")
     spark.stop()
   }
 }

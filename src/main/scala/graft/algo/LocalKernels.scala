@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.collection.mutable
@@ -53,6 +53,12 @@ object LocalKernels {
     * and the soak harness to pin the distributed formulation). */
   def isSmall(df: DataFrame): Boolean = gate(df)._2
 
+  /** The in-task size threshold `spark.graft.algo.localSizeBytes` (default
+    * 64 MB; `<= 0` disables every in-task route). One reader for the
+    * kernel gates here and the Cypher final-sort route in the Translator. */
+  def localSizeBytes(spark: SparkSession): Long =
+    spark.conf.get("spark.graft.algo.localSizeBytes", (64L << 20).toString).toLong
+
   /** Like [[isSmall]] but when the gray zone forces a count, the input is
     * localCheckpointed FIRST and the (possibly materialized) frame is
     * returned for downstream use — an expensive derived input (e.g. a
@@ -60,7 +66,7 @@ object LocalKernels {
     * whichever execution path wins, instead of twice. */
   def gate(df: DataFrame): (DataFrame, Boolean) = {
     val conf = df.sparkSession.conf
-    val sizeB = conf.get("spark.graft.algo.localSizeBytes", (64L << 20).toString).toLong
+    val sizeB = localSizeBytes(df.sparkSession)
     if (sizeB <= 0L) return (df, false)
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (est <= BigInt(sizeB)) (df, true)
@@ -104,7 +110,7 @@ object LocalKernels {
   def gateSuperlinear(df: DataFrame): (DataFrame, Boolean) = {
     val conf = df.sparkSession.conf
     val sizeB = conf.get("spark.graft.algo.localSizeBytesSuperlinear", (1L << 20).toString).toLong
-    val base = conf.get("spark.graft.algo.localSizeBytes", (64L << 20).toString).toLong
+    val base = localSizeBytes(df.sparkSession)
     if (sizeB <= 0L || base <= 0L) return (df, false)
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (est <= BigInt(sizeB)) (df, true)
@@ -207,7 +213,7 @@ object LocalKernels {
     }
   }
 
-  import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+  import org.apache.spark.sql.{Dataset, Encoder}
 
   private def oneRow(spark: SparkSession): Dataset[java.lang.Long] =
     spark.range(0, 1, 1, 1).as(org.apache.spark.sql.Encoders.LONG)
@@ -998,16 +1004,13 @@ object LocalKernels {
         // including sources absent from the edge set.
         pd.groupBy(_._1).toSeq.sortBy(_._1).iterator.flatMap { case (s, grp) =>
           val degenerate = grp.collect { case (a, b) if a == b => (a, b, 0L) }
-          val targets = grp.collect { case (a, b) if a != b => b }
+          // targets absent from the edge set can never be reached: resolve
+          // them first and skip the O(V + E) traversal when none remain
+          val targets = grp.collect { case (a, b) if a != b => vx.idOf.get(b).map(b -> _) }.flatten
           val resolved = vx.idOf.get(s) match {
             case Some(si) if targets.nonEmpty =>
               val (dist, _) = bfsFrom(si, n, off, tgt, maxDepth)
-              targets.flatMap { t =>
-                vx.idOf.get(t) match {
-                  case Some(ti) if dist(ti) >= 0 => Seq((s, t, dist(ti).toLong))
-                  case _ => Nil
-                }
-              }
+              targets.collect { case (t, ti) if dist(ti) >= 0 => (s, t, dist(ti).toLong) }
             case _ => Nil
           }
           degenerate.iterator ++ resolved.iterator

@@ -665,10 +665,10 @@ class AlgorithmsSpec extends SparkSpec {
       .map(r => (0 until 5).map(r.getLong)).toSet
     val want = adjm.keySet.map(s => oracle(s, 4)).toSet
     assert(got == want)
-    // steps > 4 routes the NARROW loop (no prefix carry, per-step pick
-    // branches + one reassembly aggregate) — pin it against the same naive
-    // oracle AND against the carry form on the shared prefix: the draws
-    // depend only on (step, current node), so walk(6).v1..v4 == walk(4)
+    // steps > 4 routes the packed single-array prefix carry (the walk so
+    // far rides in ONE array column) — pin it against the same naive
+    // oracle AND against the plain-column carry on the shared prefix: the
+    // draws depend only on (step, current node), so walk(6).v1..v4 == walk(4)
     val got6 = Algorithms.node2vecWalks(e, 6).collect()
       .map(r => (0 until 7).map(r.getLong)).toSet
     val want6 = adjm.keySet.map(s => oracle(s, 6)).toSet

@@ -84,7 +84,8 @@ class LocalKernelsSpec extends SparkSpec {
       val ids = e.select(col("src")).unionAll(e.select(col("dst")))
         .distinct().orderBy(col("src")).collect().map(_.getLong(0))
       val pairs = Seq((ids.head, ids.last), (ids.head, ids.head),
-        (ids(1), ids(ids.length / 2)), (ids.head, 999999L)) // absent endpoint
+        (ids(1), ids(ids.length / 2)), (ids.head, 999999L), // absent endpoint
+        (ids(2), 888888L)) // a source whose targets are all absent
       for (depth <- Seq(2, 5)) {
         val loc = sortedRows(LocalKernels.bidirBfs(e, pairs, depth))
         spark.conf.set("spark.graft.algo.localSizeBytes", "0")
