@@ -22,7 +22,6 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
 
     // Cool-down gate: two rounds running, the graded artifact stamped a
@@ -46,32 +45,7 @@ object Bench {
     }
     val cooldownWaitedSec = (System.nanoTime() - waitStart) / 1e9
     val cooldownStatus = if (cooled) "ok" else "proceeded_loaded_after_timeout"
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bound GraphX Pregel lineage (scc) — dir set in Algorithms.scc
-      .config("spark.graphx.pregel.checkpointInterval", "10")
-      // iterative operators emit many AQE plan events; bound the cost of
-      // stringifying plans (driver-side CPU, not execution)
-      .config("spark.sql.maxPlanStringLength", "32768")
-      .config("spark.ui.enabled", "false")
-      // see Verify: retained SQL-execution state (plans incl.) across a
-      // ~95-query suite is GBs of old-gen garbage — late queries go GC-bound
-      .config("spark.sql.ui.retainedExecutions", "2")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      // ContextCleaner drains broadcast/checkpoint blocks only after a
-      // driver GC; with a 32g heap full GCs are rare, and ~110 queries of
-      // accumulated blocks occasionally stall a random query for minutes.
-      // Default interval is 30min — far longer than the whole suite.
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
 
     // Machine-state stamp (r12 verdict task #5): the driver/builder spread
     // reached 20% purely from window drift, so the bench line carries the
@@ -177,7 +151,7 @@ object Bench {
       Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
       java.nio.file.Files.writeString(p, fullLine + "\n")
     } catch { case _: Throwable => () } // best-effort: cwd may not be the repo
-    println(s"""{"metric":"total","value":$total,"unit":"sec",$failures,"sf":"$sfDir","cpus":"$cpus","n_queries":${results.size},"loadavg_before":"$loadBefore","cooldown":"$cooldownStatus","cooldown_waited_sec":${f"$cooldownWaitedSec%.1f"},"queries_file":"docs/bench_last.json"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec",$failures,"sf":"$sfDir","cpus":"${GraftSession.cpus}","n_queries":${results.size},"loadavg_before":"$loadBefore","cooldown":"$cooldownStatus","cooldown_waited_sec":${f"$cooldownWaitedSec%.1f"},"queries_file":"docs/bench_last.json"}""")
     spark.stop()
   }
 }

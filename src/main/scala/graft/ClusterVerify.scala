@@ -136,26 +136,12 @@ object ClusterVerify {
     "q_bidir_bfs", "q_cypher_call_bidirbfs", "q_paragraph_dedup",
     "q_canonical_dedup")
 
-  private val sqlConfs: Map[String, String] = Map(
-    "spark.sql.extensions" -> "graft.GraftExtensions",
+  /** Both sessions: the common conf with parallelism pinned to 16. */
+  private val pinned: Map[String, String] = Map(
     "spark.sql.shuffle.partitions" -> "16",
-    "spark.default.parallelism" -> "16",
-    "spark.sql.session.timeZone" -> "UTC",
-    "spark.sql.adaptive.enabled" -> "true",
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.graphx.pregel.checkpointInterval" -> "10",
-    "spark.sql.maxPlanStringLength" -> "32768",
-    "spark.ui.enabled" -> "false",
-    "spark.sql.ui.retainedExecutions" -> "2",
-    "spark.cleaner.periodicGC.interval" -> "2min")
+    "spark.default.parallelism" -> "16")
 
-  private def withConfs(b: SparkSession.Builder): SparkSession.Builder =
-    sqlConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
-
-  def localSession(): SparkSession = {
-    val s = withConfs(SparkSession.builder().master("local[16]")).getOrCreate()
-    s.sparkContext.setLogLevel("WARN"); s
-  }
+  def localSession(): SparkSession = GraftSession.create("local[16]", pinned)
 
   /** 2 executor JVMs × 8 cores × 8 GiB. The graft classes reach executors
     * via spark.executor.extraClassPath (this class's own code source), and
@@ -180,13 +166,10 @@ object ClusterVerify {
       "java.base/sun.nio.ch", "java.base/sun.nio.cs",
       "java.base/sun.security.action", "java.base/sun.util.calendar")
       .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
-    val s = withConfs(SparkSession.builder()
-      .master("local-cluster[2,8,8192]")
-      .config("spark.executor.memory", "8g")
-      .config("spark.executor.extraClassPath", classesDir)
-      .config("spark.executor.extraJavaOptions", addOpens))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN"); s
+    GraftSession.create("local-cluster[2,8,8192]", pinned ++ Map(
+      "spark.executor.memory" -> "8g",
+      "spark.executor.extraClassPath" -> classesDir,
+      "spark.executor.extraJavaOptions" -> addOpens))
   }
 
   /** Canonical cell rendering with float rounding (7 sig figs) so partial

@@ -1,33 +1,70 @@
 package graft
 
-import graft.model.{GraphLoader, Tables}
-import graft.queries.{GraphQueries, PipelineQueries, Relational}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Join, Window}
+import org.apache.spark.sql.execution.joins.CartesianProductExec
+import org.apache.spark.sql.internal.SQLConf
 
 /** Dump `explain("formatted")` for representative catalog queries →
   * PLANS.md. The point is auditability of the SCALE properties: pushed
   * filters / pruned columns at the scans, broadcast vs shuffle joins,
   * whole-stage codegen spans, leaf (LogicalRDD) cuts inside iterative
-  * kernels. Usage: runMain graft.Plans <sfDir> <outFile>. */
+  * kernels. Usage: runMain graft.Plans <sfDir> <outFile>. Generation
+  * fails on a plan-shape regression ([[shapeViolations]]; PlanShapeSpec
+  * runs the same guards in the test suite). */
 object Plans {
+  /** Per-round bodies of the checkpoint-looped kernels: (catalog query,
+    * kernel as offered to RoundCapture, what to look for). */
+  val roundPicks: Seq[(String, String, String)] = Seq(
+    ("q_pagerank", "pagerank", "one vertex-sized rank-join-outdeg cut feeds the dangling broadcast 1-row aggregate AND the contribution join; update is a left join + projection"),
+    ("q_wcc", "wcc", "one edge-join + min aggregate (nbr minimum), one full-outer vertex merge - both vertex-sized exchanges, edge leaf reused"),
+    ("q_cdlp", "cdlp", "one label x edge join + (dst, label) count aggregate, argmax as struct-max hash aggregate - NO window over the graph"),
+    ("q_sssp", "sssp", "one dist x edge join + per-dst min aggregate + full-outer merge with least() - Bellman-Ford relaxation round"),
+    ("q_hits", "hits", "fused round: hub-sums x edge join + per-dst sum (auth sums) feeding a second edge join + per-src sum (hub sums) - one plan, no normalizer; the L1 divides ride once after the loop"),
+    ("q_louvain_moves", "louvain_moves", "ONE community-degree aggregate + ONE map-side-combined neighbor-community count + struct-max argmax - no windows, no driver value"),
+    ("q_louvain_levels", "louvain_weighted", "same shape as louvain_moves with weight sums over the CONTRACTED super-node graph (level 2)"))
+
+  /** The plan-shape guards; empty when `df`'s plan passes.
+    *
+    * A round body (`roundBody = true`, a RoundCapture frame) may hold no
+    * Window over the graph, no CartesianProduct, and no cross join unless
+    * one side has at most one row — a BroadcastNestedLoopJoin is legal ONLY
+    * as the crossJoin(broadcast(<no-grouping aggregate>)) scalar ride.
+    *
+    * Any other plan (the node2vec walk loop: one lazy plan with no per-hop
+    * checkpoints, so its final plan IS the per-hop audit) may hold no
+    * UNPARTITIONED Window: every window must be partitioned by the walker
+    * key (one walker's candidate list per partition, bounded by max degree,
+    * never a global sort). A window itself is allowed there: the r15
+    * same-JVM A/B measured the aggregate-HOF pick 5x slower than the
+    * partitioned window (OPTIMIZATION_r15.md). */
+  def shapeViolations(df: DataFrame, roundBody: Boolean): Seq[String] = {
+    val logical = df.queryExecution.optimizedPlan.collect {
+      case _: Window if roundBody => "a Window"
+      case w: Window if w.partitionSpec.isEmpty => "an unpartitioned (global) Window"
+      case j: Join if roundBody && j.condition.isEmpty &&
+          !(j.left.maxRows.exists(_ <= 1) || j.right.maxRows.exists(_ <= 1)) =>
+        "a cross join with no <=1-row side"
+    }
+    val physical =
+      if (!roundBody) Nil
+      else df.queryExecution.sparkPlan.collectWithSubqueries {
+        case _: CartesianProductExec => "a CartesianProduct"
+      }
+    (logical ++ physical).distinct
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     // the dumps audit the DISTRIBUTED shapes — at sf0.001 every gated
     // kernel would otherwise route in-task and the plan would be one
-    // opaque mapPartitions (same pin as the soak harness)
-    spark.conf.set("spark.graft.algo.localSizeBytes", "0")
+    // opaque mapPartitions (same pin as the soak harness). Plan strings
+    // stay whole: the longest dump (q_pipeline_e2e) exceeds the common cap.
+    val spark = GraftSession.create(conf = Map(
+      "spark.graft.algo.localSizeBytes" -> "0",
+      SQLConf.MAX_PLAN_STRING_LENGTH.key -> SQLConf.MAX_PLAN_STRING_LENGTH.defaultValueString))
+    spark.sparkContext.setLogLevel("ERROR")
 
     val picks: Seq[(String, String)] = Seq(
       "q_scan_filter" -> "label scan + pushed predicate: PushedFilters reach the parquet scan; only referenced columns in ReadSchema",
@@ -85,21 +122,10 @@ object Plans {
       "above it; full inventory in SURVEY.md §2.\n")
     picks.foreach { case (name, note) =>
       val df = SparkEntry.queries(name)(spark, sfDir)
-      // the walk loop is one lazy plan (no per-hop checkpoints), so the
-      // final dump IS the per-hop audit: every Window must be partitioned
-      // by the walker key (one walker's candidate list per partition —
-      // bounded by max degree, never a global sort); generation fails on
-      // an UNPARTITIONED window. The r14 "no window at all" assertion is
-      // gone deliberately: the r15 same-JVM A/B measured the
-      // aggregate-HOF pick 5× slower than the partitioned window
-      // (OPTIMIZATION_r15.md), so the window is the optimized form.
-      if (name == "q_node2vec_walks")
-        df.queryExecution.optimizedPlan.foreach {
-          case w: org.apache.spark.sql.catalyst.plans.logical.Window
-              if w.partitionSpec.isEmpty =>
-            sys.error("[plans] q_node2vec_walks contains a GLOBAL window — per-walker partitioning regressed")
-          case _ =>
-        }
+      if (name == "q_node2vec_walks") {
+        val bad = shapeViolations(df, roundBody = false)
+        require(bad.isEmpty, s"[plans] $name contains ${bad.mkString(", ")} — per-walker partitioning regressed")
+      }
       sb.append(s"\n## $name\n\n$note\n\n```\n")
       sb.append(df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
@@ -111,17 +137,7 @@ object Plans {
     // plan above collapses to `Scan ExistingRDD` and pins NOTHING about the
     // loop. RoundCapture grabs round 2's PRE-checkpoint DataFrame (its
     // inputs are themselves round-1 leaves) while the catalog query runs;
-    // the dumps below are the audited per-round shapes, and generation
-    // FAILS if any round body contains a Window over the graph, a
-    // CartesianProduct, or a BroadcastNestedLoopJoin.
-    val roundPicks: Seq[(String, String, String)] = Seq(
-      ("q_pagerank", "pagerank", "one vertex-sized rank-join-outdeg cut feeds the dangling broadcast 1-row aggregate AND the contribution join; update is a left join + projection"),
-      ("q_wcc", "wcc", "one edge-join + min aggregate (nbr minimum), one full-outer vertex merge - both vertex-sized exchanges, edge leaf reused"),
-      ("q_cdlp", "cdlp", "one label x edge join + (dst, label) count aggregate, argmax as struct-max hash aggregate - NO window over the graph"),
-      ("q_sssp", "sssp", "one dist x edge join + per-dst min aggregate + full-outer merge with least() - Bellman-Ford relaxation round"),
-      ("q_hits", "hits", "fused round: hub-sums x edge join + per-dst sum (auth sums) feeding a second edge join + per-src sum (hub sums) - one plan, no normalizer; the L1 divides ride once after the loop"),
-      ("q_louvain_moves", "louvain_moves", "ONE community-degree aggregate + ONE map-side-combined neighbor-community count + struct-max argmax - no windows, no driver value"),
-      ("q_louvain_levels", "louvain_weighted", "same shape as louvain_moves with weight sums over the CONTRACTED super-node graph (level 2)"))
+    // the dumps below are the audited per-round shapes.
     sb.append("\n# Round bodies — iterative kernels, round 2 pre-checkpoint\n\n")
     sb.append("Captured via graft.algo.RoundCapture while the catalog query " +
       "builds its (eagerly checkpointing) loop; audited here: no Window / " +
@@ -132,22 +148,11 @@ object Plans {
       }
       val df = caps.getOrElse(kernel,
         sys.error(s"[plans] round capture missing for kernel '$kernel' via $query"))
+      val bad = shapeViolations(df, roundBody = true)
+      require(bad.isEmpty,
+        s"[plans] round body of '$kernel' contains ${bad.mkString(", ")} — per-round shape regression")
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      require(!plan.contains("CartesianProduct"),
-        s"[plans] round body of '$kernel' contains CartesianProduct — per-round shape regression")
-      // windows over the graph and non-scalar cross joins are the
-      // regressions this gate exists for; a BroadcastNestedLoopJoin is
-      // legal ONLY as the crossJoin(broadcast(<no-grouping aggregate>))
-      // scalar ride (logical maxRows <= 1 on one side)
-      df.queryExecution.optimizedPlan.foreach {
-        case _: org.apache.spark.sql.catalyst.plans.logical.Window =>
-          sys.error(s"[plans] round body of '$kernel' contains a Window — per-round shape regression")
-        case j: org.apache.spark.sql.catalyst.plans.logical.Join if j.condition.isEmpty =>
-          require(j.left.maxRows.exists(_ <= 1) || j.right.maxRows.exists(_ <= 1),
-            s"[plans] round body of '$kernel' has a cross join with no <=1-row side — per-round shape regression")
-        case _ =>
-      }
       sb.append(s"\n## round-body: $kernel (via $query)\n\n$note\n\n```\n")
       sb.append(plan)
       sb.append("\n```\n")

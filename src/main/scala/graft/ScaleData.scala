@@ -66,13 +66,7 @@ object ScaleData {
     val n = if (args.length > 2) args(2).toInt else 10
     require(n * CopyOff < graft.model.GraphLoader.OrderOff,
       s"copy offset overflows the order id space at n=$n")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     scaleDir(spark, src, dst, n)
     println(s"scaled $src -> $dst x$n")
   }

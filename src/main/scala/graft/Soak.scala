@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** 10× scale soak: union-scales the sf0.1 fixtures into N disjoint copies
@@ -28,25 +28,11 @@ object Soak {
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val scaleN = sys.env.getOrElse("SPARK_GRAFT_SOAK_SCALE", "10").toInt
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions").master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ui.retainedExecutions", "2")
-      .config("spark.sql.maxPlanStringLength", "32768")
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      // GraphX Pregel (scc) lineage grows with iterations; periodic
-      // checkpointing bounds it (needs a checkpoint dir, set below)
-      .config("spark.graphx.pregel.checkpointInterval", "10")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.algo.Algorithms.ensureCheckpointDir(spark,
-      s"${System.getProperty("java.io.tmpdir")}/graft_soak_ckpt")
     // the soak certifies the DISTRIBUTED formulations scale — pin them so
     // the small-graph in-task fast path (LocalKernels) never routes here
-    spark.conf.set("spark.graft.algo.localSizeBytes", "0")
+    val spark = GraftSession.create(conf = Map("spark.graft.algo.localSizeBytes" -> "0"))
+    graft.algo.Algorithms.ensureCheckpointDir(spark,
+      s"${System.getProperty("java.io.tmpdir")}/graft_soak_ckpt")
     import spark.implicits._
 
     val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_soak"

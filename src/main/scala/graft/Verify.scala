@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,35 +7,7 @@ object Verify {
     val sfDir = args(0); val outDir = args(1)
     // optional 3rd+ args: restrict to these query names (local iteration)
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.ts is TIMESTAMP(NANOS) parquet — read as long, normalized
-      // to a timestamp in graft.model.Tables
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bound GraphX Pregel lineage (scc) — dir set in Algorithms.scc
-      .config("spark.graphx.pregel.checkpointInterval", "10")
-      // iterative operators emit many AQE plan events; bound plan-string cost
-      .config("spark.sql.maxPlanStringLength", "32768")
-      .config("spark.ui.enabled", "false")
-      // the SQL status store retains up to 1000 executions INCLUDING their
-      // plan graphs — iterative queries produce huge plans, and across a
-      // ~95-query suite the retained state becomes GBs of old-gen garbage
-      // that makes late-suite queries 10-40x slower (GC-bound). Retain
-      // almost nothing: this is a batch driver, not a UI server.
-      .config("spark.sql.ui.retainedExecutions", "2")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      // see Bench: force periodic driver GC so the ContextCleaner actually
-      // drains accumulated broadcast/checkpoint blocks during the suite
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     CodegenTripwire.install() // fail loudly on silent interpreted fallback
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.toSeq.sortBy(_._1)

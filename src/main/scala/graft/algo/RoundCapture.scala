@@ -2,11 +2,12 @@ package graft.algo
 
 import org.apache.spark.sql.DataFrame
 
-/** Debug hook for [[graft.Plans]]: iterative kernels offer each round's
-  * PRE-CHECKPOINT DataFrame here so the per-round plan shape can be dumped
-  * and audited. Without it the shape is invisible — every distributed loop
-  * round ends in a localCheckpoint, so the final plan PLANS.md sees
-  * collapses to `Scan ExistingRDD → ...` and pins nothing about the loop.
+/** Audit hook for [[graft.Plans]] and PlanShapeSpec: iterative kernels
+  * offer each round's PRE-CHECKPOINT DataFrame here so the per-round plan
+  * shape can be dumped and audited. Without it the shape is invisible —
+  * every distributed loop round ends in a localCheckpoint, so the final
+  * plan PLANS.md sees collapses to `Scan ExistingRDD → ...` and pins
+  * nothing about the loop.
   *
   * Round 2 is the canonical capture: its inputs are themselves round-1
   * leaves, so the captured plan is exactly ONE round's operators over

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -32,22 +33,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+  lazy val session: SparkSession =
+    // fixed local[4] whatever the host. Plan strings stay uncapped: specs
+    // measure and grep them (WriteChainSpec's plan-growth sizes, the
+    // optimizedPlan.toString checks in PlannerSpec and WcoSpec, one of them
+    // that an operator is absent), and a truncated string could pass them
+    // vacuously.
+    GraftSession.create("local[4]", Map(
+      "spark.app.name" -> "graft-test",
+      "spark.sql.shuffle.partitions" -> "4",
+      SQLConf.MAX_PLAN_STRING_LENGTH.key -> SQLConf.MAX_PLAN_STRING_LENGTH.defaultValueString,
       // FAIR so ConcurrencySpec's per-thread scheduler pools are real
       // (under FIFO the pool local property is a no-op); with no
       // allocation file every pool gets default weight — serial suites
       // see FIFO-identical behavior
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+      "spark.scheduler.mode" -> "FAIR"))
 }

@@ -13,8 +13,8 @@
 #   4. prints each run's headline seconds and the min ("the number").
 #
 # Usage: tools/bench_quiet.sh [runs] [sfdir]
-#   SPARK_GRAFT_CPUS (default 32) and SPARK_GRAFT_BENCH_REPS (default 3)
-#   pass through to graft.Bench.
+#   SPARK_GRAFT_CPUS (default: the host's cores) and SPARK_GRAFT_BENCH_REPS
+#   (default 3) pass through to graft.Bench.
 set -e
 cd "$(dirname "$0")/.."
 RUNS="${1:-3}"
@@ -36,7 +36,7 @@ echo "residual JVMs: $REMAIN (want 0)"
 for i in $(seq 1 "$RUNS"); do
   echo "=== run $i/$RUNS ==="
   uptime
-  SPARK_GRAFT_SF_DIR="$SFDIR" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
+  SPARK_GRAFT_SF_DIR="$SFDIR" \
     tools/run_main.sh graft.Bench > "$OUT/run$i.json" 2>"$OUT/run$i.log" || {
       echo "run $i FAILED (see $OUT/run$i.log)"; continue; }
   grep -o '"value":[0-9.]*' "$OUT/run$i.json" | tail -1

@@ -1,5 +1,6 @@
 #!/bin/bash
-# Run a graft main class outside sbt (same JVM options as build.sbt fork).
+# Run a graft main class outside sbt (same JVM options as build.sbt fork;
+# Spark confs come from graft.GraftSession, engine confs from -Dspark.graft.*).
 # Usage: tools/run_main.sh graft.Verify <args...>
 set -e
 CP="/root/repo/target/scala-2.13/classes:$(ls -d /opt/spark/jars/* | tr '\n' ':')"
@@ -15,6 +16,4 @@ MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print 
 # -Xss: GraphX Pregel (scc) builds deep closure/lineage chains; the 1 MB
 # default thread stack overflows during task serialization at 10x soak
 # scale when earlier kernels already ran in the same JVM
-exec java -Xmx$MEM -Xss${SPARK_DRIVER_STACK:-16m} $OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CP" "$@"
+exec java -Xmx$MEM -Xss${SPARK_DRIVER_STACK:-16m} $OPENS -cp "$CP" "$@"
