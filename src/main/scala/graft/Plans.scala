@@ -14,15 +14,26 @@ import org.apache.spark.sql.internal.SQLConf
   * runs the same guards in the test suite). */
 object Plans {
   /** Per-round bodies of the checkpoint-looped kernels: (catalog query,
-    * kernel as offered to RoundCapture, what to look for). */
-  val roundPicks: Seq[(String, String, String)] = Seq(
-    ("q_pagerank", "pagerank", "one vertex-sized rank-join-outdeg cut feeds the dangling broadcast 1-row aggregate AND the contribution join; update is a left join + projection"),
-    ("q_wcc", "wcc", "one edge-join + min aggregate (nbr minimum), one full-outer vertex merge - both vertex-sized exchanges, edge leaf reused"),
-    ("q_cdlp", "cdlp", "one label x edge join + (dst, label) count aggregate, argmax as struct-max hash aggregate - NO window over the graph"),
-    ("q_sssp", "sssp", "one dist x edge join + per-dst min aggregate + full-outer merge with least() - Bellman-Ford relaxation round"),
-    ("q_hits", "hits", "fused round: hub-sums x edge join + per-dst sum (auth sums) feeding a second edge join + per-src sum (hub sums) - one plan, no normalizer; the L1 divides ride once after the loop"),
-    ("q_louvain_moves", "louvain_moves", "ONE community-degree aggregate + ONE map-side-combined neighbor-community count + struct-max argmax - no windows, no driver value"),
-    ("q_louvain_levels", "louvain_weighted", "same shape as louvain_moves with weight sums over the CONTRACTED super-node graph (level 2)"))
+    * kernel as offered to RoundCapture, audited round, what to look for).
+    * The audited round is 2 except for q_ktruss, whose co-purchase slice
+    * already is a 5-truss at sf0.001 (minimum edge support 13), so its
+    * loop stops after round 1 there. */
+  val roundPicks: Seq[(String, String, Int, String)] = Seq(
+    ("q_pagerank", "pagerank", 2, "the last round's vertex-sized rank-join-outdeg leaf feeds the dangling broadcast 1-row aggregate AND the contribution join; update is a left join + projection, joined to out-degree again for the next round's leaf"),
+    ("q_wcc", "wcc", 2, "one edge-join + min aggregate (nbr minimum), one full-outer vertex merge - both vertex-sized exchanges, edge leaf reused"),
+    ("q_cdlp", "cdlp", 2, "one label x edge join + (dst, label) count aggregate, argmax as struct-max hash aggregate - NO window over the graph"),
+    ("q_sssp", "sssp", 2, "one dist x edge join + per-dst min aggregate + full-outer merge with least() - Bellman-Ford relaxation round"),
+    ("q_hits", "hits", 2, "fused round: hub-sums x edge join + per-dst sum (auth sums) feeding a second edge join + per-src sum (hub sums) - one plan, no normalizer; the L1 divides ride once after the loop"),
+    ("q_louvain_moves", "louvain_moves", 2, "ONE community-degree aggregate + ONE map-side-combined neighbor-community count + struct-max argmax - no windows, no driver value"),
+    ("q_louvain_levels", "louvain_weighted", 2, "same shape as louvain_moves with weight sums over the CONTRACTED super-node graph (level 2)"),
+    ("q_pagerank_weighted", "pagerank_weighted", 2, "same loop as pagerank with weight sums: contribution = rank / out-weight x edge weight"),
+    ("q_ppr", "ppr", 2, "same loop as pagerank with the teleport and dangling shares landing on the seeds (an IN predicate, no join)"),
+    ("q_bfs", "bfs", 2, "one frontier x edge join + distinct + left-anti join against the union of earlier level leaves"),
+    ("q_harmonic_centrality", "harmonic", 2, "multi-source BFS: the (seed, node) frontier x edge join + distinct + left-anti join on (seed, node) against earlier levels - all seeds in one join"),
+    ("q_betweenness", "betweenness", 2, "Brandes forward level: frontier x edge join, left-anti join against earlier levels, sigma summed per (seed, node) in one hash aggregate"),
+    ("q_bidir_bfs", "bidir_bfs", 2, "both (pair, side) frontiers in one join against the symmetrized edge leaf + min-dist aggregate + left-anti join against the visited levels"),
+    ("q_kcore", "kcore", 2, "one degree hash aggregate on the kept edges, joined back onto both endpoints to mark the edges that stay"),
+    ("q_ktruss", "ktruss", 1, "per-edge support: degree-oriented adjacency intersection + one exploded hash aggregate charging each triangle to its 3 edges, joined back onto the edge leaf"))
 
   /** The plan-shape guards; empty when `df`'s plan passes.
     *
@@ -136,24 +147,25 @@ object Plans {
     // Every distributed loop round ends in a localCheckpoint, so the final
     // plan above collapses to `Scan ExistingRDD` and pins NOTHING about the
     // loop. RoundCapture grabs round 2's PRE-checkpoint DataFrame (its
-    // inputs are themselves round-1 leaves) while the catalog query runs;
-    // the dumps below are the audited per-round shapes.
-    sb.append("\n# Round bodies — iterative kernels, round 2 pre-checkpoint\n\n")
+    // inputs are themselves round-1 leaves; round 1 where the pick names
+    // it) while the catalog query runs; the dumps below are the audited
+    // per-round shapes.
+    sb.append("\n# Round bodies — iterative kernels, pre-checkpoint\n\n")
     sb.append("Captured via graft.algo.RoundCapture while the catalog query " +
       "builds its (eagerly checkpointing) loop; audited here: no Window / " +
       "CartesianProduct / BroadcastNestedLoopJoin in any round body.\n")
-    roundPicks.foreach { case (query, kernel, note) =>
+    roundPicks.foreach { case (query, kernel, round, note) =>
       val caps = graft.algo.RoundCapture.capturing {
         SparkEntry.queries(query)(spark, sfDir)
       }
-      val df = caps.getOrElse(kernel,
-        sys.error(s"[plans] round capture missing for kernel '$kernel' via $query"))
+      val df = caps.getOrElse((kernel, round),
+        sys.error(s"[plans] round-$round capture missing for kernel '$kernel' via $query"))
       val bad = shapeViolations(df, roundBody = true)
       require(bad.isEmpty,
         s"[plans] round body of '$kernel' contains ${bad.mkString(", ")} — per-round shape regression")
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      sb.append(s"\n## round-body: $kernel (via $query)\n\n$note\n\n```\n")
+      sb.append(s"\n## round-body: $kernel round $round (via $query)\n\n$note\n\n```\n")
       sb.append(plan)
       sb.append("\n```\n")
     }

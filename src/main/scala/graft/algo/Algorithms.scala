@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
@@ -11,17 +11,17 @@ import org.apache.spark.storage.StorageLevel
   * programs rather than a port of the reference's CSR kernels.
   *
   * Design for scale: every iteration is a shuffle-join on the edge table
-  * keyed by src/dst — the natural distributed formulation; lineage is cut
-  * each round with localCheckpoint (eager) so N iterations do not build an
-  * N-deep plan; intermediate frontiers persist MEMORY_AND_DISK for spill
-  * safety at 100 TB.
+  * keyed by src/dst — the natural distributed formulation. The loops run
+  * on [[Rounds]], which cuts each round to an eager localCheckpoint leaf
+  * (so N iterations do not build an N-deep plan), offers the round to
+  * [[RoundCapture]] and probes the leaf for emptiness to halt.
   *
   * Inputs are edge DataFrames with `src`/`dst` (+ optional `weight`) columns.
   */
 object Algorithms {
 
   /** Observability for the fixpoint early-exit specs ONLY: the round index
-    * the most recent louvainMoves*Distributed call last executed (< its
+    * the most recent distributed Louvain move loop last executed (< its
     * `rounds` argument exactly when the two-no-move-round fixpoint fired).
     * Plain volatile — specs run their assertions single-threaded. */
   @volatile private[graft] var lastLouvainMoveRounds: Int = 0
@@ -77,67 +77,15 @@ object Algorithms {
   }
 
   private[graft] def pageRankDistributed(edges: DataFrame, iterations: Int = 20,
-                                         damping: Double = 0.85): DataFrame = {
-    val spark = edges.sparkSession
-    // hash-partition the edge table by join key ONCE (iterations reuse the
-    // partitioning), and cut it to a LEAF with an eager localCheckpoint
-    // (LogicalRDD keeps the partitioning). persist() would keep the full
-    // lineage inside an InMemoryRelation: every iteration's plan then nests
-    // it several times, and AQE re-stringifies the whole tree per stage
-    // update (regex per node, single-threaded on the driver) — plan-string
-    // building, not execution, became the bottleneck at 8 iterations.
-    val e = edges.select(col("src").as("_esrc"), col("dst").as("_edst"))
-      .repartition(col("_esrc"))
-      .localCheckpoint(true)
-    val v = e.select(col("_esrc").as("id")).unionAll(e.select(col("_edst").as("id")))
-      .distinct().localCheckpoint(true)
-    val n = v.count().toDouble
-    val outDeg = e.groupBy(col("_esrc")).agg(count(lit(1)).as("deg"))
-      .withColumnRenamed("_esrc", "_degid").localCheckpoint(true)
-    var ranks = v.withColumn("rank", lit(1.0 / n))
-    for (i <- 1 to iterations) {
-      // withDeg feeds BOTH the dangling-mass aggregate and the contribs join —
-      // one eager leaf materialization (vertex-sized, small) instead of
-      // recomputing the rank+degree join twice or persist/unpersist churn.
-      // (Round 5 measured the every-other-round cut here: the doubly-
-      // referenced recompute on uncut rounds costs MORE than the job
-      // boundary it saves — 4.45s vs 3.9s at sf0.1 — so unlike CDLP's
-      // single-consumer chain, this stays a per-round cut.)
-      val withDeg = ranks.join(outDeg, col("id") === col("_degid"), "left")
-        .select(col("id"), col("rank"), col("deg"))
-        .localCheckpoint(true)
-      // mass of dangling nodes (no out-edges), spread uniformly — computed
-      // INSIDE the plan (broadcast 1-row aggregate), not as a driver action:
-      // one job per iteration instead of three
-      val danglingDf = withDeg.filter(col("deg").isNull)
-        .agg(coalesce(sum(col("rank")), lit(0.0)).as("_dmass"))
-      val contribs = withDeg.filter(col("deg").isNotNull)
-        .select(col("id"), (col("rank") / col("deg")).as("c"))
-        .join(e, col("id") === col("_esrc"))
-        .groupBy(col("_edst")).agg(sum(col("c")).as("recv"))
-        .withColumnRenamed("_edst", "vid")
-      ranks = v.join(contribs, col("id") === col("vid"), "left")
-        .crossJoin(broadcast(danglingDf))
-        .select(col("id"),
-          (lit((1 - damping) / n) + lit(damping) *
-            (coalesce(col("recv"), lit(0.0)) + col("_dmass") / n)).as("rank"))
-      // no checkpoint here: the NEXT round's withDeg cut already truncates
-      // lineage once per round — a second per-round materialization of the
-      // vertex-sized ranks table is pure checkpoint-write overhead (and at
-      // 100x the per-round block writes are the bottleneck, per round-2)
-      RoundCapture.offer("pagerank", i, ranks)
-    }
-    ranks
-  }
+                                         damping: Double = 0.85): DataFrame =
+    pageRankRounds("pagerank",
+      edges.select(col("src"), col("dst"), lit(1.0).as("weight")), iterations, damping)
 
   /** WEIGHTED PageRank (the GDS relationshipWeightProperty variant; the
     * reference's pageRank is unweighted): a vertex distributes its rank
     * over out-edges proportionally to edge weight — contribution =
-    * rank · w(e) / W(v) with W(v) the out-weight sum. Same audited plan
-    * shape as [[pageRankDistributed]]: the weighted edge relation shuffles
-    * ONCE into a checkpointed leaf, each round cuts one vertex-sized
-    * rank⋈out-weight table feeding both the dangling-mass broadcast 1-row
-    * aggregate and the contribution join. Input: (src, dst, weight > 0). */
+    * rank · w(e) / W(v) with W(v) the out-weight sum; [[pageRank]] is the
+    * weight-1 case of the same loop. Input: (src, dst, weight > 0). */
   def pageRankWeighted(edges: DataFrame, iterations: Int = 20,
                        damping: Double = 0.85): DataFrame = {
     // small inputs route in-task like the unweighted twin — the per-round
@@ -149,55 +97,18 @@ object Algorithms {
   }
 
   private[graft] def pageRankWeightedDistributed(edges: DataFrame, iterations: Int = 20,
-                                                 damping: Double = 0.85): DataFrame = {
-    // weight > 0 enforced by FILTER, not assumption: a null/zero weight
-    // carries no walk probability, so the edge is simply not an edge —
-    // without the filter a null weight nulls rank/W(v) and the sum()
-    // silently LEAKS that vertex's rank mass every iteration (neither
-    // dangling nor contributing)
-    val e = edges.select(col("src").as("_esrc"), col("dst").as("_edst"),
-      col("weight").cast("double").as("_ew"))
-      .filter(col("_ew") > 0)
-      .repartition(col("_esrc"))
-      .localCheckpoint(true)
-    val v = e.select(col("_esrc").as("id")).unionAll(e.select(col("_edst").as("id")))
-      .distinct().localCheckpoint(true)
-    val n = v.count().toDouble
-    val outW = e.groupBy(col("_esrc")).agg(sum(col("_ew")).as("_ow"))
-      .withColumnRenamed("_esrc", "_owid").localCheckpoint(true)
-    var ranks = v.withColumn("rank", lit(1.0 / n))
-    for (_ <- 1 to iterations) {
-      val withW = ranks.join(outW, col("id") === col("_owid"), "left")
-        .select(col("id"), col("rank"), col("_ow"))
-        .localCheckpoint(true)
-      val danglingDf = withW.filter(col("_ow").isNull)
-        .agg(coalesce(sum(col("rank")), lit(0.0)).as("_dmass"))
-      val contribs = withW.filter(col("_ow").isNotNull)
-        .select(col("id"), (col("rank") / col("_ow")).as("_rw"))
-        .join(e, col("id") === col("_esrc"))
-        .groupBy(col("_edst")).agg(sum(col("_rw") * col("_ew")).as("recv"))
-        .withColumnRenamed("_edst", "vid")
-      ranks = v.join(contribs, col("id") === col("vid"), "left")
-        .crossJoin(broadcast(danglingDf))
-        .select(col("id"),
-          (lit((1 - damping) / n) + lit(damping) *
-            (coalesce(col("recv"), lit(0.0)) + col("_dmass") / n)).as("rank"))
-    }
-    ranks
-  }
+                                                 damping: Double = 0.85): DataFrame =
+    pageRankRounds("pagerank_weighted", edges, iterations, damping)
 
   /** Personalized PageRank: teleport AND dangling mass return to the SEED
     * set (uniform over seeds) instead of all vertices — the
     * recommendation/similarity variant (beyond parity: the reference ships
-    * only global pageRank). Same per-round shape as
-    * [[pageRankDistributed]]: edges hash-partitioned once and cut to a
-    * leaf, one vertex-sized eager cut per round feeding both the
-    * dangling-mass aggregate and the contribs join, dangling mass as a
-    * broadcast 1-row aggregate inside the plan. Seeds are a k-bounded
-    * literal list (an IN predicate), not a join — callers pass a handful
-    * of ids. Fixed iteration count, so a DuckDB oracle unrolls the same
-    * rounds as chained CTEs (like pageRank). Small inputs route to the
-    * in-task kernel ([[LocalKernels.personalizedPageRank]]). */
+    * only global pageRank). Same loop as [[pageRank]] with the teleport
+    * share moved onto the seeds. Seeds are a k-bounded literal list (an IN
+    * predicate), not a join — callers pass a handful of ids. Fixed
+    * iteration count, so a DuckDB oracle unrolls the same rounds as chained
+    * CTEs (like pageRank). Small inputs route to the in-task kernel
+    * ([[LocalKernels.personalizedPageRank]]). */
   def personalizedPageRank(edges: DataFrame, seeds: Seq[Long],
                            iterations: Int = 8,
                            damping: Double = 0.85): DataFrame = {
@@ -211,40 +122,72 @@ object Algorithms {
   }
 
   private[graft] def personalizedPageRankDistributed(
-      edges: DataFrame, seeds0: Seq[Long],
-      iterations: Int, damping: Double): DataFrame = {
-    val seeds = seeds0.distinct
-    val e = edges.select(col("src").as("_esrc"), col("dst").as("_edst"))
+      edges: DataFrame, seeds: Seq[Long],
+      iterations: Int, damping: Double): DataFrame =
+    pageRankRounds("ppr", edges.select(col("src"), col("dst"), lit(1.0).as("weight")),
+      iterations, damping, seeds.distinct)
+
+  /** The one distributed PageRank loop: damped power iteration over
+    * (src, dst, weight) with dangling-mass redistribution. Random jumps and
+    * dangling mass land uniformly on every vertex, or on `seeds` when given
+    * (personalized). Weight ≤ 0 or null is not an edge: without the filter
+    * a null weight nulls rank/W(v) and the sum() silently LEAKS that
+    * vertex's rank mass every iteration (neither dangling nor
+    * contributing). */
+  private def pageRankRounds(kernel: String, edges: DataFrame, iterations: Int,
+                             damping: Double, seeds: Seq[Long] = Nil): DataFrame = {
+    // hash-partition the edge table by join key ONCE (iterations reuse the
+    // partitioning), and cut it to a LEAF with an eager localCheckpoint
+    // (LogicalRDD keeps the partitioning). persist() would keep the full
+    // lineage inside an InMemoryRelation: every iteration's plan then nests
+    // it several times, and AQE re-stringifies the whole tree per stage
+    // update (regex per node, single-threaded on the driver) — plan-string
+    // building, not execution, became the bottleneck at 8 iterations.
+    val e = edges.select(col("src").as("_esrc"), col("dst").as("_edst"),
+      col("weight").cast("double").as("_ew"))
+      .filter(col("_ew") > 0)
       .repartition(col("_esrc"))
       .localCheckpoint(true)
     val v = e.select(col("_esrc").as("id")).unionAll(e.select(col("_edst").as("id")))
       .distinct().localCheckpoint(true)
-    val ns = seeds.size.toDouble
-    def isSeed = col("id").isin(seeds: _*)
-    val outDeg = e.groupBy(col("_esrc")).agg(count(lit(1)).as("deg"))
-      .withColumnRenamed("_esrc", "_degid").localCheckpoint(true)
-    var ranks = v.withColumn("rank",
-      when(isSeed, lit(1.0 / ns)).otherwise(lit(0.0)))
-    for (_ <- 1 to iterations) {
-      val withDeg = ranks.join(outDeg, col("id") === col("_degid"), "left")
-        .select(col("id"), col("rank"), col("deg"))
-        .localCheckpoint(true)
-      val danglingDf = withDeg.filter(col("deg").isNull)
+    val outW = e.groupBy(col("_esrc")).agg(sum(col("_ew")).as("_ow"))
+      .withColumnRenamed("_esrc", "_owid").localCheckpoint(true)
+    val nt = if (seeds.isEmpty) v.count().toDouble else seeds.size.toDouble
+    def teleport(x: Column): Column =
+      if (seeds.isEmpty) x else when(col("id").isin(seeds: _*), x).otherwise(lit(0.0))
+    // Round r's leaf is the vertex-sized rank⋈out-weight table of round
+    // r-1's ranks: it feeds BOTH the dangling-mass aggregate and the
+    // contribution join of round r's update, one eager materialization
+    // instead of recomputing the join twice; the last update stays lazy.
+    // (Round 5 measured the every-other-round cut here: the doubly-
+    // referenced recompute on uncut rounds costs MORE than the job boundary
+    // it saves — 4.45s vs 3.9s at sf0.1 — so unlike CDLP's single-consumer
+    // chain, this stays a per-round cut.)
+    def withOutW(ranks: DataFrame): DataFrame =
+      ranks.join(outW, col("id") === col("_owid"), "left")
+        .select(col("id"), col("rank"), col("_ow"))
+    // mass of dangling nodes (no out-edges), spread like the teleport —
+    // computed INSIDE the plan (broadcast 1-row aggregate), not as a driver
+    // action: one job per iteration instead of three
+    def update(withW: DataFrame): DataFrame = {
+      val danglingDf = withW.filter(col("_ow").isNull)
         .agg(coalesce(sum(col("rank")), lit(0.0)).as("_dmass"))
-      val contribs = withDeg.filter(col("deg").isNotNull)
-        .select(col("id"), (col("rank") / col("deg")).as("c"))
+      val contribs = withW.filter(col("_ow").isNotNull)
+        .select(col("id"), (col("rank") / col("_ow")).as("_rw"))
         .join(e, col("id") === col("_esrc"))
-        .groupBy(col("_edst")).agg(sum(col("c")).as("recv"))
+        .groupBy(col("_edst")).agg(sum(col("_rw") * col("_ew")).as("recv"))
         .withColumnRenamed("_edst", "vid")
-      ranks = v.join(contribs, col("id") === col("vid"), "left")
+      v.join(contribs, col("id") === col("vid"), "left")
         .crossJoin(broadcast(danglingDf))
         .select(col("id"),
-          (when(isSeed,
-            lit((1 - damping) / ns) + lit(damping) * col("_dmass") / ns)
-            .otherwise(lit(0.0)) +
-            lit(damping) * coalesce(col("recv"), lit(0.0))).as("rank"))
+          (teleport(lit((1 - damping) / nt)) + lit(damping) *
+            (coalesce(col("recv"), lit(0.0)) + teleport(col("_dmass") / nt))).as("rank"))
     }
-    ranks
+    val ranks0 = v.withColumn("rank", teleport(lit(1.0 / nt)))
+    val last = Rounds.fold(kernel, iterations, ranks0) { (r, prev) =>
+      withOutW(if (r == 1) prev else update(prev))
+    }
+    if (iterations < 1) last else update(last)
   }
 
   /** Adamic–Adar link-prediction scores for a set of SOURCE vertices:
@@ -342,16 +285,13 @@ object Algorithms {
     // differential already absorb). Vertices absent from a sum table
     // carry exact 0.0 and contribute nothing downstream; the final
     // v-left-joins restore their zero rows.
-    var hubS = v.select(col("id"), lit(1.0).as("__x"))
-    var authS = v.select(col("id"), lit(0.0).as("__x"))
-    for (i <- 1 to iterations) {
-      val ta = hubS.join(e, col("id") === col("_hsrc"))
-        .groupBy(col("_hdst").as("id")).agg(sum(col("__x")).as("__x"))
-      val th0 = ta.join(e, col("id") === col("_hdst"))
-        .groupBy(col("_hsrc").as("id")).agg(sum(col("__x")).as("__x"))
-      RoundCapture.offer("hits", i, th0)
-      hubS = th0.localCheckpoint(true)
-      authS = ta
+    var authS = v.select(col("id"), lit(0.0).as("__x")) // the last round's, lazy
+    val hubS = Rounds.fold("hits", iterations, v.select(col("id"), lit(1.0).as("__x"))) {
+      (_, hub) =>
+        authS = hub.join(e, col("id") === col("_hsrc"))
+          .groupBy(col("_hdst").as("id")).agg(sum(col("__x")).as("__x"))
+        authS.join(e, col("id") === col("_hdst"))
+          .groupBy(col("_hsrc").as("id")).agg(sum(col("__x")).as("__x"))
     }
     // one extra job: materialize the final auth sums so the two consumers
     // below (the L1 scalar + the output join) share a leaf instead of each
@@ -589,61 +529,13 @@ object Algorithms {
     else louvainMovesDistributed(e, rounds)
   }
 
-  private[graft] def louvainMovesDistributed(undirected: DataFrame, rounds: Int): DataFrame = {
-    require(rounds > 0, s"rounds must be positive, got $rounds")
-    val und = undirected.select(col("a"), col("b"))
-      .filter(col("a") =!= col("b")).distinct().localCheckpoint(true)
-    val sym = und.unionAll(und.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint(true) // consumed by deg and every round's k aggregate
-    val deg = sym.groupBy(col("a").as("id")).agg(count(lit(1)).as("d"))
-      .localCheckpoint(true)
-    val m2 = und.agg((count(lit(1)) * 2).cast("double").as("m2"))
-    var asg = deg.select(col("id"), col("id").as("community"))
-    // FIXPOINT early-exit (same argument as kCore's): after TWO
-    // consecutive no-move rounds both parities have settled against an
-    // unchanged assignment, and round r+2 recomputes round r's exact
-    // scores under the same parity — so every remaining round is an
-    // identity and skipping them is result-identical to the oracle's
-    // fixed unroll (a converged round IS a no-op there too).
-    var stable = 0
-    var r = 1
-    while (r <= rounds && stable < 2) {
-      val dc = asg.join(deg, Seq("id"))
-        .groupBy(col("community").as("C")).agg(sum(col("d")).as("dc"))
-      val nbrC = sym.select(col("a").as("id"), col("b").as("nb"))
-        .join(asg.select(col("id").as("nb"), col("community").as("C")), Seq("nb"))
-        .groupBy(col("id"), col("C")).agg(count(lit(1)).cast("double").as("k"))
-      // the current community is always a candidate, even with no
-      // neighbors left in it (k = 0) — max(k) merges the duplicate
-      val cand = nbrC
-        .unionByName(asg.select(col("id"), col("community").as("C"), lit(0.0).as("k")))
-        .groupBy(col("id"), col("C")).agg(max(col("k")).as("k"))
-      val scored = cand
-        .join(asg, Seq("id")).join(deg, Seq("id")).join(dc, Seq("C"))
-        .crossJoin(broadcast(m2))
-        .select(col("id"), col("community"), col("C"),
-          (col("k") - col("d") * when(col("C") === col("community"),
-            col("dc") - col("d")).otherwise(col("dc")) / col("m2")).as("score"))
-      val next = scored.groupBy(col("id"))
-        .agg(max(struct(col("score"), (-col("C")).as("nc"))).as("__m"),
-          first(col("community")).as("__cur"))
-        .select(col("id"),
-          when(pmod(col("id") + r, lit(2L)) === 0, -col("__m.nc"))
-            .otherwise(col("__cur")).as("community"),
-          col("__cur").as("__was"))
-      RoundCapture.offer("louvain_moves", r, next.drop("__was"))
-      val ck = next.localCheckpoint(true)
-      stable = if (ck.filter(col("community") =!= col("__was")).limit(1).isEmpty)
-        stable + 1 else 0
-      asg = ck.drop("__was")
-      lastLouvainMoveRounds = r
-      r += 1
-    }
-    asg
-  }
+  private[graft] def louvainMovesDistributed(undirected: DataFrame, rounds: Int): DataFrame =
+    louvainMovesWeighted(undirected.select(col("a"), col("b"), lit(1.0).as("w"))
+      .filter(col("a") =!= col("b")).distinct(), rounds, "louvain_moves")
 
   /** WEIGHTED Louvain local-move rounds — the level ≥ 2 engine of
-    * [[louvain]] over a CONTRACTED multigraph: input is canonical
+    * [[louvain]] over a CONTRACTED multigraph, and with weight 1 on the
+    * deduped pairs the distributed [[louvainMoves]]: input is canonical
     * (a ≤ b, parallel edges pre-merged) weighted pairs, self-loops
     * (a = b) allowed. Same synchronous rounds, same parity symmetry
     * breaker and smaller-community tie-break as [[louvainMoves]], with
@@ -653,7 +545,8 @@ object Algorithms {
     * the community total). All weights here are integer-valued doubles
     * (edge counts), so every sum is exact below 2^53 and the DuckDB
     * oracle's unrolled rounds match bitwise. Returns (id, community). */
-  private[graft] def louvainMovesWeighted(weighted: DataFrame, rounds: Int): DataFrame = {
+  private[graft] def louvainMovesWeighted(weighted: DataFrame, rounds: Int,
+                                          kernel: String = "louvain_weighted"): DataFrame = {
     require(rounds > 0, s"rounds must be positive, got $rounds")
     val und = weighted.select(col("a"), col("b"), col("w").cast("double").as("w"))
       .localCheckpoint(true) // consumed by sym, deg's self part, and m2
@@ -667,41 +560,43 @@ object Algorithms {
       .groupBy(col("id")).agg(sum(col("w")).as("d"))
       .localCheckpoint(true)
     val m2 = und.agg((sum(col("w")) * 2).as("m2")) // contraction preserves 2m
-    var asg = deg.select(col("id"), col("id").as("community"))
-    // same two-no-move-round fixpoint early-exit as the unweighted twin
-    var stable = 0
-    var r = 1
-    while (r <= rounds && stable < 2) {
-      val dc = asg.join(deg, Seq("id"))
-        .groupBy(col("community").as("C")).agg(sum(col("d")).as("dc"))
-      val nbrC = sym.select(col("a").as("id"), col("b").as("nb"), col("w"))
-        .join(asg.select(col("id").as("nb"), col("community").as("C")), Seq("nb"))
-        .groupBy(col("id"), col("C")).agg(sum(col("w")).as("k"))
-      val cand = nbrC
-        .unionByName(asg.select(col("id"), col("community").as("C"), lit(0.0).as("k")))
-        .groupBy(col("id"), col("C")).agg(max(col("k")).as("k"))
-      val scored = cand
-        .join(asg, Seq("id")).join(deg, Seq("id")).join(dc, Seq("C"))
-        .crossJoin(broadcast(m2))
-        .select(col("id"), col("community"), col("C"),
-          (col("k") - col("d") * when(col("C") === col("community"),
-            col("dc") - col("d")).otherwise(col("dc")) / col("m2")).as("score"))
-      val next = scored.groupBy(col("id"))
-        .agg(max(struct(col("score"), (-col("C")).as("nc"))).as("__m"),
-          first(col("community")).as("__cur"))
-        .select(col("id"),
-          when(pmod(col("id") + r, lit(2L)) === 0, -col("__m.nc"))
-            .otherwise(col("__cur")).as("community"),
-          col("__cur").as("__was"))
-      RoundCapture.offer("louvain_weighted", r, next.drop("__was"))
-      val ck = next.localCheckpoint(true)
-      stable = if (ck.filter(col("community") =!= col("__was")).limit(1).isEmpty)
-        stable + 1 else 0
-      asg = ck.drop("__was")
-      lastLouvainMoveRounds = r
-      r += 1
-    }
-    asg
+    // FIXPOINT early-exit (same argument as kCore's): after TWO
+    // consecutive no-move rounds both parities have settled against an
+    // unchanged assignment, and round r+2 recomputes round r's exact
+    // scores under the same parity — so every remaining round is an
+    // identity and skipping them is result-identical to the oracle's
+    // fixed unroll (a converged round IS a no-op there too). Each leaf
+    // carries whether a vertex moved in its round (`__mv`) and in the one
+    // before (`__pmv`), so the halting probe is the vertices with either.
+    val asg0 = deg.select(col("id"), col("id").as("community"), lit(true).as("__mv"))
+    Rounds.fold(kernel, rounds, asg0, halt = Some(_.filter(col("__mv") || col("__pmv")))) {
+      (r, asg) =>
+        lastLouvainMoveRounds = r
+        val dc = asg.join(deg, Seq("id"))
+          .groupBy(col("community").as("C")).agg(sum(col("d")).as("dc"))
+        val nbrC = sym.select(col("a").as("id"), col("b").as("nb"), col("w"))
+          .join(asg.select(col("id").as("nb"), col("community").as("C")), Seq("nb"))
+          .groupBy(col("id"), col("C")).agg(sum(col("w")).as("k"))
+        // the current community is always a candidate, even with no
+        // neighbors left in it (k = 0) — max(k) merges the duplicate
+        val cand = nbrC
+          .unionByName(asg.select(col("id"), col("community").as("C"), lit(0.0).as("k")))
+          .groupBy(col("id"), col("C")).agg(max(col("k")).as("k"))
+        val scored = cand
+          .join(asg, Seq("id")).join(deg, Seq("id")).join(dc, Seq("C"))
+          .crossJoin(broadcast(m2))
+          .select(col("id"), col("community"), col("C"), col("__mv"),
+            (col("k") - col("d") * when(col("C") === col("community"),
+              col("dc") - col("d")).otherwise(col("dc")) / col("m2")).as("score"))
+        scored.groupBy(col("id"))
+          .agg(max(struct(col("score"), (-col("C")).as("nc"))).as("__m"),
+            first(col("community")).as("__cur"), first(col("__mv")).as("__pmv"))
+          .select(col("id"), col("__cur"), col("__pmv"),
+            when(pmod(col("id") + r, lit(2L)) === 0, -col("__m.nc"))
+              .otherwise(col("__cur")).as("community"))
+          .select(col("id"), col("community"),
+            (col("community") =!= col("__cur")).as("__mv"), col("__pmv"))
+    }.select(col("id"), col("community"))
   }
 
   /** Multi-LEVEL Louvain (Blondel et al. 2008, the operator people mean
@@ -803,26 +698,20 @@ object Algorithms {
     val und = edges.select(col("src").as("_usrc"), col("dst").as("_udst"))
       .unionAll(edges.select(col("dst").as("_usrc"), col("src").as("_udst")))
       .distinct().localCheckpoint(true)
-    var comp = verts(edges).withColumn("component", col("id"))
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIter) {
+    // `chg` marks the vertices whose label dropped this round; a round
+    // with none is the fixpoint
+    Rounds.fold("wcc", maxIter, verts(edges).withColumn("component", col("id")),
+        halt = Some(_.filter(col("chg")))) { (_, comp) =>
       val nbrMin = comp.join(und, col("id") === col("_usrc"))
         .groupBy(col("_udst")).agg(min(col("component")).as("nmin"))
         .withColumnRenamed("_udst", "vid")
-      val next = comp.join(nbrMin, col("id") === col("vid"), "left")
+      comp.join(nbrMin, col("id") === col("vid"), "left")
         .select(col("id"),
           least(col("component"), coalesce(col("nmin"), col("component"))).as("ncomp"),
           col("component"))
-      val nextC = next.select(col("id"), col("ncomp").as("component"),
-          (col("ncomp") < col("component")).cast("long").as("chg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      RoundCapture.offer("wcc", it + 1, nextC.drop("chg"))
-      changed = nextC.agg(sum(col("chg"))).first().getLong(0)
-      comp = nextC.drop("chg").localCheckpoint(true)
-      it += 1
-    }
-    comp
+        .select(col("id"), col("ncomp").as("component"),
+          (col("ncomp") < col("component")).as("chg"))
+    }.drop("chg")
   }
 
   /** Community detection by label propagation, CDLP
@@ -1024,29 +913,8 @@ object Algorithms {
     else bfsDistributed(e, source, maxIter)
   }
 
-  private[graft] def bfsDistributed(edges: DataFrame, source: Long, maxIter: Int = 30): DataFrame = {
-    val e = edges.select(col("src").as("_esrc"), col("dst").as("_edst"))
-      .localCheckpoint(true)
-    var dist = e.sparkSession.range(1).select(lit(source).as("id"), lit(0).as("dist"))
-    var frontier = dist.select("id")
-    var it = 0
-    var more = true
-    while (more && it < maxIter) {
-      // one eager checkpoint materializes the frontier AND truncates lineage;
-      // the count afterwards is free (reads the checkpointed blocks)
-      val next = frontier.join(e, col("id") === col("_esrc"))
-        .select(col("_edst").as("id")).distinct()
-        .join(dist.select(col("id").as("vid")), col("id") === col("vid"), "left_anti")
-        .localCheckpoint(true)
-      more = next.count() > 0
-      it += 1
-      if (more) {
-        dist = dist.unionAll(next.select(col("id"), lit(it).as("dist")))
-        frontier = next
-      }
-    }
-    dist
-  }
+  private[graft] def bfsDistributed(edges: DataFrame, source: Long, maxIter: Int = 30): DataFrame =
+    multiSourceBfs("bfs", edges, Seq(source), maxIter)._2.select(col("id"), col("dist"))
 
   /** Truncated harmonic centrality for a bounded seed set: per seed,
     * Σ 1/d(seed, v) over every node reachable within `radius` hops
@@ -1068,7 +936,7 @@ object Algorithms {
 
   private[graft] def harmonicDistributed(edges: DataFrame, seeds: Seq[Long],
                                          radius: Int): DataFrame = {
-    val (seedDf, dist) = multiSourceBfs(edges, seeds, radius)
+    val (seedDf, dist) = multiSourceBfs("harmonic", edges, seeds, radius)
     val agg = dist.filter(col("dist") > 0)
       .groupBy(col("s").as("seed"))
       .agg(count(lit(1)).as("__n"),
@@ -1095,7 +963,7 @@ object Algorithms {
 
   private[graft] def closenessDistributed(edges: DataFrame, seeds: Seq[Long],
                                           radius: Int): DataFrame = {
-    val (seedDf, dist) = multiSourceBfs(edges, seeds, radius)
+    val (seedDf, dist) = multiSourceBfs("closeness", edges, seeds, radius)
     val agg = dist.filter(col("dist") > 0)
       .groupBy(col("s").as("seed"))
       .agg(count(lit(1)).as("__n"), sum(col("dist")).as("__sd"),
@@ -1146,29 +1014,13 @@ object Algorithms {
     val seedDf = ss.createDataset(seeds.distinct)(
       org.apache.spark.sql.Encoders.scalaLong).toDF("s")
     // forward: levels(d) = (s, id, sigma) — σ summed over in-DAG edges
-    var frontier = seedDf.select(col("s"), col("s").as("id"),
-      lit(1.0).as("sigma")).localCheckpoint(true)
-    var visited = frontier.select(col("s"), col("id"))
-    val levels = scala.collection.mutable.ArrayBuffer(frontier)
-    var it = 0
-    var more = true
-    while (more && it < maxDepth) {
-      val next = frontier.join(e, col("id") === col("_esrc"))
+    val levels = Rounds.levels("betweenness", maxDepth, seedDf.select(col("s"),
+        col("s").as("id"), lit(1.0).as("sigma")).localCheckpoint(true)) { lv =>
+      lv.last.join(e, col("id") === col("_esrc"))
         .select(col("s"), col("_edst").as("id"), col("sigma"))
-        .join(visited.select(col("s").as("s2"), col("id").as("vid")),
+        .join(lv.map(_.select(col("s").as("s2"), col("id").as("vid"))).reduce(_ unionAll _),
           col("s") === col("s2") && col("id") === col("vid"), "left_anti")
         .groupBy(col("s"), col("id")).agg(sum(col("sigma")).as("sigma"))
-        .localCheckpoint(true)
-      // emptiness probe, not a full count: limit(1) over the checkpointed
-      // leaf touches one partition in the common non-empty case instead of
-      // scanning and summing all of them every round
-      more = next.limit(1).count() > 0
-      it += 1
-      if (more) {
-        visited = visited.unionAll(next.select(col("s"), col("id")))
-        levels += next
-        frontier = next
-      }
     }
     if (levels.size == 1) // nothing reached: no interior vertices, no BC
       return seedDf.select(col("s").as("id"), lit(0.0).as("bc")).limit(0)
@@ -1200,33 +1052,23 @@ object Algorithms {
     * per-round join against the checkpointed edge leaf, frontier keyed by
     * (seed, node). Returns (seedDf("s"), dist(s, id, dist)) with the seeds
     * themselves at dist 0. */
-  private def multiSourceBfs(edges: DataFrame, seeds: Seq[Long],
+  private def multiSourceBfs(kernel: String, edges: DataFrame, seeds: Seq[Long],
                              radius: Int): (DataFrame, DataFrame) = {
-    require(seeds.nonEmpty && radius > 0, "seeds nonempty, radius positive")
-    val ss = edges.sparkSession
+    require(seeds.nonEmpty, "seeds nonempty")
     val e = edges.select(col("src").as("_esrc"), col("dst").as("_edst"))
       .localCheckpoint(true)
-    val seedDf = ss.createDataset(seeds.distinct)(
+    val seedDf = edges.sparkSession.createDataset(seeds.distinct)(
       org.apache.spark.sql.Encoders.scalaLong).toDF("s")
-    var dist = seedDf.select(col("s"), col("s").as("id"), lit(0).as("dist"))
-    var frontier = dist.select(col("s"), col("id"))
-    var it = 0
-    var more = true
-    while (more && it < radius) {
-      val next = frontier.join(e, col("id") === col("_esrc"))
-        .select(col("s"), col("_edst").as("id")).distinct()
-        .join(dist.select(col("s").as("s2"), col("id").as("vid")),
-          col("s") === col("s2") && col("id") === col("vid"), "left_anti")
-        .localCheckpoint(true)
-      // same emptiness-probe-not-count as the betweenness forward loop
-      more = next.limit(1).count() > 0
-      it += 1
-      if (more) {
-        dist = dist.unionAll(next.select(col("s"), col("id"), lit(it).as("dist")))
-        frontier = next
-      }
+    val levels = Rounds.levels(kernel, radius, seedDf.select(col("s"), col("s").as("id"))) {
+      lv =>
+        lv.last.join(e, col("id") === col("_esrc"))
+          .select(col("s"), col("_edst").as("id")).distinct()
+          .join(lv.map(_.select(col("s").as("s2"), col("id").as("vid"))).reduce(_ unionAll _),
+            col("s") === col("s2") && col("id") === col("vid"), "left_anti")
     }
-    (seedDf, dist)
+    (seedDf, levels.zipWithIndex
+      .map { case (lv, d) => lv.select(col("s"), col("id"), lit(d).as("dist")) }
+      .reduce(_ unionAll _))
   }
 
   /** Weighted SSSP by distributed Bellman-Ford relaxation (reference
@@ -1243,28 +1085,22 @@ object Algorithms {
   private[graft] def ssspDistributed(edges: DataFrame, source: Long, maxIter: Int = 30): DataFrame = {
     val e = edges.select(col("src").as("_esrc"), col("dst").as("_edst"),
       coalesce(col("weight"), lit(1.0)).as("w")).localCheckpoint(true)
-    var dist = e.sparkSession.range(1).select(lit(source).cast("long").as("id"), lit(0.0).as("dist"))
-    var it = 0
-    var changed = true
-    while (changed && it < maxIter) {
+    val dist0 = e.sparkSession.range(1)
+      .select(lit(source).cast("long").as("id"), lit(0.0).as("dist"))
+    // `chg` marks the vertices reached or shortened this round
+    Rounds.fold("sssp", maxIter, dist0, halt = Some(_.filter(col("chg")))) { (_, dist) =>
       val relaxed = dist.join(e, col("id") === col("_esrc"))
         .select(col("_edst").as("id"), (col("dist") + col("w")).as("cand"))
         .groupBy("id").agg(min(col("cand")).as("cand"))
-      val next = dist.select(col("id"), col("dist"))
+      dist.select(col("id"), col("dist"))
         .join(relaxed, Seq("id"), "full_outer")
         .select(col("id"),
           least(coalesce(col("dist"), lit(Double.MaxValue)),
                 coalesce(col("cand"), lit(Double.MaxValue))).as("ndist"),
           col("dist"))
-      val nd = next.select(col("id"), col("ndist").as("dist"),
-          (col("dist").isNull || col("ndist") < col("dist")).cast("long").as("chg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      RoundCapture.offer("sssp", it + 1, nd.drop("chg"))
-      changed = nd.agg(sum("chg")).first().getLong(0) > 0
-      dist = nd.drop("chg").localCheckpoint(true)
-      it += 1
-    }
-    dist
+        .select(col("id"), col("ndist").as("dist"),
+          (col("dist").isNull || col("ndist") < col("dist")).as("chg"))
+    }.drop("chg")
   }
 
   /** Weighted shortest PATH (not just the distance): the actual node
@@ -1345,9 +1181,6 @@ object Algorithms {
       .orderBy(col("pos"))
   }
 
-  /** Strongly connected components — delegated to GraphX's Pregel
-    * implementation (reference Tarjan `community.rs:96` is sequential;
-    * GraphX's is the distributed formulation). */
   /** k-core peel, SYNCHRONOUS fixed-round semantics: round r computes
     * degrees on the round-(r-1) edge set and removes ALL nodes below `k`
     * at once, for `rounds` rounds — deterministic and engine-independent,
@@ -1359,8 +1192,9 @@ object Algorithms {
     * with at least one surviving edge and their degree in the final edge
     * set.
     *
-    * Scale shape: each round is one hash aggregate + two semi-joins on the
-    * shrinking edge set, lineage cut per round; nothing driver-side. Small
+    * Scale shape: each round is two semi-joins of the edge leaf against
+    * the vertices still in + one degree hash aggregate, lineage cut per
+    * round on the vertex-sized degree table; nothing driver-side. Small
     * inputs route to the in-task kernel ([[LocalKernels.kCore]]). Input
     * columns: src, dst (directed pairs; symmetrized + de-duped here). */
   def kCore(edges: DataFrame, k: Int, rounds: Int = 4): DataFrame = {
@@ -1370,36 +1204,36 @@ object Algorithms {
   }
 
   private[graft] def kCoreDistributed(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var e = edges.select(col("src").as("_ka"), col("dst").as("_kb"))
+    val e0 = edges.select(col("src").as("_ka"), col("dst").as("_kb"))
       .unionAll(edges.select(col("dst").as("_ka"), col("src").as("_kb")))
       .filter(col("_ka") =!= col("_kb"))
       .distinct()
       .repartition(col("_ka"))
       .localCheckpoint(true)
-    // Peeling reaches a FIXED POINT the round nothing falls below k — skip
-    // the remaining rounds then (identical result, it's a fixed point).
-    // Without the check, a dense graph (min degree ≥ k) rewrites the full
-    // edge set every round for zero removals — the 40× soak measured 4×80 s
-    // of pure rewrite. The degree table (n-sized) is cut to a leaf so the
-    // convergence count and the keep-side joins share one aggregation pass
-    // instead of recomputing it per semi-join.
-    var r = 0
-    var done = false
-    while (r < rounds && !done) {
-      val deg = e.groupBy(col("_ka")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint(true)
-      if (deg.filter(col("deg") < k).limit(1).isEmpty) done = true
-      else {
-        val keep = deg.filter(col("deg") >= k).select(col("_ka").as("_keep"))
-        e = e.join(keep.withColumnRenamed("_keep", "_ka"), Seq("_ka"), "left_semi")
-          .join(keep.withColumnRenamed("_keep", "_kb"), Seq("_kb"), "left_semi")
-          .localCheckpoint(true)
-      }
-      r += 1
-    }
-    e.groupBy(col("_ka")).agg(count(lit(1)).as("deg"))
-      .select(col("_ka").as("id"), col("deg"))
+    // Round r takes degrees on the edges among the vertices round r-1 kept
+    // (all of them in round 1), so the state is the vertex-sized degree
+    // table and the edge set is never rewritten; `rounds` peels take
+    // rounds + 1 degree rounds, the last being the report. A round with no
+    // vertex under k is the FIXED POINT and already the report, so the loop
+    // halts there (identical result): without the check, a dense graph
+    // (min degree ≥ k) re-peels every round for zero removals — the 40×
+    // soak measured 4×80 s of pure edge-set rewrite.
+    Rounds.fold("kcore", peelRounds(rounds), e0, halt = Some(_.filter(col("deg") < k))) {
+      (r, prev) =>
+        val e = if (r == 1) prev else {
+          val keep = prev.filter(col("deg") >= k).select(col("_ka"))
+          e0.join(keep, Seq("_ka"), "left_semi")
+            .join(keep.withColumnRenamed("_ka", "_kb"), Seq("_kb"), "left_semi")
+        }
+        e.groupBy(col("_ka")).agg(count(lit(1)).as("deg"))
+    }.select(col("_ka").as("id"), col("deg"))
   }
+
+  /** Rounds of a peel loop: one per peel plus the report, at least the
+    * report. `Int.MaxValue` (what a Cypher conf saturates a huge value to)
+    * stays the cap instead of wrapping negative. */
+  private def peelRounds(peels: Int): Int =
+    if (peels >= Int.MaxValue - 1) Int.MaxValue else math.max(peels, 0) + 1
 
   /** Bounded-round k-truss peel (the edge analog of [[kCore]]): each round
     * computes per-edge triangle SUPPORT and drops edges supported by fewer
@@ -1434,24 +1268,18 @@ object Algorithms {
       e.join(contrib, Seq("a", "b"), "left")
         .select(col("a"), col("b"),
           coalesce(col("support"), lit(0L)).as("support"))
-        .localCheckpoint(true)
     }
-    var e = edges.select(least(col("src"), col("dst")).cast("long").as("a"),
+    val e0 = edges.select(least(col("src"), col("dst")).cast("long").as("a"),
       greatest(col("src"), col("dst")).cast("long").as("b"))
       .filter(col("a") =!= col("b")).distinct().localCheckpoint(true)
-    var sup = support(e)
-    var r = 0
-    var done = false
-    while (r < rounds && !done) {
-      if (sup.filter(col("support") < k - 2).limit(1).isEmpty) done = true
-      else {
-        e = sup.filter(col("support") >= k - 2).select(col("a"), col("b"))
-          .localCheckpoint(true)
-        sup = support(e)
-      }
-      r += 1
+    // round 1 measures support on the input and round r on the edges round
+    // r-1 kept, so `rounds` peels take rounds + 1 support rounds and the
+    // last is the report; a round with nothing under k-2 is the fixpoint
+    Rounds.fold("ktruss", peelRounds(rounds), e0,
+        halt = Some(_.filter(col("support") < k - 2))) { (r, prev) =>
+      support(if (r == 1) prev
+        else prev.filter(col("support") >= k - 2).select(col("a"), col("b")))
     }
-    sup
   }
 
   /** Deterministic random-walk neighbor sampling (the GraphSAGE-style
@@ -1656,34 +1484,18 @@ object Algorithms {
     val seed = pairs.distinct.zipWithIndex
       .flatMap { case ((s, t), p) => Seq((p, 0, s, 0), (p, 1, t, 0)) }
       .toDF("pid", "side", "id", "dist")
-    var frontier = seed.localCheckpoint(true)
-    var visited = frontier
-    val rounds = (maxDepth + 1) / 2
-    var r = 0
-    var more = true
-    while (more && r < rounds) {
-      val next = frontier.join(sym, col("id") === col("_es"))
-        .select(col("pid"), col("side"), col("_ed").as("id"),
-          (col("dist") + 1).as("dist"))
-        .groupBy(col("pid"), col("side"), col("id"))
-        .agg(min(col("dist")).as("dist"))
-        .join(visited.select(col("pid").as("vp"), col("side").as("vs"),
-          col("id").as("vi")),
-          col("pid") === col("vp") && col("side") === col("vs") &&
-            col("id") === col("vi"), "left_anti")
-        .localCheckpoint(true)
-      more = next.limit(1).count() > 0
-      r += 1
-      if (more) {
-        // visited stays a lazy union of the per-round CHECKPOINTED
-        // frontiers — re-checkpointing the whole union each round
-        // re-materialized all previously-visited rows every round (an
-        // O(rounds²) total write) for no reader benefit: the anti-join
-        // and the final meet scan the union of leaves just as fast.
-        visited = visited.unionAll(next)
-        frontier = next
-      }
-    }
+    val visited = Rounds.levels("bidir_bfs", (maxDepth + 1) / 2, seed.localCheckpoint(true)) {
+      lv =>
+        lv.last.join(sym, col("id") === col("_es"))
+          .select(col("pid"), col("side"), col("_ed").as("id"),
+            (col("dist") + 1).as("dist"))
+          .groupBy(col("pid"), col("side"), col("id"))
+          .agg(min(col("dist")).as("dist"))
+          .join(lv.reduce(_ unionAll _).select(col("pid").as("vp"), col("side").as("vs"),
+            col("id").as("vi")),
+            col("pid") === col("vp") && col("side") === col("vs") &&
+              col("id") === col("vi"), "left_anti")
+    }.reduce(_ unionAll _)
     val s = visited.filter(col("side") === 0)
       .select(col("pid"), col("id"), col("dist").as("ds"))
     val t = visited.filter(col("side") === 1)
@@ -1931,7 +1743,7 @@ object Algorithms {
       }
       rounds += 1
     }
-    e0.unpersist(false)
+    unpersistCheckpoint(e0)
     mstEdges
   }
 

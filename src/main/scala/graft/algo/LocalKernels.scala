@@ -912,16 +912,22 @@ object LocalKernels {
         val (si, di) = (es.result(), ed.result())
         val alive = Array.fill(n)(true)
         val deg = new Array[Int](n)
+        // a round that drops nobody is the fixed point: the rest are no-ops
         var r = 0
-        while (r < rounds) {
+        var dropped = true
+        while (dropped && r < rounds) {
           java.util.Arrays.fill(deg, 0)
           var i = 0
           while (i < si.length) {
             if (alive(si(i)) && alive(di(i))) { deg(si(i)) += 1; deg(di(i)) += 1 }
             i += 1
           }
+          dropped = false
           var v = 0
-          while (v < n) { if (alive(v) && deg(v) < k) alive(v) = false; v += 1 }
+          while (v < n) {
+            if (alive(v) && deg(v) < k) { alive(v) = false; dropped = true }
+            v += 1
+          }
           r += 1
         }
         // final degrees over the surviving edge set

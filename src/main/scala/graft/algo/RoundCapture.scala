@@ -11,11 +11,13 @@ import org.apache.spark.sql.DataFrame
   *
   * Round 2 is the canonical capture: its inputs are themselves round-1
   * leaves, so the captured plan is exactly ONE round's operators over
-  * checkpointed leaves. Disabled outside [[capturing]] — the only
-  * per-round cost is a volatile read and an int compare. */
+  * checkpointed leaves. Round 1 is kept too, for a loop whose audited
+  * input reaches its fixed point in round 1; the caller names the round
+  * it audits. Disabled outside [[capturing]] — the only per-round cost is
+  * a volatile read and an int compare. */
 object RoundCapture {
   @volatile private var sink:
-    java.util.concurrent.ConcurrentHashMap[String, DataFrame] = null
+    java.util.concurrent.ConcurrentHashMap[(String, Int), DataFrame] = null
 
   private val TargetRound = 2
 
@@ -24,14 +26,14 @@ object RoundCapture {
     * round's result frame). No-op unless inside [[capturing]]. */
   private[graft] def offer(kernel: String, round: Int, df: DataFrame): Unit = {
     val s = sink
-    if (s != null && round == TargetRound) s.putIfAbsent(kernel, df)
+    if (s != null && round <= TargetRound) s.putIfAbsent((kernel, round), df)
   }
 
-  /** Run `body` with capture enabled; returns kernel → round-2 frame for
-    * every instrumented loop `body` exercised. Not reentrant (Plans is
-    * single-threaded). */
-  def capturing[T](body: => T): Map[String, DataFrame] = {
-    val s = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  /** Run `body` with capture enabled; returns (kernel, round) → frame for
+    * rounds 1 and 2 of every instrumented loop `body` exercised. Not
+    * reentrant (Plans is single-threaded). */
+  def capturing[T](body: => T): Map[(String, Int), DataFrame] = {
+    val s = new java.util.concurrent.ConcurrentHashMap[(String, Int), DataFrame]()
     sink = s
     try {
       body

@@ -383,6 +383,9 @@ class AlgorithmsSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().toSet
     assert(k4 == Set((1L, 2L, 2L), (1L, 3L, 2L), (1L, 4L, 2L), (2L, 3L, 2L),
       (2L, 4L, 2L), (3L, 4L, 2L)), s"got $k4")
+    // Int.MaxValue (a saturated Cypher conf) is a cap, not a wrapped one
+    assert(Algorithms.kTruss(e, 4, Int.MaxValue)
+      .as[(Long, Long, Long)].collect().toSet == k4)
     val k3 = Algorithms.kTruss(e, 3, 4)
       .as[(Long, Long, Long)].collect().toSet
     assert(k3.size == 9 && k3.contains((4L, 5L, 1L)) && !k3.exists(_._1 == 6L),
@@ -396,6 +399,7 @@ class AlgorithmsSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().toSet
     assert(r1 == Set((2L, 3L, 0L), (3L, 4L, 0L)), s"got $r1")
     assert(Algorithms.kTruss(strip, 4, 2).count() == 0L)
+    assert(Algorithms.kTruss(strip, 4, Int.MaxValue).count() == 0L)
   }
 
   test("betweennessCentrality: Brandes dependencies, non-DAG edge excluded, seed sum") {

@@ -34,6 +34,17 @@ class LocalKernelsSpec extends SparkSpec {
   private def sortedRows(df: DataFrame): Array[String] =
     df.collect().map(_.toString).sorted
 
+  /** Runs a distributed call and asserts it left no cached Dataset behind:
+    * round leaves are local checkpoints, which Spark's ContextCleaner
+    * frees, while a persist() the loop never undoes stays cached for the
+    * whole session. */
+  private def leakFree[T](call: => T): T = {
+    spark.catalog.clearCache() // entries other suites left are not this call's
+    val out = call
+    assert(spark.sharedState.cacheManager.isEmpty, "the distributed call left a cached Dataset")
+    out
+  }
+
   test("gate: small inputs route local, localSizeBytes=0 pins distributed") {
     val e = randGraph(1, 20, 60)
     assert(LocalKernels.isSmall(e))
@@ -89,7 +100,7 @@ class LocalKernelsSpec extends SparkSpec {
       for (depth <- Seq(2, 5)) {
         val loc = sortedRows(LocalKernels.bidirBfs(e, pairs, depth))
         spark.conf.set("spark.graft.algo.localSizeBytes", "0")
-        val dist = try sortedRows(Algorithms.bidirectionalBfs(e, pairs, depth))
+        val dist = try leakFree(sortedRows(Algorithms.bidirectionalBfs(e, pairs, depth)))
         finally spark.conf.unset("spark.graft.algo.localSizeBytes")
         assert(loc.toSeq == dist.toSeq, s"seed $seed depth $depth")
       }
@@ -101,7 +112,7 @@ class LocalKernelsSpec extends SparkSpec {
       val e = randGraph(seed, 30, 120).toDF("a", "b")
       val loc = sortedRows(LocalKernels.louvainMoves(e, 3))
       spark.conf.set("spark.graft.algo.localSizeBytes", "0")
-      val dist = try sortedRows(Algorithms.louvainMoves(e, 3))
+      val dist = try leakFree(sortedRows(Algorithms.louvainMoves(e, 3)))
       finally spark.conf.unset("spark.graft.algo.localSizeBytes")
       assert(loc.toSeq == dist.toSeq, s"seed $seed")
     }
@@ -119,7 +130,7 @@ class LocalKernelsSpec extends SparkSpec {
       val e = randGraph(seed, 40, 160).toDF("a", "b")
       val loc = sortedRows(LocalKernels.louvain(e, 2, 2))
       spark.conf.set("spark.graft.algo.localSizeBytes", "0")
-      val dist = try sortedRows(Algorithms.louvain(e, 2, 2))
+      val dist = try leakFree(sortedRows(Algorithms.louvain(e, 2, 2)))
       finally spark.conf.unset("spark.graft.algo.localSizeBytes")
       assert(loc.toSeq == dist.toSeq, s"seed $seed")
     }
@@ -137,7 +148,7 @@ class LocalKernelsSpec extends SparkSpec {
     val e = randGraph(2, 40, 150)
     val loc = LocalKernels.pageRank(e, 8, 0.85).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val dist = Algorithms.pageRankDistributed(e, 8, 0.85).collect()
+    val dist = leakFree(Algorithms.pageRankDistributed(e, 8, 0.85).collect())
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(loc.keySet == dist.keySet)
     loc.foreach { case (id, r) => assert(math.abs(r - dist(id)) < 1e-9, s"id $id") }
@@ -154,7 +165,7 @@ class LocalKernelsSpec extends SparkSpec {
       // weight 0 rows exist by construction -> exercises the drop rule
       val loc = LocalKernels.pageRankWeighted(e, 8, 0.85).collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val dist = Algorithms.pageRankWeightedDistributed(e, 8, 0.85).collect()
+      val dist = leakFree(Algorithms.pageRankWeightedDistributed(e, 8, 0.85).collect())
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(loc.keySet == dist.keySet, s"seed $seed")
       loc.foreach { case (id, r) =>
@@ -167,9 +178,9 @@ class LocalKernelsSpec extends SparkSpec {
       val e = randGraph(seed, 50, 90)
       val seeds = Seq(1L, 2L, 999999L) // 999999 absent from the graph
       assert(sortedRows(LocalKernels.harmonicCentrality(e, seeds, 3)) ===
-        sortedRows(Algorithms.harmonicDistributed(e, seeds, 3)))
+        leakFree(sortedRows(Algorithms.harmonicDistributed(e, seeds, 3))))
       assert(sortedRows(LocalKernels.closenessCentrality(e, seeds, 3)) ===
-        sortedRows(Algorithms.closenessDistributed(e, seeds, 3)))
+        leakFree(sortedRows(Algorithms.closenessDistributed(e, seeds, 3))))
     }
   }
 
@@ -178,7 +189,7 @@ class LocalKernelsSpec extends SparkSpec {
       val e = randGraph(seed, 40, 120)
       val loc = LocalKernels.betweennessCentrality(e, Seq(1L, 2L, 3L), 4).collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val dist = Algorithms.betweennessDistributed(e, Seq(1L, 2L, 3L), 4).collect()
+      val dist = leakFree(Algorithms.betweennessDistributed(e, Seq(1L, 2L, 3L), 4).collect())
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(loc.keySet == dist.keySet, s"seed $seed")
       loc.foreach { case (id, b) =>
@@ -191,7 +202,7 @@ class LocalKernelsSpec extends SparkSpec {
       val e = randGraph(seed, 40, 150)
       val loc = LocalKernels.hits(e, 6).collect()
         .map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-      val dist = Algorithms.hitsDistributed(e, 6).collect()
+      val dist = leakFree(Algorithms.hitsDistributed(e, 6).collect())
         .map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
       assert(loc.keySet == dist.keySet)
       loc.foreach { case (id, (h, a)) =>
@@ -208,7 +219,7 @@ class LocalKernelsSpec extends SparkSpec {
     for (seed <- 3 to 5) {
       val e = randGraph(seed, 60, 70) // sparse → several components
       assert(sortedRows(LocalKernels.wcc(e)) ===
-        sortedRows(Algorithms.wccDistributed(e)))
+        leakFree(sortedRows(Algorithms.wccDistributed(e))))
     }
   }
 
@@ -244,9 +255,15 @@ class LocalKernelsSpec extends SparkSpec {
       val e = randGraph(seed, 40, 160) // dense-ish: real peel cascades
       for (k <- Seq(2, 5, 8))
         assert(sortedRows(LocalKernels.kCore(e, k, 4)) ===
-          sortedRows(Algorithms.kCoreDistributed(e, k, 4)),
+          leakFree(sortedRows(Algorithms.kCoreDistributed(e, k, 4))),
           s"seed=$seed k=$k")
     }
+    // a Cypher conf saturates a huge round count to Int.MaxValue: it runs
+    // to the fixed point, and a negative count peels nothing
+    val e20 = randGraph(20, 40, 160)
+    for (rounds <- Seq(Int.MaxValue, -1))
+      assert(sortedRows(LocalKernels.kCore(e20, 5, rounds)) ===
+        sortedRows(Algorithms.kCoreDistributed(e20, 5, rounds)), s"rounds=$rounds")
     // self-loops and duplicate/reversed edges must not count toward degree
     val dup = Seq((1L, 2L), (2L, 1L), (1L, 1L), (2L, 3L), (3L, 1L))
       .toDF("src", "dst")
@@ -259,7 +276,7 @@ class LocalKernelsSpec extends SparkSpec {
     val src = e.select("src").as[Long].head()
     for (cap <- Seq(2, 4, 30)) {
       assert(sortedRows(LocalKernels.bfs(e, src, cap)) ===
-        sortedRows(Algorithms.bfsDistributed(e, src, cap)))
+        leakFree(sortedRows(Algorithms.bfsDistributed(e, src, cap))))
     }
     // isolated source: exactly the (source, 0) row
     assert(sortedRows(LocalKernels.bfs(e, 99999L, 4)) === Array("[99999,0]"))
@@ -271,7 +288,7 @@ class LocalKernelsSpec extends SparkSpec {
     for (cap <- Seq(2, 6, 30)) {
       val loc = LocalKernels.sssp(e, src, cap).collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val dist = Algorithms.ssspDistributed(e, src, cap).collect()
+      val dist = leakFree(Algorithms.ssspDistributed(e, src, cap).collect())
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(loc.keySet == dist.keySet, s"cap $cap")
       loc.foreach { case (id, d) => assert(math.abs(d - dist(id)) < 1e-9) }

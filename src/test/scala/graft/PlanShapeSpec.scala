@@ -24,12 +24,12 @@ class PlanShapeSpec extends SparkSpec {
     assert(bad.isEmpty, s"q_node2vec_walks contains ${bad.mkString(", ")}")
   }
 
-  Plans.roundPicks.foreach { case (query, kernel, _) =>
+  Plans.roundPicks.foreach { case (query, kernel, round, _) =>
     test(s"round body of $kernel (via $query): no Window, CartesianProduct or non-scalar cross join") {
       val bad = distributed {
         val caps = RoundCapture.capturing(SparkEntry.queries(query)(spark, sfDir))
-        assert(caps.contains(kernel), s"no round-2 capture for '$kernel' via $query")
-        Plans.shapeViolations(caps(kernel), roundBody = true)
+        assert(caps.contains((kernel, round)), s"no round-$round capture for '$kernel' via $query")
+        Plans.shapeViolations(caps((kernel, round)), roundBody = true)
       }
       assert(bad.isEmpty, s"round body of '$kernel' contains ${bad.mkString(", ")}")
     }
