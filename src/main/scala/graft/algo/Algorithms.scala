@@ -628,7 +628,8 @@ object Algorithms {
     require(levels > 0, s"levels must be positive, got $levels")
     val und = undirected.select(col("a"), col("b"))
       .filter(col("a") =!= col("b")).distinct().localCheckpoint(true)
-    var asg = louvainMovesDistributed(und, rounds)
+    var asg = louvainMovesWeighted(und.select(col("a"), col("b"), lit(1.0).as("w")),
+      rounds, "louvain_moves")
     for (_ <- 2 to levels) {
       val g2 = und
         .join(asg.select(col("id").as("a"), col("community").as("__ca")), Seq("a"))

@@ -1785,73 +1785,89 @@ object LocalKernels {
     import spark.implicits._
     val srcDs = undirected.select(col("a").cast("long"), col("b").cast("long")).as[(Long, Long)]
     inTask2(srcDs, cacheKey(srcDs.toDF())) { it =>
-        val (_, vx, deg, tri) = triangleSum(it)
-        (0 until vx.n).iterator.map { i =>
+        val (_, ids, deg, tri) = triangleSum(it)
+        ids.indices.iterator.map { i =>
           val d = deg(i).toLong
           val t = tri(i)
           val l = if (d >= 2) t * 2.0 / (d * (d - 1)) else 0.0
-          (vx.ids(i), d, t, l)
+          (ids(i), d, t, l)
         }
       }.toDF("id", "deg", "triangles", "lcc")
   }
 
-  /** Shared oriented-intersection pass. Returns (total, interner,
-    * degree-with-duplicates, per-vertex triangle counts). */
+  /** Forward triangle pass on int ids, shared by [[triangleCount]] and
+    * [[lcc]]. Vertices are renumbered so dense index order is external-id
+    * order; the (deg, id) orientation tie-break is then a plain int
+    * compare. Each row is oriented from its lower (deg, id) endpoint u to
+    * the other endpoint h, and the out-neighbours adj⁺(u) form u's CSR
+    * segment, sorted with `Arrays.sort`. Per u, adj⁺(u) is stamped once in
+    * an int mark array; each row (u, h) then counts the marked DISTINCT
+    * members w of adj⁺(h), each closing one triangle (u, h, w): the total,
+    * u and h gain the count, every w gains 1.
+    *
+    * Keeps [[Algorithms.triangleCount]]'s multigraph semantics exactly:
+    * duplicate input rows orient and count per row (a run of equal h in
+    * u's segment is counted once and weighted by its length), common
+    * neighbours are distinct values (as `array_intersect` dedups), and deg
+    * counts duplicate rows. Returns (total, ids ascending, deg, per-vertex
+    * triangles), the arrays indexed by dense id. */
   private def triangleSum(it: Iterator[(Long, Long)])
-      : (Long, Interner, Array[Int], Array[Long]) = {
+      : (Long, Array[Long], Array[Int], Array[Long]) = {
     val vx = new Interner
     val ea = new Ints(); val eb = new Ints()
     it.foreach { case (a, b) => ea += vx.idx(a); eb += vx.idx(b) }
     val n = vx.n
+    val ids = vx.ids.toArray
+    java.util.Arrays.sort(ids)
+    val rank = Array.tabulate(n)(v => java.util.Arrays.binarySearch(ids, vx.ids(v)))
     val (ia, ib) = (ea.result(), eb.result())
+    val m = ia.length
     val deg = new Array[Int](n)
     var k = 0
-    while (k < ia.length) { deg(ia(k)) += 1; deg(ib(k)) += 1; k += 1 }
-    // orientation: lower (deg, id) endpoint → higher; adjacency of the LO
-    // endpoint only, sorted by target id (matches sort_array(collect_list))
-    def lower(x: Int, y: Int): Boolean =
-      deg(x) < deg(y) || (deg(x) == deg(y) && vx.ids(x) < vx.ids(y))
-    val los = new Array[Int](ia.length); val his = new Array[Int](ia.length)
-    k = 0
-    while (k < ia.length) {
-      if (lower(ia(k), ib(k))) { los(k) = ia(k); his(k) = ib(k) }
-      else { los(k) = ib(k); his(k) = ia(k) }
+    while (k < m) {
+      ia(k) = rank(ia(k)); ib(k) = rank(ib(k))
+      deg(ia(k)) += 1; deg(ib(k)) += 1
       k += 1
     }
-    val (off, tgtRaw) = csr(n, los, his)
-    // sort each adjacency segment by external id
-    var v = 0
-    while (v < n) {
-      val seg = java.util.Arrays.copyOfRange(tgtRaw, off(v), off(v + 1))
-        .sortBy(i => vx.ids(i))
-      var i = 0
-      while (i < seg.length) { tgtRaw(off(v) + i) = seg(i); i += 1 }
-      v += 1
+    val los = new Array[Int](m); val his = new Array[Int](m)
+    k = 0
+    while (k < m) {
+      val x = ia(k); val y = ib(k)
+      if (deg(x) < deg(y) || (deg(x) == deg(y) && x < y)) { los(k) = x; his(k) = y }
+      else { los(k) = y; his(k) = x }
+      k += 1
     }
+    val (off, adj) = csr(n, los, his)
+    var u = 0
+    while (u < n) { java.util.Arrays.sort(adj, off(u), off(u + 1)); u += 1 }
+    val mark = new Array[Int](n) // mark(w) == u + 1 iff w ∈ adj⁺(u)
     val tri = new Array[Long](n)
     var total = 0L
-    // per oriented edge ROW: distinct common neighbors of adj(lo), adj(hi)
-    k = 0
-    while (k < los.length) {
-      val lo = los(k); val hi = his(k)
-      var i = off(lo); var j = off(hi)
-      var nw = 0L
-      var lastId = Long.MinValue
-      while (i < off(lo + 1) && j < off(hi + 1)) {
-        val xi = vx.ids(tgtRaw(i)); val xj = vx.ids(tgtRaw(j))
-        if (xi < xj) i += 1
-        else if (xi > xj) j += 1
-        else {
-          if (xi != lastId) { // distinct: array_intersect dedups
-            nw += 1; tri(tgtRaw(i)) += 1; lastId = xi
-          }
-          i += 1; j += 1
+    u = 0
+    while (u < n) {
+      val stamp = u + 1
+      var i = off(u)
+      while (i < off(u + 1)) { mark(adj(i)) = stamp; i += 1 }
+      i = off(u)
+      while (i < off(u + 1)) {
+        val h = adj(i)
+        var rows = 1
+        while (i + rows < off(u + 1) && adj(i + rows) == h) rows += 1
+        var nw = 0L
+        var last = -1
+        var j = off(h)
+        while (j < off(h + 1)) {
+          val w = adj(j)
+          if (w != last && mark(w) == stamp) { nw += 1; tri(w) += rows }
+          last = w
+          j += 1
         }
+        nw *= rows
+        tri(u) += nw; tri(h) += nw; total += nw
+        i += rows
       }
-      if (nw > 0) { tri(lo) += nw; tri(hi) += nw }
-      total += nw
-      k += 1
+      u += 1
     }
-    (total, vx, deg, tri)
+    (total, ids, deg, tri)
   }
 }

@@ -195,7 +195,7 @@ object Dedup {
   def minHashLshPairs(docs: DataFrame, idCol: String, textCol: String, k: Int,
                       numHashes: Int, bands: Int, threshold: Double): DataFrame =
     minHashLshPairsFromSig(
-      minHashSignatures(docs, idCol, textCol, k, numHashes).cache(),
+      minHashSignatures(docs, idCol, textCol, k, numHashes).localCheckpoint(true),
       numHashes, bands, threshold)
 
   /** Pair generation from a precomputed (doc, sig) signature table — the
@@ -255,7 +255,7 @@ object Dedup {
   def simHashPairs(docs: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 7, s"8-band pigeonhole guarantees recall only for hamming <= 7, got $maxHamming")
-    val fp = simHash(docs, idCol, textCol).cache()
+    val fp = simHash(docs, idCol, textCol).localCheckpoint(true)
     val banded = fp.select(col("doc"), col("simhash"),
       posexplode(array((0 until 8).map(i =>
         shiftright(col("simhash"), i * 4).bitwiseAND(0xF)): _*)))

@@ -63,19 +63,36 @@ object SharedMv {
     // query threads both observe the missing _SUCCESS and race overwrite
     // writes into the SAME path (ConcurrencySpec). Double-checked: the
     // fast path (materialized MV) never takes the lock.
-    if (!new java.io.File(dir, "_SUCCESS").exists())
+    val success = new java.io.File(dir, "_SUCCESS")
+    if (!success.exists())
       buildLocks.computeIfAbsent(dir.getPath, _ => new Object).synchronized {
-        buildMv(dir, root, stem, partitionCols)(build)
+        if (buildMv(dir, root, stem, partitionCols)(build))
+          reads.keySet.removeIf(_._2 == dir.getPath)
       }
-    s.read.parquet(dir.getPath)
+    // The kept read is stamped with _SUCCESS's mtime, so a directory that
+    // another JVM deleted and rebuilt is re-listed, never read through a
+    // stale file index. The session check guards identity-hash reuse.
+    val stamp = success.lastModified()
+    reads.compute((System.identityHashCode(s), dir.getPath), (_, kept) =>
+      if (kept != null && kept._1 == stamp && (kept._2.sparkSession eq s)) kept
+      else (stamp, s.read.parquet(dir.getPath)))._2
   }
 
   private val buildLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
+  // Read memo per (session, MV dir), like Tables: the directory name holds
+  // the content fingerprint, and `s.read.parquet` costs a driver-side file
+  // listing plus a schema-inference job (~50 ms) that every consumer would
+  // otherwise pay per statement. Only the plan is kept, never data.
+  private val reads =
+    new java.util.concurrent.ConcurrentHashMap[(Int, String), (Long, DataFrame)]()
+
+  /** Writes the MV unless another thread already did; true iff it built. */
   private def buildMv(dir: java.io.File, root: java.io.File, stem: String,
-                      partitionCols: Seq[String])(build: => DataFrame): Unit = {
-    if (!new java.io.File(dir, "_SUCCESS").exists()) {
+                      partitionCols: Seq[String])(build: => DataFrame): Boolean = {
+    val built = !new java.io.File(dir, "_SUCCESS").exists()
+    if (built) {
       build.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(dir.getPath)
       // Evict STALE versions of this same (name, dataset) MV — a regenerated
       // source changes fp and would otherwise leave the old materialization
@@ -98,6 +115,7 @@ object SharedMv {
           }
       }
     }
+    built
   }
 
   // ---------- builder-bytecode fingerprint ----------

@@ -29,8 +29,8 @@ class DedupTextSpec extends SparkSpec {
   }
 
   test("minhash LSH surfaces near-dups without all-pairs compare") {
-    val pairs = Dedup.minHashLshPairs(docs, "doc_id", "text", 3, 32, 8, 0.4)
-      .select("i", "j").as[(Long, Long)].collect().toSet
+    val pairs = leakFree(Dedup.minHashLshPairs(docs, "doc_id", "text", 3, 32, 8, 0.4)
+      .select("i", "j").as[(Long, Long)].collect().toSet)
     assert(pairs.contains((1L, 4L))) // exact dup always collides
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
   }
@@ -39,6 +39,13 @@ class DedupTextSpec extends SparkSpec {
     val fp = Dedup.simHash(docs, "doc_id", "text").as[(Long, Long)].collect().toMap
     assert(fp(1L) == fp(4L))
     assert(java.lang.Long.bitCount(fp(1L) ^ fp(3L)) > 4)
+  }
+
+  test("simhash pairs: the exact dup is paired, no cached Dataset left") {
+    val pairs = leakFree(Dedup.simHashPairs(docs, "doc_id", "text")
+      .select("i", "j").as[(Long, Long)].collect().toSet)
+    assert(pairs.contains((1L, 4L)))
+    assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
   }
 
   test("embedding near-dup pairs by cosine threshold") {

@@ -34,17 +34,6 @@ class LocalKernelsSpec extends SparkSpec {
   private def sortedRows(df: DataFrame): Array[String] =
     df.collect().map(_.toString).sorted
 
-  /** Runs a distributed call and asserts it left no cached Dataset behind:
-    * round leaves are local checkpoints, which Spark's ContextCleaner
-    * frees, while a persist() the loop never undoes stays cached for the
-    * whole session. */
-  private def leakFree[T](call: => T): T = {
-    spark.catalog.clearCache() // entries other suites left are not this call's
-    val out = call
-    assert(spark.sharedState.cacheManager.isEmpty, "the distributed call left a cached Dataset")
-    out
-  }
-
   test("gate: small inputs route local, localSizeBytes=0 pins distributed") {
     val e = randGraph(1, 20, 60)
     assert(LocalKernels.isSmall(e))
@@ -142,6 +131,16 @@ class LocalKernelsSpec extends SparkSpec {
     val dist3 = try sortedRows(Algorithms.louvain(bar, 2, 3))
     finally spark.conf.unset("spark.graft.algo.localSizeBytes")
     assert(loc3.toSeq == dist3.toSeq)
+  }
+
+  test("louvain multi-level: the input pairs are deduped once") {
+    val e = randGraph(21L, 40, 160).toDF("a", "b")
+    val (moves, oneLevel) = (
+      jobsDuring(Algorithms.louvainMovesDistributed(e, 2).collect()),
+      jobsDuring(Algorithms.louvainDistributed(e, 2, 1).collect()))
+    // the same dedup leaf and rounds, plus one job that cuts the weighted
+    // projection; a second filter + distinct would add its shuffle's jobs
+    assert(oneLevel == moves + 1, s"louvain levels=1: $oneLevel jobs, louvainMoves: $moves")
   }
 
   test("pageRank local == distributed (1e-9)") {
@@ -321,17 +320,35 @@ class LocalKernelsSpec extends SparkSpec {
   }
 
   test("triangleCount + lcc local == distributed, exact (multigraph rows kept)") {
-    val rnd = new scala.util.Random(14)
-    val ids = Array.tabulate(25)(i => 10L * i)
     // canonical a<b undirected edges WITH duplicates
-    val und = Seq.fill(120)((ids(rnd.nextInt(25)), ids(rnd.nextInt(25))))
-      .filter { case (a, b) => a != b }
-      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
-      .toDF("a", "b")
-    assert(sortedRows(LocalKernels.triangleCount(und)) ===
-      sortedRows(Algorithms.triangleCountDistributed(und)))
-    assert(sortedRows(LocalKernels.lcc(und)) ===
-      sortedRows(Algorithms.lccDistributed(und)))
+    val random = Seq(14L, 15L, 16L).map { seed =>
+      val rnd = new scala.util.Random(seed)
+      val ids = Array.tabulate(25)(i => 10L * i)
+      s"seed $seed" -> Seq.fill(120)((ids(rnd.nextInt(25)), ids(rnd.nextInt(25))))
+        .filter { case (a, b) => a != b }
+        .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
+    }
+    // 40-vertex clique minus a perfect matching (every degree ties) plus a
+    // hub joined to all 40, with every pair whose index sum is 0 mod 9
+    // repeated: the (deg, id) tie-break decides most orientations, and the
+    // duplicate rows shift degrees and must count per row
+    val ids = Array.tabulate(40)(i => 1000L + 7L * i)
+    val hub = 1000L + 7L * 20 + 3 // mid-range id: the hub is a and b
+    val clique = for {
+      i <- 0 until 40; j <- i + 1 until 40 if !(i % 2 == 0 && j == i + 1)
+      row = (ids(i), ids(j)); r <- Seq.fill(if ((i + j) % 9 == 0) 2 else 1)(row)
+    } yield r
+    val dense = "near-clique + hub" ->
+      (clique ++ ids.map(v => (math.min(v, hub), math.max(v, hub))))
+    val bad = (random :+ dense).flatMap { case (name, rows) =>
+      val und = rows.toDF("a", "b")
+      Seq("triangleCount" ->
+        (LocalKernels.triangleCount(und), Algorithms.triangleCountDistributed(und)),
+        "lcc" -> (LocalKernels.lcc(und), Algorithms.lccDistributed(und)))
+        .collect { case (k, (loc, dist)) if sortedRows(loc).toSeq != sortedRows(dist).toSeq =>
+          s"$name: $k" }
+    }
+    assert(bad.isEmpty, bad.mkString("local != distributed on ", ", ", ""))
   }
 
   test("varLengthExpand local == distributed, exact (min/max hops, revisit)") {

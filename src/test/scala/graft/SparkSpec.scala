@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.BeforeAndAfterAll
@@ -20,6 +22,32 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark // force session init (installs log4j config)
     CodegenTripwire.install()
     codegenBaseline = CodegenTripwire.errors
+  }
+
+  /** Runs `call` and asserts it left no cached Dataset behind: leaves cut
+    * with localCheckpoint are freed by Spark's ContextCleaner, while a
+    * persist() or cache() nothing undoes stays cached for the whole
+    * session. */
+  def leakFree[T](call: => T): T = {
+    spark.catalog.clearCache() // entries other suites left are not this call's
+    val out = call
+    assert(spark.sharedState.cacheManager.isEmpty, "the call left a cached Dataset")
+    out
+  }
+
+  /** Number of Spark jobs started while `body` runs. The bus is drained
+    * before the listener is added (earlier work's events are not the
+    * body's) and again before the count is read. */
+  def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    ListenerBus.drain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    try { body; ListenerBus.drain(sc); jobs.get }
+    finally sc.removeSparkListener(listener)
   }
 
   override protected def afterAll(): Unit = {
