@@ -1,9 +1,11 @@
 package graft.algo
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import scala.collection.mutable
+import scala.reflect.runtime.universe.TypeTag
 
 /** In-task graph kernels for stats-gated small inputs.
   *
@@ -29,6 +31,15 @@ import scala.collection.mutable
   * the catalog's 4-6 decimal rounding, same slack the DuckDB oracles rely
   * on). Differential specs in LocalKernelsSpec enforce this against the
   * distributed implementations on random graphs.
+  *
+  * Two pieces own how a small graph is laid out in memory, so no kernel
+  * does: ONE in-task entry, [[inTask]], materializes a kernel's edge
+  * projection (src, dst, and a weight or an edge id) as primitive arrays,
+  * or serves them from the resident edge cache, together with an optional
+  * tagged stream of start and target ids; ONE builder, [[view]], shapes
+  * those edges (self-loops, canonical order, dedup, extra ids) into a
+  * [[GraphView]] — sorted unique vertex ids, int edge arrays, and CSR rows
+  * (plain or symmetrized, with an optional edge-index payload) on demand.
   */
 object LocalKernels {
 
@@ -129,7 +140,27 @@ object LocalKernels {
     }
   }
 
-  // ---- in-task graph assembly -------------------------------------------
+  // ---- the in-task entry and the resident edge cache ---------------------
+  //
+  // Every kernel runs through [[inTask]]: ONE task materializes the
+  // kernel's edge projection — src and dst, plus a weight or an edge id —
+  // as primitive arrays ([[Edges]]), with an optional tagged side stream of
+  // start and target ids ([[Side]]), and hands both to the kernel body.
+  //
+  // Each call would re-run scan → shuffle-to-1 → per-row decode of the SAME
+  // edge table (the reference instead keeps its CSR resident in memory), so
+  // the entry keeps the materialized Edges keyed by (canonicalized
+  // projection plan, input files + len + mtime) — file-backed plans only,
+  // so literal/RDD-backed inputs (mutated graphs, checkpoints) can never
+  // false-hit. The task that materialized the stream PUTs the entry, the
+  // driver LOOKS IT UP before launching a job: in single-process mode
+  // (local[n] — where these kernels run at all-pay-off) driver and executor
+  // share the JVM, so the second kernel over the same edges skips the whole
+  // scan job; on a multi-JVM cluster the driver never sees executor entries
+  // and always takes the scan path — correct, just not resident.
+  // LRU-bounded by total cached rows. Measured worth (4-core host, sf0.01):
+  // with the cache off graph_analytics fell from 6.10 to 3.37 statements/s
+  // and cypher_read from 4.72 to 4.17.
 
   /** Growable primitive-long buffer (no boxing inside the task). */
   private final class Longs(initial: Int = 1 << 12) {
@@ -139,53 +170,58 @@ object LocalKernels {
       if (n == a.length) a = java.util.Arrays.copyOf(a, n << 1)
       a(n) = v; n += 1
     }
-    def apply(i: Int): Long = a(i)
     def toArray: Array[Long] = java.util.Arrays.copyOf(a, n)
   }
 
-  // ---- resident edge-stream cache ---------------------------------------
-  //
-  // Every kernel call above re-runs scan → shuffle-to-1 → per-row decode of
-  // the SAME edge table (the reference instead keeps its CSR resident in
-  // memory). The cache stores the materialized primitive edge arrays keyed
-  // by (canonicalized plan, input files + len + mtime) — file-backed plans
-  // only, so literal/RDD-backed inputs (mutated graphs, checkpoints) can
-  // never false-hit. Entries are PUT by the task that materialized the
-  // stream and LOOKED UP on the driver before launching a job: in
-  // single-process mode (local[n] — where these kernels run at all-pay-off)
-  // driver and executor share the JVM, so the second kernel over the same
-  // edges skips the whole scan job; on a multi-JVM cluster the driver never
-  // sees executor entries and always takes the standard path — correct,
-  // just not resident. LRU-bounded by total cached rows.
+  private final class Ints(initial: Int = 1 << 12) {
+    private[this] var a = new Array[Int](initial)
+    var n = 0
+    def +=(v: Int): Unit = {
+      if (n == a.length) a = java.util.Arrays.copyOf(a, n << 1)
+      a(n) = v; n += 1
+    }
+    def apply(i: Int): Int = a(i)
+    def result(): Array[Int] = java.util.Arrays.copyOf(a, n)
+  }
 
-  private final case class CachedRows(rows: AnyRef, n: Long)
+  /** One edge projection's rows in input order; `weight` and `eid` are null
+    * when the projection has no such column. */
+  private final case class Edges(src: Array[Long], dst: Array[Long],
+                                 weight: Array[Double], eid: Array[Long])
+
+  /** The side stream's start ids (tag 1) and target ids (tag 2). */
+  private final case class Side(starts: Array[Long], targets: Array[Long])
+
   private[this] val resident =
-    new java.util.LinkedHashMap[String, CachedRows](8, 0.75f, true)
+    new java.util.LinkedHashMap[String, Edges](8, 0.75f, true)
   private[this] var residentRows = 0L
   private val ResidentRowBudget = 32L * 1000 * 1000
 
-  private def residentLookup(key: String): AnyRef =
-    resident.synchronized(Option(resident.get(key)).map(_.rows).orNull)
+  private def residentLookup(key: String): Edges =
+    resident.synchronized(resident.get(key))
 
-  private def residentStore(key: String, rows: AnyRef, n: Long): Unit =
-    resident.synchronized {
+  /** Store only when driver and executors share the JVM (local[n]): on a
+    * multi-JVM cluster the driver can never see executor entries, so a
+    * store would be permanently-retained dead weight in executor heaps. */
+  private def residentStore(key: String, e: Edges): Unit = {
+    val env = org.apache.spark.SparkEnv.get
+    if (env != null && env.executorId == "driver") resident.synchronized {
       if (!resident.containsKey(key)) {
-        resident.put(key, CachedRows(rows, n))
-        residentRows += n
+        resident.put(key, e)
+        residentRows += e.src.length
         val it = resident.entrySet().iterator()
         while (residentRows > ResidentRowBudget && resident.size() > 1 && it.hasNext) {
-          val e = it.next()
-          if (!e.getKey.equals(key)) { residentRows -= e.getValue.n; it.remove() }
+          val x = it.next()
+          if (!x.getKey.equals(key)) { residentRows -= x.getValue.src.length; it.remove() }
         }
       }
     }
+  }
 
   /** Cache key for a PROJECTED edge frame, or None when the plan isn't
     * purely file-backed (LocalRelation / LogicalRDD leaves have
     * data-invisible canonical forms — never cache those). */
   private def cacheKey(df: DataFrame): Option[String] = {
-    if (!df.sparkSession.conf
-          .get("spark.graft.algo.residentCache", "true").toBoolean) return None
     val leaves = df.queryExecution.optimizedPlan.collectLeaves()
     val fileBacked = leaves.nonEmpty && leaves.forall { l =>
       val n = l.getClass.getSimpleName
@@ -213,214 +249,325 @@ object LocalKernels {
     }
   }
 
-  import org.apache.spark.sql.{Dataset, Encoder}
-
-  private def oneRow(spark: SparkSession): Dataset[java.lang.Long] =
-    spark.range(0, 1, 1, 1).as(org.apache.spark.sql.Encoders.LONG)
-
   // Pin registry for cache hits: the hit-path plan captures a small
   // HANDLE (a serializable long wrapper), not the arrays (capturing the
   // arrays would serialize up to the full row budget into every task
-  // binary). The registry maps token → (WeakReference(handle), arrays):
+  // binary). The registry maps token → (WeakReference(handle), edges):
   // the plan's closure strongly references the handle, so the pinned
-  // arrays stay resolvable for EXACTLY the lifetime of the returned
+  // edges stay resolvable for EXACTLY the lifetime of the returned
   // DataFrame — a hit-path plan executed arbitrarily late, or more than
-  // once (show() then count(), a stage retry), can never lose its arrays
+  // once (show() then count(), a stage retry), can never lose its edges
   // to eviction; once the DataFrame is GC'd the weak ref clears and the
-  // entry is purged on the next pin() (r13's fixed 64-pin FIFO could age
+  // entry is purged on the next pin() (a fixed-size FIFO of pins could age
   // a live plan's pin out and turn a cache eviction into a query error —
-  // the hit-path plan's only leaf is a 1-row range, so there is no
-  // recompute fallback). Pinned values alias the resident store's arrays,
-  // so a live pin costs one map entry, not a second copy; while pins are
-  // live the arrays can outlast the resident LRU budget — that is the
-  // point (they are reachable through user-held DataFrames regardless).
-  // Hits only happen in local mode (gated below), where driver and task
-  // share the JVM.
+  // the hit-path plan's leaf is a 1-row range or the side stream, so there
+  // is no recompute fallback). Pinned values alias the resident store's
+  // arrays, so a live pin costs one map entry, not a second copy; while
+  // pins are live the arrays can outlast the resident LRU budget — that is
+  // the point (they are reachable through user-held DataFrames regardless).
+  // Hits only happen in local mode (gated in [[inTask]]), where driver and
+  // task share the JVM.
   private final class PinHandle(val token: Long) extends Serializable
   private final case class PinEntry(
-    handle: java.lang.ref.WeakReference[PinHandle], rows: AnyRef)
+    handle: java.lang.ref.WeakReference[PinHandle], edges: Edges)
   private[this] val pinned = new java.util.HashMap[java.lang.Long, PinEntry]()
   private[this] val pinSeq = new java.util.concurrent.atomic.AtomicLong()
-  private def pin(v: AnyRef): PinHandle = pinned.synchronized {
+  private def pin(e: Edges): PinHandle = pinned.synchronized {
     val it = pinned.values().iterator()
     while (it.hasNext) if (it.next().handle.get() == null) it.remove()
     val h = new PinHandle(pinSeq.incrementAndGet())
-    pinned.put(h.token, PinEntry(new java.lang.ref.WeakReference(h), v))
+    pinned.put(h.token, PinEntry(new java.lang.ref.WeakReference(h), e))
     h
   }
-  private def pinGet(t: Long, key: String): AnyRef = {
-    val v = pinned.synchronized(Option(pinned.get(t)).map(_.rows).orNull)
-    if (v != null) v
+  private def pinGet(t: Long, key: String): Edges = {
+    val e = pinned.synchronized(Option(pinned.get(t)).map(_.edges).orNull)
+    if (e != null) e
     else residentLookup(key) match { // GC-race belt-and-braces
       case null => throw new IllegalStateException(
         s"resident-cache pin $t was garbage-collected and entry $key " +
           "was evicted before the kernel task ran")
-      case rows => rows
+      case cached => cached
     }
   }
 
-  /** Cached (src, dst) arrays for `key` — non-null only in local mode
-    * (driver and tasks share the JVM; on a cluster the driver never sees
-    * executor entries and the standard scan path runs). */
-  private[graft] def hitPair(spark: SparkSession, key: Option[String])
-      : Option[(Array[Long], Array[Long])] =
-    if (!spark.sparkContext.isLocal) None
-    else key.flatMap(k => residentLookup(k) match {
-      case (as: Array[Long], bs: Array[Long]) => Some((as, bs))
-      case _ => None
-    })
-
-  private def hitTriple(spark: SparkSession, key: Option[String])
-      : Option[(Array[Long], Array[Long], AnyRef)] =
-    if (!spark.sparkContext.isLocal) None
-    else key.flatMap(k => residentLookup(k) match {
-      case (as: Array[Long], bs: Array[Long], p: AnyRef) => Some((as, bs, p))
-      case _ => None
-    })
-
-  /** Store only when driver and executors share the JVM (local[n]): on a
-    * multi-JVM cluster the driver can never see executor entries, so a
-    * store would be permanently-retained dead weight in executor heaps. */
-  private def residentStoreLocal(key: String, rows: AnyRef, n: Long): Unit = {
-    val env = org.apache.spark.SparkEnv.get
-    if (env != null && env.executorId == "driver") residentStore(key, rows, n)
+  /** Run `body` in one task over `proj`'s edges — columns src and dst
+    * (longs) and an optional third column, a double weight or a long edge
+    * id — and, when `side` is given, its (id, tag) rows; the result's
+    * columns are `names`. The edges come from the resident cache when the
+    * same file-backed projection was materialized before in this JVM; only
+    * the side stream then rides a job. */
+  private def inTask[T <: Product : TypeTag](proj: DataFrame, names: Seq[String],
+                                            side: DataFrame = null)
+                                           (body: (Edges, Side) => Iterator[T]): DataFrame = {
+    val spark = proj.sparkSession
+    implicit val enc: Encoder[T] = Encoders.product[T]
+    val key = cacheKey(proj)
+    val third = proj.schema.fields.lift(2).map(_.dataType)
+    val weighted = third.contains(DoubleType)
+    val withEid = third.contains(LongType)
+    val hasSide = side != null
+    val hit = if (!spark.sparkContext.isLocal) None
+              else key.flatMap(k => Option(residentLookup(k)))
+    hit match {
+      case Some(e) =>
+        val h = pin(e); val k = key.get
+        val rows = if (hasSide) side.repartition(1) else spark.range(0, 1, 1, 1).toDF()
+        rows.mapPartitions { it =>
+          val s = if (hasSide) drain(it, 1, false, false)._2 else Side(Array.empty, Array.empty)
+          body(pinGet(h.token, k), s)
+        }.toDF(names: _*)
+      case None =>
+        val tagAt = if (hasSide) proj.columns.length else -1
+        val rows = if (!hasSide) proj else {
+          // edges tagged 0 and side ids in one stream: (id, 0, [0], tag)
+          val fill = proj.schema.fields.toSeq.tail.map(f => lit(0).cast(f.dataType))
+          proj.toDF(proj.columns.indices.map(i => s"_c$i"): _*).withColumn("_tag", lit(0))
+            .unionAll(side.select(col("id") +: fill :+ col("tag"): _*))
+        }
+        rows.repartition(1).mapPartitions { it =>
+          val (e, s) = drain(it, tagAt, weighted, withEid)
+          key.foreach(residentStore(_, e))
+          body(e, s)
+        }.toDF(names: _*)
+    }
   }
 
-  /** Run `body` in one task over the (Long, Long) edge stream, serving the
-    * stream from the resident cache when the same file-backed projection
-    * was materialized before in this JVM. */
-  private def inTask2[T](src: Dataset[(Long, Long)], key: Option[String])
-                        (body: Iterator[(Long, Long)] => Iterator[T])
-                        (implicit enc: Encoder[T]): Dataset[T] =
-    hitPair(src.sparkSession, key) match {
-      case Some(g) =>
-        val h = pin(g); val k = key.get
-        oneRow(src.sparkSession).mapPartitions { _ =>
-          val (as, bs) = pinGet(h.token, k).asInstanceOf[(Array[Long], Array[Long])]
-          body(Iterator.range(0, as.length).map(i => (as(i), bs(i))))
-        }
-      case None => src.repartition(1).mapPartitions { it =>
-        key match {
-          case Some(k) =>
-            val ab = new Longs(); val bb = new Longs()
-            it.foreach { case (a, b) => ab += a; bb += b }
-            val as = ab.toArray; val bs = bb.toArray
-            residentStoreLocal(k, (as, bs), as.length.toLong)
-            body(Iterator.range(0, as.length).map(i => (as(i), bs(i))))
-          case None => body(it)
-        }
-      }
+  /** One task's rows as [[Edges]] and [[Side]]. With `tagAt` < 0 every row
+    * is an edge; otherwise column `tagAt` is the tag: 0 an edge, 1 a start
+    * id and 2 a target id, the id in the first column. */
+  private def drain(it: Iterator[Row], tagAt: Int,
+                    weighted: Boolean, withEid: Boolean): (Edges, Side) = {
+    val src = new Longs(); val dst = new Longs(); val eid = new Longs()
+    val w = mutable.ArrayBuilder.make[Double]
+    val starts = new Longs(16); val targets = new Longs(16)
+    it.foreach { r =>
+      val t = if (tagAt < 0) 0 else r.getInt(tagAt)
+      if (t == 0) {
+        src += r.getLong(0); dst += r.getLong(1)
+        if (weighted) w += r.getDouble(2) else if (withEid) eid += r.getLong(2)
+      } else if (t == 1) starts += r.getLong(0)
+      else targets += r.getLong(0)
     }
-
-  /** (Long, Long, Double) variant — weighted kernels. */
-  private def inTask3[T](src: Dataset[(Long, Long, Double)], key: Option[String])
-                        (body: Iterator[(Long, Long, Double)] => Iterator[T])
-                        (implicit enc: Encoder[T]): Dataset[T] =
-    hitTriple(src.sparkSession, key) match {
-      case Some(g @ (_, _, _: Array[Double])) =>
-        val h = pin(g); val k = key.get
-        oneRow(src.sparkSession).mapPartitions { _ =>
-          val (as, bs, ws) = pinGet(h.token, k)
-            .asInstanceOf[(Array[Long], Array[Long], Array[Double])]
-          body(Iterator.range(0, as.length).map(i => (as(i), bs(i), ws(i))))
-        }
-      case _ => src.repartition(1).mapPartitions { it =>
-        key match {
-          case Some(k) =>
-            val ab = new Longs(); val bb = new Longs()
-            val wb = mutable.ArrayBuilder.make[Double]
-            it.foreach { case (a, b, w) => ab += a; bb += b; wb += w }
-            val as = ab.toArray; val bs = bb.toArray; val ws = wb.result()
-            residentStoreLocal(k, (as, bs, ws), as.length.toLong)
-            body(Iterator.range(0, as.length).map(i => (as(i), bs(i), ws(i))))
-          case None => body(it)
-        }
-      }
-    }
-
-  private final class Ints(initial: Int = 1 << 12) {
-    private[this] var a = new Array[Int](initial)
-    var n = 0
-    def +=(v: Int): Unit = {
-      if (n == a.length) a = java.util.Arrays.copyOf(a, n << 1)
-      a(n) = v; n += 1
-    }
-    def apply(i: Int): Int = a(i)
-    def result(): Array[Int] = java.util.Arrays.copyOf(a, n)
+    (Edges(src.toArray, dst.toArray, if (weighted) w.result() else null,
+       if (withEid) eid.toArray else null),
+     Side(starts.toArray, targets.toArray))
   }
 
-  /** Vertex interner: external long id ↔ dense index. */
-  private final class Interner {
-    val idOf = mutable.LongMap.empty[Int]
-    val ids = new Longs()
-    def idx(v: Long): Int = idOf.getOrElse(v, {
-      val i = ids.n; idOf.update(v, i); ids += v; i
-    })
-    def n: Int = ids.n
+  /** The side stream of [[inTask]]: distinct start ids tagged 1 and, when
+    * given, distinct target ids tagged 2. */
+  private def tagged(starts: DataFrame, startCol: String,
+                     targets: Option[(DataFrame, String)] = None): DataFrame = {
+    def ids(df: DataFrame, c: String, tag: Int): DataFrame =
+      df.select(col(c).cast("long").as("id"), lit(tag).as("tag")).distinct()
+    targets.foldLeft(ids(starts, startCol, 1)) { case (s, (t, tc)) => s.unionAll(ids(t, tc, 2)) }
   }
 
-  /** CSR from (src-index, dst-index) pairs. Returns (offsets, targets). */
-  private def csr(n: Int, si: Array[Int], di: Array[Int]): (Array[Int], Array[Int]) = {
+  /** The (src, dst) projection most kernels read. */
+  private def pairs(edges: DataFrame, a: String = "src", b: String = "dst"): DataFrame =
+    edges.select(col(a).cast("long"), col(b).cast("long"))
+
+  /** The (src, dst, weight) projection of the shortest-path kernels. */
+  private def weights(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long"), col("dst").cast("long"),
+      coalesce(col("weight"), lit(1.0)).cast("double"))
+
+  // ---- the graph view ---------------------------------------------------
+
+  /** The in-task graph: vertex ids sorted and unique — dense index order is
+    * id order, so an id tie-break is an index compare, and a lookup is a
+    * binary search — and an edge list over dense indexes with an optional
+    * aligned weight. Built by [[view]]. */
+  private final class GraphView(val ids: Array[Long], val src: Array[Int],
+                                val dst: Array[Int], val weight: Array[Double]) {
+    def n: Int = ids.length
+    def m: Int = src.length
+    /** Dense index of `id`, or -1 when it is not a vertex. */
+    def idx(id: Long): Int = {
+      val i = java.util.Arrays.binarySearch(ids, id)
+      if (i < 0) -1 else i
+    }
+    /** Out-rows of the edges, or of the edges in both directions (`sym`). */
+    def out(sym: Boolean = false, withPos: Boolean = false): Csr =
+      if (sym) new Csr(n, src ++ dst, dst ++ src, withPos)
+      else new Csr(n, src, dst, withPos)
+  }
+
+  /** Compressed rows of the edges `from(k) → to(k)` over `n` vertices,
+    * edge order kept within a row. `pos` (when asked) holds each entry's
+    * edge index k, so a per-edge payload reads aligned. */
+  private final class Csr(val n: Int, from: Array[Int], to: Array[Int], withPos: Boolean) {
     val off = new Array[Int](n + 1)
-    var k = 0
-    while (k < si.length) { off(si(k) + 1) += 1; k += 1 }
-    var i = 0
-    while (i < n) { off(i + 1) += off(i); i += 1 }
-    val tgt = new Array[Int](si.length)
-    val cur = java.util.Arrays.copyOf(off, n)
-    k = 0
-    while (k < si.length) { val s = si(k); tgt(cur(s)) = di(k); cur(s) += 1; k += 1 }
-    (off, tgt)
+    val tgt = new Array[Int](from.length)
+    val pos: Array[Int] = if (withPos) new Array[Int](from.length) else null
+    locally {
+      var k = 0
+      while (k < from.length) { off(from(k) + 1) += 1; k += 1 }
+      var i = 0
+      while (i < n) { off(i + 1) += off(i); i += 1 }
+      val cur = java.util.Arrays.copyOf(off, n)
+      k = 0
+      while (k < from.length) {
+        val s = from(k); val c = cur(s)
+        tgt(c) = to(k)
+        if (withPos) pos(c) = k
+        cur(s) = c + 1; k += 1
+      }
+    }
   }
+
+  /** Shape `e` into a [[GraphView]]. Edges keep input order unless shaped:
+    * `loops = false` drops self-loops before any id is interned;
+    * `canonical` orders each edge (min, max); `dedup` keeps each distinct
+    * (src, dst) once, in (src, dst) order, with weights the smallest one
+    * below Double.MaxValue (a pair with none is dropped — the rule mst's
+    * Kruskal has always read). `extra` ids are vertices even without an
+    * edge. */
+  private def view(e: Edges, loops: Boolean = true, canonical: Boolean = false,
+                   dedup: Boolean = false, extra: Seq[Long] = Nil): GraphView = {
+    var (a, b, w) = (e.src, e.dst, e.weight)
+    if (!loops || canonical) {
+      val sa = new Longs(); val sb = new Longs()
+      val sw = if (w == null) null else mutable.ArrayBuilder.make[Double]
+      var k = 0
+      while (k < e.src.length) {
+        val s = e.src(k); val d = e.dst(k)
+        if (loops || s != d) {
+          val flip = canonical && d < s
+          sa += (if (flip) d else s); sb += (if (flip) s else d)
+          if (sw != null) sw += e.weight(k)
+        }
+        k += 1
+      }
+      a = sa.toArray; b = sb.toArray; if (sw != null) w = sw.result()
+    }
+    // intern by first appearance (LongMap: O(1), no boxing), then renumber
+    // by sorting the distinct ids — O(n log n) on vertices, not endpoints
+    val first = mutable.LongMap.empty[Int]
+    val seen = new Longs()
+    def intern(v: Long): Int = first.getOrElseUpdate(v, { seen += v; seen.n - 1 })
+    val si = new Array[Int](a.length); val di = new Array[Int](a.length)
+    var k = 0
+    while (k < a.length) { si(k) = intern(a(k)); di(k) = intern(b(k)); k += 1 }
+    extra.foreach(intern)
+    val byFirst = seen.toArray
+    val ids = byFirst.clone()
+    java.util.Arrays.sort(ids)
+    val rank = new Array[Int](ids.length)
+    var i = 0
+    while (i < ids.length) { rank(i) = java.util.Arrays.binarySearch(ids, byFirst(i)); i += 1 }
+    k = 0
+    while (k < a.length) { si(k) = rank(si(k)); di(k) = rank(di(k)); k += 1 }
+    if (!dedup) new GraphView(ids, si, di, w)
+    else {
+      // pack → sort → unique (a boxed HashSet on packed keys measured ~µs
+      // per insert; one Arrays.sort replaces the inserts)
+      val keys = new Array[Long](si.length)
+      k = 0
+      while (k < si.length) { keys(k) = (si(k).toLong << 32) | di(k); k += 1 }
+      val uk = uniqueSorted(if (w == null) keys else keys.clone())
+      val minW = if (w == null) null else {
+        val mw = Array.fill(uk.length)(Double.MaxValue)
+        k = 0
+        while (k < keys.length) {
+          val p = java.util.Arrays.binarySearch(uk, keys(k))
+          if (w(k) < mw(p)) mw(p) = w(k)
+          k += 1
+        }
+        mw
+      }
+      val us = new Ints(); val ud = new Ints()
+      val uw = if (w == null) null else mutable.ArrayBuilder.make[Double]
+      var p = 0
+      while (p < uk.length) {
+        if (minW == null || minW(p) < Double.MaxValue) {
+          us += (uk(p) >>> 32).toInt; ud += uk(p).toInt
+          if (uw != null) uw += minW(p)
+        }
+        p += 1
+      }
+      new GraphView(ids, us.result(), ud.result(), if (uw == null) null else uw.result())
+    }
+  }
+
+  /** Sort + unique in place; returns the deduped prefix copy. */
+  private def uniqueSorted(ks: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(ks)
+    var m = 0; var i = 0
+    while (i < ks.length) {
+      if (i == 0 || ks(i) != ks(i - 1)) { ks(m) = ks(i); m += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(ks, m)
+  }
+
+  private def round4(x: Double): Double =
+    math.signum(x) * math.floor(math.abs(x) * 1e4 + 0.5) / 1e4
 
   // ---- kernels ----------------------------------------------------------
 
-  /** Damped power iteration with dangling-mass redistribution — same
-    * update as [[Algorithms.pageRank]]'s distributed loop, same float
-    * association `(1-d)/n + d*(recv + dmass/n)`. */
-  def pageRank(edges: DataFrame, iterations: Int, damping: Double): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val src = edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)]
-    inTask2(src, cacheKey(src.toDF())) { it =>
-        val vx = new Interner
-        val sb = new Ints(); val db = new Ints()
-        it.foreach { case (s, d) => sb += vx.idx(s); db += vx.idx(d) }
-        val (si, di) = (sb.result(), db.result())
-        val n = vx.n
-        if (n == 0) Iterator.empty
-        else {
-          val m = si.length
-          val deg = new Array[Int](n)
-          var k = 0
-          while (k < m) { deg(si(k)) += 1; k += 1 }
-          var rank = Array.fill(n)(1.0 / n)
-          var iter = 0
-          while (iter < iterations) {
-            var dmass = 0.0
-            var i = 0
-            while (i < n) { if (deg(i) == 0) dmass += rank(i); i += 1 }
-            val recv = new Array[Double](n)
-            k = 0
-            while (k < m) { recv(di(k)) += rank(si(k)) / deg(si(k)); k += 1 }
-            val nr = new Array[Double](n)
-            i = 0
-            while (i < n) {
-              nr(i) = (1 - damping) / n + damping * (recv(i) + dmass / n); i += 1
-            }
-            rank = nr; iter += 1
-          }
-          (0 until n).iterator.map(i => (vx.ids(i), rank(i)))
+  /** Damped power iteration with dangling-mass redistribution. */
+  def pageRank(edges: DataFrame, iterations: Int, damping: Double): DataFrame =
+    ranks(pairs(edges), Nil, iterations, damping)
+
+  /** Weighted PageRank: rank flows along each out-edge in proportion to its
+    * weight; weight ≤ 0 edges are dropped (not an edge). */
+  def pageRankWeighted(edges: DataFrame, iterations: Int, damping: Double): DataFrame =
+    ranks(edges.select(col("src").cast("long"), col("dst").cast("long"),
+      col("weight").cast("double")).filter(col("weight") > 0), Nil, iterations, damping)
+
+  /** Personalized PageRank: teleport AND dangling mass go to the seed set,
+    * non-seed restart is zero. */
+  def personalizedPageRank(edges: DataFrame, seeds: Seq[Long],
+                           iterations: Int, damping: Double): DataFrame =
+    ranks(pairs(edges), seeds.distinct, iterations, damping)
+
+  /** The in-task PageRank — [[Algorithms.pageRankRounds]] term for term: a
+    * vertex sends rank·w(e)/W(v) along each out-edge (w = 1.0 unweighted,
+    * W(v) its out-weight, dangling = W(v) of zero), and rank' =
+    * teleport((1−d)/nt) + d·(recv + teleport(dmass/nt)), where teleport is
+    * the identity, or zero off `seeds` when personalized, and nt counts the
+    * vertices, or the seeds. */
+  private def ranks(proj: DataFrame, seeds: Seq[Long],
+                    iterations: Int, damping: Double): DataFrame =
+    inTask(proj, Seq("id", "rank")) { (e, _) =>
+      val g = view(e)
+      val (n, m, si, di) = (g.n, g.m, g.src, g.dst)
+      val w = if (g.weight != null) g.weight
+              else { val ones = new Array[Double](m); java.util.Arrays.fill(ones, 1.0); ones }
+      val outW = new Array[Double](n)
+      var k = 0
+      while (k < m) { outW(si(k)) += w(k); k += 1 }
+      val onSeed = new Array[Boolean](n)
+      if (seeds.isEmpty) java.util.Arrays.fill(onSeed, true)
+      else seeds.foreach { s => val i = g.idx(s); if (i >= 0) onSeed(i) = true }
+      val nt = if (seeds.isEmpty) n.toDouble else seeds.size.toDouble
+      def teleport(i: Int, x: Double): Double = if (onSeed(i)) x else 0.0
+      var rank = Array.tabulate(n)(i => teleport(i, 1.0 / nt))
+      var iter = 0
+      while (iter < iterations) {
+        var dmass = 0.0
+        var i = 0
+        while (i < n) { if (outW(i) == 0.0) dmass += rank(i); i += 1 }
+        val recv = new Array[Double](n)
+        k = 0
+        while (k < m) { recv(di(k)) += (rank(si(k)) / outW(si(k))) * w(k); k += 1 }
+        val nr = new Array[Double](n)
+        i = 0
+        while (i < n) {
+          nr(i) = teleport(i, (1 - damping) / nt) + damping * (recv(i) + teleport(i, dmass / nt))
+          i += 1
         }
-      }.toDF("id", "rank")
-  }
+        rank = nr; iter += 1
+      }
+      Iterator.range(0, n).map(i => (g.ids(i), rank(i)))
+    }
 
   /** Shared in-task truncated directed BFS from one seed over a CSR.
     * Returns (dist array (-1 unreached), level order list) with seed at
     * dist 0, truncated at `radius`. */
-  private def bfsFrom(seed: Int, n: Int, off: Array[Int], tgt: Array[Int],
-                      radius: Int): (Array[Int], Array[Int]) = {
-    val dist = Array.fill(n)(-1)
+  private def bfsFrom(seed: Int, adj: Csr, radius: Int): (Array[Int], Array[Int]) = {
+    val (off, tgt) = (adj.off, adj.tgt)
+    val dist = Array.fill(adj.n)(-1)
     dist(seed) = 0
     val order = new Ints()
     var frontier = List(seed)
@@ -441,64 +588,43 @@ object LocalKernels {
     (dist, order.result())
   }
 
+  /** One truncated directed BFS per distinct seed; `stat` folds the
+    * distances of the nodes it reached, in BFS order, seed excluded. An
+    * absent or isolated seed reaches none. */
+  private def seedSweep[T <: Product : TypeTag](edges: DataFrame, seeds: Seq[Long],
+      radius: Int, names: Seq[String])(stat: (Long, Array[Int]) => T): DataFrame = {
+    val sd = seeds.distinct
+    inTask(pairs(edges), names) { (e, _) =>
+      val g = view(e)
+      val adj = g.out()
+      sd.iterator.map { s =>
+        val seed = g.idx(s)
+        if (seed < 0) stat(s, Array.emptyIntArray)
+        else { val (dist, order) = bfsFrom(seed, adj, radius); stat(s, order.map(dist(_))) }
+      }
+    }
+  }
+
   /** Truncated harmonic centrality — same semantics as
     * [[Algorithms.harmonicCentrality]]'s distributed multi-source BFS:
     * directed, seed excluded, exact within radius; absent/isolated seeds
     * return (seed, 0, 0.0). */
-  def harmonicCentrality(edges: DataFrame, seeds: Seq[Long], radius: Int): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val sd = seeds.distinct
-    val src = edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)]
-    inTask2(src, cacheKey(src.toDF())) { it =>
-      val vx = new Interner
-      val sb = new Ints(); val db = new Ints()
-      it.foreach { case (s, d) => sb += vx.idx(s); db += vx.idx(d) }
-      val (si, di) = (sb.result(), db.result())
-      val n = vx.n
-      val (off, tgt) = csr(n, si, di)
-      sd.iterator.map { s =>
-        vx.idOf.get(s) match {
-          case Some(seed) =>
-            val (dist, order) = bfsFrom(seed, n, off, tgt, radius)
-            var h = 0.0; var c = 0L; var i = 0
-            while (i < order.length) { h += 1.0 / dist(order(i)); c += 1; i += 1 }
-            (s, c, math.signum(h) * math.floor(math.abs(h) * 1e4 + 0.5) / 1e4)
-          case None => (s, 0L, 0.0)
-        }
-      }
-    }.toDF("seed", "n_reached", "harmonic")
-  }
+  def harmonicCentrality(edges: DataFrame, seeds: Seq[Long], radius: Int): DataFrame =
+    seedSweep(edges, seeds, radius, Seq("seed", "n_reached", "harmonic")) { (s, ds) =>
+      var h = 0.0
+      ds.foreach(d => h += 1.0 / d)
+      (s, ds.length.toLong, round4(h))
+    }
 
   /** Truncated closeness + eccentricity — same semantics as
     * [[Algorithms.closenessCentrality]]. */
-  def closenessCentrality(edges: DataFrame, seeds: Seq[Long], radius: Int): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val sd = seeds.distinct
-    val src = edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)]
-    inTask2(src, cacheKey(src.toDF())) { it =>
-      val vx = new Interner
-      val sb = new Ints(); val db = new Ints()
-      it.foreach { case (s, d) => sb += vx.idx(s); db += vx.idx(d) }
-      val (si, di) = (sb.result(), db.result())
-      val n = vx.n
-      val (off, tgt) = csr(n, si, di)
-      sd.iterator.map { s =>
-        vx.idOf.get(s) match {
-          case Some(seed) =>
-            val (dist, order) = bfsFrom(seed, n, off, tgt, radius)
-            var sdist = 0L; var c = 0L; var ecc = 0; var i = 0
-            while (i < order.length) {
-              val d = dist(order(i)); sdist += d; if (d > ecc) ecc = d; c += 1; i += 1
-            }
-            val cl = if (c == 0) 0.0 else c.toDouble / sdist
-            (s, c, math.signum(cl) * math.floor(math.abs(cl) * 1e4 + 0.5) / 1e4, ecc)
-          case None => (s, 0L, 0.0, 0)
-        }
-      }
-    }.toDF("seed", "n_reached", "closeness", "eccentricity")
-  }
+  def closenessCentrality(edges: DataFrame, seeds: Seq[Long], radius: Int): DataFrame =
+    seedSweep(edges, seeds, radius,
+        Seq("seed", "n_reached", "closeness", "eccentricity")) { (s, ds) =>
+      val c = ds.length
+      val cl = if (c == 0) 0.0 else c.toDouble / ds.foldLeft(0L)(_ + _)
+      (s, c.toLong, round4(cl), if (c == 0) 0 else ds.max)
+    }
 
   /** Sampled-source Brandes betweenness — same semantics as
     * [[Algorithms.betweennessCentrality]]'s distributed loop: directed,
@@ -507,32 +633,18 @@ object LocalKernels {
     * excluded structurally; every node reached at dist ≥ 1 by any seed
     * emits a row (deepest-level nodes carry δ = 0), bc rounded to 4. */
   def betweennessCentrality(edges: DataFrame, seeds: Seq[Long], maxDepth: Int): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
     val sd = seeds.distinct
-    val src = edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)]
-    inTask2(src, cacheKey(src.toDF())) { it =>
-      // directed dedup as pack → sort → unique (r15: a boxed
-      // mutable.HashSet[Long] on packed keys measured ~µs per insert —
-      // same pathology as the Louvain contraction's LongMap; one
-      // Arrays.sort replaces 2M hash inserts)
-      val vx = new Interner
-      val keys = new Longs()
-      it.foreach { case (s, d) =>
-        keys += (vx.idx(s).toLong << 32) | (vx.idx(d).toLong & 0xffffffffL)
-      }
-      val ks = uniqueSorted(keys.toArray)
-      val sb = new Ints(); val db = new Ints()
-      var ki = 0
-      while (ki < ks.length) { sb += (ks(ki) >>> 32).toInt; db += ks(ki).toInt; ki += 1 }
-      val (si, di) = (sb.result(), db.result())
-      val n = vx.n
-      val (off, tgt) = csr(n, si, di)
+    inTask(pairs(edges), Seq("id", "bc")) { (e, _) =>
+      val g = view(e, dedup = true)
+      val n = g.n
+      val adj = g.out()
+      val (off, tgt) = (adj.off, adj.tgt)
       val bc = new Array[Double](n)
       val emit = new Array[Boolean](n)
       sd.foreach { s =>
-        vx.idOf.get(s).foreach { seed =>
-          val (dist, order) = bfsFrom(seed, n, off, tgt, maxDepth)
+        val seed = g.idx(s)
+        if (seed >= 0) {
+          val (dist, order) = bfsFrom(seed, adj, maxDepth)
           val sigma = new Array[Double](n)
           sigma(seed) = 1.0
           // forward σ: order is level-sorted, so pushing seed then each
@@ -566,274 +678,130 @@ object LocalKernels {
           }
         }
       }
-      (0 until n).iterator.filter(emit).map(i =>
-        (vx.ids(i), math.signum(bc(i)) * math.floor(math.abs(bc(i)) * 1e4 + 0.5) / 1e4))
-    }.toDF("id", "bc")
-  }
-
-  /** Weighted PageRank — identical per-round float association to
-    * [[Algorithms.pageRankWeighted]]'s distributed loop:
-    * recv(v) += (rank(u)/W(u))·w(e), rank' = (1−d)/n + d·(recv + dmass/n);
-    * weight ≤ 0 edges dropped (not an edge), dangling = zero surviving
-    * out-weight. */
-  def pageRankWeighted(edges: DataFrame, iterations: Int, damping: Double): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val srcDs = edges.select(col("src").cast("long"), col("dst").cast("long"),
-        col("weight").cast("double")).filter(col("weight") > 0)
-      .as[(Long, Long, Double)]
-    inTask3(srcDs, cacheKey(srcDs.toDF())) { it =>
-      val vx = new Interner
-      val sb = new Ints(); val db = new Ints(); val wb = mutable.ArrayBuffer.empty[Double]
-      it.foreach { case (s, d, w) => sb += vx.idx(s); db += vx.idx(d); wb += w }
-      val (si, di, w) = (sb.result(), db.result(), wb.toArray)
-      val n = vx.n
-      if (n == 0) Iterator.empty
-      else {
-        val m = si.length
-        val outW = new Array[Double](n)
-        var k = 0
-        while (k < m) { outW(si(k)) += w(k); k += 1 }
-        var rank = Array.fill(n)(1.0 / n)
-        var iter = 0
-        while (iter < iterations) {
-          var dmass = 0.0
-          var i = 0
-          while (i < n) { if (outW(i) == 0.0) dmass += rank(i); i += 1 }
-          val recv = new Array[Double](n)
-          k = 0
-          while (k < m) { recv(di(k)) += (rank(si(k)) / outW(si(k))) * w(k); k += 1 }
-          val nr = new Array[Double](n)
-          i = 0
-          while (i < n) {
-            nr(i) = (1 - damping) / n + damping * (recv(i) + dmass / n); i += 1
-          }
-          rank = nr; iter += 1
-        }
-        (0 until n).iterator.map(i => (vx.ids(i), rank(i)))
-      }
-    }.toDF("id", "rank")
+      Iterator.range(0, n).filter(emit).map(i => (g.ids(i), round4(bc(i))))
+    }
   }
 
   /** HITS hubs & authorities — same half-step updates and L1
     * normalization as [[Algorithms.hits]]'s distributed loop (edges
     * deduped first, matching its distinct). */
-  def hits(edges: DataFrame, iterations: Int): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val src = edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)]
-    inTask2(src, cacheKey(src.toDF())) { it =>
-      // directed dedup as pack → sort → unique (r15: a boxed
-      // mutable.HashSet[Long] on packed keys measured ~µs per insert —
-      // same pathology as the Louvain contraction's LongMap; one
-      // Arrays.sort replaces 2M hash inserts)
-      val vx = new Interner
-      val keys = new Longs()
-      it.foreach { case (s, d) =>
-        keys += (vx.idx(s).toLong << 32) | (vx.idx(d).toLong & 0xffffffffL)
+  def hits(edges: DataFrame, iterations: Int): DataFrame =
+    inTask(pairs(edges), Seq("id", "hub", "auth")) { (e, _) =>
+      val g = view(e, dedup = true)
+      val (n, m, si, di) = (g.n, g.m, g.src, g.dst)
+      var hub = Array.fill(n)(1.0)
+      var auth = new Array[Double](n)
+      var iter = 0
+      while (iter < iterations) {
+        val ar = new Array[Double](n)
+        var k = 0
+        while (k < m) { ar(di(k)) += hub(si(k)); k += 1 }
+        var s = 0.0; var i = 0
+        while (i < n) { s += ar(i); i += 1 }
+        i = 0; while (i < n) { ar(i) /= s; i += 1 }
+        auth = ar
+        val hr = new Array[Double](n)
+        k = 0
+        while (k < m) { hr(si(k)) += auth(di(k)); k += 1 }
+        s = 0.0; i = 0
+        while (i < n) { s += hr(i); i += 1 }
+        i = 0; while (i < n) { hr(i) /= s; i += 1 }
+        hub = hr
+        iter += 1
       }
-      val ks = uniqueSorted(keys.toArray)
-      val sb = new Ints(); val db = new Ints()
-      var ki = 0
-      while (ki < ks.length) { sb += (ks(ki) >>> 32).toInt; db += ks(ki).toInt; ki += 1 }
-      val (si, di) = (sb.result(), db.result())
-      val n = vx.n
-      if (n == 0) Iterator.empty
-      else {
-        val m = si.length
-        var hub = Array.fill(n)(1.0)
-        var auth = new Array[Double](n)
-        var iter = 0
-        while (iter < iterations) {
-          val ar = new Array[Double](n)
-          var k = 0
-          while (k < m) { ar(di(k)) += hub(si(k)); k += 1 }
-          var s = 0.0; var i = 0
-          while (i < n) { s += ar(i); i += 1 }
-          i = 0; while (i < n) { ar(i) /= s; i += 1 }
-          auth = ar
-          val hr = new Array[Double](n)
-          k = 0
-          while (k < m) { hr(si(k)) += auth(di(k)); k += 1 }
-          s = 0.0; i = 0
-          while (i < n) { s += hr(i); i += 1 }
-          i = 0; while (i < n) { hr(i) /= s; i += 1 }
-          hub = hr
-          iter += 1
-        }
-        (0 until n).iterator.map(i => (vx.ids(i), hub(i), auth(i)))
-      }
-    }.toDF("id", "hub", "auth")
-  }
-
-  /** Personalized PageRank — identical per-round arithmetic to
-    * [[Algorithms.personalizedPageRank]]: teleport AND dangling mass go to
-    * the seed set, non-seed restart is zero. */
-  def personalizedPageRank(edges: DataFrame, seeds: Seq[Long],
-                           iterations: Int, damping: Double): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val seedSet = seeds.toSet
-    val src = edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)]
-    inTask2(src, cacheKey(src.toDF())) { it =>
-        val vx = new Interner
-        val sb = new Ints(); val db = new Ints()
-        it.foreach { case (s, d) => sb += vx.idx(s); db += vx.idx(d) }
-        val (si, di) = (sb.result(), db.result())
-        val n = vx.n
-        if (n == 0) Iterator.empty
-        else {
-          val m = si.length
-          val deg = new Array[Int](n)
-          var k = 0
-          while (k < m) { deg(si(k)) += 1; k += 1 }
-          val isSeed = Array.tabulate(n)(i => seedSet.contains(vx.ids(i)))
-          val ns = seedSet.size.toDouble // dedup: teleport share per distinct seed
-          var rank = Array.tabulate(n)(i => if (isSeed(i)) 1.0 / ns else 0.0)
-          var iter = 0
-          while (iter < iterations) {
-            var dmass = 0.0
-            var i = 0
-            while (i < n) { if (deg(i) == 0) dmass += rank(i); i += 1 }
-            val recv = new Array[Double](n)
-            k = 0
-            while (k < m) { recv(di(k)) += rank(si(k)) / deg(si(k)); k += 1 }
-            val nr = new Array[Double](n)
-            i = 0
-            while (i < n) {
-              nr(i) = (if (isSeed(i)) (1 - damping) / ns + damping * dmass / ns
-                       else 0.0) + damping * recv(i)
-              i += 1
-            }
-            rank = nr; iter += 1
-          }
-          (0 until n).iterator.map(i => (vx.ids(i), rank(i)))
-        }
-      }.toDF("id", "rank")
-  }
+      Iterator.range(0, n).map(i => (g.ids(i), hub(i), auth(i)))
+    }
 
   /** Synchronous label propagation, both directions incident (duplicates
     * kept), argmax frequency with min-label tie-break — the exact
     * per-round rule of [[Algorithms.cdlp]]. */
-  def cdlp(edges: DataFrame, iterations: Int): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val srcDs = edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)]
-    inTask2(srcDs, cacheKey(srcDs.toDF())) { it =>
-        val vx = new Interner
-        val sb = new Ints(); val db = new Ints()
-        // undirected incidence: every input edge contributes BOTH directions
-        it.foreach { case (s, d) =>
-          val a = vx.idx(s); val b = vx.idx(d)
-          sb += a; db += b
-          sb += b; db += a
-        }
-        val n = vx.n
-        if (n == 0) Iterator.empty
-        else {
-          // in-neighbor CSR (src of und edge is the label donor)
-          val (off, nbr) = csr(n, db.result(), sb.result())
-          // labels as DENSE vertex indices (a label is always some vertex's
-          // id), counted in a flat int array + touched list — the same
-          // no-map idiom as the Louvain rounds. The per-vertex
-          // mutable.LongMap counter this replaces measured tens of µs per
-          // update on id-valued keys (r15 profile of the louvain
-          // contraction, same map type), and clear() per vertex re-walks
-          // the map's backing arrays; the flat counter resets only the
-          // touched entries. Tie-break semantics unchanged: max frequency,
-          // then smallest label VALUE (ids(idx) comparison).
-          val ids = vx.ids.toArray
-          var lbl = Array.tabulate(n)(identity)
-          val cnt = new Array[Int](n)
-          val touched = new Ints()
-          var r = 0
-          while (r < iterations) {
-            val next = new Array[Int](n)
-            var v = 0
-            while (v < n) {
-              touched.n = 0
-              var k = off(v)
-              while (k < off(v + 1)) {
-                val li = lbl(nbr(k))
-                if (cnt(li) == 0) touched += li
-                cnt(li) += 1
-                k += 1
-              }
-              var bestI = lbl(v); var bestF = 0
-              var t = 0
-              while (t < touched.n) {
-                val li = touched(t); val f = cnt(li)
-                if (f > bestF || (f == bestF && ids(li) < ids(bestI))) {
-                  bestI = li; bestF = f
-                }
-                t += 1
-              }
-              t = 0
-              while (t < touched.n) { cnt(touched(t)) = 0; t += 1 }
-              next(v) = bestI
-              v += 1
-            }
-            lbl = next; r += 1
+  def cdlp(edges: DataFrame, iterations: Int): DataFrame =
+    inTask(pairs(edges), Seq("id", "label")) { (e, _) =>
+      val g = view(e)
+      val n = g.n
+      // undirected incidence: every input edge makes each endpoint a
+      // label donor of the other
+      val adj = g.out(sym = true)
+      val (off, nbr) = (adj.off, adj.tgt)
+      // labels as DENSE vertex indices (a label is always some vertex's
+      // id), counted in a flat int array + touched list — the same no-map
+      // idiom as the Louvain rounds: a per-vertex mutable.LongMap counter
+      // measured tens of µs per update on id-valued keys, and clear() per
+      // vertex re-walks the map's backing arrays; the flat counter resets
+      // only the touched entries. Max frequency, then smallest label: the
+      // smaller index is the smaller id.
+      var lbl = Array.tabulate(n)(identity)
+      val cnt = new Array[Int](n)
+      val touched = new Ints()
+      var r = 0
+      while (r < iterations) {
+        val next = new Array[Int](n)
+        var v = 0
+        while (v < n) {
+          touched.n = 0
+          var k = off(v)
+          while (k < off(v + 1)) {
+            val li = lbl(nbr(k))
+            if (cnt(li) == 0) touched += li
+            cnt(li) += 1
+            k += 1
           }
-          (0 until n).iterator.map(i => (ids(i), ids(lbl(i))))
+          var bestI = lbl(v); var bestF = 0
+          var t = 0
+          while (t < touched.n) {
+            val li = touched(t); val f = cnt(li)
+            if (f > bestF || (f == bestF && li < bestI)) { bestI = li; bestF = f }
+            t += 1
+          }
+          t = 0
+          while (t < touched.n) { cnt(touched(t)) = 0; t += 1 }
+          next(v) = bestI
+          v += 1
         }
-      }.toDF("id", "label")
-  }
+        lbl = next; r += 1
+      }
+      Iterator.range(0, n).map(i => (g.ids(i), g.ids(lbl(i))))
+    }
 
   /** Connected components, component = min vertex id — union-find with the
-    * smaller ROOT id kept as root, which is exactly the fixpoint of
+    * smaller ROOT kept as root, which is exactly the fixpoint of
     * [[Algorithms.wcc]]'s min-label propagation. */
-  def wcc(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val srcDs = edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)]
-    inTask2(srcDs, cacheKey(srcDs.toDF())) { it =>
-        val vx = new Interner
-        def find(x0: Int, p: Array[Int]): Int = {
-          var x = x0
-          while (p(x) != x) { p(x) = p(p(x)); x = p(x) }
-          x
-        }
-        val es = new Ints(); val ed = new Ints()
-        it.foreach { case (s, d) => es += vx.idx(s); ed += vx.idx(d) }
-        val n = vx.n
-        val p = Array.tabulate(n)(identity)
-        var k = 0
-        val (si, di) = (es.result(), ed.result())
-        while (k < si.length) {
-          val a = find(si(k), p); val b = find(di(k), p)
-          if (a != b) {
-            // root with the smaller EXTERNAL id wins → component = min id
-            if (vx.ids(a) < vx.ids(b)) p(b) = a else p(a) = b
-          }
-          k += 1
-        }
-        (0 until n).iterator.map(i => (vx.ids(i), vx.ids(find(i, p))))
-      }.toDF("id", "component")
-  }
+  def wcc(edges: DataFrame): DataFrame =
+    inTask(pairs(edges), Seq("id", "component")) { (e, _) =>
+      val g = view(e)
+      val p = Array.tabulate(g.n)(identity)
+      def find(x0: Int): Int = {
+        var x = x0
+        while (p(x) != x) { p(x) = p(p(x)); x = p(x) }
+        x
+      }
+      var k = 0
+      while (k < g.m) {
+        val a = find(g.src(k)); val b = find(g.dst(k))
+        if (a < b) p(b) = a else if (b < a) p(a) = b
+        k += 1
+      }
+      Iterator.range(0, g.n).map(i => (g.ids(i), g.ids(find(i))))
+    }
 
-  /** Strongly connected components — iterative Tarjan over the interned
-    * CSR, one pass, exact (no iteration bound). Component label = min
-    * external id in the SCC, the same labeling GraphX's
-    * stronglyConnectedComponents converges to ([[Algorithms.sccDistributed]]
-    * is the distributed twin; SccKernelSpec is the differential check). */
-  def scc(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val srcDs = edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)]
-    inTask2(srcDs, cacheKey(srcDs.toDF())) { it =>
-      val vx = new Interner
-      val es = new Ints(); val ed = new Ints()
-      it.foreach { case (s, d) => es += vx.idx(s); ed += vx.idx(d) }
-      val n = vx.n
-      val (off, adj) = csr(n, es.result(), ed.result())
+  /** Strongly connected components — iterative Tarjan over the view's CSR,
+    * one pass, exact (no iteration bound). Component label = min external
+    * id in the SCC, the same labeling GraphX's stronglyConnectedComponents
+    * converges to ([[Algorithms.sccDistributed]] is the distributed twin;
+    * LocalKernelsSpec is the differential check). */
+  def scc(edges: DataFrame): DataFrame =
+    inTask(pairs(edges), Seq("id", "component")) { (e, _) =>
+      val g = view(e)
+      val n = g.n
+      val csr = g.out()
+      val (off, adj) = (csr.off, csr.tgt)
       val index = Array.fill(n)(-1)
       val low = new Array[Int](n)
       val onStack = new Array[Boolean](n)
       val tarjan = new Array[Int](n); var tn = 0          // Tarjan's SCC stack
       val dfsNode = new Array[Int](n)                      // explicit DFS stack
       val dfsEdge = new Array[Int](n)
-      val compMin = new Array[Long](n)                     // min external id per node's SCC
+      val compMin = new Array[Int](n)                      // min index (= min id) per node's SCC
       var idx = 0
       var v = 0
       while (v < n) {
@@ -860,13 +828,13 @@ object LocalKernels {
                 if (low(u) < low(p)) low(p) = low(u)
               }
               if (low(u) == index(u)) {
-                // pop the SCC rooted at u; label every member min external id
-                var mn = Long.MaxValue
+                // pop the SCC rooted at u; label every member with its min
+                var mn = Int.MaxValue
                 var i = tn - 1
                 var done = false
                 while (!done) {
                   val m = tarjan(i)
-                  if (vx.ids(m) < mn) mn = vx.ids(m)
+                  if (m < mn) mn = m
                   if (m == u) done = true else i -= 1
                 }
                 while (tn > i) {
@@ -881,103 +849,53 @@ object LocalKernels {
         }
         v += 1
       }
-      (0 until n).iterator.map(i => (vx.ids(i), compMin(i)))
-    }.toDF("id", "component")
-  }
+      Iterator.range(0, n).map(i => (g.ids(i), g.ids(compMin(i))))
+    }
 
   /** Synchronous fixed-round k-core peel — mirrors
     * [[Algorithms.kCoreDistributed]] exactly: symmetrize+dedup+drop self
     * loops, then `rounds` rounds each removing ALL nodes with degree < k
     * at once; returns (id, deg) for nodes with a surviving edge. */
-  def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val srcDs = edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)]
-    inTask2(srcDs, cacheKey(srcDs.toDF())) { it =>
-        // canonical dedup as pack → sort → unique (see betweenness — the
-        // tuple-keyed HashSet boxed every pair)
-        val vx = new Interner
-        val keys = new Longs()
-        it.foreach { case (s, d) =>
-          if (s != d) {
-            val lo = math.min(s, d); val hi = math.max(s, d)
-            keys += (vx.idx(lo).toLong << 32) | (vx.idx(hi).toLong & 0xffffffffL)
-          }
-        }
-        val ks = uniqueSorted(keys.toArray)
-        val es = new Ints(); val ed = new Ints()
-        var ki = 0
-        while (ki < ks.length) { es += (ks(ki) >>> 32).toInt; ed += ks(ki).toInt; ki += 1 }
-        val n = vx.n
-        val (si, di) = (es.result(), ed.result())
-        val alive = Array.fill(n)(true)
-        val deg = new Array[Int](n)
-        // a round that drops nobody is the fixed point: the rest are no-ops
-        var r = 0
-        var dropped = true
-        while (dropped && r < rounds) {
-          java.util.Arrays.fill(deg, 0)
-          var i = 0
-          while (i < si.length) {
-            if (alive(si(i)) && alive(di(i))) { deg(si(i)) += 1; deg(di(i)) += 1 }
-            i += 1
-          }
-          dropped = false
-          var v = 0
-          while (v < n) {
-            if (alive(v) && deg(v) < k) { alive(v) = false; dropped = true }
-            v += 1
-          }
-          r += 1
-        }
-        // final degrees over the surviving edge set
+  def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame =
+    inTask(pairs(edges), Seq("id", "deg")) { (e, _) =>
+      val g = view(e, loops = false, canonical = true, dedup = true)
+      val (n, si, di) = (g.n, g.src, g.dst)
+      val alive = Array.fill(n)(true)
+      val deg = new Array[Int](n)
+      def degrees(): Unit = {
         java.util.Arrays.fill(deg, 0)
         var i = 0
         while (i < si.length) {
           if (alive(si(i)) && alive(di(i))) { deg(si(i)) += 1; deg(di(i)) += 1 }
           i += 1
         }
-        (0 until n).iterator.filter(v => alive(v) && deg(v) > 0)
-          .map(v => (vx.ids(v), deg(v).toLong))
-      }.toDF("id", "deg")
-  }
+      }
+      // a round that drops nobody is the fixed point: the rest are no-ops
+      var r = 0
+      var dropped = true
+      while (dropped && r < rounds) {
+        degrees()
+        dropped = false
+        var v = 0
+        while (v < n) {
+          if (alive(v) && deg(v) < k) { alive(v) = false; dropped = true }
+          v += 1
+        }
+        r += 1
+      }
+      degrees() // final degrees over the surviving edge set
+      Iterator.range(0, n).filter(v => alive(v) && deg(v) > 0)
+        .map(v => (g.ids(v), deg(v).toLong))
+    }
 
   /** Layered BFS over out-edges, depth capped at maxIter, source always
     * present at dist 0 — mirrors [[Algorithms.bfs]]. */
-  def bfs(edges: DataFrame, source: Long, maxIter: Int): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val srcDs = edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)]
-    inTask2(srcDs, cacheKey(srcDs.toDF())) { it =>
-        val vx = new Interner
-        val sb = new Ints(); val db = new Ints()
-        it.foreach { case (s, d) => sb += vx.idx(s); db += vx.idx(d) }
-        val src = vx.idx(source) // ensure present even with no incident edges
-        val n = vx.n
-        val (off, tgt) = csr(n, sb.result(), db.result())
-        val dist = Array.fill(n)(-1)
-        dist(src) = 0
-        var frontier = Array(src)
-        var depth = 0
-        while (frontier.nonEmpty && depth < maxIter) {
-          val next = new Ints(math.max(frontier.length, 16))
-          var i = 0
-          while (i < frontier.length) {
-            val v = frontier(i)
-            var k = off(v)
-            while (k < off(v + 1)) {
-              val w = tgt(k)
-              if (dist(w) < 0) { dist(w) = depth + 1; next += w }
-              k += 1
-            }
-            i += 1
-          }
-          frontier = next.result()
-          depth += 1
-        }
-        (0 until n).iterator.filter(dist(_) >= 0).map(i => (vx.ids(i), dist(i)))
-      }.toDF("id", "dist")
-  }
+  def bfs(edges: DataFrame, source: Long, maxIter: Int): DataFrame =
+    inTask(pairs(edges), Seq("id", "dist")) { (e, _) =>
+      val g = view(e, extra = Seq(source)) // present even with no incident edges
+      val (dist, _) = bfsFrom(g.idx(source), g.out(), maxIter)
+      Iterator.range(0, g.n).filter(dist(_) >= 0).map(i => (g.ids(i), dist(i)))
+    }
 
   /** In-task twin of [[Algorithms.bidirectionalBfs]] — per distinct pair
     * one depth-capped UNDIRECTED BFS from src (meet-in-the-middle buys
@@ -989,79 +907,69 @@ object LocalKernels {
     * expansion, so they "meet" immediately); self-loop edges are dropped
     * like the distributed symmetrization's a != b filter. */
   def bidirBfs(edges: DataFrame, pairs: Seq[(Long, Long)], maxDepth: Int): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val srcDs = edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)]
     val pd = pairs.distinct
-    inTask2(srcDs, cacheKey(srcDs.toDF())) { it =>
-        val vx = new Interner
-        val sb = new Ints(); val db = new Ints()
-        it.foreach { case (s, d) =>
-          if (s != d) {
-            val a = vx.idx(s); val b = vx.idx(d)
-            sb += a; db += b; sb += b; db += a
+    inTask(this.pairs(edges), Seq("src", "dst", "dist")) { (e, _) =>
+      val g = view(e, loops = false)
+      val adj = g.out(sym = true)
+      // one bfsFrom per DISTINCT source: k pairs sharing a source answer
+      // from the same dist array instead of paying k traversals.
+      // Degenerate (s, s) pairs keep their unconditional emit — including
+      // sources absent from the edge set.
+      pd.groupBy(_._1).toSeq.sortBy(_._1).iterator.flatMap { case (s, grp) =>
+        val degenerate = grp.collect { case (a, b) if a == b => (a, b, 0L) }
+        // targets absent from the edge set can never be reached: resolve
+        // them first and skip the O(V + E) traversal when none remain
+        val targets = grp.collect { case (a, b) if a != b && g.idx(b) >= 0 => (b, g.idx(b)) }
+        val si = g.idx(s)
+        val resolved =
+          if (si < 0 || targets.isEmpty) Nil
+          else {
+            val (dist, _) = bfsFrom(si, adj, maxDepth)
+            targets.collect { case (t, ti) if dist(ti) >= 0 => (s, t, dist(ti).toLong) }
           }
-        }
-        val n = vx.n
-        val (off, tgt) = csr(n, sb.result(), db.result())
-        // one bfsFrom per DISTINCT source: k pairs sharing a source answer
-        // from the same dist array instead of paying k traversals (ADVICE
-        // r15). Degenerate (s, s) pairs keep their unconditional emit —
-        // including sources absent from the edge set.
-        pd.groupBy(_._1).toSeq.sortBy(_._1).iterator.flatMap { case (s, grp) =>
-          val degenerate = grp.collect { case (a, b) if a == b => (a, b, 0L) }
-          // targets absent from the edge set can never be reached: resolve
-          // them first and skip the O(V + E) traversal when none remain
-          val targets = grp.collect { case (a, b) if a != b => vx.idOf.get(b).map(b -> _) }.flatten
-          val resolved = vx.idOf.get(s) match {
-            case Some(si) if targets.nonEmpty =>
-              val (dist, _) = bfsFrom(si, n, off, tgt, maxDepth)
-              targets.collect { case (t, ti) if dist(ti) >= 0 => (s, t, dist(ti).toLong) }
-            case _ => Nil
-          }
-          degenerate.iterator ++ resolved.iterator
-        }
-      }.toDF("src", "dst", "dist")
+        degenerate.iterator ++ resolved.iterator
+      }
+    }
   }
 
-  /** Synchronous (round-based) Bellman-Ford, `maxIter` rounds or fixpoint —
-    * the same bounded relaxation as [[Algorithms.sssp]], so intermediate
-    * states after a capped round count match too. Emits reachable vertices
-    * only; source always present at 0.0. */
-  def sssp(edges: DataFrame, source: Long, maxIter: Int): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val srcDs = edges.select(col("src").cast("long"), col("dst").cast("long"),
-        coalesce(col("weight"), lit(1.0)).cast("double")).as[(Long, Long, Double)]
-    inTask3(srcDs, cacheKey(srcDs.toDF())) { it =>
-        val vx = new Interner
-        val sb = new Ints(); val db = new Ints(); val wb = mutable.ArrayBuffer.empty[Double]
-        it.foreach { case (s, d, w) => sb += vx.idx(s); db += vx.idx(d); wb += w }
-        val src = vx.idx(source)
-        val n = vx.n
-        val (si, di, w) = (sb.result(), db.result(), wb.toArray)
-        val inf = Double.MaxValue
-        var dist = Array.fill(n)(inf)
-        dist(src) = 0.0
-        var it2 = 0
-        var changed = true
-        while (changed && it2 < maxIter) {
-          changed = false
-          val nd = dist.clone() // synchronous: relax against the PREVIOUS round
-          var k = 0
-          while (k < si.length) {
-            val ds = dist(si(k))
-            if (ds != inf) {
-              val cand = ds + w(k)
-              if (cand < nd(di(k))) { nd(di(k)) = cand; changed = true }
-            }
-            k += 1
-          }
-          dist = nd; it2 += 1
+  private val Inf = Double.MaxValue
+
+  /** Synchronous (round-based) Bellman-Ford from `src`: `rounds` rounds at
+    * most, or to the fixpoint, each relaxing against the PREVIOUS round's
+    * distances — the bounded relaxation of [[Algorithms.sssp]], so the
+    * states after a capped round count match too. Unreached is [[Inf]]. */
+  private def bellmanFord(g: GraphView, src: Int, rounds: Int): Array[Double] = {
+    val (si, di, w) = (g.src, g.dst, g.weight)
+    var dist = Array.fill(g.n)(Inf)
+    dist(src) = 0.0
+    var r = 0
+    var changed = true
+    while (changed && r < rounds) {
+      changed = false
+      val nd = dist.clone()
+      var k = 0
+      while (k < si.length) {
+        val ds = dist(si(k))
+        if (ds != Inf) {
+          val cand = ds + w(k)
+          if (cand < nd(di(k))) { nd(di(k)) = cand; changed = true }
         }
-        (0 until n).iterator.filter(dist(_) != inf).map(i => (vx.ids(i), dist(i)))
-      }.toDF("id", "dist")
+        k += 1
+      }
+      dist = nd; r += 1
+    }
+    dist
   }
+
+  /** Weighted single-source distances, `maxIter` rounds or fixpoint — see
+    * [[bellmanFord]]. Emits reachable vertices only; source always present
+    * at 0.0. */
+  def sssp(edges: DataFrame, source: Long, maxIter: Int): DataFrame =
+    inTask(weights(edges), Seq("id", "dist")) { (e, _) =>
+      val g = view(e, extra = Seq(source))
+      val dist = bellmanFord(g, g.idx(source), maxIter)
+      Iterator.range(0, g.n).filter(dist(_) != Inf).map(i => (g.ids(i), dist(i)))
+    }
 
   /** Full weighted shortest PATH in one task — solve + parent derivation +
     * backward walk, the in-task twin of [[Algorithms.ssspPath]]'s
@@ -1079,306 +987,125 @@ object LocalKernels {
     * weight > 0 like the distributed path (a zero-weight cycle would make
     * the parent relation cyclic); with w > 0 the walk strictly decreases
     * dist and must terminate. */
-  def ssspPath(edges: DataFrame, source: Long, target: Long, maxHops: Int): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val srcDs = edges.select(col("src").cast("long"), col("dst").cast("long"),
-        coalesce(col("weight"), lit(1.0)).cast("double")).as[(Long, Long, Double)]
-    inTask3(srcDs, cacheKey(srcDs.toDF())) { it =>
-        val vx = new Interner
-        val sb = new Ints(); val db = new Ints(); val wb = mutable.ArrayBuilder.make[Double]
-        it.foreach { case (s, d, w) => sb += vx.idx(s); db += vx.idx(d); wb += w }
-        val src = vx.idx(source)
-        val n = vx.n
-        val (si, di, w) = (sb.result(), db.result(), wb.result())
-        val inf = Double.MaxValue
-        var dist = Array.fill(n)(inf)
-        dist(src) = 0.0
-        var round = 0
-        var changed = true
-        while (changed && round < maxHops * 2) { // same cap as the distributed solve
-          changed = false
-          val nd = dist.clone() // synchronous: relax against the PREVIOUS round
-          var k = 0
-          while (k < si.length) {
-            val ds = dist(si(k))
-            if (ds != inf) {
-              val cand = ds + w(k)
-              if (cand < nd(di(k))) { nd(di(k)) = cand; changed = true }
-            }
-            k += 1
-          }
-          dist = nd; round += 1
+  def ssspPath(edges: DataFrame, source: Long, target: Long, maxHops: Int): DataFrame =
+    inTask(weights(edges), Seq("pos", "id", "dist")) { (e, _) =>
+      val g = view(e, extra = Seq(source))
+      val src = g.idx(source)
+      val dist = bellmanFord(g, src, maxHops * 2) // same cap as the distributed solve
+      // parent(v) = min id u with dist(u) + w == dist(v) — exact FP:
+      // dist(v) was literally produced by one of these same additions
+      val parent = Array.fill(g.n)(-1)
+      var k = 0
+      while (k < g.m) {
+        val u = g.src(k); val v = g.dst(k)
+        if (v != src && dist(u) != Inf && dist(u) + g.weight(k) == dist(v) &&
+            (parent(v) < 0 || u < parent(v))) parent(v) = u
+        k += 1
+      }
+      val tgt = g.idx(target)
+      if (tgt < 0 || dist(tgt) == Inf) Iterator.empty
+      else {
+        val walk = mutable.ArrayBuffer((0, g.ids(tgt), dist(tgt)))
+        var cur = tgt; var pos = 0
+        while (cur != src && parent(cur) >= 0 && pos < maxHops) {
+          cur = parent(cur); pos += 1
+          walk += ((pos, g.ids(cur), dist(cur)))
         }
-        // parent(v) = min original-id u with dist(u) + w == dist(v) — exact FP:
-        // dist(v) was literally produced by one of these same additions
-        val parent = Array.fill(n)(-1)
-        var k = 0
-        while (k < si.length) {
-          val u = si(k); val v = di(k)
-          if (v != src && dist(u) != inf && dist(u) + w(k) == dist(v) &&
-              (parent(v) < 0 || vx.ids(u) < vx.ids(parent(v)))) parent(v) = u
-          k += 1
-        }
-        val tgt = vx.idOf.getOrElse(target, -1)
-        if (tgt < 0 || dist(tgt) == inf) Iterator.empty
-        else {
-          val walk = mutable.ArrayBuffer((0, vx.ids(tgt), dist(tgt)))
-          var cur = tgt; var pos = 0
-          while (cur != src && parent(cur) >= 0 && pos < maxHops) {
-            cur = parent(cur); pos += 1
-            walk += ((pos, vx.ids(cur), dist(cur)))
-          }
-          val (_, lastId, lastD) = walk.last
-          if (lastId == source && lastD == 0.0) walk.iterator else Iterator.empty
-        }
-      }.toDF("pos", "id", "dist")
-  }
+        val (_, lastId, lastD) = walk.last
+        if (lastId == source && lastD == 0.0) walk.iterator else Iterator.empty
+      }
+    }
 
   // ---- Louvain ----------------------------------------------------------
 
   /** One level of Louvain local moves — the in-task twin of
-    * [[Algorithms.louvainMovesDistributed]], term for term: synchronous
-    * rounds (all scores against the PREVIOUS round's assignment), score
-    * `k − (d·dcx)/m2` with dcx = dc−d for the current community, argmax by
-    * (score, then smaller community LABEL), and the (id + round) parity
-    * move rule. All inputs are integer-valued (k and d are neighbor
-    * counts, dc an integer sum), so the double expressions are EXACT and
-    * summation-order-free — the kernel's labels are bit-identical to the
-    * distributed twin's (LocalKernelsSpec differentials). */
-  def louvainMoves(edges: DataFrame, rounds: Int): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val srcDs = edges.select(col("a").cast("long"), col("b").cast("long"))
-      .as[(Long, Long)]
-    inTask2(srcDs, cacheKey(srcDs.toDF())) { it =>
-        val vx = new Interner
-        val keys = new Longs()
-        // mirror the distributed dedup: DISTINCT raw (a, b) pairs, a != b
-        it.foreach { case (a, b) =>
-          if (a != b)
-            keys += (vx.idx(a).toLong << 32) | (vx.idx(b).toLong & 0xffffffffL)
-        }
-        val n = vx.n
-        if (n == 0) Iterator.empty
-        else {
-          val ks = uniqueSorted(keys.toArray)
-          val (off, nbr) = pairCsr(n, ks)
-          val ids = vx.ids.toArray
-          val comm = louvainRoundsUnweighted(n, off, nbr, ids, 2.0 * ks.length, rounds)
-          (0 until n).iterator.map(i => (ids(i), ids(comm(i))))
-        }
-      }.toDF("id", "community")
-  }
+    * [[Algorithms.louvainMovesDistributed]]; [[louvain]] at one level. */
+  def louvainMoves(edges: DataFrame, rounds: Int): DataFrame = louvain(edges, rounds, 1)
 
   /** Multi-level Louvain — the in-task twin of [[Algorithms.louvain]]:
-    * level-1 local moves, then per level one contraction (community-pair
-    * counts, least/greatest canonicalization, intra edges as self-loops)
-    * and WEIGHTED local moves over the contracted graph, with the
-    * node→top-level mapping composed at the end. Contracted weights are
-    * pair COUNTS (integer-valued doubles), so the weighted score
-    * arithmetic stays exact — same parity argument as the distributed
-    * oracle relies on. */
-  def louvain(edges: DataFrame, rounds: Int, levels: Int): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val srcDs = edges.select(col("a").cast("long"), col("b").cast("long"))
-      .as[(Long, Long)]
-    inTask2(srcDs, cacheKey(srcDs.toDF())) { it =>
-        val vx = new Interner
-        val keys = new Longs()
-        it.foreach { case (a, b) =>
-          if (a != b)
-            keys += (vx.idx(a).toLong << 32) | (vx.idx(b).toLong & 0xffffffffL)
+    * level-1 local moves over the DISTINCT (a, b) pairs with a != b (both
+    * orientations kept, as the distributed distinct keeps them), then per
+    * level one contraction (community-pair counts, least/greatest
+    * canonicalization, intra edges as self-loops) and local moves over the
+    * contracted graph, with the node→top-level mapping composed at the end.
+    * Level 1 is the weighted rounds at weight 1.0. Every weight is a pair
+    * COUNT (an integer-valued double) and every product stays below 2^53
+    * under the gate's 32M-edge cap, so the score arithmetic is EXACT and
+    * summation-order-free: labels are bit-identical to the distributed
+    * twin's (LocalKernelsSpec differentials). */
+  def louvain(edges: DataFrame, rounds: Int, levels: Int): DataFrame =
+    inTask(pairs(edges, "a", "b"), Seq("id", "community")) { (e, _) =>
+      val g = view(e, loops = false, dedup = true)
+      val n = g.n
+      val adj = g.out(sym = true)
+      val ones = new Array[Double](adj.tgt.length)
+      java.util.Arrays.fill(ones, 1.0)
+      val deg = Array.tabulate(n)(v => (adj.off(v + 1) - adj.off(v)).toDouble)
+      var comm = louvainRounds(adj, ones, deg, g.ids, 2.0 * g.m, rounds)
+      var lvl = 2
+      while (lvl <= levels) {
+        // contraction over the DISTINCT pair set: (least, greatest) of the
+        // endpoint community LABELS, weight = pair count. Counting is SORT
+        // + run-length over packed (loIdx, hiIdx) keys: a mutable.LongMap
+        // counter measured ~30 µs/update on exactly these packed small-int
+        // keys (4.4 s for 150k pairs on the PLACED projection); one
+        // Arrays.sort does the same dedup+count in ~10 ms.
+        val lo = new Array[Long](g.m); val hi = new Array[Long](g.m)
+        var k = 0
+        while (k < g.m) {
+          val la = g.ids(comm(g.src(k))); val lb = g.ids(comm(g.dst(k)))
+          lo(k) = math.min(la, lb); hi(k) = math.max(la, lb)
+          k += 1
         }
-        val n = vx.n
-        if (n == 0) Iterator.empty
-        else {
-          val ks = uniqueSorted(keys.toArray)
-          val (off, nbr) = pairCsr(n, ks)
-          val ids = vx.ids.toArray
-          var comm = louvainRoundsUnweighted(n, off, nbr, ids, 2.0 * ks.length, rounds)
-          var lvl = 2
-          while (lvl <= levels) {
-            // contraction over the DISTINCT pair set: (least, greatest) of
-            // the endpoint community LABELS, weight = pair count.
-            // Counting is SORT + run-length over packed (loIdx, hiIdx)
-            // keys — the same no-map idiom as level 1's uniqueSorted. The
-            // r15 profile caught the previous mutable.LongMap counter at
-            // ~30 µs/update on exactly these packed small-int keys (4.4 s
-            // for 150k pairs on the PLACED projection — the whole
-            // q_cypher_call_louvain_levels row was this loop); one
-            // Arrays.sort of the packed keys does the same dedup+count in
-            // ~10 ms and is branch-predictable regardless of key mixing.
-            val cx = new Interner
-            val pk = new Longs()
-            var i = 0
-            while (i < ks.length) {
-              val la = ids(comm((ks(i) >>> 32).toInt))
-              val lb = ids(comm(ks(i).toInt))
-              val lo = if (la <= lb) la else lb
-              val hi = if (la <= lb) lb else la
-              pk += (cx.idx(lo).toLong << 32) | (cx.idx(hi).toLong & 0xffffffffL)
-              i += 1
-            }
-            val n2 = cx.n
-            val ids2 = cx.ids.toArray
-            val pks = pk.toArray
-            java.util.Arrays.sort(pks)
-            // split self-loops (deg += 2w, no sym edge) from real edges,
-            // consuming sorted runs as (pair, count)
-            val sb = new Ints(); val db = new Ints()
-            val wb = mutable.ArrayBuilder.make[Double]
-            val deg2 = new Array[Double](n2)
-            var m2w = 0.0
-            var p = 0
-            while (p < pks.length) {
-              val key = pks(p)
-              var q = p + 1
-              while (q < pks.length && pks(q) == key) q += 1
-              val a = (key >>> 32).toInt; val b = key.toInt
-              val w = (q - p).toDouble
-              m2w += w
-              if (a == b) deg2(a) += w * 2
-              else {
-                sb += a; db += b; wb += w
-                sb += b; db += a; wb += w
-                deg2(a) += w; deg2(b) += w
-              }
-              p = q
-            }
-            val (off2, nbr2, w2) = pairCsrW(n2, sb.result(), db.result(), wb.result())
-            val up = louvainRoundsWeighted(n2, off2, nbr2, w2, deg2, ids2, 2.0 * m2w, rounds)
-            // compose: node's community label -> contracted node -> its label
-            val next = new Array[Int](n)
-            val liftIdx = new Array[Int](n2) // contracted comm idx -> level-1 comm idx of that LABEL
-            i = 0
-            while (i < n2) { liftIdx(i) = -1; i += 1 }
-            i = 0
-            while (i < n) {
-              val c2 = up(cx.idOf(ids(comm(i)))) // contracted node of my label, its community
-              if (liftIdx(c2) < 0) {
-                // the new label is ids2(c2): find/remember a level-1 index carrying it
-                liftIdx(c2) = vx.idOf.getOrElse(ids2(c2), -1)
-              }
-              next(i) = liftIdx(c2)
-              i += 1
-            }
-            comm = next
-            lvl += 1
+        val c = view(Edges(lo, hi, null, null))
+        val pks = new Array[Long](c.m)
+        k = 0
+        while (k < c.m) { pks(k) = (c.src(k).toLong << 32) | c.dst(k); k += 1 }
+        java.util.Arrays.sort(pks)
+        // split self-loops (deg += 2w, no sym edge) from real edges,
+        // consuming sorted runs as (pair, count)
+        val sb = new Ints(); val db = new Ints()
+        val wb = mutable.ArrayBuilder.make[Double]
+        val deg2 = new Array[Double](c.n)
+        var m2w = 0.0
+        var p = 0
+        while (p < pks.length) {
+          val key = pks(p)
+          var q = p + 1
+          while (q < pks.length && pks(q) == key) q += 1
+          val a = (key >>> 32).toInt; val b = key.toInt
+          val w = (q - p).toDouble
+          m2w += w
+          if (a == b) deg2(a) += w * 2
+          else {
+            sb += a; db += b; wb += w
+            sb += b; db += a; wb += w
+            deg2(a) += w; deg2(b) += w
           }
-          (0 until n).iterator.map(i => (ids(i), ids(comm(i))))
+          p = q
         }
-      }.toDF("id", "community")
-  }
-
-  /** Sort + unique in place; returns the deduped prefix copy. */
-  private def uniqueSorted(ks: Array[Long]): Array[Long] = {
-    java.util.Arrays.sort(ks)
-    var m = 0; var i = 0
-    while (i < ks.length) {
-      if (i == 0 || ks(i) != ks(i - 1)) { ks(m) = ks(i); m += 1 }
-      i += 1
-    }
-    java.util.Arrays.copyOf(ks, m)
-  }
-
-  /** Symmetrized CSR from packed unique (a idx << 32 | b idx) pairs. */
-  private def pairCsr(n: Int, ks: Array[Long]): (Array[Int], Array[Int]) = {
-    val sb = new Ints(); val db = new Ints()
-    var i = 0
-    while (i < ks.length) {
-      val a = (ks(i) >>> 32).toInt; val b = ks(i).toInt
-      sb += a; db += b; sb += b; db += a
-      i += 1
-    }
-    csr(n, sb.result(), db.result())
-  }
-
-  /** CSR carrying per-incidence weights (aligned with the targets). */
-  private def pairCsrW(n: Int, si: Array[Int], di: Array[Int],
-                       wi: Array[Double]): (Array[Int], Array[Int], Array[Double]) = {
-    val off = new Array[Int](n + 1)
-    var k = 0
-    while (k < si.length) { off(si(k) + 1) += 1; k += 1 }
-    var i = 0
-    while (i < n) { off(i + 1) += off(i); i += 1 }
-    val tgt = new Array[Int](si.length)
-    val w = new Array[Double](si.length)
-    val cur = java.util.Arrays.copyOf(off, n)
-    k = 0
-    while (k < si.length) {
-      val s = si(k); tgt(cur(s)) = di(k); w(cur(s)) = wi(k); cur(s) += 1; k += 1
-    }
-    (off, tgt, w)
-  }
-
-  /** Synchronous unweighted local-move rounds. deg = incidence count; k
-    * counts neighbors per community; score = k − (d·dcx)/m2 with LONG
-    * products (the distributed expression's exact type path). */
-  private def louvainRoundsUnweighted(n: Int, off: Array[Int], nbr: Array[Int],
-                                      ids: Array[Long], m2: Double,
-                                      rounds: Int): Array[Int] = {
-    val deg = new Array[Long](n)
-    var i = 0
-    while (i < n) { deg(i) = (off(i + 1) - off(i)).toLong; i += 1 }
-    var comm = Array.tabulate(n)(identity)
-    val dc = new Array[Long](n)
-    val cnt = new Array[Long](n)
-    val touched = new Ints()
-    var r = 1
-    while (r <= rounds) {
-      java.util.Arrays.fill(dc, 0L)
-      i = 0
-      while (i < n) { dc(comm(i)) += deg(i); i += 1 }
-      val next = new Array[Int](n)
-      var v = 0
-      while (v < n) {
-        if (java.lang.Math.floorMod(ids(v) + r, 2L) != 0L) next(v) = comm(v)
-        else {
-          touched.n = 0
-          var k = off(v)
-          while (k < off(v + 1)) {
-            val c = comm(nbr(k))
-            if (cnt(c) == 0L) touched += c
-            cnt(c) += 1L
-            k += 1
-          }
-          val cur = comm(v); val d = deg(v)
-          if (cnt(cur) == 0L) touched += cur // k = 0 candidate
-          var bestC = -1; var bestScore = 0.0; var bestLabel = 0L
-          var t = 0
-          while (t < touched.n) {
-            val c = touched(t)
-            val dcx = if (c == cur) dc(c) - d else dc(c)
-            val score = cnt(c).toDouble - (d * dcx).toDouble / m2
-            val label = ids(c)
-            if (bestC < 0 || score > bestScore ||
-              (score == bestScore && label < bestLabel)) {
-              bestC = c; bestScore = score; bestLabel = label
-            }
-            t += 1
-          }
-          // clear scratch
-          t = 0
-          while (t < touched.n) { cnt(touched(t)) = 0L; t += 1 }
-          next(v) = bestC
-        }
-        v += 1
+        val adj2 = new Csr(c.n, sb.result(), db.result(), withPos = true)
+        val w2 = wb.result()
+        val up = louvainRounds(adj2, adj2.pos.map(w2(_)), deg2, c.ids, 2.0 * m2w, rounds)
+        // compose: my community's label → its contracted node → that
+        // node's community label → the level-1 vertex carrying it
+        val prev = comm
+        comm = Array.tabulate(n)(i => g.idx(c.ids(up(c.idx(g.ids(prev(i)))))))
+        lvl += 1
       }
-      comm = next
-      r += 1
+      Iterator.range(0, n).map(i => (g.ids(i), g.ids(comm(i))))
     }
-    comm
-  }
 
-  /** Synchronous WEIGHTED local-move rounds (contracted levels): k and d
-    * are weight sums — integer-valued doubles here (pair counts), so the
-    * sums are exact and order-free, matching the distributed twin. */
-  private def louvainRoundsWeighted(n: Int, off: Array[Int], nbr: Array[Int],
-                                    w: Array[Double], deg: Array[Double],
-                                    ids: Array[Long], m2: Double,
-                                    rounds: Int): Array[Int] = {
+  /** Synchronous weighted local-move rounds, term for term the
+    * distributed rule: all scores against the PREVIOUS round's assignment,
+    * k = weight to the community, d = the vertex's weighted degree, score
+    * `k − (d·dcx)/m2` with dcx = dc−d for the current community, argmax by
+    * (score, then smaller community label — the smaller index, ids being
+    * sorted), and the (id + round) parity move rule. `w` is aligned with
+    * `adj`'s entries. */
+  private def louvainRounds(adj: Csr, w: Array[Double], deg: Array[Double],
+                            ids: Array[Long], m2: Double, rounds: Int): Array[Int] = {
+    val (n, off, nbr) = (adj.n, adj.off, adj.tgt)
     var comm = Array.tabulate(n)(identity)
     val dc = new Array[Double](n)
     val cnt = new Array[Double](n)
@@ -1403,17 +1130,15 @@ object LocalKernels {
             k += 1
           }
           val cur = comm(v); val d = deg(v)
-          if (!seen(cur)) { seen(cur) = true; touched += cur }
-          var bestC = -1; var bestScore = 0.0; var bestLabel = 0L
+          if (!seen(cur)) { seen(cur) = true; touched += cur } // k = 0 candidate
+          var bestC = -1; var bestScore = 0.0
           var t = 0
           while (t < touched.n) {
             val c = touched(t)
             val dcx = if (c == cur) dc(c) - d else dc(c)
             val score = cnt(c) - (d * dcx) / m2
-            val label = ids(c)
-            if (bestC < 0 || score > bestScore ||
-              (score == bestScore && label < bestLabel)) {
-              bestC = c; bestScore = score; bestLabel = label
+            if (bestC < 0 || score > bestScore || (score == bestScore && c < bestC)) {
+              bestC = c; bestScore = score
             }
             t += 1
           }
@@ -1433,125 +1158,93 @@ object LocalKernels {
     * (w,a,b) total order — the forest is unique under that order, so the
     * output edge set is identical to [[Algorithms.mst]]'s Borůvka. */
   def mst(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val srcDs = edges.select(
-        least(col("src"), col("dst")).cast("long"),
-        greatest(col("src"), col("dst")).cast("long"),
-        coalesce(col("weight"), lit(1.0)).cast("double"))
-      .as[(Long, Long, Double)]
-    inTask3(srcDs, cacheKey(srcDs.toDF())) { it =>
-        val minW = mutable.HashMap.empty[(Long, Long), Double]
-        it.foreach { case (a, b, w) =>
-          if (a != b) {
-            val k = (a, b)
-            val prev = minW.getOrElse(k, Double.MaxValue)
-            if (w < prev) minW.update(k, w)
-          }
-        }
-        val sorted = minW.iterator.map { case ((a, b), w) => (w, a, b) }.toArray
-        java.util.Arrays.sort(sorted, Ordering.Tuple3[Double, Long, Long])
-        val vx = new Interner
-        sorted.foreach { case (_, a, b) => vx.idx(a); vx.idx(b) }
-        val p = Array.tabulate(vx.n)(identity)
-        def find(x0: Int): Int = {
-          var x = x0
-          while (p(x) != x) { p(x) = p(p(x)); x = p(x) }
-          x
-        }
-        sorted.iterator.flatMap { case (w, a, b) =>
-          val ra = find(vx.idx(a)); val rb = find(vx.idx(b))
-          if (ra != rb) { p(ra) = rb; Iterator.single((a, b, w)) } else Iterator.empty
-        }
-      }.toDF("a", "b", "w")
+    val proj = edges.select(
+      least(col("src"), col("dst")).cast("long"),
+      greatest(col("src"), col("dst")).cast("long"),
+      coalesce(col("weight"), lit(1.0)).cast("double"))
+    inTask(proj, Seq("a", "b", "w")) { (e, _) =>
+      val g = view(e, loops = false, dedup = true)
+      val w = g.weight
+      // (w, a, b) order as one packed sort: the deduped edges are in (a, b)
+      // order, so (rank of w, edge index) sorts them; a weight's rank comes
+      // from its order-preserving bits (Double.compare order, as the
+      // (w, a, b) tuple ordering compares)
+      def bits(x: Double): Long = {
+        val b = java.lang.Double.doubleToLongBits(x)
+        b ^ ((b >> 63) & Long.MaxValue)
+      }
+      val wk = new Array[Long](g.m)
+      var k = 0
+      while (k < g.m) { wk(k) = bits(w(k)); k += 1 }
+      val byW = uniqueSorted(wk.clone())
+      val order = new Array[Long](g.m)
+      k = 0
+      while (k < g.m) {
+        order(k) = (java.util.Arrays.binarySearch(byW, wk(k)).toLong << 32) | k; k += 1
+      }
+      java.util.Arrays.sort(order)
+      val p = Array.tabulate(g.n)(identity)
+      def find(x0: Int): Int = {
+        var x = x0
+        while (p(x) != x) { p(x) = p(p(x)); x = p(x) }
+        x
+      }
+      order.iterator.flatMap { o =>
+        val k = o.toInt
+        val ra = find(g.src(k)); val rb = find(g.dst(k))
+        if (ra != rb) { p(ra) = rb; Iterator.single((g.ids(g.src(k)), g.ids(g.dst(k)), w(k))) }
+        else Iterator.empty
+      }
+    }
   }
+
+  // ---- traversals -------------------------------------------------------
 
   /** Multi-source BFS emitting (start, node, hops) for hops in
     * [minHops, maxHops] with per-start first-reach dedup — the exact row
     * set of `Traversals.varLengthExpand`. Starts ride into the task as
     * tagged rows (no driver collect). */
   def varLengthExpand(edges: DataFrame, starts: DataFrame, startCol: String,
-                      minHops: Int, maxHops: Int): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val eProj = edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)]
-    val key = cacheKey(eProj.toDF())
-    hitPair(spark, key).foreach { g =>
-      // resident edge stream (held by a pin handle): only the (tiny,
-      // gated) start set rides a job
-      val h = pin(g); val k = key.get
-      return starts.select(col(startCol).cast("long")).distinct().as[Long]
-        .repartition(1)
-        .mapPartitions { sit =>
-          val (as, bs) = pinGet(h.token, k).asInstanceOf[(Array[Long], Array[Long])]
-          val ss = new Longs(16); sit.foreach(ss += _)
-          vleBody(as, bs, ss, minHops, maxHops)
-        }.toDF("start", "node", "hops")
-    }
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"), lit(0))
-      .as[(Long, Long, Int)]
-    val s0 = starts.select(col(startCol).cast("long"), lit(0L), lit(1))
-      .distinct().as[(Long, Long, Int)]
-    e.unionAll(s0).repartition(1)
-      .mapPartitions { it =>
-        val ab = new Longs(); val bb = new Longs()
-        val startIds = new Longs(16)
-        it.foreach { case (a, b, t) =>
-          if (t == 0) { ab += a; bb += b }
-          else startIds += a
-        }
-        val as = ab.toArray; val bs = bb.toArray
-        key.foreach(k => residentStoreLocal(k, (as, bs), as.length.toLong))
-        vleBody(as, bs, startIds, minHops, maxHops)
-      }.toDF("start", "node", "hops")
-  }
-
-  /** Multi-source BFS body shared by the tagged-stream and resident-cache
-    * routes of [[varLengthExpand]]. */
-  private def vleBody(as: Array[Long], bs: Array[Long], startIds: Longs,
-                      minHops: Int, maxHops: Int): Iterator[(Long, Long, Int)] = {
-        val vx = new Interner
-        val sb = new Ints(); val db = new Ints()
-        var ei = 0
-        while (ei < as.length) { sb += vx.idx(as(ei)); db += vx.idx(bs(ei)); ei += 1 }
-        val (off, tgt) = csr(vx.n, sb.result(), db.result())
-        val n = vx.n
-        val seenAt = new Array[Int](n) // visit stamp per start (1-based)
-        (0 until startIds.n).iterator.flatMap { s =>
-          val startId = startIds(s)
-          val stamp = s + 1
-          val out = mutable.ArrayBuffer.empty[(Long, Long, Int)]
-          if (minHops == 0) out += ((startId, startId, 0))
-          vx.idOf.get(startId) match {
-            case None => // start not an edge endpoint: no hops ≥ 1 rows
-            case Some(sIdx) =>
-              seenAt(sIdx) = stamp
-              var frontier = Array(sIdx)
-              var h = 1
-              while (frontier.nonEmpty && h <= maxHops) {
-                val next = new Ints(16)
-                var i = 0
-                while (i < frontier.length) {
-                  val v = frontier(i)
-                  var k = off(v)
-                  while (k < off(v + 1)) {
-                    val w = tgt(k)
-                    if (seenAt(w) != stamp) {
-                      seenAt(w) = stamp
-                      next += w
-                      if (h >= minHops) out += ((startId, vx.ids(w), h))
-                    }
-                    k += 1
-                  }
-                  i += 1
+                      minHops: Int, maxHops: Int): DataFrame =
+    inTask(pairs(edges), Seq("start", "node", "hops"), tagged(starts, startCol)) { (e, side) =>
+      val g = view(e)
+      val adj = g.out()
+      val (off, tgt) = (adj.off, adj.tgt)
+      val seenAt = new Array[Int](g.n) // visit stamp per start (1-based)
+      Iterator.range(0, side.starts.length).flatMap { s =>
+        val startId = side.starts(s)
+        val stamp = s + 1
+        val out = mutable.ArrayBuffer.empty[(Long, Long, Int)]
+        if (minHops == 0) out += ((startId, startId, 0))
+        val sIdx = g.idx(startId) // -1: not an edge endpoint, no hops ≥ 1 rows
+        if (sIdx >= 0) {
+          seenAt(sIdx) = stamp
+          var frontier = Array(sIdx)
+          var h = 1
+          while (frontier.nonEmpty && h <= maxHops) {
+            val next = new Ints(16)
+            var i = 0
+            while (i < frontier.length) {
+              val v = frontier(i)
+              var k = off(v)
+              while (k < off(v + 1)) {
+                val w = tgt(k)
+                if (seenAt(w) != stamp) {
+                  seenAt(w) = stamp
+                  next += w
+                  if (h >= minHops) out += ((startId, g.ids(w), h))
                 }
-                frontier = next.result()
-                h += 1
+                k += 1
               }
+              i += 1
+            }
+            frontier = next.result()
+            h += 1
           }
-          out.iterator
         }
-  }
+        out.iterator
+      }
+    }
 
   /** Lexicographic compare of long arrays (Spark's array ordering:
     * element-wise, shorter strict prefix sorts first). */
@@ -1594,241 +1287,158 @@ object LocalKernels {
     pathExpand(edges, starts, startCol, minHops, maxHops, allPaths,
       Some((targets, targetCol)))
 
+  /** Witness-path BFS shared by the three path kernels above. */
   private def pathExpand(edges: DataFrame, starts: DataFrame, startCol: String,
                          minHops: Int, maxHops: Int, allPaths: Boolean,
                          targets: Option[(DataFrame, String)] = None): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
     val hasId = edges.columns.contains("id")
     val eidCol = if (hasId) col("id").cast("long") else lit(-1L)
-    val eProj = edges.select(col("src").cast("long"), col("dst").cast("long"),
-      eidCol.as("eid")).as[(Long, Long, Long)]
-    val key = cacheKey(eProj.toDF())
-    // starts tagged 1, targets tagged 2, in one tiny driver-side stream
-    def tagged: Dataset[(Long, Int)] = {
-      val s = starts.select(col(startCol).cast("long"), lit(1)).distinct()
-        .as[(Long, Int)]
-      targets match {
-        case Some((t, tc)) =>
-          s.unionAll(t.select(col(tc).cast("long"), lit(2)).distinct().as[(Long, Int)])
-        case None => s
+    val proj = edges.select(col("src").cast("long"), col("dst").cast("long"), eidCol.as("eid"))
+    val constrained = targets.isDefined
+    inTask(proj, Seq("start", "node", "path", "epath", "hops"),
+      tagged(starts, startCol, targets)) { (e, side) =>
+      val g = view(e)
+      val eids = e.eid // the view keeps input order: edge k is row k
+      // rows over edge INDICES so parallel edges keep their own eid
+      val adj = g.out(withPos = true)
+      val (off, eIdx) = (adj.off, adj.pos)
+      // the target set, resolved once: ids absent from the graph are
+      // unreachable and simply never satisfied — the loop then ends at
+      // frontier exhaustion
+      val targetIds = if (constrained) side.targets.sorted else null
+      val isTarget = new Array[Boolean](g.n)
+      var nTargets = 0
+      if (constrained) targetIds.foreach { t =>
+        val i = g.idx(t)
+        if (i >= 0 && !isTarget(i)) { isTarget(i) = true; nTargets += 1 }
+      }
+      def lands(w: Int): Boolean = !constrained || isTarget(w)
+      val seenAt = new Array[Int](g.n)
+
+      Iterator.range(0, side.starts.length).flatMap { s =>
+        val startId = side.starts(s)
+        val stamp = s + 1
+        val out = mutable.ArrayBuffer.empty[(Long, Long, Seq[Long], Seq[Long], Int)]
+        if (minHops == 0 &&
+            (!constrained || java.util.Arrays.binarySearch(targetIds, startId) >= 0))
+          out += ((startId, startId, Seq(startId), Seq.empty[Long], 0))
+        val sIdx = g.idx(startId)
+        if (sIdx >= 0) {
+          // targets left to reach from THIS start; 0 => stop the BFS
+          var remain =
+            if (!constrained) Int.MaxValue
+            else nTargets - (if (isTarget(sIdx)) 1 else 0)
+          seenAt(sIdx) = stamp
+          // frontier rows: (nodeIdx, node-seq, edge-seq); paths mode keeps
+          // one row per node, allPaths one per distinct node-seq
+          var frontier = mutable.ArrayBuffer((sIdx, Array(startId), Array.empty[Long]))
+          var h = 1
+          while (frontier.nonEmpty && h <= maxHops) {
+            // per (node, node-seq): min edge-seq; paths mode additionally
+            // collapses to min (node-seq, edge-seq) per node afterwards
+            val best = mutable.HashMap.empty[(Int, Seq[Long]), (Array[Long], Array[Long])]
+            frontier.foreach { case (u, p, ep) =>
+              var j = off(u)
+              while (j < off(u + 1)) {
+                val ke = eIdx(j)
+                val w = g.dst(ke)
+                if (seenAt(w) != stamp) {
+                  val np = p :+ g.ids(w)
+                  val nep = if (hasId) ep :+ eids(ke) else ep
+                  val key = (w, np.toSeq)
+                  best.get(key) match {
+                    case Some((_, oldEp)) if cmpLongs(nep, oldEp) >= 0 => ()
+                    case _ => best.update(key, (np, nep))
+                  }
+                }
+                j += 1
+              }
+            }
+            val entries0 = best.iterator.map { case ((w, _), (p, ep)) => (w, p, ep) }.toArray
+            val entries =
+              if (allPaths) entries0
+              else { // one witness per node: min (node-seq, edge-seq)
+                val perNode = mutable.HashMap.empty[Int, (Array[Long], Array[Long])]
+                entries0.foreach { case (w, p, ep) =>
+                  perNode.get(w) match {
+                    case Some((op, oep)) =>
+                      val c = cmpLongs(p, op)
+                      if (c < 0 || (c == 0 && cmpLongs(ep, oep) < 0)) perNode.update(w, (p, ep))
+                    case None => perNode.update(w, (p, ep))
+                  }
+                }
+                perNode.iterator.map { case (w, (p, ep)) => (w, p, ep) }.toArray
+              }
+            if (entries.isEmpty) frontier = mutable.ArrayBuffer.empty
+            else {
+              entries.foreach { case (w, _, _) =>
+                if (seenAt(w) != stamp) {
+                  seenAt(w) = stamp
+                  if (constrained && isTarget(w)) remain -= 1
+                }
+              }
+              if (h >= minHops)
+                entries.foreach { case (w, p, ep) =>
+                  if (lands(w)) out += ((startId, g.ids(w), p.toSeq, ep.toSeq, h))
+                }
+              // every target reached: deeper levels can only add LONGER
+              // paths to them — stop this start's BFS here
+              frontier = if (remain <= 0) mutable.ArrayBuffer.empty
+                         else mutable.ArrayBuffer.from(entries)
+              h += 1
+            }
+          }
+        }
+        out.iterator
       }
     }
-    hitTriple(spark, key).foreach {
-      case g @ (_, _, _: Array[Long]) =>
-        // resident edge stream (held by a pin handle)
-        val h = pin(g); val k = key.get
-        return tagged
-          .repartition(1)
-          .mapPartitions { sit =>
-            val (as, bs, es) = pinGet(h.token, k)
-              .asInstanceOf[(Array[Long], Array[Long], Array[Long])]
-            val ss = new Longs(16)
-            val ts = if (targets.isDefined) new Longs(16) else null
-            sit.foreach { case (v, t) => if (t == 1) ss += v else ts += v }
-            pathBody(as, bs, es, ss, minHops, maxHops, hasId, allPaths, ts)
-          }.toDF("start", "node", "path", "epath", "hops")
-      case _ => ()
-    }
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"), eidCol, lit(0))
-      .as[(Long, Long, Long, Int)]
-    val s0 = tagged.map { case (v, t) => (v, 0L, 0L, t) }
-    e.unionAll(s0).repartition(1)
-      .mapPartitions { it =>
-        val ab = new Longs(); val bb = new Longs(); val eb = new Longs()
-        val startIds = new Longs(16)
-        val targetIds = if (targets.isDefined) new Longs(16) else null
-        it.foreach { case (a, b, eid, t) =>
-          if (t == 0) { ab += a; bb += b; eb += eid }
-          else if (t == 1) startIds += a
-          else targetIds += a
-        }
-        val as = ab.toArray; val bs = bb.toArray; val es = eb.toArray
-        key.foreach(k => residentStoreLocal(k, (as, bs, es), as.length.toLong))
-        pathBody(as, bs, es, startIds, minHops, maxHops, hasId, allPaths, targetIds)
-      }.toDF("start", "node", "path", "epath", "hops")
   }
 
-  /** Witness-path BFS body shared by the tagged-stream and resident-cache
-    * routes of [[pathExpand]]. */
-  private def pathBody(as: Array[Long], bs: Array[Long], esIn: Array[Long],
-                       startIds: Longs, minHops: Int, maxHops: Int,
-                       hasId: Boolean, allPaths: Boolean,
-                       targetIds: Longs = null)
-      : Iterator[(Long, Long, Seq[Long], Seq[Long], Int)] = {
-        val vx = new Interner
-        val sb = new Ints(); val db = new Ints()
-        var ei = 0
-        while (ei < as.length) { sb += vx.idx(as(ei)); db += vx.idx(bs(ei)); ei += 1 }
-        val (si, di, eids) = (sb.result(), db.result(), esIn)
-        // target vertex indices (ids absent from the graph are unreachable
-        // and simply never satisfied — the loop then ends at frontier
-        // exhaustion like before)
-        val tgtIdx: java.util.HashSet[Integer] =
-          if (targetIds == null) null
-          else {
-            val s = new java.util.HashSet[Integer]()
-            var ti = 0
-            while (ti < targetIds.n) {
-              vx.idOf.get(targetIds(ti)).foreach(ix => s.add(ix): Unit)
-              ti += 1
-            }
-            s
-          }
-        // CSR over edge INDICES so parallel edges keep their own eid
-        val n = vx.n
-        val off = new Array[Int](n + 1)
-        var k = 0
-        while (k < si.length) { off(si(k) + 1) += 1; k += 1 }
-        var i = 0
-        while (i < n) { off(i + 1) += off(i); i += 1 }
-        val eIdx = new Array[Int](si.length)
-        val cur = java.util.Arrays.copyOf(off, math.max(n, 1))
-        k = 0
-        while (k < si.length) { val s = si(k); eIdx(cur(s)) = k; cur(s) += 1; k += 1 }
-        val seenAt = new Array[Int](n)
-
-        (0 until startIds.n).iterator.flatMap { s =>
-          val startId = startIds(s)
-          val stamp = s + 1
-          val out = mutable.ArrayBuffer.empty[(Long, Long, Seq[Long], Seq[Long], Int)]
-          if (minHops == 0 && (tgtIdx == null || targetIds.toArray.contains(startId)))
-            out += ((startId, startId, Seq(startId), Seq.empty[Long], 0))
-          vx.idOf.get(startId).foreach { sIdx =>
-            // targets left to reach from THIS start; 0 => stop the BFS
-            var remain =
-              if (tgtIdx == null) Int.MaxValue
-              else tgtIdx.size - (if (tgtIdx.contains(sIdx)) 1 else 0)
-            seenAt(sIdx) = stamp
-            // frontier rows: (nodeIdx, node-seq, edge-seq); paths mode keeps
-            // one row per node, allPaths one per distinct node-seq
-            var frontier = mutable.ArrayBuffer((sIdx, Array(startId), Array.empty[Long]))
-            var h = 1
-            while (frontier.nonEmpty && h <= maxHops) {
-              // per (node, node-seq): min edge-seq; paths mode additionally
-              // collapses to min (node-seq, edge-seq) per node afterwards
-              val best = mutable.HashMap.empty[(Int, Seq[Long]), (Array[Long], Array[Long])]
-              frontier.foreach { case (u, p, ep) =>
-                var j = off(u)
-                while (j < off(u + 1)) {
-                  val ke = eIdx(j)
-                  val w = di(ke)
-                  if (seenAt(w) != stamp) {
-                    val np = p :+ vx.ids(w)
-                    val nep = if (hasId) ep :+ eids(ke) else ep
-                    val key = (w, np.toSeq)
-                    best.get(key) match {
-                      case Some((_, oldEp)) if cmpLongs(nep, oldEp) >= 0 => ()
-                      case _ => best.update(key, (np, nep))
-                    }
-                  }
-                  j += 1
-                }
-              }
-              val entries0 = best.iterator.map { case ((w, _), (p, ep)) => (w, p, ep) }.toArray
-              val entries =
-                if (allPaths) entries0
-                else { // one witness per node: min (node-seq, edge-seq)
-                  val perNode = mutable.HashMap.empty[Int, (Array[Long], Array[Long])]
-                  entries0.foreach { case (w, p, ep) =>
-                    perNode.get(w) match {
-                      case Some((op, oep)) =>
-                        val c = cmpLongs(p, op)
-                        if (c < 0 || (c == 0 && cmpLongs(ep, oep) < 0)) perNode.update(w, (p, ep))
-                      case None => perNode.update(w, (p, ep))
-                    }
-                  }
-                  perNode.iterator.map { case (w, (p, ep)) => (w, p, ep) }.toArray
-                }
-              if (entries.isEmpty) frontier = mutable.ArrayBuffer.empty
-              else {
-                entries.foreach { case (w, _, _) =>
-                  if (seenAt(w) != stamp) {
-                    seenAt(w) = stamp
-                    if (tgtIdx != null && tgtIdx.contains(w)) remain -= 1
-                  }
-                }
-                if (h >= minHops)
-                  entries.foreach { case (w, p, ep) =>
-                    if (tgtIdx == null || tgtIdx.contains(w))
-                      out += ((startId, vx.ids(w), p.toSeq, ep.toSeq, h))
-                  }
-                // every target reached: deeper levels can only add LONGER
-                // paths to them — stop this start's BFS here
-                frontier = if (remain <= 0) mutable.ArrayBuffer.empty
-                           else mutable.ArrayBuffer.from(entries)
-                h += 1
-              }
-            }
-          }
-          out.iterator
-        }
-  }
+  // ---- triangles --------------------------------------------------------
 
   /** Degree-oriented common-neighbor triangle total — replicates
     * [[Algorithms.triangleCount]] including multigraph quirks (duplicate
     * input rows orient and count per row; the common-neighbor set is
     * DISTINCT values, as `array_intersect` dedups). One-row result. */
-  def triangleCount(undirected: DataFrame): DataFrame = {
-    val spark = undirected.sparkSession
-    import spark.implicits._
-    val srcDs = undirected.select(col("a").cast("long"), col("b").cast("long")).as[(Long, Long)]
-    inTask2(srcDs, cacheKey(srcDs.toDF())) { it =>
-        Iterator.single(Tuple1(triangleSum(it)._1))
-      }.toDF("triangles")
-  }
+  def triangleCount(undirected: DataFrame): DataFrame =
+    inTask(pairs(undirected, "a", "b"), Seq("triangles")) { (e, _) =>
+      Iterator.single(Tuple1(triangleSum(view(e))._1))
+    }
 
   /** Per-vertex triangles + clustering coefficient — replicates
     * [[Algorithms.lcc]]'s corner attribution. */
-  def lcc(undirected: DataFrame): DataFrame = {
-    val spark = undirected.sparkSession
-    import spark.implicits._
-    val srcDs = undirected.select(col("a").cast("long"), col("b").cast("long")).as[(Long, Long)]
-    inTask2(srcDs, cacheKey(srcDs.toDF())) { it =>
-        val (_, ids, deg, tri) = triangleSum(it)
-        ids.indices.iterator.map { i =>
-          val d = deg(i).toLong
-          val t = tri(i)
-          val l = if (d >= 2) t * 2.0 / (d * (d - 1)) else 0.0
-          (ids(i), d, t, l)
-        }
-      }.toDF("id", "deg", "triangles", "lcc")
-  }
+  def lcc(undirected: DataFrame): DataFrame =
+    inTask(pairs(undirected, "a", "b"), Seq("id", "deg", "triangles", "lcc")) { (e, _) =>
+      val g = view(e)
+      val (_, deg, tri) = triangleSum(g)
+      Iterator.range(0, g.n).map { i =>
+        val d = deg(i).toLong
+        val t = tri(i)
+        val l = if (d >= 2) t * 2.0 / (d * (d - 1)) else 0.0
+        (g.ids(i), d, t, l)
+      }
+    }
 
-  /** Forward triangle pass on int ids, shared by [[triangleCount]] and
-    * [[lcc]]. Vertices are renumbered so dense index order is external-id
-    * order; the (deg, id) orientation tie-break is then a plain int
-    * compare. Each row is oriented from its lower (deg, id) endpoint u to
-    * the other endpoint h, and the out-neighbours adj⁺(u) form u's CSR
-    * segment, sorted with `Arrays.sort`. Per u, adj⁺(u) is stamped once in
-    * an int mark array; each row (u, h) then counts the marked DISTINCT
-    * members w of adj⁺(h), each closing one triangle (u, h, w): the total,
-    * u and h gain the count, every w gains 1.
+  /** Forward triangle pass, shared by [[triangleCount]] and [[lcc]]. Dense
+    * index order is id order, so the (deg, id) orientation tie-break is a
+    * plain int compare. Each row is oriented from its lower (deg, id)
+    * endpoint u to the other endpoint h, and the out-neighbours adj⁺(u)
+    * form u's CSR segment, sorted with `Arrays.sort`. Per u, adj⁺(u) is
+    * stamped once in an int mark array; each row (u, h) then counts the
+    * marked DISTINCT members w of adj⁺(h), each closing one triangle
+    * (u, h, w): the total, u and h gain the count, every w gains 1.
     *
     * Keeps [[Algorithms.triangleCount]]'s multigraph semantics exactly:
     * duplicate input rows orient and count per row (a run of equal h in
     * u's segment is counted once and weighted by its length), common
     * neighbours are distinct values (as `array_intersect` dedups), and deg
-    * counts duplicate rows. Returns (total, ids ascending, deg, per-vertex
-    * triangles), the arrays indexed by dense id. */
-  private def triangleSum(it: Iterator[(Long, Long)])
-      : (Long, Array[Long], Array[Int], Array[Long]) = {
-    val vx = new Interner
-    val ea = new Ints(); val eb = new Ints()
-    it.foreach { case (a, b) => ea += vx.idx(a); eb += vx.idx(b) }
-    val n = vx.n
-    val ids = vx.ids.toArray
-    java.util.Arrays.sort(ids)
-    val rank = Array.tabulate(n)(v => java.util.Arrays.binarySearch(ids, vx.ids(v)))
-    val (ia, ib) = (ea.result(), eb.result())
-    val m = ia.length
+    * counts duplicate rows. Returns (total, deg, per-vertex triangles), the
+    * arrays indexed by dense id. */
+  private def triangleSum(g: GraphView): (Long, Array[Int], Array[Long]) = {
+    val (n, m, ia, ib) = (g.n, g.m, g.src, g.dst)
     val deg = new Array[Int](n)
     var k = 0
-    while (k < m) {
-      ia(k) = rank(ia(k)); ib(k) = rank(ib(k))
-      deg(ia(k)) += 1; deg(ib(k)) += 1
-      k += 1
-    }
+    while (k < m) { deg(ia(k)) += 1; deg(ib(k)) += 1; k += 1 }
     val los = new Array[Int](m); val his = new Array[Int](m)
     k = 0
     while (k < m) {
@@ -1837,7 +1447,8 @@ object LocalKernels {
       else { los(k) = y; his(k) = x }
       k += 1
     }
-    val (off, adj) = csr(n, los, his)
+    val fwd = new Csr(n, los, his, withPos = false)
+    val (off, adj) = (fwd.off, fwd.tgt)
     var u = 0
     while (u < n) { java.util.Arrays.sort(adj, off(u), off(u + 1)); u += 1 }
     val mark = new Array[Int](n) // mark(w) == u + 1 iff w ∈ adj⁺(u)
@@ -1868,6 +1479,6 @@ object LocalKernels {
       }
       u += 1
     }
-    (total, ids, deg, tri)
+    (total, deg, tri)
   }
 }

@@ -393,15 +393,41 @@ class LocalKernelsSpec extends SparkSpec {
     finally spark.conf.unset("spark.graft.algo.localSizeBytes")
   }
 
+  test("shortestPathsToTargets local == distributed, exact (minHops 0, absent ids)") {
+    val rnd = new scala.util.Random(19)
+    val ids = Array.tabulate(30)(i => 100L + 5L * i)
+    val e = Seq.tabulate(80)(k => (1000L + k, ids(rnd.nextInt(30)), ids(rnd.nextInt(30))))
+      .toDF("id", "src", "dst")
+    // ids(0) is a start and a target; 7 has no edges; 9 is no vertex but
+    // both a start and a target
+    val starts = Seq(ids(0), ids(3), 7L, 9L).toDF("s")
+    val targets = Seq(ids(0), ids(12), ids(25), ids(29), 9L).toDF("t")
+    for (allPaths <- Seq(false, true); (mn, mx) <- Seq((0, 3), (1, 4), (0, 8))) {
+      val loc = sortedRows(LocalKernels.shortestPathsToTargets(
+        e, starts, "s", targets, "t", mn, mx, allPaths))
+      assert(loc.exists(r => !r.startsWith(s"[${ids(0)},${ids(0)},") && !r.startsWith("[9,")),
+        s"allPaths=$allPaths $mn..$mx reaches no target past hop 0")
+      assert(loc === sortedRows(Traversals.shortestPathsToTargetsDistributed(
+        e, starts, "s", targets, "t", mn, mx, allPaths)), s"allPaths=$allPaths $mn..$mx")
+    }
+  }
+
   test("resident cache: file-backed kernels hit the cache and match cold runs") {
     // parquet-backed edges (LocalRelation inputs never cache) — run each
     // kernel twice: run 1 populates the resident cache, run 2 serves from
-    // it; both must match each other AND the distributed twin
+    // it. A hit reads no file: its plan's leaves are a 1-row range or the
+    // (local) start/target rows. Both runs must match each other and the
+    // distributed twin.
     val dir = java.nio.file.Files.createTempDirectory("graft_rescache").toFile
     try {
-      randGraph(77, 40, 200).write.mode("overwrite").parquet(s"$dir/e.parquet")
+      randGraph(77, 40, 200)
+        .withColumn("id", monotonically_increasing_id())
+        .withColumn("weight", (pmod(col("src") + col("dst"), lit(7)) + lit(1)).cast("double"))
+        .write.mode("overwrite").parquet(s"$dir/e.parquet")
       val e = spark.read.parquet(s"$dir/e.parquet")
-      val starts = e.select(col("src").as("s0")).distinct().limit(5)
+      val vs = e.select(col("src")).distinct().orderBy(col("src")).as[Long].collect()
+      val starts = vs.take(5).toSeq.toDF("s0")
+      val targets = vs.takeRight(4).toSeq.toDF("t0")
       // distributed references, pinned so the gate cannot route them back
       // to the (cached) local kernels
       def distributed(f: => DataFrame): Array[String] = {
@@ -409,20 +435,37 @@ class LocalKernelsSpec extends SparkSpec {
         try sortedRows(f)
         finally spark.conf.unset("spark.graft.algo.localSizeBytes")
       }
-      def runs(f: => DataFrame): (Array[String], Array[String]) =
-        (sortedRows(f), sortedRows(f))
-      val (b1, b2) = runs(LocalKernels.bfs(e, 1000L, 30))
+      def runs(name: String)(f: => DataFrame): (Array[String], Array[String]) = {
+        val first = sortedRows(f)
+        val again = f
+        assert(again.inputFiles.isEmpty, s"$name: the second call read the edge files")
+        (first, sortedRows(again))
+      }
+      assert(LocalKernels.bfs(e, 1000L, 30).inputFiles.nonEmpty, "a cold call reads the files")
+      val (b1, b2) = runs("bfs")(LocalKernels.bfs(e, 1000L, 30))
       assert(b1 === b2)
       assert(b1 === distributed(graft.algo.Algorithms.bfs(e, 1000L, 30)))
-      val (v1, v2) = runs(LocalKernels.varLengthExpand(e, starts, "s0", 1, 3))
+      val (w1, w2) = runs("wcc")(LocalKernels.wcc(e))
+      assert(w1 === w2)
+      assert(w1 === distributed(graft.algo.Algorithms.wcc(e)))
+      val (r1, r2) = runs("pageRank")(LocalKernels.pageRank(e, 8, 0.85))
+      assert(r1 === r2)
+      val (s1, s2) = runs("sssp")(LocalKernels.sssp(e, 1000L, 30))
+      assert(s1 === s2)
+      val (v1, v2) = runs("varLengthExpand")(LocalKernels.varLengthExpand(e, starts, "s0", 1, 3))
       assert(v1 === v2)
       assert(v1 === sortedRows(
         Traversals.varLengthExpandDistributed(e, starts, "s0", 1, 3)))
-      val (p1, p2) = runs(LocalKernels.varLengthExpandPaths(e, starts, "s0", 1, 2))
+      val (p1, p2) = runs("varLengthExpandPaths")(
+        LocalKernels.varLengthExpandPaths(e, starts, "s0", 1, 2))
       assert(p1 === p2)
-      val (w1, w2) = runs(LocalKernels.wcc(e))
-      assert(w1 === w2)
-      assert(w1 === distributed(graft.algo.Algorithms.wcc(e)))
+      assert(p1 === sortedRows(
+        Traversals.varLengthExpandPathsDistributed(e, starts, "s0", 1, 2)))
+      val (t1, t2) = runs("shortestPathsToTargets")(LocalKernels.shortestPathsToTargets(
+        e, starts, "s0", targets, "t0", 0, 6, allPaths = true))
+      assert(t1 === t2)
+      assert(t1 === sortedRows(Traversals.shortestPathsToTargetsDistributed(
+        e, starts, "s0", targets, "t0", 0, 6, allPaths = true)))
       // rewriting the files invalidates the key (len/mtime in the key): a
       // different graph at the same path must NOT serve stale results
       randGraph(88, 40, 200).write.mode("overwrite").parquet(s"$dir/e.parquet")
