@@ -21,8 +21,6 @@ object GraftSession {
     // events.ts is TIMESTAMP(NANOS) parquet — read as long, normalized to
     // a timestamp in graft.model.Tables
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    // bound GraphX Pregel lineage (scc) — dir set in Algorithms.scc
-    "spark.graphx.pregel.checkpointInterval" -> "10",
     // iterative operators emit many AQE plan events; bound the cost of
     // stringifying plans (driver-side CPU, not execution)
     "spark.sql.maxPlanStringLength" -> "32768",

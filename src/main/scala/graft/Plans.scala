@@ -17,7 +17,8 @@ object Plans {
     * kernel as offered to RoundCapture, audited round, what to look for).
     * The audited round is 2 except for q_ktruss, whose co-purchase slice
     * already is a 5-truss at sf0.001 (minimum edge support 13), so its
-    * loop stops after round 1 there. */
+    * loop stops after round 1 there, and the SCC color round, which sees
+    * no vertex on the q_scc DAG and stops after round 1. */
   val roundPicks: Seq[(String, String, Int, String)] = Seq(
     ("q_pagerank", "pagerank", 2, "the last round's vertex-sized rank-join-outdeg leaf feeds the dangling broadcast 1-row aggregate AND the contribution join; update is a left join + projection, joined to out-degree again for the next round's leaf"),
     ("q_wcc", "wcc", 2, "one edge-join + min aggregate (nbr minimum), one full-outer vertex merge - both vertex-sized exchanges, edge leaf reused"),
@@ -33,7 +34,12 @@ object Plans {
     ("q_betweenness", "betweenness", 2, "Brandes forward level: frontier x edge join, left-anti join against earlier levels, sigma summed per (seed, node) in one hash aggregate"),
     ("q_bidir_bfs", "bidir_bfs", 2, "both (pair, side) frontiers in one join against the symmetrized edge leaf + min-dist aggregate + left-anti join against the visited levels"),
     ("q_kcore", "kcore", 2, "one degree hash aggregate on the kept edges, joined back onto both endpoints to mark the edges that stay"),
-    ("q_ktruss", "ktruss", 1, "per-edge support: degree-oriented adjacency intersection + one exploded hash aggregate charging each triangle to its 3 edges, joined back onto the edge leaf"))
+    ("q_ktruss", "ktruss", 1, "per-edge support: degree-oriented adjacency intersection + one exploded hash aggregate charging each triangle to its 3 edges, joined back onto the edge leaf"),
+    ("q_scc", "scc_color", 1, "coloring SCC, forward min-color round: color x edge join + per-dst min aggregate, left-joined back onto the colors (round 1: the q_scc slice is a DAG, which the trim rounds empty before a second color round)"),
+    ("q_cypher_varlength", "varlength", 2, "var-length frontier: last level x edge join + distinct + left-anti join on (start, node) against the union of earlier levels"),
+    ("q_cypher_shortestpath", "paths", 2, "targeted path frontier: the last level minus the starts whose reached (start, node) pairs cover every target (a per-start distinct count against a literal), x edge join, left-anti join on (start, node), per-(start, node) struct-min witness"),
+    ("q_betweenness", "betweenness_back", 2, "Brandes backward level: level d x edge join x the delta leaf of level d+1 on (seed, node), sigma-ratio sum per (seed, node), left-joined back onto level d"),
+    ("q_sssp_path", "sssp_path", 2, "ssspPath walk: the last vertex x the parent leaf x the distance leaf, one row per round"))
 
   /** The plan-shape guards; empty when `df`'s plan passes.
     *

@@ -31,8 +31,6 @@ object Soak {
     // the soak certifies the DISTRIBUTED formulations scale — pin them so
     // the small-graph in-task fast path (LocalKernels) never routes here
     val spark = GraftSession.create(conf = Map("spark.graft.algo.localSizeBytes" -> "0"))
-    graft.algo.Algorithms.ensureCheckpointDir(spark,
-      s"${System.getProperty("java.io.tmpdir")}/graft_soak_ckpt")
     import spark.implicits._
 
     val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_soak"

@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
@@ -25,30 +25,6 @@ object Algorithms {
     * `rounds` argument exactly when the two-no-move-round fixpoint fired).
     * Plain volatile — specs run their assertions single-threaded. */
   @volatile private[graft] var lastLouvainMoveRounds: Int = 0
-
-  /** Set a checkpoint dir (idempotent) and arrange for the per-app
-    * subdirectory (Spark appends a fresh UUID per context) to be deleted at
-    * JVM exit — Spark never removes reliable-checkpoint data on its own, so
-    * without this every bench/verify/soak run leaks its Pregel checkpoints
-    * into tmp forever. */
-  def ensureCheckpointDir(spark: SparkSession, base: String): Unit = {
-    val sc = spark.sparkContext
-    if (sc.getCheckpointDir.isEmpty) {
-      sc.setCheckpointDir(base)
-      sc.getCheckpointDir.foreach { appDir =>
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-            f.delete(): Unit
-          }
-          rm(new java.io.File(new java.net.URI(appDir).getPath match {
-            case null => appDir
-            case p    => p
-          }))
-        }))
-      }
-    }
-  }
 
   private def verts(edges: DataFrame): DataFrame =
     edges.select(col("src").as("id")).unionAll(edges.select(col("dst").as("id"))).distinct()
@@ -161,8 +137,7 @@ object Algorithms {
     // instead of recomputing the join twice; the last update stays lazy.
     // (Round 5 measured the every-other-round cut here: the doubly-
     // referenced recompute on uncut rounds costs MORE than the job boundary
-    // it saves — 4.45s vs 3.9s at sf0.1 — so unlike CDLP's single-consumer
-    // chain, this stays a per-round cut.)
+    // it saves — 4.45s vs 3.9s at sf0.1 — so this stays a per-round cut.)
     def withOutW(ranks: DataFrame): DataFrame =
       ranks.join(outW, col("id") === col("_owid"), "left")
         .select(col("id"), col("rank"), col("_ow"))
@@ -756,22 +731,16 @@ object Algorithms {
     // every vertex appears as _udst (both directions are in `und`, and the
     // vertex set is derived from the edges), so the per-round argmax over
     // incoming neighbor labels covers ALL vertices — no join back to the
-    // previous labels is needed. Each round then references the previous
-    // one exactly ONCE, which lets lineage be cut every OTHER round: half
-    // the checkpoint writes, and a 2-round plan is still O(1) deep.
-    var lbl = verts(edges).withColumn("label", col("id"))
-    for (i <- 1 to iterations) {
+    // previous labels is needed
+    Rounds.fold("cdlp", iterations, verts(edges).withColumn("label", col("id"))) { (_, lbl) =>
       val freq = lbl.join(und, col("id") === col("_usrc"))
         .groupBy(col("_udst"), col("label")).agg(count(lit(1)).as("f"))
       // argmax(f), ties -> min label, as a single hash aggregate over
       // struct ordering (max of (f, -label)) — no window sort
-      val next = freq.groupBy(col("_udst"))
+      freq.groupBy(col("_udst"))
         .agg(max(struct(col("f"), (-col("label")).as("nl"))).as("m"))
         .select(col("_udst").as("id"), (-col("m.nl")).as("label"))
-      RoundCapture.offer("cdlp", i, next)
-      lbl = if (i % 2 == 0 && i < iterations) next.localCheckpoint(true) else next
     }
-    lbl
   }
 
   /** Orient canonical undirected edges (a,b) from the lower-(degree,id)
@@ -797,7 +766,7 @@ object Algorithms {
     * Input: undirected canonical edges (a<b). Small inputs route to the
     * in-task kernel ([[LocalKernels]]). */
   def triangleCount(undirected: DataFrame): DataFrame = {
-    val (u, small) = LocalKernels.gateSuperlinear(undirected)
+    val (u, small) = LocalKernels.gate(undirected, LocalKernels.Superlinear)
     if (small) LocalKernels.triangleCount(u) else triangleCountDistributed(u)
   }
 
@@ -883,7 +852,7 @@ object Algorithms {
     * every closing vertex w gets 1. Small inputs route to the in-task
     * kernel ([[LocalKernels]]). */
   def lcc(undirected: DataFrame): DataFrame = {
-    val (u, small) = LocalKernels.gateSuperlinear(undirected)
+    val (u, small) = LocalKernels.gate(undirected, LocalKernels.Superlinear)
     if (small) LocalKernels.lcc(u) else lccDistributed(u)
   }
 
@@ -1025,27 +994,27 @@ object Algorithms {
     }
     if (levels.size == 1) // nothing reached: no interior vertices, no BC
       return seedDf.select(col("s").as("id"), lit(0.0).as("bc")).limit(0)
-    // backward: δ(level d) from δ(level d+1) over the DAG edges; the
-    // deepest level has δ = 0 and contributes only its σ to the ratios
-    var above = levels.last.withColumn("delta", lit(0.0))
-    var acc = above
-    for (d <- (levels.size - 2) to 1 by -1) {
-      val w = above.select(col("s").as("ws"), col("id").as("wid"),
+    // backward: δ(level d) from δ(level d+1) over the DAG edges, one
+    // round per level from the deepest up to level 1; the deepest level
+    // has δ = 0 and contributes only its σ to the ratios
+    val deepest = levels.size - 1
+    val back = Rounds.levels("betweenness_back", deepest - 1,
+        levels.last.withColumn("delta", lit(0.0))) { lv =>
+      val d = deepest - lv.size
+      val w = lv.last.select(col("s").as("ws"), col("id").as("wid"),
         col("sigma").as("wsigma"), col("delta").as("wdelta"))
       val contrib = levels(d).join(e, col("id") === col("_esrc"))
         .join(w, col("s") === col("ws") && col("_edst") === col("wid"))
         .groupBy(col("s"), col("id"))
         .agg(sum(col("sigma") / col("wsigma") * (lit(1.0) + col("wdelta")))
           .as("__c"))
-      above = levels(d).join(contrib, Seq("s", "id"), "left")
+      levels(d).join(contrib, Seq("s", "id"), "left")
         .select(col("s"), col("id"), col("sigma"),
           coalesce(col("__c"), lit(0.0)).as("delta"))
-        .localCheckpoint(true)
-      acc = acc.unionAll(above)
     }
     // seeds sit only in levels(0), which the backward loop never emits —
     // endpoint exclusion is structural
-    acc.groupBy(col("id"))
+    back.reduce(_ unionAll _).groupBy(col("id"))
       .agg(graft.functions.CypherFunctions.roundC(sum(col("delta")), 4).as("bc"))
   }
 
@@ -1112,10 +1081,11 @@ object Algorithms {
     * — one edges⋈dist join + a min aggregate. The exact FP equality is
     * safe because dist(v) was literally produced by one of those same
     * additions (identical operands → identical double on any engine), and
-    * the min-u tie-break makes the tree deterministic. The walk is
-    * `maxHops` LAZY self-joins against the checkpointed parent table in
-    * ONE plan — no driver loop, no per-round parent state in the
-    * relaxation. Returns (pos, id, dist) rows, pos = hops from TARGET
+    * the min-u tie-break makes the tree deterministic — no per-round
+    * parent state in the relaxation. The walk is a [[Rounds.levels]] loop
+    * seeded by the target row: each round joins the last vertex to its
+    * parent, at most `maxHops` rounds, and it ends at the first empty level
+    * (the source has no parent). Returns (pos, id, dist) rows, pos = hops from TARGET
     * (pos 0 = target … last = source), dist rounded to 4.
     *
     * COMPLETENESS CONTRACT: the result is either a CERTIFIED full path —
@@ -1130,8 +1100,8 @@ object Algorithms {
     * Routes WHOLESALE through the [[LocalKernels]] gate: below the
     * threshold the solve, the parent derivation, AND the walk all run in
     * one task ([[LocalKernels.ssspPath]] — the parent table is
-    * vertex-sized, the walk a backward array hop loop, so a 16-join
-    * reconstruction plan is pure overhead there); above it the
+    * vertex-sized, the walk a backward array hop loop, so a round per hop
+    * is pure overhead there); above it the
     * distributed formulation below is the only one that exists. The
     * kernel relaxes with the same synchronous min(dist(u)+w) double
     * additions, so the exact-FP parent equality holds identically on
@@ -1159,21 +1129,18 @@ object Algorithms {
       .filter(col("__du") + col("weight") === col("__dv") && col("dst") =!= lit(source))
       .groupBy(col("dst").as("id")).agg(min(col("src")).as("__par"))
       .localCheckpoint(true) // consumed once per walk hop
-    var cur = dist.filter(col("id") === target)
-      .select(lit(0).as("pos"), col("id"), col("dist"))
-    val steps = scala.collection.mutable.ArrayBuffer(cur)
-    for (i <- 1 to maxHops) {
-      cur = cur.select(col("id"))
-        .join(parent, Seq("id"))
-        .select(col("__par").as("id"))
-        .join(dist, Seq("id"))
-        .select(lit(i).as("pos"), col("id"), col("dist"))
-      steps += cur
+    // the walk: level i is the vertex i hops from the target; the source
+    // has no parent, so a walk that reaches it ends on the empty level
+    val walk = Rounds.levels("sssp_path", maxHops,
+        dist.filter(col("id") === target).select(col("id"), col("dist"))) { lv =>
+      lv.last.join(parent, Seq("id")).select(col("__par").as("id")).join(dist, Seq("id"))
     }
     // completeness certificate: keep the rows only if the walk actually
     // reached the source (dist 0) — a 1-row broadcast flag, so a partial
     // path can never masquerade as a complete one
-    val path = steps.reduce(_ unionAll _).localCheckpoint(true)
+    val path = walk.zipWithIndex
+      .map { case (lv, i) => lv.select(lit(i).as("pos"), col("id"), col("dist")) }
+      .reduce(_ unionAll _).localCheckpoint(true)
     val ok = path.agg(coalesce(max(when(
       col("id") === source && col("dist") === 0.0, 1)), lit(0)).as("__ok"))
     path.crossJoin(broadcast(ok)).filter(col("__ok") === 1)
@@ -1512,27 +1479,82 @@ object Algorithms {
 
   /** SCC (reference `community.rs` Tarjan) — component = min node id in the
     * SCC. Small inputs route to the in-task iterative Tarjan
-    * ([[LocalKernels.scc]], exact, one pass); large inputs run GraphX's
-    * Pregel SCC. Differential check: SccKernelSpec. */
+    * ([[LocalKernels.scc]], exact, one pass); large inputs run the
+    * distributed coloring SCC ([[sccDistributed]]). */
   def scc(edges: DataFrame, maxIter: Int = 10): DataFrame = {
     val (e, small) = LocalKernels.gate(edges)
     if (small) LocalKernels.scc(e) else sccDistributed(e, maxIter)
   }
 
+  /** Coloring SCC (Slota, Rajamanickam and Madduri, "BFS and
+    * Coloring-based Parallel Algorithms for Strongly Connected
+    * Components", IPDPS 2014): the trim / color / backward-reach phases
+    * GraphX's stronglyConnectedComponents runs, each inner loop on
+    * [[Rounds]]. One phase works on the vertices no phase has labeled yet
+    * and the edges among them:
+    *  1. trim: round after round, drop every vertex with no in-edge or no
+    *     out-edge among the rest — a singleton SCC, labeled by its own id;
+    *  2. color: forward min-id propagation to the fixpoint, so a vertex's
+    *     color is the min id that reaches it;
+    *  3. backward reach: from each root (a vertex whose color is its own
+    *     id), walk reversed edges within the root's color. The reached set
+    *     is the root's SCC, and the root is its min id, hence its label.
+    * Each phase labels at least every root's SCC. `maxIter` caps the
+    * phases, as GraphX's `numIter` does; a vertex still unlabeled at the
+    * cap is labeled by its own id. */
   private[graft] def sccDistributed(edges: DataFrame, maxIter: Int = 10): DataFrame = {
-    val spark = edges.sparkSession
-    // GraphX Pregel honors spark.graphx.pregel.checkpointInterval only
-    // when a checkpoint dir exists — ensure one, so deep SCC lineage is
-    // cut periodically instead of growing with the iteration count
-    ensureCheckpointDir(spark,
-      s"${System.getProperty("java.io.tmpdir")}/graft_ckpt")
-    import org.apache.spark.graphx.{Edge, Graph}
-    val eRdd = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    val g = Graph.fromEdges(eRdd, ())
-    val comps = g.stronglyConnectedComponents(maxIter).vertices
-    spark.createDataFrame(comps.map { case (id, c) => (id, c) })
-      .toDF("id", "component")
+    val e = edges.select(col("src").cast("long").as("_src"), col("dst").cast("long").as("_dst"))
+      .distinct().localCheckpoint(true)
+    // the rows of `es` with both endpoints in `vs`
+    def among(es: DataFrame, vs: DataFrame): DataFrame = {
+      val v = vs.select(col("id").as("_v"))
+      es.join(v, col("_src") === col("_v"), "left_semi")
+        .join(v, col("_dst") === col("_v"), "left_semi")
+    }
+    val verts0 = e.select(col("_src").as("id")).unionAll(e.select(col("_dst").as("id")))
+      .distinct().withColumn("component", lit(null).cast("long"))
+    Rounds.fold("scc", maxIter, verts0, halt = Some(_.filter(col("component").isNull))) {
+      (phase, labels) =>
+        val open = labels.filter(col("component").isNull).select(col("id"))
+        // phase 1: every vertex is open
+        val eOpen = if (phase == 1) e else among(e, open).localCheckpoint(true)
+        // `_out`: trimmed this round
+        val kept = Rounds.fold("scc_trim", Int.MaxValue, open.withColumn("_out", lit(false)),
+            halt = Some(_.filter(col("_out")))) { (_, prev) =>
+          val live = prev.filter(!col("_out")).select(col("id"))
+          val le = among(eOpen, live)
+          val ends = le.select(col("_src").as("id"), lit(true).as("_o"), lit(false).as("_i"))
+            .unionAll(le.select(col("_dst").as("id"), lit(false).as("_o"), lit(true).as("_i")))
+            .groupBy(col("id")).agg(max(col("_o")).as("_o"), max(col("_i")).as("_i"))
+          live.join(ends, Seq("id"), "left")
+            .select(col("id"), not(coalesce(col("_o") && col("_i"), lit(false))).as("_out"))
+        }.filter(!col("_out")).select(col("id"))
+        // `_chg`: color dropped this round. An edge with a trimmed end
+        // drops out of both joins below: its src joins no color row, or its
+        // dst no vertex row
+        val color = Rounds.fold("scc_color", Int.MaxValue, kept.withColumn("color", col("id")),
+            halt = Some(_.filter(col("_chg")))) { (_, c) =>
+          val inMin = c.join(eOpen, col("id") === col("_src"))
+            .groupBy(col("_dst")).agg(min(col("color")).as("_m"))
+          c.join(inMin, col("id") === col("_dst"), "left")
+            .select(col("id"), least(col("color"), coalesce(col("_m"), col("color"))).as("_nc"),
+              col("color"))
+            .select(col("id"), col("_nc").as("color"), (col("_nc") < col("color")).as("_chg"))
+        }.select(col("id"), col("color"))
+        val found = Rounds.levels("scc_reach", Int.MaxValue,
+            color.filter(col("id") === col("color"))) { lv =>
+          lv.last.join(eOpen, col("id") === col("_dst"))
+            .select(col("_src").as("id"), col("color"))
+            .join(color, Seq("id", "color"), "left_semi")
+            .distinct()
+            .join(lv.reduce(_ unionAll _), Seq("id", "color"), "left_anti")
+        }.reduce(_ unionAll _)
+        labels.join(found.withColumnRenamed("color", "_f"), Seq("id"), "left")
+          .join(kept.withColumn("_k", lit(true)), Seq("id"), "left")
+          .select(col("id"),
+            coalesce(col("component"), col("_f"), when(col("_k").isNull, col("id")))
+              .as("component"))
+    }.select(col("id"), coalesce(col("component"), col("id")).as("component"))
   }
 
   /** Max flow by Edmonds-Karp (reference

@@ -43,99 +43,82 @@ import scala.reflect.runtime.universe.TypeTag
   */
 object LocalKernels {
 
-  /** Route to the in-task kernel? Three tiers:
+  /** Route to the in-task kernel? Three tiers, capped by [[Linear]]:
     * below `localSizeBytes` (default 64 MB) by plan estimate → local with
     * zero extra work (the estimate is conservative: without CBO a Filter
-    * reports its child's full size). In the gray zone up to
-    * `localCountBytes` (default 2 GB) spend ONE cheap count job and accept
-    * up to `localMaxEdges` (default 4M ≈ 64 MB of id pairs in-task).
-    * Past THAT, a DENSE tier: up to `localMaxEdgesDense` (default 32M ≈
-    * 0.5 GB of primitive arrays) IF the vertex count stays under
-    * `localMaxNodesDense` (default 1M, one extra approx-distinct pass over
-    * the already-checkpointed leaf) — per-iteration kernel work is
-    * O(V + E) but the distributed twin pays per-round vertex-sized
-    * SHUFFLES, so a dense small-vertex graph (the co-purchase shape:
-    * sf1 = 12M edges over 200k nodes) wins in-task 3-4× (sf1 cdlp
-    * 58.7 s → 17.4 s, bit-identical output) while a large-vertex graph
-    * of the same edge count (6.4M-node HITS projection: single-task CSR
-    * build + 6.4M-row result from one task) correctly stays distributed.
-    * Past the dense tier: distributed, and never counted.
+    * reports its child's full size). In the gray zone up to 2 GB spend ONE
+    * cheap count job and accept up to 4M edges (≈ 64 MB of id pairs
+    * in-task). Past THAT, a DENSE tier: up to 32M edges (≈ 0.5 GB of
+    * primitive arrays) IF the vertex count stays under 1M (one extra
+    * approx-distinct pass over the already-checkpointed leaf) —
+    * per-iteration kernel work is O(V + E) but the distributed twin pays
+    * per-round vertex-sized SHUFFLES, so a dense small-vertex graph (the
+    * co-purchase shape: sf1 = 12M edges over 200k nodes) wins in-task 3-4×
+    * (sf1 cdlp 58.7 s → 17.4 s, bit-identical output) while a large-vertex
+    * graph of the same edge count (6.4M-node HITS projection: single-task
+    * CSR build + 6.4M-row result from one task) correctly stays
+    * distributed. Past the dense tier: distributed, and never counted.
     * `localSizeBytes=0` disables the local path entirely (used by specs
     * and the soak harness to pin the distributed formulation). */
   def isSmall(df: DataFrame): Boolean = gate(df)._2
 
   /** The in-task size threshold `spark.graft.algo.localSizeBytes` (default
     * 64 MB; `<= 0` disables every in-task route). One reader for the
-    * kernel gates here and the Cypher final-sort route in the Translator. */
+    * kernel gate here and the Cypher final-sort route in the Translator. */
   def localSizeBytes(spark: SparkSession): Long =
     spark.conf.get("spark.graft.algo.localSizeBytes", (64L << 20).toString).toLong
+
+  /** One set of [[gate]] tier caps: the estimate-only tier (`sizeBytes`,
+    * `localSizeBytes` when None), the count tier (`countBytes` estimate,
+    * `maxEdges` rows) and the dense tier (`maxEdgesDense` rows over at
+    * most `maxNodesDense` vertices; a dense cap below `maxEdges` turns the
+    * tier off). Constants, not confs: specs pass scaled-down caps. */
+  private[graft] final case class Caps(sizeBytes: Option[Long], countBytes: Long,
+                                       maxEdges: Long, maxEdgesDense: Long,
+                                       maxNodesDense: Long)
+
+  /** Caps for the O(V + E)-per-round kernels (see [[isSmall]]). */
+  private[graft] val Linear = Caps(None, 2L << 30, 4000000L, 32000000L, 1000000L)
+
+  /** Caps for SUPERLINEAR kernels (triangle counting / lcc are O(m^1.5)
+    * intersection work, not O(m) passes): a graph can be byte-small yet
+    * compute-heavy — the sf0.1 co-purchase graph is 1.3M edges over 2k
+    * nodes (avg degree ~1300), where the single-task intersection loses to
+    * the 32-way distributed plan. Much tighter caps: 1 MB fast tier /
+    * 200k-edge count tier (200k^1.5 ≈ 10^8 merge steps ≈ 0.1 s in-task),
+    * no dense tier. The count tier stops at a 64 MB estimate: a 200k-edge
+    * cap is ~3 MB of id pairs, so a larger estimate cannot pass the count
+    * — rejecting on the estimate alone avoids a pure-overhead
+    * materialize+count on every large-side call (the r6 q_lcc regression).
+    * `localSizeBytes=0` turns this gate off too. */
+  private[graft] val Superlinear = Caps(Some(1L << 20), 64L << 20, 200000L, 0L, 0L)
 
   /** Like [[isSmall]] but when the gray zone forces a count, the input is
     * localCheckpointed FIRST and the (possibly materialized) frame is
     * returned for downstream use — an expensive derived input (e.g. a
     * self-join edge projection) is computed once, shared by the count and
     * whichever execution path wins, instead of twice. */
-  def gate(df: DataFrame): (DataFrame, Boolean) = {
-    val conf = df.sparkSession.conf
-    val sizeB = localSizeBytes(df.sparkSession)
-    if (sizeB <= 0L) return (df, false)
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est <= BigInt(sizeB)) (df, true)
-    else {
-      val countB = conf.get("spark.graft.algo.localCountBytes", (2L << 30).toString).toLong
-      val maxE = conf.get("spark.graft.algo.localMaxEdges", "4000000").toLong
-      if (est > BigInt(countB)) (df, false)
-      else {
-        val leaf = df.localCheckpoint(true)
-        val m = leaf.count()
-        if (m <= maxE) (leaf, true)
-        else {
-          val denseE = conf.get("spark.graft.algo.localMaxEdgesDense", "32000000").toLong
-          val maxV = conf.get("spark.graft.algo.localMaxNodesDense", "1000000").toLong
-          if (m > denseE) (leaf, false)
-          else {
-            // one partial-combined pass over the leaf (±5% HLL is plenty:
-            // the threshold only picks an execution strategy, both paths
-            // are differentially pinned equal) — endpoints by position,
-            // matching every gated call's (src, dst[, ...]) layout
-            val c = leaf.columns
-            val v = leaf.select(explode(array(col(c(0)), col(c(1)))).as("__v"))
-              .agg(approx_count_distinct(col("__v")).as("__n"))
-              .first().getLong(0)
-            (leaf, v <= maxV)
-          }
-        }
-      }
-    }
-  }
-
-  /** Gate for SUPERLINEAR kernels (triangle counting / lcc are O(m^1.5)
-    * intersection work, not O(m) passes): a graph can be byte-small yet
-    * compute-heavy — the sf0.1 co-purchase graph is 1.3M edges over 2k
-    * nodes (avg degree ~1300), where the single-task intersection loses to
-    * the 32-way distributed plan. Much tighter caps: 1 MB fast tier /
-    * 200k-edge count tier (200k^1.5 ≈ 10^8 merge steps ≈ 0.1 s in-task). */
-  def isSmallSuperlinear(df: DataFrame): Boolean = gateSuperlinear(df)._2
-
-  /** [[gate]] with the superlinear caps. */
-  def gateSuperlinear(df: DataFrame): (DataFrame, Boolean) = {
-    val conf = df.sparkSession.conf
-    val sizeB = conf.get("spark.graft.algo.localSizeBytesSuperlinear", (1L << 20).toString).toLong
+  private[graft] def gate(df: DataFrame, caps: Caps = Linear): (DataFrame, Boolean) = {
     val base = localSizeBytes(df.sparkSession)
-    if (sizeB <= 0L || base <= 0L) return (df, false)
+    if (base <= 0L) return (df, false)
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est <= BigInt(sizeB)) (df, true)
+    if (est <= BigInt(caps.sizeBytes.getOrElse(base))) (df, true)
+    else if (est > BigInt(caps.countBytes)) (df, false)
     else {
-      // Gray zone is much narrower than [[gate]]'s 2 GB: a 200k-edge cap is
-      // ~3 MB of id pairs, so any estimate past ~64 MB cannot pass the count
-      // — rejecting on the estimate alone avoids a pure-overhead
-      // materialize+count on every large-side call (the r6 q_lcc regression).
-      val countB = conf.get("spark.graft.algo.localCountBytesSuperlinear", (64L << 20).toString).toLong
-      val maxE = conf.get("spark.graft.algo.localMaxEdgesSuperlinear", "200000").toLong
-      if (est > BigInt(countB)) (df, false)
+      val leaf = df.localCheckpoint(true)
+      val m = leaf.count()
+      if (m <= caps.maxEdges) (leaf, true)
+      else if (m > caps.maxEdgesDense) (leaf, false)
       else {
-        val leaf = df.localCheckpoint(true)
-        (leaf, leaf.count() <= maxE)
+        // one partial-combined pass over the leaf (±5% HLL is plenty:
+        // the threshold only picks an execution strategy, both paths
+        // are differentially pinned equal) — endpoints by position,
+        // matching every gated call's (src, dst[, ...]) layout
+        val c = leaf.columns
+        val v = leaf.select(explode(array(col(c(0)), col(c(1)))).as("__v"))
+          .agg(approx_count_distinct(col("__v")).as("__n"))
+          .first().getLong(0)
+        (leaf, v <= caps.maxNodesDense)
       }
     }
   }
@@ -786,9 +769,9 @@ object LocalKernels {
 
   /** Strongly connected components — iterative Tarjan over the view's CSR,
     * one pass, exact (no iteration bound). Component label = min external
-    * id in the SCC, the same labeling GraphX's stronglyConnectedComponents
-    * converges to ([[Algorithms.sccDistributed]] is the distributed twin;
-    * LocalKernelsSpec is the differential check). */
+    * id in the SCC, the same labeling the distributed coloring SCC
+    * ([[Algorithms.sccDistributed]]) gives once its phases finish;
+    * LocalKernelsSpec is the differential check. */
   def scc(edges: DataFrame): DataFrame =
     inTask(pairs(edges), Seq("id", "component")) { (e, _) =>
       val g = view(e)
@@ -1259,36 +1242,17 @@ object LocalKernels {
     Integer.compare(a.length, b.length)
   }
 
-  /** One-witness shortest paths — the exact row set of
-    * `Traversals.varLengthExpandPaths`: per (start, node) the
-    * lexicographically-smallest (node-seq, edge-seq) among BFS min-depth
-    * paths. Starts ride in as tagged rows. */
-  def varLengthExpandPaths(edges: DataFrame, starts: DataFrame, startCol: String,
-                           minHops: Int, maxHops: Int): DataFrame =
-    pathExpand(edges, starts, startCol, minHops, maxHops, allPaths = false)
-
-  /** All-distinct-node-sequence shortest paths — the exact row set of
-    * `Traversals.varLengthExpandAllPaths`: every distinct min-depth node
-    * sequence per (start, node), min edge-id witness per sequence. */
-  def varLengthExpandAllPaths(edges: DataFrame, starts: DataFrame, startCol: String,
-                              minHops: Int, maxHops: Int): DataFrame =
-    pathExpand(edges, starts, startCol, minHops, maxHops, allPaths = true)
-
-  /** Target-aware shortest paths (`shortestPath((a)-[*]-(b))` with BOTH
-    * endpoints constrained): BFS per start that emits ONLY rows landing on a
-    * target and STOPS at the depth where every target has been reached —
-    * an unbounded `*` never explores past the last target's BFS depth.
-    * Without this, `allShortestPaths` over `*` enumerates every distinct
-    * shortest node-sequence to the whole component (combinatorial in
-    * diamond-rich graphs) before the target filter ever runs. */
-  def shortestPathsToTargets(edges: DataFrame, starts: DataFrame, startCol: String,
-                             targets: DataFrame, targetCol: String,
-                             minHops: Int, maxHops: Int, allPaths: Boolean): DataFrame =
-    pathExpand(edges, starts, startCol, minHops, maxHops, allPaths,
-      Some((targets, targetCol)))
-
-  /** Witness-path BFS shared by the three path kernels above. */
-  private def pathExpand(edges: DataFrame, starts: DataFrame, startCol: String,
+  /** Witness-path BFS — the exact row set of
+    * [[graft.operators.Traversals.pathExpandDistributed]]: per
+    * (start, node) the lexicographically-smallest (node-seq, edge-seq)
+    * among BFS min-depth paths, or with `allPaths` every distinct min-depth
+    * node sequence (min edge-id witness per sequence). With targets
+    * (`shortestPath((a)-[*]-(b))` with BOTH endpoints constrained) it emits
+    * ONLY rows landing on a target and STOPS each start's BFS at the depth
+    * where every target has been reached — an unbounded `*` never explores
+    * past the last target's BFS depth. Starts and targets ride in as
+    * tagged rows. */
+  private[graft] def pathExpand(edges: DataFrame, starts: DataFrame, startCol: String,
                          minHops: Int, maxHops: Int, allPaths: Boolean,
                          targets: Option[(DataFrame, String)] = None): DataFrame = {
     val hasId = edges.columns.contains("id")

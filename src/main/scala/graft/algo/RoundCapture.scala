@@ -21,9 +21,8 @@ object RoundCapture {
 
   private val TargetRound = 2
 
-  /** Called by iterative kernels once per round, BEFORE the round-ending
-    * checkpoint (or, for loops that do not checkpoint every round, on the
-    * round's result frame). No-op unless inside [[capturing]]. */
+  /** Called by [[Rounds]] once per round, BEFORE the round-ending
+    * checkpoint. No-op unless inside [[capturing]]. */
   private[graft] def offer(kernel: String, round: Int, df: DataFrame): Unit = {
     val s = sink
     if (s != null && round <= TargetRound) s.putIfAbsent((kernel, round), df)

@@ -18,7 +18,7 @@ import org.apache.spark.sql.DataFrame
   * bidirectional-BFS visited set), and a local-checkpoint block cannot be
   * recomputed once freed, so leaves are left to Spark's ContextCleaner,
   * which drops each once nothing references it. */
-private[algo] object Rounds {
+private[graft] object Rounds {
 
   /** Runs rounds 1..`maxRounds`; round r builds its frame from the previous
     * round's leaf (`init` for round 1). With `halt`, the loop stops after

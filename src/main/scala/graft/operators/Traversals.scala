@@ -1,9 +1,9 @@
 package graft.operators
 
+import graft.algo.{LocalKernels, Rounds}
 import graft.model.PropertyGraph
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Edge direction for expansion — reference `src/query/ast.rs` Direction. */
 sealed trait Direction
@@ -23,7 +23,8 @@ object Direction {
   * DataFrame (hash/sort-merge picked by Catalyst; broadcast when the bound
   * side is small); bounded var-length = an unrolled loop of joins with
   * per-(start,node) dedup; unbounded reachability / BFS = an iterative
-  * frontier loop with localCheckpoint to cut lineage. No Volcano iterators:
+  * frontier loop on the round driver [[graft.algo.Rounds]], which cuts
+  * each level to a localCheckpoint leaf. No Volcano iterators:
   * the whole traversal is a single declarative plan per hop, so predicate
   * pushdown and AQE apply.
   */
@@ -77,59 +78,34 @@ object Traversals {
     * several depths keeps the MINIMUM depth per (start,node), matching
     * BFS-visited semantics.
     *
-    * Scale notes: each hop is one shuffle join on `dst`; the frontier is
-    * persisted and lineage is cut with localCheckpoint so a 10-hop expansion
-    * doesn't replan 10 chained shuffles; dedup keeps frontiers from exploding
-    * on cyclic graphs.
+    * Scale notes: each hop is one shuffle join on `dst`, one round of
+    * [[graft.algo.Rounds.levels]]: the new level is cut to a leaf, so a
+    * 10-hop expansion doesn't replan 10 chained shuffles, and the visited
+    * set is a lazy union of the earlier leaves; dedup keeps frontiers from
+    * exploding on cyclic graphs.
     */
   def varLengthExpand(edges: DataFrame, starts: DataFrame, startCol: String,
-                      minHops: Int, maxHops: Int): DataFrame = {
-    require(minHops >= 0 && maxHops >= minHops, "need 0 <= min <= max")
+                      minHops: Int, maxHops: Int): DataFrame =
     // small graph + small start set → in-task multi-source BFS, one job
     // instead of ~1 per hop (graft.algo.LocalKernels has the gate details)
-    val (e, small) = graft.algo.LocalKernels.gate(edges.select(col("src"), col("dst")))
-    if (small && graft.algo.LocalKernels.isSmall(starts.select(col(startCol))))
-      return graft.algo.LocalKernels.varLengthExpand(e, starts, startCol, minHops, maxHops)
-    varLengthExpandDistributed(e, starts, startCol, minHops, maxHops)
-  }
+    route(edges.select(col("src"), col("dst")), starts, startCol, None, minHops, maxHops)(
+      LocalKernels.varLengthExpand(_, starts, startCol, minHops, maxHops),
+      varLengthExpandDistributed(_, starts, startCol, minHops, maxHops))
 
   private[graft] def varLengthExpandDistributed(
       edges: DataFrame, starts: DataFrame, startCol: String,
       minHops: Int, maxHops: Int): DataFrame = {
-    // Each hop's frontier is materialized ONCE via eager localCheckpoint,
-    // which also replaces its logical plan with a tiny LogicalRDD. That keeps
-    // the per-hop plan (and the AQE plan-string events, which stringify the
-    // full tree per stage) CONSTANT-size — a persist() here instead nests the
-    // cached plans combinatorially and the driver burns minutes in
-    // generateTreeString. The growing visited set is a cheap UNION of those
-    // checkpointed frontiers and is never re-materialized.
     val e = edges.select(col("src").cast("long").as("_src"), col("dst").cast("long").as("_dst"))
       .localCheckpoint(true)
     val start0 = starts.select(col(startCol).cast("long").as("start"))
       .distinct().withColumn("node", col("start"))
       .localCheckpoint(true)
-    var visited: DataFrame = start0
-    var frontier: DataFrame = start0
-    var out: DataFrame = if (minHops == 0) start0.withColumn("hops", lit(0)) else null
-    var h = 1
-    var done = false
-    while (h <= maxHops && !done) {
-      val next = frontier.join(e, frontier("node") === e("_src"))
+    val levels = Rounds.levels("varlength", maxHops, start0) { lv =>
+      lv.last.join(e, col("node") === col("_src"))
         .select(col("start"), col("_dst").as("node")).distinct()
-        .join(visited, Seq("start", "node"), "left_anti")
-        .localCheckpoint(true) // one job; frontier becomes a LogicalRDD
-      if (next.isEmpty) done = true // fixpoint: supports unbounded `*`
-      else {
-        if (h >= minHops) {
-          val reached = next.withColumn("hops", lit(h))
-          out = if (out == null) reached else out.unionAll(reached)
-        }
-        visited = visited.unionAll(next)
-        frontier = next
-        h += 1
-      }
+        .join(lv.reduce(_ unionAll _), Seq("start", "node"), "left_anti")
     }
-    if (out == null) start0.withColumn("hops", lit(0)).filter(lit(false)) else out
+    withHops(levels, minHops, start0)
   }
 
   /** varLengthExpand variant that also materializes ONE witness path per
@@ -143,121 +119,8 @@ object Traversals {
     * `ast.rs:204-208`): `length(p)` = hops, `nodes(p)` = path,
     * `relationships(p)` = epath. */
   def varLengthExpandPaths(edges: DataFrame, starts: DataFrame, startCol: String,
-                           minHops: Int, maxHops: Int): DataFrame = {
-    require(minHops >= 0 && maxHops >= minHops, "need 0 <= min <= max")
-    // small graph + start set → in-task witness-path BFS (LocalKernels);
-    // either way the gated (possibly pre-materialized) projection is used
-    val cols = if (edges.columns.contains("id"))
-      edges.select(col("src"), col("dst"), col("id")) else edges.select(col("src"), col("dst"))
-    val (g, small) = graft.algo.LocalKernels.gate(cols)
-    if (small && graft.algo.LocalKernels.isSmall(starts.select(col(startCol))))
-      return graft.algo.LocalKernels.varLengthExpandPaths(g, starts, startCol, minHops, maxHops)
-    varLengthExpandPathsDistributed(g, starts, startCol, minHops, maxHops)
-  }
-
-  private[graft] def varLengthExpandPathsDistributed(
-      edges: DataFrame, starts: DataFrame, startCol: String,
-      minHops: Int, maxHops: Int): DataFrame = {
-    val hasId = edges.columns.contains("id")
-    val eid = if (hasId) col("id").cast("long") else lit(null).cast("long")
-    val e = edges.select(col("src").cast("long").as("_src"),
-        col("dst").cast("long").as("_dst"), eid.as("_eid"))
-      .localCheckpoint(true)
-    val start0 = starts.select(col(startCol).cast("long").as("start")).distinct()
-      .select(col("start"), col("start").as("node"), array(col("start")).as("path"),
-        array().cast("array<long>").as("epath"))
-      .localCheckpoint(true)
-    var visited: DataFrame = start0.select("start", "node")
-    var frontier: DataFrame = start0
-    var out: DataFrame = if (minHops == 0) start0.withColumn("hops", lit(0)) else null
-    var h = 1
-    var done = false
-    while (h <= maxHops && !done) {
-      val next = frontier.join(e, frontier("node") === e("_src"))
-        .select(col("start"), col("_dst").as("node"),
-          concat(col("path"), array(col("_dst"))).as("path"),
-          (if (hasId) concat(col("epath"), array(col("_eid"))) else col("epath")).as("epath"))
-        .join(visited, Seq("start", "node"), "left_anti")
-        .groupBy(col("start"), col("node"))
-        .agg(min(struct(col("path"), col("epath"))).as("_w"))
-        .select(col("start"), col("node"), col("_w.path").as("path"), col("_w.epath").as("epath"))
-        .localCheckpoint(true)
-      if (next.isEmpty) done = true
-      else {
-        if (h >= minHops) {
-          val reached = next.withColumn("hops", lit(h))
-          out = if (out == null) reached else out.unionAll(reached)
-        }
-        visited = visited.unionAll(next.select("start", "node"))
-        frontier = next
-        h += 1
-      }
-    }
-    if (out == null) start0.withColumn("hops", lit(0)).filter(lit(false)) else out
-  }
-
-  /** varLengthExpandPaths variant keeping ALL distinct shortest node
-    * sequences per (start, node) — `allShortestPaths()` semantics (reference
-    * `operator.rs:7534` `all_paths: bool`). A node is still reached only at
-    * its BFS depth (the visited anti-join excludes earlier-depth nodes), but
-    * every distinct path surviving to that depth is kept instead of one
-    * witness. Paths are node-id sequences: parallel edges between the same
-    * nodes collapse to one path (node/edge identity is by id).
-    * Path multiplicity is inherently combinatorial — the frontier carries
-    * one row per (start, node, path); dedup bounds it per hop. */
-  def varLengthExpandAllPaths(edges: DataFrame, starts: DataFrame, startCol: String,
-                              minHops: Int, maxHops: Int): DataFrame = {
-    require(minHops >= 0 && maxHops >= minHops, "need 0 <= min <= max")
-    // small graph + start set → in-task all-shortest BFS (LocalKernels)
-    val cols = if (edges.columns.contains("id"))
-      edges.select(col("src"), col("dst"), col("id")) else edges.select(col("src"), col("dst"))
-    val (g, small) = graft.algo.LocalKernels.gate(cols)
-    if (small && graft.algo.LocalKernels.isSmall(starts.select(col(startCol))))
-      return graft.algo.LocalKernels.varLengthExpandAllPaths(g, starts, startCol, minHops, maxHops)
-    varLengthExpandAllPathsDistributed(g, starts, startCol, minHops, maxHops)
-  }
-
-  private[graft] def varLengthExpandAllPathsDistributed(
-      edges: DataFrame, starts: DataFrame, startCol: String,
-      minHops: Int, maxHops: Int): DataFrame = {
-    val hasId = edges.columns.contains("id")
-    val eid = if (hasId) col("id").cast("long") else lit(null).cast("long")
-    val e = edges.select(col("src").cast("long").as("_src"),
-        col("dst").cast("long").as("_dst"), eid.as("_eid"))
-      .localCheckpoint(true)
-    val start0 = starts.select(col(startCol).cast("long").as("start")).distinct()
-      .select(col("start"), col("start").as("node"), array(col("start")).as("path"),
-        array().cast("array<long>").as("epath"))
-      .localCheckpoint(true)
-    var visited: DataFrame = start0.select("start", "node")
-    var frontier: DataFrame = start0
-    var out: DataFrame = if (minHops == 0) start0.withColumn("hops", lit(0)) else null
-    var h = 1
-    var done = false
-    while (h <= maxHops && !done) {
-      // distinct NODE sequences (path identity is by node ids — parallel
-      // edges collapse); per node sequence, the min edge-id witness
-      val next = frontier.join(e, frontier("node") === e("_src"))
-        .select(col("start"), col("_dst").as("node"),
-          concat(col("path"), array(col("_dst"))).as("path"),
-          (if (hasId) concat(col("epath"), array(col("_eid"))) else col("epath")).as("epath"))
-        .join(visited, Seq("start", "node"), "left_anti")
-        .groupBy(col("start"), col("node"), col("path"))
-        .agg(min(col("epath")).as("epath"))
-        .localCheckpoint(true)
-      if (next.isEmpty) done = true
-      else {
-        if (h >= minHops) {
-          val reached = next.withColumn("hops", lit(h))
-          out = if (out == null) reached else out.unionAll(reached)
-        }
-        visited = visited.unionAll(next.select("start", "node").distinct())
-        frontier = next
-        h += 1
-      }
-    }
-    if (out == null) start0.withColumn("hops", lit(0)).filter(lit(false)) else out
-  }
+                           minHops: Int, maxHops: Int): DataFrame =
+    paths(edges, starts, startCol, None, minHops, maxHops, allPaths = false)
 
   /** Target-aware shortest paths — `shortestPath((a)-[*]-(b))` /
     * `allShortestPaths` where the pattern CONSTRAINS both endpoints: BFS
@@ -265,95 +128,101 @@ object Traversals {
     * the depth where the last target is reached. An unbounded `*` therefore
     * explores only to the target's BFS depth instead of enumerating every
     * shortest node-sequence in the component (combinatorial in diamond-rich
-    * graphs — the failure mode the untargeted expansion hits at scale). */
+    * graphs — the failure mode the untargeted expansion hits at scale).
+    * `allPaths` keeps ALL distinct shortest node sequences per
+    * (start, node) — `allShortestPaths()` semantics (reference
+    * `operator.rs:7534` `all_paths: bool`) — instead of one witness. */
   def shortestPathsToTargets(edges: DataFrame, starts: DataFrame, startCol: String,
                              targets: DataFrame, targetCol: String,
-                             minHops: Int, maxHops: Int, allPaths: Boolean): DataFrame = {
-    require(minHops >= 0 && maxHops >= minHops, "need 0 <= min <= max")
-    val cols = if (edges.columns.contains("id"))
-      edges.select(col("src"), col("dst"), col("id")) else edges.select(col("src"), col("dst"))
-    val (g, small) = graft.algo.LocalKernels.gate(cols)
-    if (small && graft.algo.LocalKernels.isSmall(starts.select(col(startCol))) &&
-        graft.algo.LocalKernels.isSmall(targets.select(col(targetCol))))
-      return graft.algo.LocalKernels.shortestPathsToTargets(
-        g, starts, startCol, targets, targetCol, minHops, maxHops, allPaths)
-    shortestPathsToTargetsDistributed(g, starts, startCol, targets, targetCol,
-      minHops, maxHops, allPaths)
+                             minHops: Int, maxHops: Int, allPaths: Boolean): DataFrame =
+    paths(edges, starts, startCol, Some((targets, targetCol)), minHops, maxHops, allPaths)
+
+  private def paths(edges: DataFrame, starts: DataFrame, startCol: String,
+                    targets: Option[(DataFrame, String)], minHops: Int, maxHops: Int,
+                    allPaths: Boolean): DataFrame = {
+    val cols = Seq(col("src"), col("dst")) ++
+      (if (edges.columns.contains("id")) Seq(col("id")) else Nil)
+    route(edges.select(cols: _*), starts, startCol, targets, minHops, maxHops)(
+      LocalKernels.pathExpand(_, starts, startCol, minHops, maxHops, allPaths, targets),
+      pathExpandDistributed(_, starts, startCol, minHops, maxHops, allPaths, targets))
   }
 
-  private[graft] def shortestPathsToTargetsDistributed(
+  /** The one routing decision of the traversals: the gated edge projection
+    * runs in-task when it, the start set and the target set are all small
+    * (checked in that order), else distributed. Either way the gated,
+    * possibly pre-materialized, projection is what runs. */
+  private def route(proj: DataFrame, starts: DataFrame, startCol: String,
+                    targets: Option[(DataFrame, String)], minHops: Int, maxHops: Int)(
+      local: DataFrame => DataFrame, distributed: DataFrame => DataFrame): DataFrame = {
+    require(minHops >= 0 && maxHops >= minHops, "need 0 <= min <= max")
+    val (g, small) = LocalKernels.gate(proj)
+    def fits(df: DataFrame, c: String): Boolean = LocalKernels.isSmall(df.select(col(c)))
+    if (small && fits(starts, startCol) && targets.forall { case (t, c) => fits(t, c) }) local(g)
+    else distributed(g)
+  }
+
+  /** The distributed path frontier behind [[varLengthExpandPaths]] and
+    * [[shortestPathsToTargets]] — the exact row set of
+    * [[LocalKernels.pathExpand]]. Level h holds each (start, node) first
+    * reached at hop h with its witness paths: the min (node-seq, edge-seq)
+    * per (start, node), or with `allPaths` every distinct node sequence
+    * (parallel edges collapse; min edge-id sequence per node sequence).
+    *
+    * With targets, round r expands only the starts that still have an
+    * unreached target — those whose (start, node) pairs in the lazy union
+    * of the earlier levels cover fewer than all targets — so the search
+    * stops at the depth of each start's last target and the loop ends at
+    * the first empty level. Only rows landing on a target are returned. */
+  private[graft] def pathExpandDistributed(
       edges: DataFrame, starts: DataFrame, startCol: String,
-      targets: DataFrame, targetCol: String,
-      minHops: Int, maxHops: Int, allPaths: Boolean): DataFrame = {
+      minHops: Int, maxHops: Int, allPaths: Boolean,
+      targets: Option[(DataFrame, String)] = None): DataFrame = {
     val hasId = edges.columns.contains("id")
     val eid = if (hasId) col("id").cast("long") else lit(null).cast("long")
     val e = edges.select(col("src").cast("long").as("_src"),
         col("dst").cast("long").as("_dst"), eid.as("_eid"))
       .localCheckpoint(true)
-    val tgt = targets.select(col(targetCol).cast("long").as("_tgt")).distinct()
-      .localCheckpoint(true)
+    val tgt = targets.map { case (t, c) =>
+      t.select(col(c).cast("long").as("_tgt")).distinct().localCheckpoint(true)
+    }
+    val nTargets = tgt.map(_.count())
     val start0 = starts.select(col(startCol).cast("long").as("start")).distinct()
       .select(col("start"), col("start").as("node"), array(col("start")).as("path"),
         array().cast("array<long>").as("epath"))
       .localCheckpoint(true)
-    // (start, target) pairs not yet reached; a start with none left is
-    // dropped from the frontier, and the loop ends when the set drains
-    var remaining = start0.select(col("start"))
-      .crossJoin(tgt.withColumnRenamed("_tgt", "node"))
-      .filter(col("start") =!= col("node")) // depth-0 self pair is satisfied
-      .localCheckpoint(true)
-    var visited: DataFrame = start0.select("start", "node")
-    var frontier: DataFrame = start0
-    var out: DataFrame =
-      if (minHops == 0)
-        start0.join(tgt, col("node") === col("_tgt"), "left_semi").withColumn("hops", lit(0))
-      else null
-    var h = 1
-    var done = remaining.isEmpty
-    while (h <= maxHops && !done) {
-      val grown = frontier.join(e, frontier("node") === e("_src"))
+    // no target: every start is done before it moves
+    val rounds = if (nTargets.contains(0L)) 0 else maxHops
+    val levels = Rounds.levels("paths", rounds, start0) { lv =>
+      val visited = lv.map(_.select("start", "node")).reduce(_ unionAll _)
+      val frontier = tgt.fold(lv.last) { t =>
+        val done = visited.join(t, col("node") === col("_tgt"), "left_semi")
+          .groupBy(col("start")).agg(countDistinct(col("node")).as("_n"))
+          .filter(col("_n") === nTargets.get).select(col("start"))
+        lv.last.join(done, Seq("start"), "left_anti")
+      }
+      val grown = frontier.join(e, col("node") === col("_src"))
         .select(col("start"), col("_dst").as("node"),
           concat(col("path"), array(col("_dst"))).as("path"),
           (if (hasId) concat(col("epath"), array(col("_eid"))) else col("epath")).as("epath"))
         .join(visited, Seq("start", "node"), "left_anti")
-      val next =
-        (if (allPaths)
-          grown.groupBy(col("start"), col("node"), col("path"))
-            .agg(min(col("epath")).as("epath"))
-        else
-          grown.groupBy(col("start"), col("node"))
-            .agg(min(struct(col("path"), col("epath"))).as("_w"))
-            .select(col("start"), col("node"), col("_w.path").as("path"),
-              col("_w.epath").as("epath")))
-        .localCheckpoint(true)
-      if (next.isEmpty) done = true
-      else {
-        if (h >= minHops) {
-          val reached = next.join(tgt, col("node") === col("_tgt"), "left_semi")
-            .withColumn("hops", lit(h))
-          out = if (out == null) reached else out.unionAll(reached)
-        }
-        remaining = remaining
-          .join(next.select("start", "node").distinct(), Seq("start", "node"), "left_anti")
-          .localCheckpoint(true)
-        if (remaining.isEmpty) done = true
-        else {
-          visited = visited.unionAll(next.select("start", "node").distinct())
-          frontier = next
-            .join(remaining.select("start").distinct(), Seq("start"), "left_semi")
-          h += 1
-        }
-      }
+      if (allPaths)
+        grown.groupBy(col("start"), col("node"), col("path")).agg(min(col("epath")).as("epath"))
+      else
+        grown.groupBy(col("start"), col("node"))
+          .agg(min(struct(col("path"), col("epath"))).as("_w"))
+          .select(col("start"), col("node"), col("_w.path").as("path"),
+            col("_w.epath").as("epath"))
     }
-    val empty = start0.withColumn("hops", lit(0)).filter(lit(false))
-    if (out == null) empty else out
+    val reached = withHops(levels, minHops, start0)
+    tgt.fold(reached)(t => reached.join(t, col("node") === col("_tgt"), "left_semi"))
   }
 
-  /** Unweighted shortest-path length between a start set and all reachable
-    * nodes (`ShortestPathOperator` BFS, `operator.rs:7527-7714`), bounded by
-    * maxIter; terminates early at the reachability fixpoint.
-    * Returns (start, node, dist>=1). */
-  def shortestPathLengths(edges: DataFrame, starts: DataFrame, startCol: String,
-                          maxIter: Int): DataFrame =
-    varLengthExpand(edges, starts, startCol, 1, maxIter)
+  /** Levels `minHops` and deeper, each tagged with its hop count; an empty
+    * frame of the same columns when there are none. */
+  private def withHops(levels: IndexedSeq[DataFrame], minHops: Int,
+                       start0: DataFrame): DataFrame =
+    levels.zipWithIndex.drop(minHops)
+      .map { case (lv, h) => lv.withColumn("hops", lit(h)) }
+      .reduceOption(_ unionAll _)
+      .getOrElse(start0.withColumn("hops", lit(0)).filter(lit(false)))
 }

@@ -188,22 +188,29 @@ class AlgorithmsSpec extends SparkSpec {
   }
 
   test("ssspPath: completeness contract — truncated walks and 0-weight cycles return empty") {
-    // a 5-edge chain with maxHops 3: the walk cannot reach the source, so
-    // the certificate filter must return EMPTY, never a partial path
-    val chain = (0L to 4L).map(v => (v, v + 1, 1.0)).toDF("src", "dst", "weight")
-    assert(Algorithms.ssspPath(chain, 0L, 5L, 3).count() == 0)
-    // ...and with enough hops the same query returns the full path
-    val full = Algorithms.ssspPath(chain, 0L, 5L, 6).collect()
-      .map(r => (r.getInt(0), r.getLong(1))).toSeq
-    assert(full == (0 to 5).map(p => (p, 5L - p)), s"got $full")
-    // a zero-weight 2-cycle is dropped (like pageRankWeighted): without
-    // the filter the parent relation is cyclic and the walk emits bogus
-    // alternating rows
-    val zc = Seq((0L, 1L, 1.0), (1L, 2L, 0.0), (2L, 1L, 0.0)).toDF("src", "dst", "weight")
-    assert(Algorithms.ssspPath(zc, 0L, 2L, 4).count() == 0) // 2 unreachable w/o 0-edges
-    val z1 = Algorithms.ssspPath(zc, 0L, 1L, 4).collect()
-      .map(r => (r.getInt(0), r.getLong(1))).toSeq
-    assert(z1 == Seq((0, 1L), (1, 0L)), s"got $z1")
+    // on both routes: the in-task kernel, and the distributed walk that
+    // localSizeBytes=0 pins
+    for (route <- Seq("in-task", "distributed")) {
+      if (route == "distributed") spark.conf.set("spark.graft.algo.localSizeBytes", "0")
+      try {
+        // a 5-edge chain with maxHops 3: the walk cannot reach the source,
+        // so the certificate filter must return EMPTY, never a partial path
+        val chain = (0L to 4L).map(v => (v, v + 1, 1.0)).toDF("src", "dst", "weight")
+        assert(Algorithms.ssspPath(chain, 0L, 5L, 3).count() == 0, route)
+        // ...and with enough hops the same query returns the full path
+        val full = Algorithms.ssspPath(chain, 0L, 5L, 6).collect()
+          .map(r => (r.getInt(0), r.getLong(1))).toSeq
+        assert(full == (0 to 5).map(p => (p, 5L - p)), s"$route: got $full")
+        // a zero-weight 2-cycle is dropped (like pageRankWeighted): without
+        // the filter the parent relation is cyclic and the walk emits bogus
+        // alternating rows
+        val zc = Seq((0L, 1L, 1.0), (1L, 2L, 0.0), (2L, 1L, 0.0)).toDF("src", "dst", "weight")
+        assert(Algorithms.ssspPath(zc, 0L, 2L, 4).count() == 0, route) // 2 unreachable w/o 0-edges
+        val z1 = Algorithms.ssspPath(zc, 0L, 1L, 4).collect()
+          .map(r => (r.getInt(0), r.getLong(1))).toSeq
+        assert(z1 == Seq((0, 1L), (1, 0L)), s"$route: got $z1")
+      } finally spark.conf.unset("spark.graft.algo.localSizeBytes")
+    }
   }
 
   test("louvain multi-level: coarsening strictly improves modularity over one level") {

@@ -44,38 +44,27 @@ class LocalKernelsSpec extends SparkSpec {
 
   test("superlinear gate: byte-small but edge-dense inputs stay distributed") {
     val e = randGraph(20, 20, 100).toDF("a", "b")
-    assert(LocalKernels.isSmallSuperlinear(e)) // tiny both ways → local
+    // tiny both ways → local
+    assert(LocalKernels.gate(e, LocalKernels.Superlinear)._2)
     // cap the edge count below the input: the gray-zone count rejects it
-    spark.conf.set("spark.graft.algo.localSizeBytesSuperlinear", "1")
-    spark.conf.set("spark.graft.algo.localMaxEdgesSuperlinear", "50")
-    try assert(!LocalKernels.isSmallSuperlinear(e))
-    finally {
-      spark.conf.unset("spark.graft.algo.localSizeBytesSuperlinear")
-      spark.conf.unset("spark.graft.algo.localMaxEdgesSuperlinear")
-    }
+    val capped = LocalKernels.Superlinear.copy(sizeBytes = Some(1L), maxEdges = 50L)
+    assert(!LocalKernels.gate(e, capped)._2)
   }
 
   test("dense tier: many-edge few-vertex graphs route local, many-vertex stay distributed") {
-    // force the gray zone (estimate > 1 byte) with thresholds scaled down:
+    // force the gray zone (estimate > 1 byte) with caps scaled down:
     // plain cap 2 edges, dense cap 100 edges / 5 vertices
-    val keys = Seq(
-      "spark.graft.algo.localSizeBytes" -> "1",
-      "spark.graft.algo.localMaxEdges" -> "2",
-      "spark.graft.algo.localMaxEdgesDense" -> "100",
-      "spark.graft.algo.localMaxNodesDense" -> "5")
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      // 12 edges over 4 vertices: past the plain cap, inside the dense tier
-      val dense = (for (a <- 0 until 4; b <- 0 until 4 if a != b)
-        yield (a.toLong, b.toLong)).toDF("src", "dst")
-      assert(LocalKernels.isSmall(dense), "dense small-vertex graph should route local")
-      // 9 edges over 10 vertices: same edge ballpark, too many vertices
-      val sparse = (0 until 9).map(i => (i.toLong, i + 1L)).toDF("src", "dst")
-      assert(!LocalKernels.isSmall(sparse), "large-vertex graph should stay distributed")
-      // past the dense edge cap: distributed without the vertex pass
-      spark.conf.set("spark.graft.algo.localMaxEdgesDense", "10")
-      assert(!LocalKernels.isSmall(dense))
-    } finally keys.foreach { case (k, _) => spark.conf.unset(k) }
+    val caps = LocalKernels.Linear.copy(sizeBytes = Some(1L), maxEdges = 2L,
+      maxEdgesDense = 100L, maxNodesDense = 5L)
+    // 12 edges over 4 vertices: past the plain cap, inside the dense tier
+    val dense = (for (a <- 0 until 4; b <- 0 until 4 if a != b)
+      yield (a.toLong, b.toLong)).toDF("src", "dst")
+    assert(LocalKernels.gate(dense, caps)._2, "dense small-vertex graph should route local")
+    // 9 edges over 10 vertices: same edge ballpark, too many vertices
+    val sparse = (0 until 9).map(i => (i.toLong, i + 1L)).toDF("src", "dst")
+    assert(!LocalKernels.gate(sparse, caps)._2, "large-vertex graph should stay distributed")
+    // past the dense edge cap: distributed without the vertex pass
+    assert(!LocalKernels.gate(dense, caps.copy(maxEdgesDense = 10L))._2)
   }
 
   test("bidirBfs local == distributed (pairs, depth cap, degenerate pair, absent endpoints)") {
@@ -222,9 +211,9 @@ class LocalKernelsSpec extends SparkSpec {
     }
   }
 
-  test("scc local (Tarjan) == distributed (GraphX Pregel), exact") {
-    // dense-ish digraphs so real multi-node SCCs form; GraphX needs enough
-    // iterations to converge — Tarjan is exact in one pass
+  test("scc local (Tarjan) == distributed (coloring), exact") {
+    // dense-ish digraphs so real multi-node SCCs form; the coloring SCC
+    // needs enough phases to finish — Tarjan is exact in one pass
     for (seed <- 21 to 23) {
       val e = randGraph(seed, 40, 160)
       assert(sortedRows(LocalKernels.scc(e)) ===
@@ -239,6 +228,44 @@ class LocalKernelsSpec extends SparkSpec {
     val cyc = ((1 to 9).map(i => (i.toLong, i + 1L)) :+ ((10L, 1L))).toDF("src", "dst")
     val gotC = LocalKernels.scc(cyc).collect().map(_.getLong(1)).distinct
     assert(gotC.toSeq == Seq(1L))
+  }
+
+  test("scc distributed: chain, cycle, self-loops, one-way bridge, dst-only vertex, phase cap") {
+    def labels(df: DataFrame): Map[Long, Long] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    def edges(es: (Long, Long)*): DataFrame = es.toDF("src", "dst")
+    // each shape: the distributed labels, which must equal Tarjan's
+    def distributed(name: String, e: DataFrame): Map[Long, Long] = {
+      val got = labels(Algorithms.sccDistributed(e, maxIter = 10))
+      assert(got == labels(LocalKernels.scc(e)), name)
+      got
+    }
+    // a 20-node chain: the trim rounds peel it to singletons
+    val chain = distributed("chain", (1 to 20).map(i => (i.toLong, i + 1L)).toDF("src", "dst"))
+    assert(chain.size == 21 && chain.forall { case (id, c) => id == c })
+    // a 10-cycle: one component, labeled 1
+    val cyc = distributed("cycle",
+      ((1 to 9).map(i => (i.toLong, i + 1L)) :+ ((10L, 1L))).toDF("src", "dst"))
+    assert(cyc.size == 10 && cyc.values.toSet == Set(1L))
+    // self-loops and parallel edges: a self-loop alone is a singleton
+    val loops = distributed("self-loops + parallel edges",
+      edges((1, 1), (1, 2), (1, 2), (2, 1), (2, 1), (3, 3), (3, 4), (4, 4)))
+    assert(loops == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L))
+    // two cycles joined by a one-way edge: one color, two phases
+    val bridge = distributed("one-way bridge",
+      edges((1, 2), (2, 3), (3, 1), (3, 10), (10, 11), (11, 12), (12, 10)))
+    assert(bridge == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L, 12L -> 10L))
+    // 7 appears only as a dst
+    val sink = distributed("dst-only vertex", edges((1, 2), (2, 1), (2, 7)))
+    assert(sink == Map(1L -> 1L, 2L -> 1L, 7L -> 7L))
+    // the cap: three 2-cycles in a forward chain need three phases (each
+    // labels only the SCC of the one color root); at maxIter = 2 the third
+    // stays unlabeled and each of its vertices keeps its own id
+    val ladder = edges((1, 2), (2, 1), (2, 3), (3, 4), (4, 3), (4, 5), (5, 6), (6, 5))
+    assert(labels(Algorithms.sccDistributed(ladder, maxIter = 2)) ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L, 5L -> 5L, 6L -> 6L))
+    assert(labels(Algorithms.sccDistributed(ladder, maxIter = 3)) ==
+      labels(LocalKernels.scc(ladder)))
   }
 
   test("cdlp local == distributed, exact (incl. parallel-edge frequency)") {
@@ -371,17 +398,15 @@ class LocalKernelsSpec extends SparkSpec {
     val e = rows.toDF("id", "src", "dst")
     val starts = e.select(col("src")).limit(5)
     for ((mn, mx) <- Seq((0, 2), (1, 3))) {
-      assert(sortedRows(LocalKernels.varLengthExpandPaths(e, starts, "src", mn, mx)) ===
-        sortedRows(Traversals.varLengthExpandPathsDistributed(e, starts, "src", mn, mx)),
-        s"paths $mn..$mx")
-      assert(sortedRows(LocalKernels.varLengthExpandAllPaths(e, starts, "src", mn, mx)) ===
-        sortedRows(Traversals.varLengthExpandAllPathsDistributed(e, starts, "src", mn, mx)),
-        s"allpaths $mn..$mx")
+      for (allPaths <- Seq(false, true))
+        assert(sortedRows(LocalKernels.pathExpand(e, starts, "src", mn, mx, allPaths)) ===
+          sortedRows(Traversals.pathExpandDistributed(e, starts, "src", mn, mx, allPaths)),
+          s"allPaths=$allPaths $mn..$mx")
     }
     // no id column: epath stays empty on both paths
     val eNoId = e.select("src", "dst")
-    assert(sortedRows(LocalKernels.varLengthExpandPaths(eNoId, starts, "src", 1, 2)) ===
-      sortedRows(Traversals.varLengthExpandPathsDistributed(eNoId, starts, "src", 1, 2)))
+    assert(sortedRows(LocalKernels.pathExpand(eNoId, starts, "src", 1, 2, allPaths = false)) ===
+      sortedRows(Traversals.pathExpandDistributed(eNoId, starts, "src", 1, 2, allPaths = false)))
   }
 
   test("public entry points route through the gate and stay correct") {
@@ -403,12 +428,12 @@ class LocalKernelsSpec extends SparkSpec {
     val starts = Seq(ids(0), ids(3), 7L, 9L).toDF("s")
     val targets = Seq(ids(0), ids(12), ids(25), ids(29), 9L).toDF("t")
     for (allPaths <- Seq(false, true); (mn, mx) <- Seq((0, 3), (1, 4), (0, 8))) {
-      val loc = sortedRows(LocalKernels.shortestPathsToTargets(
-        e, starts, "s", targets, "t", mn, mx, allPaths))
+      val loc = sortedRows(LocalKernels.pathExpand(
+        e, starts, "s", mn, mx, allPaths, Some((targets, "t"))))
       assert(loc.exists(r => !r.startsWith(s"[${ids(0)},${ids(0)},") && !r.startsWith("[9,")),
         s"allPaths=$allPaths $mn..$mx reaches no target past hop 0")
-      assert(loc === sortedRows(Traversals.shortestPathsToTargetsDistributed(
-        e, starts, "s", targets, "t", mn, mx, allPaths)), s"allPaths=$allPaths $mn..$mx")
+      assert(loc === sortedRows(Traversals.pathExpandDistributed(
+        e, starts, "s", mn, mx, allPaths, Some((targets, "t")))), s"allPaths=$allPaths $mn..$mx")
     }
   }
 
@@ -456,16 +481,16 @@ class LocalKernelsSpec extends SparkSpec {
       assert(v1 === v2)
       assert(v1 === sortedRows(
         Traversals.varLengthExpandDistributed(e, starts, "s0", 1, 3)))
-      val (p1, p2) = runs("varLengthExpandPaths")(
-        LocalKernels.varLengthExpandPaths(e, starts, "s0", 1, 2))
+      val (p1, p2) = runs("pathExpand")(
+        LocalKernels.pathExpand(e, starts, "s0", 1, 2, allPaths = false))
       assert(p1 === p2)
       assert(p1 === sortedRows(
-        Traversals.varLengthExpandPathsDistributed(e, starts, "s0", 1, 2)))
-      val (t1, t2) = runs("shortestPathsToTargets")(LocalKernels.shortestPathsToTargets(
-        e, starts, "s0", targets, "t0", 0, 6, allPaths = true))
+        Traversals.pathExpandDistributed(e, starts, "s0", 1, 2, allPaths = false)))
+      val (t1, t2) = runs("pathExpand to targets")(LocalKernels.pathExpand(
+        e, starts, "s0", 0, 6, allPaths = true, Some((targets, "t0"))))
       assert(t1 === t2)
-      assert(t1 === sortedRows(Traversals.shortestPathsToTargetsDistributed(
-        e, starts, "s0", targets, "t0", 0, 6, allPaths = true)))
+      assert(t1 === sortedRows(Traversals.pathExpandDistributed(
+        e, starts, "s0", 0, 6, allPaths = true, Some((targets, "t0")))))
       // rewriting the files invalidates the key (len/mtime in the key): a
       // different graph at the same path must NOT serve stale results
       randGraph(88, 40, 200).write.mode("overwrite").parquet(s"$dir/e.parquet")

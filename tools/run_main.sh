@@ -13,7 +13,4 @@ OPENS="$OPENS --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base
 OPENS="$OPENS --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 # heap: SPARK_DRIVER_MEM, else half of MemTotal clamped to 2-8 GiB (as build.sbt)
 MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
-# -Xss: GraphX Pregel (scc) builds deep closure/lineage chains; the 1 MB
-# default thread stack overflows during task serialization at 10x soak
-# scale when earlier kernels already ran in the same JVM
-exec java -Xmx$MEM -Xss${SPARK_DRIVER_STACK:-16m} $OPENS -cp "$CP" "$@"
+exec java -Xmx$MEM $OPENS -cp "$CP" "$@"
