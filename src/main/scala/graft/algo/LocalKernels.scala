@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import scala.reflect.runtime.universe.TypeTag
 
 /** In-task graph kernels for stats-gated small inputs.
@@ -33,13 +34,13 @@ import scala.reflect.runtime.universe.TypeTag
   * distributed implementations on random graphs.
   *
   * Two pieces own how a small graph is laid out in memory, so no kernel
-  * does: ONE in-task entry, [[inTask]], materializes a kernel's edge
-  * projection (src, dst, and a weight or an edge id) as primitive arrays,
-  * or serves them from the resident edge cache, together with an optional
-  * tagged stream of start and target ids; ONE builder, [[view]], shapes
-  * those edges (self-loops, canonical order, dedup, extra ids) into a
-  * [[GraphView]] — sorted unique vertex ids, int edge arrays, and CSR rows
-  * (plain or symmetrized, with an optional edge-index payload) on demand.
+  * does: ONE in-task entry, [[inTask]], hands a kernel the interned base
+  * [[GraphView]] of its edge projection (src, dst, and a weight or an edge
+  * id) — sorted unique vertex ids and int edge arrays, interned once per
+  * JVM and kept resident — with an optional tagged stream of start and
+  * target ids; ONE shaper, [[view]], derives the views kernels read
+  * (self-loops, canonical order, dedup, extra ids) by int passes, memoized
+  * on the base view like its CSR rows.
   */
 object LocalKernels {
 
@@ -123,27 +124,25 @@ object LocalKernels {
     }
   }
 
-  // ---- the in-task entry and the resident edge cache ---------------------
+  // ---- the in-task entry and the resident view cache ---------------------
   //
   // Every kernel runs through [[inTask]]: ONE task materializes the
-  // kernel's edge projection — src and dst, plus a weight or an edge id —
-  // as primitive arrays ([[Edges]]), with an optional tagged side stream of
-  // start and target ids ([[Side]]), and hands both to the kernel body.
-  //
-  // Each call would re-run scan → shuffle-to-1 → per-row decode of the SAME
-  // edge table (the reference instead keeps its CSR resident in memory), so
-  // the entry keeps the materialized Edges keyed by (canonicalized
-  // projection plan, input files + len + mtime) — file-backed plans only,
-  // so literal/RDD-backed inputs (mutated graphs, checkpoints) can never
-  // false-hit. The task that materialized the stream PUTs the entry, the
-  // driver LOOKS IT UP before launching a job: in single-process mode
-  // (local[n] — where these kernels run at all-pay-off) driver and executor
-  // share the JVM, so the second kernel over the same edges skips the whole
-  // scan job; on a multi-JVM cluster the driver never sees executor entries
-  // and always takes the scan path — correct, just not resident.
-  // LRU-bounded by total cached rows. Measured worth (4-core host, sf0.01):
-  // with the cache off graph_analytics fell from 6.10 to 3.37 statements/s
-  // and cypher_read from 4.72 to 4.17.
+  // kernel's edge projection (src, dst, plus a weight or an edge id),
+  // interns it into its base [[GraphView]] and hands that, with an optional
+  // tagged side stream of start and target ids ([[Side]]), to the kernel.
+  // The entry keeps the base view resident (as the reference keeps its
+  // CSR) keyed by (canonicalized projection plan, input files + len +
+  // mtime) — file-backed plans only, so literal or RDD-backed inputs
+  // (mutated graphs, checkpoints) never false-hit. The task that interned
+  // the view PUTs it, the driver LOOKS IT UP before launching a job: in
+  // local[n] they share the JVM, so a later kernel over the same edges
+  // skips the scan job and the interning and reuses the shaped views and
+  // CSRs memoized on the entry; on a multi-JVM cluster the driver never
+  // sees executor entries and always scans — correct, just not resident.
+  // LRU-bounded by the edge entries an entry holds, memoized ones included.
+  // Measured worth (4-core host, sf0.01): with the cache off
+  // graph_analytics fell from 6.10 to 3.37 statements/s and cypher_read
+  // from 4.72 to 4.17; without the CSR memo it runs 7.90, not 8.67.
 
   /** Growable primitive-long buffer (no boxing inside the task). */
   private final class Longs(initial: Int = 1 << 12) {
@@ -167,39 +166,38 @@ object LocalKernels {
     def result(): Array[Int] = java.util.Arrays.copyOf(a, n)
   }
 
-  /** One edge projection's rows in input order; `weight` and `eid` are null
-    * when the projection has no such column. */
-  private final case class Edges(src: Array[Long], dst: Array[Long],
-                                 weight: Array[Double], eid: Array[Long])
-
   /** The side stream's start ids (tag 1) and target ids (tag 2). */
   private final case class Side(starts: Array[Long], targets: Array[Long])
 
   private[this] val resident =
-    new java.util.LinkedHashMap[String, Edges](8, 0.75f, true)
-  private[this] var residentRows = 0L
+    new java.util.LinkedHashMap[String, GraphView](8, 0.75f, true)
   private val ResidentRowBudget = 32L * 1000 * 1000
 
-  private def residentLookup(key: String): Edges =
+  private def residentLookup(key: String): GraphView =
     resident.synchronized(resident.get(key))
 
   /** Store only when driver and executors share the JVM (local[n]): on a
     * multi-JVM cluster the driver can never see executor entries, so a
-    * store would be permanently-retained dead weight in executor heaps. */
-  private def residentStore(key: String, e: Edges): Unit = {
+    * store would be permanently-retained dead weight in executor heaps.
+    * Entries grow as kernels memoize on them: each store re-sums them. */
+  private def residentStore(key: String, g: GraphView): Unit = {
     val env = org.apache.spark.SparkEnv.get
     if (env != null && env.executorId == "driver") resident.synchronized {
       if (!resident.containsKey(key)) {
-        resident.put(key, e)
-        residentRows += e.src.length
+        resident.put(key, g)
+        var rows = resident.values.asScala.map(_.rows).sum
         val it = resident.entrySet().iterator()
-        while (residentRows > ResidentRowBudget && resident.size() > 1 && it.hasNext) {
+        while (rows > ResidentRowBudget && resident.size() > 1 && it.hasNext) {
           val x = it.next()
-          if (!x.getKey.equals(key)) { residentRows -= x.getValue.src.length; it.remove() }
+          if (!x.getKey.equals(key)) { rows -= x.getValue.rows; it.remove() }
         }
       }
     }
   }
+
+  /** The resident base view of a projected edge frame, if one is held. */
+  private[graft] def residentView(proj: DataFrame): Option[GraphView] =
+    cacheKey(proj).flatMap(k => Option(residentLookup(k)))
 
   /** Cache key for a PROJECTED edge frame, or None when the plan isn't
     * purely file-backed (LocalRelation / LogicalRDD leaves have
@@ -233,38 +231,38 @@ object LocalKernels {
   }
 
   // Pin registry for cache hits: the hit-path plan captures a small
-  // HANDLE (a serializable long wrapper), not the arrays (capturing the
-  // arrays would serialize up to the full row budget into every task
-  // binary). The registry maps token → (WeakReference(handle), edges):
-  // the plan's closure strongly references the handle, so the pinned
-  // edges stay resolvable for EXACTLY the lifetime of the returned
-  // DataFrame — a hit-path plan executed arbitrarily late, or more than
-  // once (show() then count(), a stage retry), can never lose its edges
-  // to eviction; once the DataFrame is GC'd the weak ref clears and the
-  // entry is purged on the next pin() (a fixed-size FIFO of pins could age
+  // HANDLE (a serializable long wrapper), not the view (capturing it
+  // would serialize up to the full row budget into every task binary).
+  // The registry maps token → (WeakReference(handle), view): the plan's
+  // closure strongly references the handle, so the pinned view stays
+  // resolvable for EXACTLY the lifetime of the returned DataFrame — a
+  // hit-path plan executed arbitrarily late, or more than once (show()
+  // then count(), a stage retry), can never lose its view to eviction;
+  // once the DataFrame is GC'd the weak ref clears and the entry is
+  // purged on the next pin() (a fixed-size FIFO of pins could age
   // a live plan's pin out and turn a cache eviction into a query error —
   // the hit-path plan's leaf is a 1-row range or the side stream, so there
-  // is no recompute fallback). Pinned values alias the resident store's
-  // arrays, so a live pin costs one map entry, not a second copy; while
-  // pins are live the arrays can outlast the resident LRU budget — that is
+  // is no recompute fallback). Pinned values are the resident store's
+  // views, so a live pin costs one map entry, not a second copy; while
+  // pins are live a view can outlast the resident LRU budget — that is
   // the point (they are reachable through user-held DataFrames regardless).
   // Hits only happen in local mode (gated in [[inTask]]), where driver and
   // task share the JVM.
   private final class PinHandle(val token: Long) extends Serializable
   private final case class PinEntry(
-    handle: java.lang.ref.WeakReference[PinHandle], edges: Edges)
+    handle: java.lang.ref.WeakReference[PinHandle], view: GraphView)
   private[this] val pinned = new java.util.HashMap[java.lang.Long, PinEntry]()
   private[this] val pinSeq = new java.util.concurrent.atomic.AtomicLong()
-  private def pin(e: Edges): PinHandle = pinned.synchronized {
+  private def pin(g: GraphView): PinHandle = pinned.synchronized {
     val it = pinned.values().iterator()
     while (it.hasNext) if (it.next().handle.get() == null) it.remove()
     val h = new PinHandle(pinSeq.incrementAndGet())
-    pinned.put(h.token, PinEntry(new java.lang.ref.WeakReference(h), e))
+    pinned.put(h.token, PinEntry(new java.lang.ref.WeakReference(h), g))
     h
   }
-  private def pinGet(t: Long, key: String): Edges = {
-    val e = pinned.synchronized(Option(pinned.get(t)).map(_.edges).orNull)
-    if (e != null) e
+  private def pinGet(t: Long, key: String): GraphView = {
+    val g = pinned.synchronized(Option(pinned.get(t)).map(_.view).orNull)
+    if (g != null) g
     else residentLookup(key) match { // GC-race belt-and-braces
       case null => throw new IllegalStateException(
         s"resident-cache pin $t was garbage-collected and entry $key " +
@@ -273,15 +271,15 @@ object LocalKernels {
     }
   }
 
-  /** Run `body` in one task over `proj`'s edges — columns src and dst
-    * (longs) and an optional third column, a double weight or a long edge
-    * id — and, when `side` is given, its (id, tag) rows; the result's
-    * columns are `names`. The edges come from the resident cache when the
-    * same file-backed projection was materialized before in this JVM; only
-    * the side stream then rides a job. */
+  /** Run `body` in one task over the base view of `proj`'s edges —
+    * columns src and dst (longs) and an optional third column, a double
+    * weight or a long edge id — and, when `side` is given, its (id, tag)
+    * rows; the result's columns are `names`. The view comes from the
+    * resident cache when the same file-backed projection was interned
+    * before in this JVM; only the side stream then rides a job. */
   private def inTask[T <: Product : TypeTag](proj: DataFrame, names: Seq[String],
                                             side: DataFrame = null)
-                                           (body: (Edges, Side) => Iterator[T]): DataFrame = {
+                                           (body: (GraphView, Side) => Iterator[T]): DataFrame = {
     val spark = proj.sparkSession
     implicit val enc: Encoder[T] = Encoders.product[T]
     val key = cacheKey(proj)
@@ -292,8 +290,8 @@ object LocalKernels {
     val hit = if (!spark.sparkContext.isLocal) None
               else key.flatMap(k => Option(residentLookup(k)))
     hit match {
-      case Some(e) =>
-        val h = pin(e); val k = key.get
+      case Some(g) =>
+        val h = pin(g); val k = key.get
         val rows = if (hasSide) side.repartition(1) else spark.range(0, 1, 1, 1).toDF()
         rows.mapPartitions { it =>
           val s = if (hasSide) drain(it, 1, false, false)._2 else Side(Array.empty, Array.empty)
@@ -308,18 +306,18 @@ object LocalKernels {
             .unionAll(side.select(col("id") +: fill :+ col("tag"): _*))
         }
         rows.repartition(1).mapPartitions { it =>
-          val (e, s) = drain(it, tagAt, weighted, withEid)
-          key.foreach(residentStore(_, e))
-          body(e, s)
+          val (g, s) = drain(it, tagAt, weighted, withEid)
+          key.foreach(residentStore(_, g))
+          body(g, s)
         }.toDF(names: _*)
     }
   }
 
-  /** One task's rows as [[Edges]] and [[Side]]. With `tagAt` < 0 every row
-    * is an edge; otherwise column `tagAt` is the tag: 0 an edge, 1 a start
-    * id and 2 a target id, the id in the first column. */
+  /** One task's rows as a base view and [[Side]]. With `tagAt` < 0 every
+    * row is an edge; otherwise column `tagAt` is the tag: 0 an edge, 1 a
+    * start id and 2 a target id, the id in the first column. */
   private def drain(it: Iterator[Row], tagAt: Int,
-                    weighted: Boolean, withEid: Boolean): (Edges, Side) = {
+                    weighted: Boolean, withEid: Boolean): (GraphView, Side) = {
     val src = new Longs(); val dst = new Longs(); val eid = new Longs()
     val w = mutable.ArrayBuilder.make[Double]
     val starts = new Longs(16); val targets = new Longs(16)
@@ -331,7 +329,7 @@ object LocalKernels {
       } else if (t == 1) starts += r.getLong(0)
       else targets += r.getLong(0)
     }
-    (Edges(src.toArray, dst.toArray, if (weighted) w.result() else null,
+    (build(src.toArray, dst.toArray, if (weighted) w.result() else null,
        if (withEid) eid.toArray else null),
      Side(starts.toArray, targets.toArray))
   }
@@ -346,7 +344,7 @@ object LocalKernels {
   }
 
   /** The (src, dst) projection most kernels read. */
-  private def pairs(edges: DataFrame, a: String = "src", b: String = "dst"): DataFrame =
+  private[graft] def pairs(edges: DataFrame, a: String = "src", b: String = "dst"): DataFrame =
     edges.select(col(a).cast("long"), col(b).cast("long"))
 
   /** The (src, dst, weight) projection of the shortest-path kernels. */
@@ -359,9 +357,12 @@ object LocalKernels {
   /** The in-task graph: vertex ids sorted and unique — dense index order is
     * id order, so an id tie-break is an index compare, and a lookup is a
     * binary search — and an edge list over dense indexes with an optional
-    * aligned weight. Built by [[view]]. */
-  private final class GraphView(val ids: Array[Long], val src: Array[Int],
-                                val dst: Array[Int], val weight: Array[Double]) {
+    * aligned weight or edge id; a base view ([[build]]) keeps input order.
+    * Resident views are SHARED by concurrent local[n] tasks, so no kernel
+    * writes into a view's arrays or a [[Csr]] from [[out]] ([[triangleSum]]
+    * sorts rows of its own); shaped views and CSRs are memoized on it. */
+  private[graft] final class GraphView(val ids: Array[Long], val src: Array[Int],
+      val dst: Array[Int], val weight: Array[Double], val eid: Array[Long]) {
     def n: Int = ids.length
     def m: Int = src.length
     /** Dense index of `id`, or -1 when it is not a vertex. */
@@ -369,16 +370,28 @@ object LocalKernels {
       val i = java.util.Arrays.binarySearch(ids, id)
       if (i < 0) -1 else i
     }
+    private[this] val memo = new java.util.concurrent.ConcurrentHashMap[Any, AnyRef]()
+    /** `make`, computed once per `key` however many tasks ask at once. */
+    private[LocalKernels] def memoized[A <: AnyRef](key: Any)(make: => A): A =
+      memo.computeIfAbsent(key, (_: Any) => make).asInstanceOf[A]
     /** Out-rows of the edges, or of the edges in both directions (`sym`). */
     def out(sym: Boolean = false, withPos: Boolean = false): Csr =
-      if (sym) new Csr(n, src ++ dst, dst ++ src, withPos)
-      else new Csr(n, src, dst, withPos)
+      memoized(("out", sym, withPos)) {
+        if (sym) new Csr(n, src ++ dst, dst ++ src, withPos)
+        else new Csr(n, src, dst, withPos)
+      }
+    /** Edge entries held: this view's, its memoized views' and CSRs'. */
+    def rows: Long = memo.values.asScala.foldLeft(m.toLong) {
+      case (r, v: GraphView) => r + v.rows
+      case (r, c: Csr) => r + c.tgt.length
+      case (r, _) => r
+    }
   }
 
   /** Compressed rows of the edges `from(k) → to(k)` over `n` vertices,
     * edge order kept within a row. `pos` (when asked) holds each entry's
     * edge index k, so a per-edge payload reads aligned. */
-  private final class Csr(val n: Int, from: Array[Int], to: Array[Int], withPos: Boolean) {
+  private[graft] final class Csr(val n: Int, from: Array[Int], to: Array[Int], withPos: Boolean) {
     val off = new Array[Int](n + 1)
     val tgt = new Array[Int](from.length)
     val pos: Array[Int] = if (withPos) new Array[Int](from.length) else null
@@ -398,77 +411,78 @@ object LocalKernels {
     }
   }
 
-  /** Shape `e` into a [[GraphView]]. Edges keep input order unless shaped:
-    * `loops = false` drops self-loops before any id is interned;
-    * `canonical` orders each edge (min, max); `dedup` keeps each distinct
-    * (src, dst) once, in (src, dst) order, with weights the smallest one
-    * below Double.MaxValue (a pair with none is dropped — the rule mst's
-    * Kruskal has always read). `extra` ids are vertices even without an
-    * edge. */
-  private def view(e: Edges, loops: Boolean = true, canonical: Boolean = false,
-                   dedup: Boolean = false, extra: Seq[Long] = Nil): GraphView = {
-    var (a, b, w) = (e.src, e.dst, e.weight)
-    if (!loops || canonical) {
-      val sa = new Longs(); val sb = new Longs()
-      val sw = if (w == null) null else mutable.ArrayBuilder.make[Double]
-      var k = 0
-      while (k < e.src.length) {
-        val s = e.src(k); val d = e.dst(k)
-        if (loops || s != d) {
-          val flip = canonical && d < s
-          sa += (if (flip) d else s); sb += (if (flip) s else d)
-          if (sw != null) sw += e.weight(k)
-        }
-        k += 1
-      }
-      a = sa.toArray; b = sb.toArray; if (sw != null) w = sw.result()
-    }
-    // intern by first appearance (LongMap: O(1), no boxing), then renumber
-    // by sorting the distinct ids — O(n log n) on vertices, not endpoints
+  /** The base view of raw edges, in input order (`weight` and `eid` may be
+    * null) — the one interner. Ids get dense indexes by first appearance
+    * (LongMap: O(1), no boxing), renumbered by sorting the distinct ids —
+    * O(n log n) on vertices, not endpoints. */
+  private[graft] def build(src: Array[Long], dst: Array[Long],
+                           weight: Array[Double] = null, eid: Array[Long] = null): GraphView = {
     val first = mutable.LongMap.empty[Int]
     val seen = new Longs()
     def intern(v: Long): Int = first.getOrElseUpdate(v, { seen += v; seen.n - 1 })
-    val si = new Array[Int](a.length); val di = new Array[Int](a.length)
+    val si = new Array[Int](src.length); val di = new Array[Int](src.length)
     var k = 0
-    while (k < a.length) { si(k) = intern(a(k)); di(k) = intern(b(k)); k += 1 }
-    extra.foreach(intern)
+    while (k < src.length) { si(k) = intern(src(k)); di(k) = intern(dst(k)); k += 1 }
     val byFirst = seen.toArray
     val ids = byFirst.clone()
     java.util.Arrays.sort(ids)
-    val rank = new Array[Int](ids.length)
-    var i = 0
-    while (i < ids.length) { rank(i) = java.util.Arrays.binarySearch(ids, byFirst(i)); i += 1 }
+    val rank = byFirst.map(java.util.Arrays.binarySearch(ids, _))
     k = 0
-    while (k < a.length) { si(k) = rank(si(k)); di(k) = rank(di(k)); k += 1 }
-    if (!dedup) new GraphView(ids, si, di, w)
+    while (k < si.length) { si(k) = rank(si(k)); di(k) = rank(di(k)); k += 1 }
+    new GraphView(ids, si, di, weight, eid)
+  }
+
+  /** `base` shaped for a kernel, memoized on it. Edges keep input order
+    * unless shaped: `loops = false` drops self-loops and every vertex they
+    * leave without an edge; `canonical` orders each edge (min, max); `dedup`
+    * keeps each distinct (src, dst) once, in (src, dst) order, with the
+    * smallest weight below Double.MaxValue (a pair with none is dropped —
+    * mst's Kruskal rule — but its endpoints stay vertices); `extra` ids are
+    * vertices even without an edge. Int passes only, as index order is id
+    * order; edge ids survive all but dedup. */
+  private[graft] def view(base: GraphView, loops: Boolean = true, canonical: Boolean = false,
+                          dedup: Boolean = false, extra: Seq[Long] = Nil): GraphView = {
+    val g = if (loops && !canonical && !dedup) base
+            else base.memoized(("view", loops, canonical, dedup))(shape(base, loops, canonical, dedup))
+    val add = extra.filter(g.idx(_) < 0)
+    if (add.isEmpty) g else onto(g, uniqueSorted(g.ids ++ add))
+  }
+
+  /** `g`'s edges over `ids`, a sorted superset of the ids they touch: each
+    * index moves to its id's place in `ids`. */
+  private def onto(g: GraphView, ids: Array[Long]): GraphView = {
+    val at = g.ids.map(java.util.Arrays.binarySearch(ids, _))
+    new GraphView(ids, g.src.map(at(_)), g.dst.map(at(_)), g.weight, g.eid)
+  }
+
+  private def shape(b: GraphView, loops: Boolean, canonical: Boolean, dedup: Boolean): GraphView = {
+    val g = if (loops) b else {
+      val ks = Array.range(0, b.m).filter(k => b.src(k) != b.dst(k))
+      val live = new Array[Boolean](b.n)
+      ks.foreach { k => live(b.src(k)) = true; live(b.dst(k)) = true }
+      def pick[A: scala.reflect.ClassTag](a: Array[A]): Array[A] = if (a == null) null else ks.map(a(_))
+      onto(new GraphView(b.ids, pick(b.src), pick(b.dst), pick(b.weight), pick(b.eid)),
+        Array.range(0, b.n).filter(live(_)).map(b.ids(_)))
+    }
+    val (si, di, w) = (g.src, g.dst, g.weight)
+    val lo = if (canonical) Array.tabulate(g.m)(k => math.min(si(k), di(k))) else si
+    val hi = if (canonical) Array.tabulate(g.m)(k => math.max(si(k), di(k))) else di
+    if (!dedup) new GraphView(g.ids, lo, hi, w, g.eid)
     else {
-      // pack → sort → unique (a boxed HashSet on packed keys measured ~µs
-      // per insert; one Arrays.sort replaces the inserts)
-      val keys = new Array[Long](si.length)
-      k = 0
-      while (k < si.length) { keys(k) = (si(k).toLong << 32) | di(k); k += 1 }
-      val uk = uniqueSorted(if (w == null) keys else keys.clone())
+      // pack → sort → unique (a boxed HashSet measured ~µs per insert)
+      val keys = Array.tabulate(g.m)(k => (lo(k).toLong << 32) | hi(k))
+      val uk = uniqueSorted(keys.clone())
       val minW = if (w == null) null else {
         val mw = Array.fill(uk.length)(Double.MaxValue)
-        k = 0
-        while (k < keys.length) {
+        keys.indices.foreach { k =>
           val p = java.util.Arrays.binarySearch(uk, keys(k))
           if (w(k) < mw(p)) mw(p) = w(k)
-          k += 1
         }
         mw
       }
-      val us = new Ints(); val ud = new Ints()
-      val uw = if (w == null) null else mutable.ArrayBuilder.make[Double]
-      var p = 0
-      while (p < uk.length) {
-        if (minW == null || minW(p) < Double.MaxValue) {
-          us += (uk(p) >>> 32).toInt; ud += uk(p).toInt
-          if (uw != null) uw += minW(p)
-        }
-        p += 1
-      }
-      new GraphView(ids, us.result(), ud.result(), if (uw == null) null else uw.result())
+      val ps = Array.range(0, uk.length).filter(p => minW == null || minW(p) < Double.MaxValue)
+      new GraphView(g.ids, ps.map(p => (uk(p) >>> 32).toInt), ps.map(p => uk(p).toInt),
+        if (minW == null) null else ps.map(minW(_)), null)
     }
   }
 
@@ -512,11 +526,9 @@ object LocalKernels {
     * vertices, or the seeds. */
   private def ranks(proj: DataFrame, seeds: Seq[Long],
                     iterations: Int, damping: Double): DataFrame =
-    inTask(proj, Seq("id", "rank")) { (e, _) =>
-      val g = view(e)
+    inTask(proj, Seq("id", "rank")) { (g, _) =>
       val (n, m, si, di) = (g.n, g.m, g.src, g.dst)
-      val w = if (g.weight != null) g.weight
-              else { val ones = new Array[Double](m); java.util.Arrays.fill(ones, 1.0); ones }
+      val w = if (g.weight != null) g.weight else Array.fill(m)(1.0)
       val outW = new Array[Double](n)
       var k = 0
       while (k < m) { outW(si(k)) += w(k); k += 1 }
@@ -577,8 +589,7 @@ object LocalKernels {
   private def seedSweep[T <: Product : TypeTag](edges: DataFrame, seeds: Seq[Long],
       radius: Int, names: Seq[String])(stat: (Long, Array[Int]) => T): DataFrame = {
     val sd = seeds.distinct
-    inTask(pairs(edges), names) { (e, _) =>
-      val g = view(e)
+    inTask(pairs(edges), names) { (g, _) =>
       val adj = g.out()
       sd.iterator.map { s =>
         val seed = g.idx(s)
@@ -617,8 +628,8 @@ object LocalKernels {
     * emits a row (deepest-level nodes carry δ = 0), bc rounded to 4. */
   def betweennessCentrality(edges: DataFrame, seeds: Seq[Long], maxDepth: Int): DataFrame = {
     val sd = seeds.distinct
-    inTask(pairs(edges), Seq("id", "bc")) { (e, _) =>
-      val g = view(e, dedup = true)
+    inTask(pairs(edges), Seq("id", "bc")) { (base, _) =>
+      val g = view(base, dedup = true)
       val n = g.n
       val adj = g.out()
       val (off, tgt) = (adj.off, adj.tgt)
@@ -669,8 +680,8 @@ object LocalKernels {
     * normalization as [[Algorithms.hits]]'s distributed loop (edges
     * deduped first, matching its distinct). */
   def hits(edges: DataFrame, iterations: Int): DataFrame =
-    inTask(pairs(edges), Seq("id", "hub", "auth")) { (e, _) =>
-      val g = view(e, dedup = true)
+    inTask(pairs(edges), Seq("id", "hub", "auth")) { (base, _) =>
+      val g = view(base, dedup = true)
       val (n, m, si, di) = (g.n, g.m, g.src, g.dst)
       var hub = Array.fill(n)(1.0)
       var auth = new Array[Double](n)
@@ -699,8 +710,7 @@ object LocalKernels {
     * kept), argmax frequency with min-label tie-break — the exact
     * per-round rule of [[Algorithms.cdlp]]. */
   def cdlp(edges: DataFrame, iterations: Int): DataFrame =
-    inTask(pairs(edges), Seq("id", "label")) { (e, _) =>
-      val g = view(e)
+    inTask(pairs(edges), Seq("id", "label")) { (g, _) =>
       val n = g.n
       // undirected incidence: every input edge makes each endpoint a
       // label donor of the other
@@ -750,8 +760,7 @@ object LocalKernels {
     * smaller ROOT kept as root, which is exactly the fixpoint of
     * [[Algorithms.wcc]]'s min-label propagation. */
   def wcc(edges: DataFrame): DataFrame =
-    inTask(pairs(edges), Seq("id", "component")) { (e, _) =>
-      val g = view(e)
+    inTask(pairs(edges), Seq("id", "component")) { (g, _) =>
       val p = Array.tabulate(g.n)(identity)
       def find(x0: Int): Int = {
         var x = x0
@@ -773,8 +782,7 @@ object LocalKernels {
     * ([[Algorithms.sccDistributed]]) gives once its phases finish;
     * LocalKernelsSpec is the differential check. */
   def scc(edges: DataFrame): DataFrame =
-    inTask(pairs(edges), Seq("id", "component")) { (e, _) =>
-      val g = view(e)
+    inTask(pairs(edges), Seq("id", "component")) { (g, _) =>
       val n = g.n
       val csr = g.out()
       val (off, adj) = (csr.off, csr.tgt)
@@ -840,8 +848,8 @@ object LocalKernels {
     * loops, then `rounds` rounds each removing ALL nodes with degree < k
     * at once; returns (id, deg) for nodes with a surviving edge. */
   def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame =
-    inTask(pairs(edges), Seq("id", "deg")) { (e, _) =>
-      val g = view(e, loops = false, canonical = true, dedup = true)
+    inTask(pairs(edges), Seq("id", "deg")) { (base, _) =>
+      val g = view(base, loops = false, canonical = true, dedup = true)
       val (n, si, di) = (g.n, g.src, g.dst)
       val alive = Array.fill(n)(true)
       val deg = new Array[Int](n)
@@ -874,8 +882,8 @@ object LocalKernels {
   /** Layered BFS over out-edges, depth capped at maxIter, source always
     * present at dist 0 — mirrors [[Algorithms.bfs]]. */
   def bfs(edges: DataFrame, source: Long, maxIter: Int): DataFrame =
-    inTask(pairs(edges), Seq("id", "dist")) { (e, _) =>
-      val g = view(e, extra = Seq(source)) // present even with no incident edges
+    inTask(pairs(edges), Seq("id", "dist")) { (base, _) =>
+      val g = view(base, extra = Seq(source)) // present even with no incident edges
       val (dist, _) = bfsFrom(g.idx(source), g.out(), maxIter)
       Iterator.range(0, g.n).filter(dist(_) >= 0).map(i => (g.ids(i), dist(i)))
     }
@@ -891,8 +899,8 @@ object LocalKernels {
     * like the distributed symmetrization's a != b filter. */
   def bidirBfs(edges: DataFrame, pairs: Seq[(Long, Long)], maxDepth: Int): DataFrame = {
     val pd = pairs.distinct
-    inTask(this.pairs(edges), Seq("src", "dst", "dist")) { (e, _) =>
-      val g = view(e, loops = false)
+    inTask(this.pairs(edges), Seq("src", "dst", "dist")) { (base, _) =>
+      val g = view(base, loops = false)
       val adj = g.out(sym = true)
       // one bfsFrom per DISTINCT source: k pairs sharing a source answer
       // from the same dist array instead of paying k traversals.
@@ -948,8 +956,8 @@ object LocalKernels {
     * [[bellmanFord]]. Emits reachable vertices only; source always present
     * at 0.0. */
   def sssp(edges: DataFrame, source: Long, maxIter: Int): DataFrame =
-    inTask(weights(edges), Seq("id", "dist")) { (e, _) =>
-      val g = view(e, extra = Seq(source))
+    inTask(weights(edges), Seq("id", "dist")) { (base, _) =>
+      val g = view(base, extra = Seq(source))
       val dist = bellmanFord(g, g.idx(source), maxIter)
       Iterator.range(0, g.n).filter(dist(_) != Inf).map(i => (g.ids(i), dist(i)))
     }
@@ -971,8 +979,8 @@ object LocalKernels {
     * the parent relation cyclic); with w > 0 the walk strictly decreases
     * dist and must terminate. */
   def ssspPath(edges: DataFrame, source: Long, target: Long, maxHops: Int): DataFrame =
-    inTask(weights(edges), Seq("pos", "id", "dist")) { (e, _) =>
-      val g = view(e, extra = Seq(source))
+    inTask(weights(edges), Seq("pos", "id", "dist")) { (base, _) =>
+      val g = view(base, extra = Seq(source))
       val src = g.idx(source)
       val dist = bellmanFord(g, src, maxHops * 2) // same cap as the distributed solve
       // parent(v) = min id u with dist(u) + w == dist(v) — exact FP:
@@ -1017,12 +1025,11 @@ object LocalKernels {
     * summation-order-free: labels are bit-identical to the distributed
     * twin's (LocalKernelsSpec differentials). */
   def louvain(edges: DataFrame, rounds: Int, levels: Int): DataFrame =
-    inTask(pairs(edges, "a", "b"), Seq("id", "community")) { (e, _) =>
-      val g = view(e, loops = false, dedup = true)
+    inTask(pairs(edges, "a", "b"), Seq("id", "community")) { (base, _) =>
+      val g = view(base, loops = false, dedup = true)
       val n = g.n
       val adj = g.out(sym = true)
-      val ones = new Array[Double](adj.tgt.length)
-      java.util.Arrays.fill(ones, 1.0)
+      val ones = Array.fill(adj.tgt.length)(1.0)
       val deg = Array.tabulate(n)(v => (adj.off(v + 1) - adj.off(v)).toDouble)
       var comm = louvainRounds(adj, ones, deg, g.ids, 2.0 * g.m, rounds)
       var lvl = 2
@@ -1040,10 +1047,8 @@ object LocalKernels {
           lo(k) = math.min(la, lb); hi(k) = math.max(la, lb)
           k += 1
         }
-        val c = view(Edges(lo, hi, null, null))
-        val pks = new Array[Long](c.m)
-        k = 0
-        while (k < c.m) { pks(k) = (c.src(k).toLong << 32) | c.dst(k); k += 1 }
+        val c = build(lo, hi)
+        val pks = Array.tabulate(c.m)(k => (c.src(k).toLong << 32) | c.dst(k))
         java.util.Arrays.sort(pks)
         // split self-loops (deg += 2w, no sym edge) from real edges,
         // consuming sorted runs as (pair, count)
@@ -1145,8 +1150,8 @@ object LocalKernels {
       least(col("src"), col("dst")).cast("long"),
       greatest(col("src"), col("dst")).cast("long"),
       coalesce(col("weight"), lit(1.0)).cast("double"))
-    inTask(proj, Seq("a", "b", "w")) { (e, _) =>
-      val g = view(e, loops = false, dedup = true)
+    inTask(proj, Seq("a", "b", "w")) { (base, _) =>
+      val g = view(base, loops = false, dedup = true)
       val w = g.weight
       // (w, a, b) order as one packed sort: the deduped edges are in (a, b)
       // order, so (rank of w, edge index) sorts them; a weight's rank comes
@@ -1156,15 +1161,9 @@ object LocalKernels {
         val b = java.lang.Double.doubleToLongBits(x)
         b ^ ((b >> 63) & Long.MaxValue)
       }
-      val wk = new Array[Long](g.m)
-      var k = 0
-      while (k < g.m) { wk(k) = bits(w(k)); k += 1 }
+      val wk = w.map(bits)
       val byW = uniqueSorted(wk.clone())
-      val order = new Array[Long](g.m)
-      k = 0
-      while (k < g.m) {
-        order(k) = (java.util.Arrays.binarySearch(byW, wk(k)).toLong << 32) | k; k += 1
-      }
+      val order = Array.tabulate(g.m)(k => (java.util.Arrays.binarySearch(byW, wk(k)).toLong << 32) | k)
       java.util.Arrays.sort(order)
       val p = Array.tabulate(g.n)(identity)
       def find(x0: Int): Int = {
@@ -1189,8 +1188,7 @@ object LocalKernels {
     * tagged rows (no driver collect). */
   def varLengthExpand(edges: DataFrame, starts: DataFrame, startCol: String,
                       minHops: Int, maxHops: Int): DataFrame =
-    inTask(pairs(edges), Seq("start", "node", "hops"), tagged(starts, startCol)) { (e, side) =>
-      val g = view(e)
+    inTask(pairs(edges), Seq("start", "node", "hops"), tagged(starts, startCol)) { (g, side) =>
       val adj = g.out()
       val (off, tgt) = (adj.off, adj.tgt)
       val seenAt = new Array[Int](g.n) // visit stamp per start (1-based)
@@ -1260,9 +1258,8 @@ object LocalKernels {
     val proj = edges.select(col("src").cast("long"), col("dst").cast("long"), eidCol.as("eid"))
     val constrained = targets.isDefined
     inTask(proj, Seq("start", "node", "path", "epath", "hops"),
-      tagged(starts, startCol, targets)) { (e, side) =>
-      val g = view(e)
-      val eids = e.eid // the view keeps input order: edge k is row k
+      tagged(starts, startCol, targets)) { (g, side) =>
+      val eids = g.eid // the base view keeps input order: edge k is row k
       // rows over edge INDICES so parallel edges keep their own eid
       val adj = g.out(withPos = true)
       val (off, eIdx) = (adj.off, adj.pos)
@@ -1365,15 +1362,14 @@ object LocalKernels {
     * input rows orient and count per row; the common-neighbor set is
     * DISTINCT values, as `array_intersect` dedups). One-row result. */
   def triangleCount(undirected: DataFrame): DataFrame =
-    inTask(pairs(undirected, "a", "b"), Seq("triangles")) { (e, _) =>
-      Iterator.single(Tuple1(triangleSum(view(e))._1))
+    inTask(pairs(undirected, "a", "b"), Seq("triangles")) { (g, _) =>
+      Iterator.single(Tuple1(triangleSum(g)._1))
     }
 
   /** Per-vertex triangles + clustering coefficient — replicates
     * [[Algorithms.lcc]]'s corner attribution. */
   def lcc(undirected: DataFrame): DataFrame =
-    inTask(pairs(undirected, "a", "b"), Seq("id", "deg", "triangles", "lcc")) { (e, _) =>
-      val g = view(e)
+    inTask(pairs(undirected, "a", "b"), Seq("id", "deg", "triangles", "lcc")) { (g, _) =>
       val (_, deg, tri) = triangleSum(g)
       Iterator.range(0, g.n).map { i =>
         val d = deg(i).toLong

@@ -50,14 +50,15 @@ object VectorSearch {
     * semantics) instead of an over-long vector scoring by its first `dim`
     * elements only when the extension is absent; a pair of equal-length
     * vectors of some OTHER dimension scores on the native path and nulls
-    * (conservatively) on the fallback. */
+    * (conservatively) on the fallback. `dim` is evaluated only on the
+    * fallback, so a caller can pass [[detectDim]]'s job by name. */
   def cosineBest(spark: org.apache.spark.sql.SparkSession,
-                 a: Column, b: Column, dim: Int): Column =
+                 a: Column, b: Column, dim: => Int): Column =
     if (spark.catalog.functionExists("graft_dot"))
       call_function("graft_dot", a, b) /
         (sqrt(call_function("graft_dot", a, a)) *
          sqrt(call_function("graft_dot", b, b)))
-    else when(size(a) === size(b) && size(a) === dim, cosine(a, b, dim))
+    else { val d = dim; when(size(a) === size(b) && size(a) === d, cosine(a, b, d)) }
 
   /** Element count of the vector column, from one row (for picking the
     * unrolled codegen path). */
@@ -126,7 +127,7 @@ object VectorSearch {
                k: Int, iters: Int, tau: Double): DataFrame = {
     require(k > 0 && iters >= 0, "k positive, iters non-negative")
     val spark = emb.sparkSession
-    val dim = detectDim(emb, vecCol)
+    lazy val dim = detectDim(emb, vecCol) // fallback cosine only
     val v = emb.select(col(idCol).as("__id"),
       col(vecCol).cast("array<double>").as("__e")).localCheckpoint(true)
     def cos(a: Column, b: Column) = cosineBest(spark, a, b, dim)
@@ -185,11 +186,10 @@ object VectorSearch {
   /** Exact top-k where the query vector is a row of another (1-row) DataFrame. */
   def knnExactFor(emb: DataFrame, idCol: String, vecCol: String,
                   queryDf: DataFrame, queryVecCol: String, k: Int): DataFrame = {
-    val dim = detectDim(emb, vecCol)
     val q = broadcast(queryDf.select(col(queryVecCol).as("_qv")))
     emb.crossJoin(q)
       .select(col(idCol),
-        cosineBest(emb.sparkSession, col(vecCol), col("_qv"), dim).as("score"))
+        cosineBest(emb.sparkSession, col(vecCol), col("_qv"), detectDim(emb, vecCol)).as("score"))
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
   }
@@ -210,7 +210,7 @@ object VectorSearch {
                     posThreshold: Double): DataFrame = {
     require(anchorIds.nonEmpty && k > 0, "anchorIds nonempty, k positive")
     val spark = emb.sparkSession
-    val dim = detectDim(emb, vecCol)
+    lazy val dim = detectDim(emb, vecCol) // fallback cosine only
     val anchors = emb.filter(col(idCol).isin(anchorIds: _*))
       .select(col(idCol), col(vecCol)).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1)))

@@ -437,6 +437,51 @@ class LocalKernelsSpec extends SparkSpec {
     }
   }
 
+  test("view: every shaping of a base view equals a direct build from the raw edges") {
+    // the documented semantics, written naively over the raw long edges:
+    // shape the rows, then number the sorted distinct ids
+    def direct(s: Array[Long], d: Array[Long], w: Array[Double], loops: Boolean,
+               canonical: Boolean, dedup: Boolean, extra: Seq[Long]) = {
+      var rows: Seq[(Long, Long, Double, Long)] = s.indices.filter(k => loops || s(k) != d(k)).map { k =>
+        val (a, b) = if (canonical && d(k) < s(k)) (d(k), s(k)) else (s(k), d(k))
+        (a, b, if (w == null) 0.0 else w(k), k.toLong)
+      }
+      val ids = (rows.flatMap(r => Seq(r._1, r._2)) ++ extra).distinct.sorted
+      if (dedup) rows = rows.groupBy(r => (r._1, r._2)).toSeq
+        .map { case ((a, b), g) => (a, b, g.map(_._3).min, -1L) }
+        .filter(w == null || _._3 < Double.MaxValue).sortBy(r => (r._1, r._2))
+      val ix = ids.zipWithIndex.toMap
+      (ids, rows.map(r => ix(r._1)), rows.map(r => ix(r._2)), rows.map(_._3), rows.map(_._4))
+    }
+    for (seed <- 1 to 12) {
+      val rnd = new scala.util.Random(seed)
+      val vs = Array.tabulate(12)(i => 40L + 9L * i)
+      // parallel edges and self-loops from a small vertex set; 5 and 900
+      // appear only in self-loops; tied weights and Double.MaxValue ones
+      val raw = Seq.fill(30 + rnd.nextInt(30))((vs(rnd.nextInt(12)), vs(rnd.nextInt(12)))) ++
+        Seq((5L, 5L), (900L, 900L), (900L, 900L))
+      val edges = rnd.shuffle(raw).toArray
+      val (s, d) = (edges.map(_._1), edges.map(_._2))
+      val wts = Array.fill(s.length)(Seq(1.0, 2.0, 2.0, Double.MaxValue)(rnd.nextInt(4)))
+      for (w <- Seq(wts, null); loops <- Seq(true, false); canonical <- Seq(false, true);
+           dedup <- Seq(false, true);
+           extra <- Seq(Nil, Seq(vs(3)), Seq(5L), Seq(7L, 7L), Seq(vs(0), 3L, 5000L, 900L))) {
+        val base = LocalKernels.build(s, d, w, s.indices.map(_.toLong).toArray)
+        val shaping = s"seed $seed weighted=${w != null} loops=$loops canonical=$canonical " +
+          s"dedup=$dedup extra=$extra"
+        val g = LocalKernels.view(base, loops, canonical, dedup, extra)
+        val (ids, si, di, wt, eid) = direct(s, d, w, loops, canonical, dedup, extra)
+        assert(g.ids.toSeq === ids, shaping)
+        assert(g.src.toSeq === si, shaping)
+        assert(g.dst.toSeq === di, shaping)
+        if (w == null) assert(g.weight === null, shaping) else assert(g.weight.toSeq === wt, shaping)
+        if (dedup) assert(g.eid === null, shaping) else assert(g.eid.toSeq === eid, shaping)
+        assert(LocalKernels.view(base, loops, canonical, dedup) eq
+          LocalKernels.view(base, loops, canonical, dedup), s"$shaping: not memoized")
+      }
+    }
+  }
+
   test("resident cache: file-backed kernels hit the cache and match cold runs") {
     // parquet-backed edges (LocalRelation inputs never cache) — run each
     // kernel twice: run 1 populates the resident cache, run 2 serves from
@@ -470,7 +515,12 @@ class LocalKernelsSpec extends SparkSpec {
       val (b1, b2) = runs("bfs")(LocalKernels.bfs(e, 1000L, 30))
       assert(b1 === b2)
       assert(b1 === distributed(graft.algo.Algorithms.bfs(e, 1000L, 30)))
+      // every later kernel over the projection reads the view bfs interned
+      val base = LocalKernels.residentView(LocalKernels.pairs(e))
+      assert(base.isDefined, "the first call left no resident view")
       val (w1, w2) = runs("wcc")(LocalKernels.wcc(e))
+      assert(LocalKernels.residentView(LocalKernels.pairs(e)).exists(_ eq base.get),
+        "the projection was interned again")
       assert(w1 === w2)
       assert(w1 === distributed(graft.algo.Algorithms.wcc(e)))
       val (r1, r2) = runs("pageRank")(LocalKernels.pageRank(e, 8, 0.85))
@@ -497,6 +547,45 @@ class LocalKernelsSpec extends SparkSpec {
       val e2 = spark.read.parquet(s"$dir/e.parquet")
       assert(sortedRows(LocalKernels.wcc(e2)) ===
         distributed(graft.algo.Algorithms.wcc(e2)))
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
+        f.delete(): Unit
+      }
+      rm(dir)
+    }
+  }
+
+  test("resident cache: concurrent kernels over one resident view match sequential runs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_rescache_mt").toFile
+    try {
+      randGraph(91, 60, 400).write.parquet(s"$dir/e.parquet")
+      val e = spark.read.parquet(s"$dir/e.parquet")
+      val seeds = Seq(1000L, 1070L, 1140L)
+      // each kernel shapes the shared view or memoizes CSR rows on it
+      val kernels: Seq[() => DataFrame] = Seq(
+        () => LocalKernels.betweennessCentrality(e, seeds, 4),
+        () => LocalKernels.hits(e, 5),
+        () => LocalKernels.kCore(e, 3, 4),
+        () => LocalKernels.cdlp(e, 4),
+        () => LocalKernels.scc(e))
+      sortedRows(LocalKernels.pageRank(e, 4, 0.85)) // interns the bare view
+      val base = LocalKernels.residentView(LocalKernels.pairs(e))
+      assert(base.isDefined)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      val got = try {
+        // two threads run every kernel at once, in opposite orders
+        val fs = Seq(kernels, kernels.reverse).map { ks =>
+          pool.submit(new java.util.concurrent.Callable[Seq[Seq[String]]] {
+            def call(): Seq[Seq[String]] = ks.map(k => sortedRows(k()).toSeq)
+          })
+        }
+        fs.map(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+      } finally pool.shutdown()
+      val sequential = kernels.map(k => sortedRows(k()).toSeq)
+      assert(got(0) === sequential)
+      assert(got(1) === sequential.reverse)
+      assert(LocalKernels.residentView(LocalKernels.pairs(e)).exists(_ eq base.get))
     } finally {
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))

@@ -160,6 +160,24 @@ class PipelineOpsSpec extends SparkSpec {
     assert(out.sortBy(_._3).map(_._2).toSeq == Seq(2L, 4L))
   }
 
+  test("knnExactFor: building the frame runs no job, rows match the literal-query top-k") {
+    val rnd = new scala.util.Random(5)
+    val emb = Seq.tabulate(40)(i => (i.toLong, Seq.fill(8)(rnd.nextFloat() - 0.5f)))
+      .toDF("vec_id", "embedding")
+    val q = emb.filter(col("vec_id") === 7L)
+    var knn: org.apache.spark.sql.DataFrame = null
+    // the native graft_dot cosine needs no dimension, so no detectDim job
+    assert(jobsDuring {
+      knn = graft.vector.VectorSearch.knnExactFor(emb, "vec_id", "embedding", q, "embedding", 5)
+    } == 0)
+    val qv = q.select("embedding").as[Seq[Float]].head()
+    val want = graft.vector.VectorSearch.knnExact(emb, "vec_id", "embedding", qv, 5)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("vec_id"), round(col("score"), 9)).collect().map(_.toString).toSeq
+    assert(rows(knn) == rows(want))
+    assert(rows(knn).head.startsWith("[7,"), "the query vector is its own nearest")
+  }
+
   test("token budget: shares sum to 1; sub-linear alpha boosts small strata") {
     val corpus = Seq.tabulate(40)(i =>
       (i.toLong, ("w " * (if (i < 4) 200 else 10)).trim,
