@@ -146,12 +146,15 @@ object Bench {
     // end of the line). Recovery contract (r15 verdict item 2): persist the
     // FULL artifact to a file, then print a SHORT self-contained summary as
     // the LAST line so any tail-capture ends with one complete JSON object.
+    // a run restricted by SPARK_GRAFT_BENCH_ONLY writes under target/, so a
+    // smoke never overwrites the committed whole-catalog file
+    val queriesFile = if (only.isDefined) "target/bench_last.json" else "docs/bench_last.json"
     try {
-      val p = java.nio.file.Paths.get("docs/bench_last.json")
+      val p = java.nio.file.Paths.get(queriesFile)
       Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
       java.nio.file.Files.writeString(p, fullLine + "\n")
     } catch { case _: Throwable => () } // best-effort: cwd may not be the repo
-    println(s"""{"metric":"total","value":$total,"unit":"sec",$failures,"sf":"$sfDir","cpus":"${GraftSession.cpus}","n_queries":${results.size},"loadavg_before":"$loadBefore","cooldown":"$cooldownStatus","cooldown_waited_sec":${f"$cooldownWaitedSec%.1f"},"queries_file":"docs/bench_last.json"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec",$failures,"sf":"$sfDir","cpus":"${GraftSession.cpus}","n_queries":${results.size},"loadavg_before":"$loadBefore","cooldown":"$cooldownStatus","cooldown_waited_sec":${f"$cooldownWaitedSec%.1f"},"queries_file":"$queriesFile"}""")
     spark.stop()
   }
 }

@@ -139,15 +139,84 @@ object Ast {
     Set("count", "sum", "avg", "min", "max", "collect", "stdev", "stdevp",
       "percentilecont", "percentiledisc")
 
+  // ---------- the one expression traversal ----------
+
+  /** `e` rebuilt with every direct sub-expression `c` replaced by `f(c)`,
+    * children visited in source order. The only function that lists the
+    * container cases: every analysis and rewrite below recurses through it
+    * (the analog of Catalyst's `TreeNode.mapChildren`). Sub-expressions
+    * include an EXISTS / pattern comprehension's WHERE and projection and
+    * the property values of its pattern; the pattern's shape is kept. */
+  def mapChildren(e: Expr)(f: Expr => Expr): Expr = {
+    def props(ps: Seq[(String, Expr)]) = ps.map { case (k, v) => (k, f(v)) }
+    def path(p: PathPat) = p.copy(nodes = p.nodes.map(n => n.copy(props = props(n.props))),
+      rels = p.rels.map(r => r.copy(props = props(r.props))))
+    e match {
+      case Lit(_) | Var(_) | Prop(_, _) | Param(_) => e
+      case Fn(n, args, d) => Fn(n, args.map(f), d)
+      case ListLit(items) => ListLit(items.map(f))
+      case Bin(op, l, r) => Bin(op, f(l), f(r))
+      case Not(x) => Not(f(x))
+      case IsNull(x, n) => IsNull(f(x), n)
+      case StrPred(op, l, r) => StrPred(op, f(l), f(r))
+      case InList(x, l) => InList(f(x), f(l))
+      case CaseExpr(s, bs, d) =>
+        CaseExpr(s.map(f), bs.map { case (w, t) => (f(w), f(t)) }, d.map(f))
+      case Index(l, i) => Index(f(l), f(i))
+      case Slice(l, a, b) => Slice(f(l), a.map(f), b.map(f))
+      case ExistsPattern(ps, w) => ExistsPattern(ps.map(path), w.map(f))
+      case LambdaPred(k, v, l, p) => LambdaPred(k, v, f(l), f(p))
+      case ReduceExpr(a, i, v, l, b) => ReduceExpr(a, f(i), v, f(l), f(b))
+      case ListComp(v, l, p, b) => ListComp(v, f(l), p.map(f), b.map(f))
+      case PatternComp(p, w, pr) => PatternComp(path(p), w.map(f), f(pr))
+      case MapLit(es) => MapLit(props(es))
+    }
+  }
+
+  /** Direct sub-expressions of `e`, in source order. */
+  def children(e: Expr): Seq[Expr] = {
+    val out = Seq.newBuilder[Expr]
+    mapChildren(e) { c => out += c; c }
+    out.result()
+  }
+
+  /** Variables `e` itself binds (a lambda's variable, reduce's accumulator
+    * too). Analyses take them to cover all of `e`'s children. */
+  def binds(e: Expr): Set[String] = e match {
+    case LambdaPred(_, v, _, _) => Set(v)
+    case ReduceExpr(a, _, v, _, _) => Set(a, v)
+    case ListComp(v, _, _, _) => Set(v)
+    case _ => Set.empty
+  }
+
+  /** True when an aggregate call appears anywhere in `e` (Cypher's
+    * implicit grouping: such an item is aggregated, the others are keys). */
   def isAggregate(e: Expr): Boolean = e match {
-    case Fn(n, args, _) =>
-      AggregateFns.contains(n.toLowerCase) || args.exists(isAggregate)
-    case Bin(_, l, r) => isAggregate(l) || isAggregate(r)
-    case Not(x) => isAggregate(x)
-    case Index(l, i) => isAggregate(l) || isAggregate(i)
-    case CaseExpr(s, bs, d) =>
-      s.exists(isAggregate) ||
-        bs.exists(b => isAggregate(b._1) || isAggregate(b._2)) || d.exists(isAggregate)
-    case _ => false
+    case Fn(n, _, _) if AggregateFns.contains(n.toLowerCase) => true
+    case _ => children(e).exists(isAggregate)
+  }
+
+  /** (variable, property) pairs `e` reads via `v.k`, subqueries included. */
+  def propRefs(e: Expr): Set[(String, String)] = e match {
+    case Prop(v, k) => Set((v, k))
+    case _ => children(e).flatMap(propRefs).toSet
+  }
+
+  /** Free variables `e` references BARE (not through `v.k`), subqueries
+    * included — these may need any column (properties(v), v = other,
+    * collect(v), ...). */
+  def bareVarRefs(e: Expr): Set[String] = e match {
+    case Var(n) => Set(n)
+    case _ => children(e).flatMap(bareVarRefs).toSet -- binds(e)
+  }
+
+  /** Free variables `e` references, bare or through `v.k`; an EXISTS or
+    * pattern comprehension adds the marker `__nonpushable` instead of its
+    * own references. */
+  def refVars(e: Expr): Set[String] = e match {
+    case Var(n) => Set(n)
+    case Prop(v, _) => Set(v)
+    case _: ExistsPattern | _: PatternComp => Set("__nonpushable")
+    case _ => children(e).flatMap(refVars).toSet -- binds(e)
   }
 }

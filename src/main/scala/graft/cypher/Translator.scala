@@ -317,16 +317,7 @@ final class Translator(g: PropertyGraph, params: Map[String, Any] = Map.empty,
     * slower than with the global sort (150k rows: ~25% faster). */
   private def applyReturn(df0: DataFrame, ret: ReturnSpec): DataFrame = {
     val (df, items) = lowerItems(df0, ret.items)
-    val hasAgg = items.exists(i => isAggregate(i.expr))
-    var out =
-      if (hasAgg) {
-        val keys = items.filter(i => !isAggregate(i.expr))
-        val aggs = items.filter(i => isAggregate(i.expr))
-        val keyCols = keys.map(i => toCol(i.expr).as(i.name))
-        val aggCols = aggs.map(i => toAggCol(i.expr).as(i.name))
-        if (keys.isEmpty) df.agg(aggCols.head, aggCols.tail: _*)
-        else df.groupBy(keyCols: _*).agg(aggCols.head, aggCols.tail: _*)
-      } else df.select(items.map(i => toCol(i.expr).as(i.name)): _*)
+    var out = project(df, items, i => Seq(toCol(i.expr).as(i.name)))
 
     if (ret.distinct) out = out.distinct()
     if (ret.orderBy.nonEmpty) {
@@ -371,11 +362,25 @@ final class Translator(g: PropertyGraph, params: Map[String, Any] = Map.empty,
     }
   }
 
+  /** Project `items` over `df` (`cols` lowers one item): when an item
+    * aggregates, Cypher's implicit grouping keys the aggregate items by all
+    * the others. */
+  private def project(df: DataFrame, items: Seq[ReturnItem],
+                      cols: ReturnItem => Seq[Column]): DataFrame = {
+    val (aggs, keys) = items.partition(i => isAggregate(i.expr))
+    if (aggs.isEmpty) df.select(items.flatMap(cols): _*)
+    else {
+      val keyCols = keys.flatMap(cols)
+      val aggCols = aggs.flatMap(cols)
+      if (keyCols.isEmpty) df.agg(aggCols.head, aggCols.tail: _*)
+      else df.groupBy(keyCols: _*).agg(aggCols.head, aggCols.tail: _*)
+    }
+  }
+
   /** WITH barrier: projection or implicit aggregation, carrying whole
     * node/edge/path variables through (all their prefixed columns). Rebinds
     * the scope to exactly the exported items. */
   private def projectWith(df: DataFrame, items: Seq[ReturnItem]): DataFrame = {
-    val hasAgg = items.exists(i => isAggregate(i.expr))
     var newEntity = Set.empty[String]
     var newEdge = Set.empty[String]
     var newPath = Set.empty[String]
@@ -401,16 +406,7 @@ final class Translator(g: PropertyGraph, params: Map[String, Any] = Map.empty,
         Seq(toCol(e).as(i.name))
     }
 
-    val res =
-      if (!hasAgg) df.select(items.flatMap(itemCols): _*)
-      else {
-        val keyItems = items.filter(i => !isAggregate(i.expr))
-        val aggItems = items.filter(i => isAggregate(i.expr))
-        val keyCols = keyItems.flatMap(itemCols)
-        val aggCols = aggItems.map { i => newScalar += i.name; toAggCol(i.expr).as(i.name) }
-        if (keyCols.isEmpty) df.agg(aggCols.head, aggCols.tail: _*)
-        else df.groupBy(keyCols: _*).agg(aggCols.head, aggCols.tail: _*)
-      }
+    val res = project(df, items, itemCols)
     entityVars = newEntity; edgeEntityVars = newEdge; pathVars = newPath
     scalarVars = newScalar
     structVars = newStructs
@@ -758,69 +754,18 @@ final class Translator(g: PropertyGraph, params: Map[String, Any] = Map.empty,
     Some((outer.select(cols.map(col).toSeq: _*).distinct(), seedVars))
   }
 
-  /** (variable, property) pairs an expression reads via `v.k`. */
-  private def propRefs(e: Expr): Set[(String, String)] = e match {
-    case Prop(v, k) => Set((v, k))
-    case Bin(_, l, r) => propRefs(l) ++ propRefs(r)
-    case Not(x) => propRefs(x)
-    case IsNull(x, _) => propRefs(x)
-    case StrPred(_, l, r) => propRefs(l) ++ propRefs(r)
-    case InList(x, l) => propRefs(x) ++ propRefs(l)
-    case Fn(_, args, _) => args.flatMap(propRefs).toSet
-    case CaseExpr(s, bs, d) =>
-      (s.toSeq ++ bs.flatMap(b => Seq(b._1, b._2)) ++ d.toSeq).flatMap(propRefs).toSet
-    case Index(l, i) => propRefs(l) ++ propRefs(i)
-    case Slice(l, f, t) => (Seq(l) ++ f ++ t).flatMap(propRefs).toSet
-    case LambdaPred(_, _, l, p) => propRefs(l) ++ propRefs(p)
-    case ReduceExpr(_, i, _, l, b) => propRefs(i) ++ propRefs(l) ++ propRefs(b)
-    case ListComp(_, l, p, b) =>
-      (Seq(l) ++ p.toSeq ++ b.toSeq).flatMap(propRefs).toSet
-    case ExistsPattern(ps, w) =>
-      (w.toSeq ++ ps.flatMap(p => p.nodes.flatMap(_.props.map(_._2)) ++
-        p.rels.flatMap(_.props.map(_._2)))).flatMap(propRefs).toSet
-    case PatternComp(p, w, pr) =>
-      (w.toSeq ++ Seq(pr) ++ p.nodes.flatMap(_.props.map(_._2)) ++
-        p.rels.flatMap(_.props.map(_._2))).flatMap(propRefs).toSet
-    case ListLit(items) => items.flatMap(propRefs).toSet
-    case MapLit(entries) => entries.flatMap(e => propRefs(e._2)).toSet
-    case _ => Set.empty
-  }
-
-  /** Variables an expression references BARE (not through `v.k`) — these
-    * may need any column (properties(v), v = other, collect(v), ...). */
-  private def bareVarRefs(e: Expr): Set[String] = e match {
-    case Var(n) => Set(n)
-    case Prop(_, _) => Set.empty
-    case Bin(_, l, r) => bareVarRefs(l) ++ bareVarRefs(r)
-    case Not(x) => bareVarRefs(x)
-    case IsNull(x, _) => bareVarRefs(x)
-    case StrPred(_, l, r) => bareVarRefs(l) ++ bareVarRefs(r)
-    case InList(x, l) => bareVarRefs(x) ++ bareVarRefs(l)
-    case Fn(_, args, _) => args.flatMap(bareVarRefs).toSet
-    case CaseExpr(s, bs, d) =>
-      (s.toSeq ++ bs.flatMap(b => Seq(b._1, b._2)) ++ d.toSeq).flatMap(bareVarRefs).toSet
-    case Index(l, i) => bareVarRefs(l) ++ bareVarRefs(i)
-    case Slice(l, f, t) => (Seq(l) ++ f ++ t).flatMap(bareVarRefs).toSet
-    case LambdaPred(_, v, l, p) => (bareVarRefs(l) ++ bareVarRefs(p)) - v
-    case ReduceExpr(a, i, v, l, b) =>
-      (bareVarRefs(i) ++ bareVarRefs(l) ++ bareVarRefs(b)) - a - v
-    case ListComp(v, l, p, b) =>
-      (bareVarRefs(l) ++ p.toSeq.flatMap(bareVarRefs) ++
-        b.toSeq.flatMap(bareVarRefs)) - v
-    case ExistsPattern(ps, w) =>
-      (w.toSeq ++ ps.flatMap(p => p.nodes.flatMap(_.props.map(_._2)) ++
-        p.rels.flatMap(_.props.map(_._2)))).flatMap(bareVarRefs).toSet
-    case PatternComp(p, w, pr) =>
-      (w.toSeq ++ Seq(pr) ++ p.nodes.flatMap(_.props.map(_._2)) ++
-        p.rels.flatMap(_.props.map(_._2))).flatMap(bareVarRefs).toSet
-    case ListLit(items) => items.flatMap(bareVarRefs).toSet
-    case MapLit(entries) => entries.flatMap(e => bareVarRefs(e._2)).toSet
-    case _ => Set.empty
-  }
-
+  /** Lower every EXISTS / pattern comprehension in `e` to a joined column
+    * of `df0`, wherever it sits. One inside a lambda is lowered when it
+    * does not mention a lambda-bound name (`bound`); one that does is left
+    * in place, and toCol rejects it. */
   private def lowerExists(df0: DataFrame, e: Expr): (DataFrame, Expr) = {
     var df = df0
-    def walk(x: Expr): Expr = x match {
+    def mentions(x: Expr, paths: Seq[PathPat], names: Set[String]): Boolean =
+      (paths.flatMap(p => p.nodes.flatMap(_.variable) ++ p.rels.flatMap(_.variable) ++
+        p.pathVar) ++ bareVarRefs(x) ++ propRefs(x).map(_._1)).exists(names)
+    def walk(bound: Set[String])(x: Expr): Expr = x match {
+      case ExistsPattern(paths, _) if mentions(x, paths, bound) => x
+      case PatternComp(path, _, _) if mentions(x, Seq(path), bound) => x
       case ExistsPattern(paths, where) =>
         existsCount += 1
         val flag = s"__exists_$existsCount"
@@ -886,19 +831,9 @@ final class Translator(g: PropertyGraph, params: Map[String, Any] = Map.empty,
           scalarVars += listName
           Var(listName)
         }
-      case Bin(op, l, r) => Bin(op, walk(l), walk(r))
-      case Not(y) => Not(walk(y))
-      case IsNull(y, n) => IsNull(walk(y), n)
-      case StrPred(op, l, r) => StrPred(op, walk(l), walk(r))
-      case InList(i, l) => InList(walk(i), walk(l))
-      case Fn(n, args, d) => Fn(n, args.map(walk), d)
-      case Index(l, i) => Index(walk(l), walk(i))
-      case Slice(l, f, t) => Slice(walk(l), f.map(walk), t.map(walk))
-      case CaseExpr(s, bs, d) =>
-        CaseExpr(s.map(walk), bs.map(b => (walk(b._1), walk(b._2))), d.map(walk))
-      case other => other
+      case other => mapChildren(other)(walk(bound ++ binds(other)))
     }
-    val rewritten = walk(e)
+    val rewritten = walk(Set.empty)(e)
     (df, rewritten)
   }
 
@@ -922,35 +857,6 @@ final class Translator(g: PropertyGraph, params: Map[String, Any] = Map.empty,
   private def conjuncts(e: Expr): Seq[Expr] = e match {
     case Bin("AND", l, r) => conjuncts(l) ++ conjuncts(r)
     case x => Seq(x)
-  }
-
-  /** Free variables of an expression (lambda-bound names excluded);
-    * EXISTS subqueries are marked non-pushable. */
-  /** Variables an expression references (for the write path's RETURN
-    * projection: which matched entities must be pinned and re-read). */
-  private[cypher] def referencedVars(e: Expr): Set[String] = refVars(e)
-
-  private def refVars(e: Expr): Set[String] = e match {
-    case Var(n) => Set(n)
-    case Prop(v, _) => Set(v)
-    case Bin(_, l, r) => refVars(l) ++ refVars(r)
-    case Not(x) => refVars(x)
-    case IsNull(x, _) => refVars(x)
-    case StrPred(_, l, r) => refVars(l) ++ refVars(r)
-    case InList(x, l) => refVars(x) ++ refVars(l)
-    case Fn(_, args, _) => args.flatMap(refVars).toSet
-    case CaseExpr(s, bs, d) =>
-      (s.toSeq ++ bs.flatMap(b => Seq(b._1, b._2)) ++ d.toSeq).flatMap(refVars).toSet
-    case Index(l, i) => refVars(l) ++ refVars(i)
-    case Slice(l, f, t) => (Seq(l) ++ f ++ t).flatMap(refVars).toSet
-    case LambdaPred(_, v, l, p) => (refVars(l) ++ refVars(p)) - v
-    case ReduceExpr(a, i, v, l, b) => (refVars(i) ++ refVars(l) ++ refVars(b)) - a - v
-    case ListComp(v, l, p, b) =>
-      (refVars(l) ++ p.toSeq.flatMap(refVars) ++ b.toSeq.flatMap(refVars)) - v
-    case ExistsPattern(_, _) => Set("__nonpushable")
-    case PatternComp(_, _, _) => Set("__nonpushable")
-    case ListLit(items) => items.flatMap(refVars).toSet
-    case _ => Set.empty
   }
 
   /** Single-variable WHERE conjuncts, keyed by that variable — these are
@@ -1037,124 +943,42 @@ final class Translator(g: PropertyGraph, params: Map[String, Any] = Map.empty,
     cost
   }
 
-  /** @param seed outer frame to expand FROM instead of a fresh scan: when
-    *   the path's head variable (after orientation) is bound in the seed,
-    *   the translation starts from the seed rows — hops landing on other
-    *   seeded variables lower as ExpandInto / WCO cycle-close instead of
-    *   re-scanning and exploding. Used by EXISTS / pattern-comprehension
-    *   lowering, where translating the subquery unseeded materializes the
-    *   full unanchored pattern (reference plans the correlated subquery
-    *   from its bound columns for the same reason, `executor/mod.rs`
-    *   semi-join selection). */
   /** Set by translatePath: whether the most recent translateClause call
     * consumed its seed frame (so the caller must NOT join the result back —
     * it already contains the outer columns). Single-threaded translator. */
   private var seedConsumed = false
 
+  /** Lower one linear path, hop by hop.
+    *
+    * @param seed outer frame to expand FROM instead of a fresh scan: when
+    *   the path's head variable (after orientation) is bound in the seed,
+    *   the translation starts from the seed rows, which carry `v__*` columns
+    *   for every seeded variable, so hops landing on other seeded variables
+    *   lower as ExpandInto / WCO cycle-close instead of re-scanning and
+    *   exploding. Used by EXISTS / pattern-comprehension lowering and by a
+    *   subsequent MATCH, where translating the pattern unseeded
+    *   materializes the full unanchored pattern (the reference plans the
+    *   correlated subquery from its bound columns for the same reason,
+    *   `executor/mod.rs` semi-join selection). When the head is not
+    *   bindable, the path lowers standalone and the caller's
+    *   join-on-shared-vars restores correctness. */
   private def translatePath(path0: PathPat,
                             seed: Option[(DataFrame, Set[String])] = None)
       : (DataFrame, Set[String], Set[String]) = {
-    (if (Translator.seedingEnabled) seed else None) match {
-      case Some((sdf, svars)) =>
-        val headSeeded = path0.nodes.head.variable.exists(svars.contains)
-        val lastSeeded = path0.nodes.last.variable.exists(svars.contains)
-        val canReverse = path0.rels.forall(!_.isVarLength) && path0.pathVar.isEmpty
-        val path = if (!headSeeded && lastSeeded && canReverse) reversePath(path0) else path0
-        if (path.nodes.head.variable.exists(svars.contains)) {
-          seedConsumed = true
-          return translatePathSeeded(path, sdf, svars)
-        }
-        // head not bindable to the seed: fall through to the standalone
-        // lowering (the caller's join-on-shared-vars restores correctness)
-      case None =>
+    val seeded = seed.flatMap { case (sdf, svars) =>
+      val headSeeded = path0.nodes.head.variable.exists(svars.contains)
+      val lastSeeded = path0.nodes.last.variable.exists(svars.contains)
+      val canReverse = path0.rels.forall(!_.isVarLength) && path0.pathVar.isEmpty
+      val path = if (!headSeeded && lastSeeded && canReverse) reversePath(path0) else path0
+      if (path.nodes.head.variable.exists(svars.contains)) Some((path, sdf, svars)) else None
     }
-    translatePathStandalone(path0)
-  }
-
-  /** Seeded variant: start from the seed frame's rows (which carry
-    * `v__*` columns for every seeded variable) and expand hop by hop with
-    * every seeded variable pre-bound. Pattern constraints written on a
-    * seeded variable's node are applied as a semi-join on its id. */
-  private def translatePathSeeded(path: PathPat, sdf: DataFrame,
-                                  svars: Set[String])
-      : (DataFrame, Set[String], Set[String]) = {
-    var df = sdf
-    // label/property constraints on seeded nodes: existence check by id
-    for (n <- path.nodes; v <- n.variable if svars.contains(v) &&
-         (n.labels.nonEmpty || n.props.nonEmpty)) {
-      val chk = scanNode(n, v).select(col(s"${v}__id").as("__seed_chk"))
-      df = df.join(chk, col(s"${v}__id") === col("__seed_chk"), "left_semi")
-    }
-    val headVar = path.nodes.head.variable.get
-    var vars = svars
-    var cur = headVar
-    var nodeVarsInOrder = Seq(headVar)
-    var edgeVarsInOrder = Seq.empty[String]
-    val hops = path.rels.zip(path.nodes.tail)
-    var i = 0
-    while (i < hops.length) {
-      val (rel, node) = hops(i)
-      val tgtVar = node.variable.getOrElse(fresh())
-      val relVar = rel.variable.getOrElse(fresh())
-      val fuseNext: Option[(RelPat, String)] =
-        if (i + 1 < hops.length && !rel.isVarLength && rel.variable.isEmpty &&
-            path.pathVar.isEmpty && !vars.contains(tgtVar)) {
-          val (relB, nodeB) = hops(i + 1)
-          nodeB.variable match {
-            // seeded frames are already bound pairs, so fusing is the
-            // default; keep only the hub-degree memory guard (the fused
-            // plan holds one adjacency array per key in executor memory)
-            case Some(z) if vars.contains(z) && !relB.isVarLength &&
-              relB.variable.isEmpty && z != tgtVar &&
-              stats.forall(st => st.maxDegree(rel.types) <= 4e6 &&
-                st.maxDegree(relB.types) <= 4e6) =>
-              Some((relB, z))
-            case _ => None
-          }
-        } else None
-      fuseNext match {
-        case Some((relB, closeVar)) =>
-          df = expandCycleClose(df, cur, rel, node, tgtVar, relB, closeVar)
-          vars += tgtVar
-          nodeVarsInOrder ++= Seq(tgtVar, closeVar)
-          edgeVarsInOrder ++= Seq(relVar, fresh())
-          cur = closeVar
-          i += 2
-        case None =>
-          df =
-            if (rel.isVarLength)
-              expandVarLength(df, cur, rel, node, tgtVar, vars, path.pathVar,
-                path.allPaths, path.shortest)
-            else expandOne(df, cur, rel, node, tgtVar, vars, relVar,
-              keepEdgeId = path.pathVar.isDefined)
-          rel.variable.foreach { v => vars += v; edgeEntityVars += v }
-          vars += tgtVar
-          nodeVarsInOrder :+= tgtVar
-          edgeVarsInOrder :+= relVar
-          cur = tgtVar
-          i += 1
-      }
-    }
-    var pset = Set.empty[String]
-    path.pathVar.foreach { p =>
-      pset += p
-      if (path.rels.forall(!_.isVarLength)) {
-        df = df.withColumn(s"${p}__length", lit(path.rels.length))
-          .withColumn(s"${p}__nodes", array(nodeVarsInOrder.map(v => col(s"${v}__id")): _*))
-          .withColumn(s"${p}__edges", array(edgeVarsInOrder.map(v => col(s"${v}__id")): _*))
-      }
-    }
-    (df, vars, pset)
-  }
-
-  private def translatePathStandalone(path0: PathPat): (DataFrame, Set[String], Set[String]) = {
     // anchor selection (reference plan_enumerator.rs:18-64 — SURVEY §4.1
     // "the single most important planning decision"): with a stats catalog,
     // cost both orientations from the (label, type, label) triple counts
     // and expand from the cheaper end; without stats, fall back to the
     // "prefer the selective end" syntactic heuristic. Var-length and named
     // paths keep their written orientation (hop semantics are directional).
-    val path = {
+    def anchored: PathPat = {
       def selective(n: NodePat) = n.labels.nonEmpty || n.props.nonEmpty
       val eligible = path0.nodes.nonEmpty && path0.rels.nonEmpty &&
         path0.rels.forall(!_.isVarLength) && path0.pathVar.isEmpty
@@ -1170,10 +994,22 @@ final class Translator(g: PropertyGraph, params: Map[String, Any] = Map.empty,
           else path0
       }
     }
-
+    val path = seeded.fold(anchored)(_._1)
     val headVar = path.nodes.head.variable.getOrElse(fresh())
-    var df = scanNode(path.nodes.head, headVar)
-    var vars = Set(headVar)
+    var (df, vars) = seeded match {
+      case Some((_, sdf, svars)) =>
+        seedConsumed = true
+        // label/property constraints on seeded nodes: existence check by id
+        val checked = path.nodes.foldLeft(sdf) { (d, n) =>
+          n.variable.filter(v => svars.contains(v) && (n.labels.nonEmpty || n.props.nonEmpty))
+            .fold(d) { v =>
+              val chk = scanNode(n, v).select(col(s"${v}__id").as("__seed_chk"))
+              d.join(chk, col(s"${v}__id") === col("__seed_chk"), "left_semi")
+            }
+        }
+        (checked, svars)
+      case None => (scanNode(path.nodes.head, headVar), Set(headVar))
+    }
     var cur = headVar
     // the variables ACTUALLY bound per node position, in path order —
     // anonymous nodes get their fresh() name recorded here so a named
@@ -1185,31 +1021,31 @@ final class Translator(g: PropertyGraph, params: Map[String, Any] = Map.empty,
     // plan's wedge intermediate (rows x fan-out of the wedge hop) for two
     // O(m) adjacency aggregates plus two output-proportional back-joins —
     // a constant overhead that only pays off when the wedge hop actually
-    // fans out. With triple stats, fuse iff the hop's average out-degree
-    // clears the breakeven (~4); without stats, fuse — the downside of a
-    // needless fusion is a bounded constant factor, the downside of a
-    // missed fusion grows with the square of the hub degree.
-    def fuseBeneficial(i: Int): Boolean = stats match {
-      case Some(st) =>
-        val src = path.nodes(i); val mid = path.nodes(i + 1)
-        val rel = path.rels(i)
-        val hopEdges = rel.dir match {
-          case Out => st.tripleCard(src.labels.headOption, rel.types, mid.labels.headOption)
-          case In => st.tripleCard(mid.labels.headOption, rel.types, src.labels.headOption)
-          case Undirected =>
-            st.tripleCard(src.labels.headOption, rel.types, mid.labels.headOption) +
-              st.tripleCard(mid.labels.headOption, rel.types, src.labels.headOption)
-        }
-        // skew guard: the fused plan holds one adjacency array per key in
-        // executor memory, so an extreme hub (beyond ~4M neighbors, ~32 MB
-        // of packed longs) must stay on the streaming binary-join path —
-        // the same reason the reference's leapfrog streams sorted adjacency
-        // instead of materializing it
-        val degCap = 4e6
-        val relB = path.rels(i + 1)
-        hopEdges / math.max(1.0, st.nodeCard(src.labels.headOption)) >= 4.0 &&
-          st.maxDegree(rel.types) <= degCap && st.maxDegree(relB.types) <= degCap
-      case None => true
+    // fans out. With triple stats, a standalone path fuses iff the hop's
+    // average out-degree clears the breakeven (~4); a seeded frame is
+    // already bound pairs, so it fuses by default. Without stats, fuse —
+    // the downside of a needless fusion is a bounded constant factor, the
+    // downside of a missed fusion grows with the square of the hub degree.
+    def fuseBeneficial(i: Int): Boolean = stats.forall { st =>
+      val src = path.nodes(i); val mid = path.nodes(i + 1)
+      val rel = path.rels(i)
+      def hopEdges = rel.dir match {
+        case Out => st.tripleCard(src.labels.headOption, rel.types, mid.labels.headOption)
+        case In => st.tripleCard(mid.labels.headOption, rel.types, src.labels.headOption)
+        case Undirected =>
+          st.tripleCard(src.labels.headOption, rel.types, mid.labels.headOption) +
+            st.tripleCard(mid.labels.headOption, rel.types, src.labels.headOption)
+      }
+      // skew guard: the fused plan holds one adjacency array per key in
+      // executor memory, so an extreme hub (beyond ~4M neighbors, ~32 MB
+      // of packed longs) must stay on the streaming binary-join path —
+      // the same reason the reference's leapfrog streams sorted adjacency
+      // instead of materializing it
+      val degCap = 4e6
+      val relB = path.rels(i + 1)
+      (seeded.isDefined ||
+        hopEdges / math.max(1.0, st.nodeCard(src.labels.headOption)) >= 4.0) &&
+        st.maxDegree(rel.types) <= degCap && st.maxDegree(relB.types) <= degCap
     }
     var i = 0
     while (i < hops.length) {
@@ -1576,7 +1412,25 @@ final class Translator(g: PropertyGraph, params: Map[String, Any] = Map.empty,
     case PatternComp(_, _, _) =>
       throw new IllegalArgumentException(
         "pattern comprehensions are supported in WHERE / WITH / RETURN items (not nested inside another pattern comprehension)")
-    case Fn(name, args, _) => scalarFn(name.toLowerCase, args, toCol)
+    case Fn(name, args, distinct) if AggregateFns.contains(name.toLowerCase) =>
+      name.toLowerCase match {
+        case "count" =>
+          if (args.isEmpty) count(lit(1))
+          else if (distinct) countDistinct(toCol(args.head))
+          else count(toCol(args.head))
+        case "sum" => sum(toCol(args.head))
+        case "avg" => avg(toCol(args.head))
+        case "min" => min(toCol(args.head))
+        case "max" => max(toCol(args.head))
+        case "collect" =>
+          if (distinct) sort_array(collect_set(toCol(args.head)))
+          else collect_list(toCol(args.head))
+        case "stdev" => stddev_samp(toCol(args.head))
+        case "stdevp" => stddev_pop(toCol(args.head))
+        case "percentilecont" => percentile(toCol(args.head), toCol(args(1)))
+        case "percentiledisc" => CypherFunctions.percentileDisc(toCol(args.head), toCol(args(1)))
+      }
+    case Fn(name, args, _) => scalarFn(name.toLowerCase, args)
   }
 
   private def withLambda(name: String, c: Column)(body: => Column): Column = {
@@ -1592,10 +1446,8 @@ final class Translator(g: PropertyGraph, params: Map[String, Any] = Map.empty,
 
   /** Scalar function registry — Cypher surface from the reference's
     * eval_function (`operator.rs:838-1824`) mapped onto CypherFunctions /
-    * built-ins. `tr` translates argument expressions (toCol normally;
-    * toAggCol when the call wraps an aggregate, e.g. round(sum(x), 2)). */
-  private def scalarFn(name: String, args: Seq[Expr], tr: Expr => Column): Column = {
-    def toCol(e: Expr): Column = tr(e)
+    * built-ins. */
+  private def scalarFn(name: String, args: Seq[Expr]): Column = {
     def a0 = toCol(args(0)); def a1 = toCol(args(1))
     name match {
       case "id" => args.head match {
@@ -1784,38 +1636,6 @@ final class Translator(g: PropertyGraph, params: Map[String, Any] = Map.empty,
     def g(i: Int) = Option(m.group(i)).getOrElse("0")
     s"${g(1)} ${g(2)}:${g(3)}:${g(4)}".trim + " DAY TO SECOND"
   }
-
-  private def toAggCol(e: Expr): Column = e match {
-    case Fn(name, args, distinct) if AggregateFns.contains(name.toLowerCase) =>
-      val n = name.toLowerCase
-      n match {
-        case "count" =>
-          if (args.isEmpty) count(lit(1))
-          else if (distinct) countDistinct(toCol(args.head))
-          else count(toCol(args.head))
-        case "sum" => sum(toCol(args.head))
-        case "avg" => avg(toCol(args.head))
-        case "min" => min(toCol(args.head))
-        case "max" => max(toCol(args.head))
-        case "collect" =>
-          if (distinct) sort_array(collect_set(toCol(args.head)))
-          else collect_list(toCol(args.head))
-        case "stdev" => stddev_samp(toCol(args.head))
-        case "stdevp" => stddev_pop(toCol(args.head))
-        case "percentilecont" => percentile(toCol(args.head), toCol(args(1)))
-        case "percentiledisc" => CypherFunctions.percentileDisc(toCol(args.head), toCol(args(1)))
-      }
-    case Fn(name, args, _) if !AggregateFns.contains(name.toLowerCase) =>
-      scalarFn(name.toLowerCase, args, toAggCol) // e.g. round(sum(x), 2)
-    case Bin(op, l, r) =>
-      val (a, b) = (toAggCol(l), toAggCol(r))
-      op match {
-        case "+" => a + b; case "-" => a - b; case "*" => a * b
-        case "/" => a / b; case "%" => a % b
-        case _ => toCol(e)
-      }
-    case other => toCol(other) // grouping-key expr nested inside agg item
-  }
 }
 
 /** Public entry: `QueryEngine.execute(cypher, graph[, params])` — parse +
@@ -1955,13 +1775,4 @@ object QueryEngine {
       s"AST: $ast\n\n${df.queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))}"
     }
   }
-}
-
-object Translator {
-  /** Kill-switch for seeded correlated-pattern translation (EXISTS /
-    * pattern-comprehension / subsequent-MATCH seeding): set env
-    * GRAFT_DISABLE_SEED=1 to force the standalone-translate-then-join
-    * lowering everywhere. Operational guard + A/B lever for the sweep. */
-  private[cypher] val seedingEnabled: Boolean =
-    !sys.env.get("GRAFT_DISABLE_SEED").exists(v => v == "1" || v.equalsIgnoreCase("true"))
 }

@@ -43,24 +43,12 @@ object WriteTranslator {
     }
 
   /** Substitute `Var(name)` with a literal throughout an expression tree —
-    * how FOREACH binds its loop variable per element. */
-  private def subst(e: Expr, name: String, value: Any): Expr = {
-    def s(x: Expr): Expr = x match {
-      case Var(`name`) => Lit(value)
-      case Bin(op, l, r) => Bin(op, s(l), s(r))
-      case Not(i) => Not(s(i))
-      case IsNull(i, n) => IsNull(s(i), n)
-      case StrPred(op, l, r) => StrPred(op, s(l), s(r))
-      case InList(i, l) => InList(s(i), s(l))
-      case Fn(n, args, d) => Fn(n, args.map(s), d)
-      case ListLit(items) => ListLit(items.map(s))
-      case CaseExpr(subj, br, els) =>
-        CaseExpr(subj.map(s), br.map { case (a, b) => (s(a), s(b)) }, els.map(s))
-      case Index(l, i) => Index(s(l), s(i))
-      case Slice(l, f, t) => Slice(s(l), f.map(s), t.map(s))
-      case other => other // literals, params, props, nested scopes
-    }
-    s(e)
+    * how FOREACH binds its loop variable per element. A lambda that binds
+    * the same name shadows it: nothing under that lambda is substituted. */
+  private def subst(e: Expr, name: String, value: Any): Expr = e match {
+    case Var(`name`) => Lit(value)
+    case _ if binds(e).contains(name) => e
+    case _ => mapChildren(e)(subst(_, name, value))
   }
 
   private def substClause(c: Clause, name: String, value: Any): Clause = c match {
@@ -192,9 +180,8 @@ object WriteTranslator {
     def mutatedReturn(cur: PropertyGraph): Option[DataFrame] =
       if (ret.items.isEmpty) None
       else {
-        val tr = new Translator(cur, params)
         val vars = (ret.items.map(_.expr) ++ ret.orderBy.map(_.expr))
-          .flatMap(tr.referencedVars).toSet intersect (nodeVars ++ edgeVars)
+          .flatMap(refVars).toSet intersect (nodeVars ++ edgeVars)
         require(vars.nonEmpty, "RETURN after SET/REMOVE needs matched variables")
         val pin = readFrame(vars.toSeq.map(v =>
           ReturnItem(Fn("id", Seq(Var(v))), Some(s"__pin_$v"))))

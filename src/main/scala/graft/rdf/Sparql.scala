@@ -557,16 +557,16 @@ object Sparql {
       }
       var reach = e
       var frontier = e
-      var it = 0
+      // no round cap: each round adds only pairs not yet in reach, and
+      // reach is finite, so the loop ends on the first empty frontier
       var done = frontier.isEmpty
-      while (!done && it < 32) {
+      while (!done) {
         val next = frontier
           .join(e.select(col("s").as("_m"), col("o").as("_o2")), col("o") === col("_m"))
           .select(col("s"), col("_o2").as("o")).distinct()
           .join(reach, Seq("s", "o"), "left_anti").localCheckpoint(true)
         if (next.isEmpty) done = true
         else { reach = reach.unionAll(next).localCheckpoint(true); frontier = next }
-        it += 1
       }
       if (zero) {
         val nodes = triples.select(col("s"))

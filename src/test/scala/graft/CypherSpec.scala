@@ -90,6 +90,22 @@ class CypherSpec extends SparkSpec {
       "RETURN p.name AS name ORDER BY name")
       .as[String].collect().toSeq
     assert(r == Seq("Alice", "Carol"))
+    // inside list literals, list comprehensions and quantifiers too
+    val l = run("MATCH (p:Person) RETURN p.name AS name, " +
+      "[x IN [1] WHERE EXISTS { (p)-[:WORKS_AT]->(:Company) }] AS l, " +
+      "any(x IN [1, 2] WHERE x > 1 AND EXISTS { (p)-[:WORKS_AT]->(:Company) }) AS a, " +
+      "[EXISTS { (p)-[:WORKS_AT]->(:Company) }] AS e, " +
+      "[x IN [1] | size([(p)-[:KNOWS]->(b) | b.name])] AS k ORDER BY name")
+      .as[(String, Seq[Long], Boolean, Seq[Boolean], Seq[Int])].collect().toSeq
+    assert(l == Seq(
+      ("Alice", Seq(1L), true, Seq(true), Seq(2)),
+      ("Bob", Seq.empty, false, Seq(false), Seq(1)),
+      ("Carol", Seq(1L), true, Seq(true), Seq(0))))
+    // a subquery reading the lambda's own variable is still rejected
+    val e = intercept[IllegalArgumentException] {
+      run("MATCH (p:Person) RETURN [x IN [1] WHERE EXISTS { (p)-[:KNOWS]->(b) WHERE b.age > x }] AS l")
+    }
+    assert(e.getMessage.contains("only supported inside WHERE"))
   }
 
   test("NOT EXISTS subquery as anti-join") {
@@ -198,6 +214,27 @@ class CypherSpec extends SparkSpec {
     val r = run("MATCH (a:Person)-[:KNOWS]->(b) RETURN a.name AS name, count(b) AS n ORDER BY n DESC, name")
       .as[(String, Long)].collect().toSeq
     assert(r == Seq(("Alice", 2L), ("Bob", 1L)))
+    // an aggregate may nest inside any expression of its item
+    val bob = run("MATCH (a:Person {name: 'Bob'})-[:KNOWS]->(b) " +
+      "RETURN collect(b.name)[0] AS first, collect(b.name)[0..1] AS firsts")
+      .as[(String, Seq[String])].collect().toSeq
+    assert(bob == Seq(("Carol", Seq("Carol"))))
+    val w = run("MATCH (a:Person)-[:KNOWS]->(b) " +
+      "WITH a, collect(b.name)[0] AS first, collect(b.name)[0..1] AS firsts " +
+      "RETURN a.name AS name, first, size(firsts) AS n ORDER BY name")
+      .as[(String, String, Int)].collect().toSeq
+    assert(w.map(t => (t._1, t._3)) == Seq(("Alice", 1), ("Bob", 1)))
+    assert(Set("Bob", "Carol").contains(w.head._2) && w(1)._2 == "Carol")
+    val nested = run("MATCH (a:Person) RETURN [count(a), 1] AS l, " +
+      "count(a) IS NULL AS n, count(a) IN [3] AS i")
+      .as[(Seq[Long], Boolean, Boolean)].collect().toSeq
+    assert(nested == Seq((Seq(3L, 1L), false, true)))
+    val row = run("MATCH (a:Person) RETURN round(avg(a.age), 1) AS r, " +
+      "sum(a.age) / count(a) AS q, CASE WHEN count(a) > 1 THEN 'many' ELSE 'one' END AS c, " +
+      "NOT count(a) > 1 AS nc, head(collect(DISTINCT a.name)) AS hd, size(collect(a.name)) AS sz")
+      .collect().head
+    assert(row.getDouble(0) == 30.0 && row.getDouble(1) == 30.0 && row.getString(2) == "many")
+    assert(!row.getBoolean(3) && row.getString(4) == "Alice" && row.getInt(5) == 3)
   }
 
   test("multi-label scan") {
@@ -460,6 +497,8 @@ class CypherSpec extends SparkSpec {
     val p = run("MATCH (n:Person {name: 'Carol'}) RETURN n.age/2 AS h")
       .as[Long].head()
     assert(p == 17L) // age 35, integer division
+    val c = run("MATCH (a:Person) RETURN count(a) / 2 AS h").as[Long].head()
+    assert(c == 1L) // 3 persons: an integral aggregate divides as an integer too
   }
 
   test("numeric literal forms: scientific, leading-dot, != and ==") {

@@ -61,6 +61,15 @@ class ForeachSpec extends SparkSpec {
       "FOREACH (i IN [1, 2] | CREATE (:M {name: 'm'}))", fresh)
     assert(summary.collect()(0).getAs[Long]("nodes_created") == 2L)
     assert(g2.nodes.count() == 6L)
+    // the loop variable is substituted inside lambdas too, unless a lambda
+    // rebinds its name (shadowing)
+    val (g3, _) = QueryEngine.executeWrite(
+      "MATCH (n:P {name: 'a'}) FOREACH (x IN [1, 2] | SET n.v = [y IN [x] | y + 1], " +
+        "n.w = any(y IN [x] WHERE y > 1), n.s = [x IN [10] | x])", fresh)
+    val got = QueryEngine.execute(
+      "MATCH (n:P {name: 'a'}) RETURN n.v AS v, n.w AS w, n.s AS s", g3)
+      .as[(Seq[Long], Boolean, Seq[Long])].collect().toSeq
+    assert(got == Seq((Seq(3L), true, Seq(10L))))
   }
 
   test("FOREACH dynamic CREATE body is rejected with a clear error") {

@@ -188,16 +188,25 @@ class SparqlSpec extends SparkSpec {
     val qs = Seq(
       "SELECT ?s ?o WHERE { ?s gr:KNOWS+ ?o } ORDER BY ?s ?o",
       "SELECT ?s ?o WHERE { ?s gr:KNOWS* ?o . FILTER(?s = \"http://ex.org/node/1\") } ORDER BY ?s ?o")
-    qs.foreach { q =>
-      val local = Sparql.execute(prefixes + q, triples)
+    // a 40-node NEXT chain: p+ needs paths of up to 39 hops on both sides
+    val n = 40
+    val chain = Rdf.exportTriples(PropertyGraph(
+      (1 to n).map(i => (i.toLong, Seq("C"))).toDF("id", "labels"),
+      (1 until n).map(i => (1000L + i, i.toLong, i + 1L, "NEXT")).toDF("id", "src", "dst", "relationship")),
+      base).localCheckpoint(true)
+    val cases = qs.map((_, triples, 0)) :+
+      (("SELECT ?s ?o WHERE { ?s gr:NEXT+ ?o } ORDER BY ?s ?o", chain, n * (n - 1) / 2))
+    cases.foreach { case (q, data, expected) =>
+      val local = Sparql.execute(prefixes + q, data)
         .as[(String, String)].collect().toSeq
       spark.conf.set("spark.graft.sparql.closureLocalEdges", "0")
       try {
-        val dist = Sparql.execute(prefixes + q, triples)
+        val dist = Sparql.execute(prefixes + q, data)
           .as[(String, String)].collect().toSeq
         assert(local == dist,
           s"closure paths diverged across the threshold boundary for: $q\nlocal=$local\ndist=$dist")
         assert(local.nonEmpty, "vacuous boundary check")
+        if (expected > 0) assert(local.size == expected)
       } finally spark.conf.unset("spark.graft.sparql.closureLocalEdges")
     }
   }

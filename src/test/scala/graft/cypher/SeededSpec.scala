@@ -99,10 +99,12 @@ class SeededSpec extends SparkSpec {
   test("pattern comprehension multiplicity with a bound anchor") {
     val r = run(
       "MATCH (x:Person {name: 'b'}) " +
-        "RETURN x.name AS xn, size([(x)-[:KNOWS]->(z) | z.name]) AS n")
-      .as[(String, Long)].collect().toSeq
-    // b has TWO parallel KNOWS edges to c -> the comprehension has 2 items
-    assert(r == Seq(("b", 2L)))
+        "RETURN x.name AS xn, size([(x)-[:KNOWS]->(z) | z.name]) AS n, " +
+        "[k IN [1] | size([(x)-[:KNOWS]->(z) | z.name])] AS inLambda")
+      .as[(String, Long, Seq[Long])].collect().toSeq
+    // b has TWO parallel KNOWS edges to c -> the comprehension has 2 items,
+    // also when it sits inside a list comprehension
+    assert(r == Seq(("b", 2L, Seq(2L))))
   }
 
   test("EXISTS anchored on only one of several outer variables") {
