@@ -284,6 +284,13 @@ final class Translator(g: PropertyGraph, params: Map[String, Any] = Map.empty,
         if (df == null) { df = proc; scalarVars = df.columns.toSet }
         else { df = df.crossJoin(proc); scalarVars = scalarVars ++ proc.columns }
         c.where.foreach(w => df = applyWhere(df, w))
+
+      // WriteTranslator takes writes in the first query part only
+      case w @ (_: CreateClause | _: MergeClause | _: SetClause | _: RemoveClause |
+                _: DeleteClause | _: ForeachClause) =>
+        throw new IllegalArgumentException(
+          s"${w.getClass.getSimpleName.stripSuffix("Clause").toUpperCase} is not supported " +
+            "inside CALL { ... } or in a UNION part")
     }
 
     if (df == null) df = spark.range(1).toDF() // RETURN-only query
@@ -1408,10 +1415,12 @@ final class Translator(g: PropertyGraph, params: Map[String, Any] = Map.empty,
       c
     case ExistsPattern(_, _) =>
       throw new IllegalArgumentException(
-        "EXISTS { pattern } is only supported inside WHERE")
+        "EXISTS { pattern } cannot read a list-comprehension, quantifier or reduce " +
+          "variable, nor sit in a pattern comprehension's projection")
     case PatternComp(_, _, _) =>
       throw new IllegalArgumentException(
-        "pattern comprehensions are supported in WHERE / WITH / RETURN items (not nested inside another pattern comprehension)")
+        "a pattern comprehension cannot read a list-comprehension, quantifier or " +
+          "reduce variable, nor sit in another pattern comprehension's projection")
     case Fn(name, args, distinct) if AggregateFns.contains(name.toLowerCase) =>
       name.toLowerCase match {
         case "count" =>

@@ -335,25 +335,18 @@ object Dedup {
     * pairs; the full cross join never happens. */
   def embeddingNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
                             threshold: Double, lshBits: Int = 0, dim0: Int = 0,
-                            seed: Long = 42L, lshTables: Int = 1): DataFrame = {
-    val dim = if (dim0 > 0) dim0 else VectorSearch.detectDim(emb, vecCol)
-    // pre-normalize each side ONCE (unrolled codegen'd norm) so the pair
-    // condition is a single dot product, not dot + two norms
+                            seed: Long = 42L, lshTables: Int = 1): DataFrame =
     if (lshBits <= 0) {
-        val a = emb.select(col(idCol).as("i"), col(vecCol).as("va"),
-          VectorSearch.l2Norm(col(vecCol), dim).as("na"))
-        val b = emb.select(col(idCol).as("j"), col(vecCol).as("vb"),
-          VectorSearch.l2Norm(col(vecCol), dim).as("nb"))
-        a.join(b, col("i") < col("j"))
-          .select(col("i"), col("j"),
-            (VectorSearch.dot(col("va"), col("vb"), dim) / (col("na") * col("nb"))).as("cosine"))
-          .filter(col("cosine") >= threshold)
+      emb.select(col(idCol).as("i"), col(vecCol).as("va"))
+        .join(emb.select(col(idCol).as("j"), col(vecCol).as("vb")), col("i") < col("j"))
+        .select(col("i"), col("j"), VectorSearch.cosine(col("va"), col("vb")).as("cosine"))
+        .filter(col("cosine") >= threshold)
     } else {
-        val withB = embeddingBuckets(emb, idCol, vecCol, lshBits, dim, seed,
-          lshTables).localCheckpoint(true)
-        embeddingNearDupPairsFromBuckets(withB, idCol, vecCol, threshold, dim)
+      val dim = if (dim0 > 0) dim0 else VectorSearch.detectDim(emb, vecCol)
+      val withB = embeddingBuckets(emb, idCol, vecCol, lshBits, dim, seed,
+        lshTables).localCheckpoint(true)
+      embeddingNearDupPairsFromBuckets(withB, idCol, vecCol, threshold, dim)
     }
-  }
 
   /** Corpus-size-adaptive sign-LSH sizing: (bits, tables) for a corpus of
     * `n` vectors targeting per-pair miss ≤ `targetMiss` at cosine
@@ -412,11 +405,9 @@ object Dedup {
     * VectorIndexManager persists its index the same way).
     *
     * Implemented as a typed kernel: tables×bits plane dots per row are a
-    * dense matrix multiply — as Catalyst HOF expressions they run
-    * interpreted per element (~tables×bits×dim boxed ops per row; this WAS
-    * the operator's bottleneck), as a primitive loop they are microseconds
-    * per row. Vector values widen float→double and the norm accumulates
-    * left-to-right, matching the Catalyst path. */
+    * dense matrix multiply, a primitive loop ([[VectorSearch.planeBits]])
+    * of microseconds per row. Vector values widen float→double and the
+    * norm accumulates left-to-right, matching `graft_dot`. */
   def embeddingBuckets(emb: DataFrame, idCol: String, vecCol: String,
                        lshBits: Int, dim0: Int = 0, seed: Long = 42L,
                        lshTables: Int = 1): DataFrame = {
@@ -431,20 +422,9 @@ object Dedup {
       .as[(Long, Seq[Double])]
       .map { case (id, vSeq) =>
         val v = vSeq.toArray
-        var s = 0.0; var k = 0
-        while (k < v.length) { s += v(k) * v(k); k += 1 }
-        val tbs = bc.value.iterator.zipWithIndex.map { case (planes, t) =>
-          var b = 0L; var i = 0
-          while (i < planes.length) {
-            val p = planes(i)
-            var d = 0.0; var k2 = 0
-            while (k2 < p.length) { d += p(k2) * v(k2); k2 += 1 }
-            if (d >= 0) b |= (1L << i)
-            i += 1
-          }
-          (t, b)
-        }.toSeq
-        (id, vSeq, math.sqrt(s), tbs)
+        val tbs = bc.value.iterator.zipWithIndex
+          .map { case (planes, t) => (t, VectorSearch.planeBits(v, planes)) }.toSeq
+        (id, vSeq, math.sqrt(VectorSearch.arrayDot(v, v)), tbs)
       }
       .toDF(idCol, vecCol, "_n", "_tbs")
   }
@@ -471,9 +451,8 @@ object Dedup {
         // Exact re-rank as a typed kernel over a broadcast id→(vector, norm)
         // map: the corpus-vector side is the build side a stats-aware planner
         // would broadcast anyway (n·d·8 B — the same memory class as a
-        // broadcast-hash-join table), and a primitive-loop dot is ~50× faster
-        // per candidate than a dim-term codegen expression tree. Past the
-        // broadcast budget, fall back to shuffle joins + expression dot.
+        // broadcast-hash-join table). Past the broadcast budget, fall back
+        // to shuffle joins + the column cosine.
         val nRows = withB.count()
         if (nRows * dim <= 6L * 1000 * 1000) { // ~50 MB of doubles
           val vecMap: Map[Long, (Array[Double], Double)] = withB
@@ -485,9 +464,7 @@ object Dedup {
             .map { case (i, j) =>
               val (va, na) = bcV.value(i)
               val (vb, nb) = bcV.value(j)
-              var s = 0.0; var k = 0
-              while (k < va.length) { s += va(k) * vb(k); k += 1 }
-              (i, j, s / (na * nb))
+              (i, j, VectorSearch.arrayDot(va, vb) / (na * nb))
             }
             .toDF("i", "j", "cosine")
             .filter(col("cosine") >= threshold)
@@ -496,10 +473,9 @@ object Dedup {
           // big to broadcast — NO broadcast hints here: shuffle joins on the
           // candidate ids (AQE may still pick a broadcast if stats allow)
           cand
-            .join(withB.select(col(idCol).as("i"), col(vecCol).as("va"), col("_n").as("na")), Seq("i"))
-            .join(withB.select(col(idCol).as("j"), col(vecCol).as("vb"), col("_n").as("nb")), Seq("j"))
-            .select(col("i"), col("j"),
-              (VectorSearch.dot(col("va"), col("vb"), dim) / (col("na") * col("nb"))).as("cosine"))
+            .join(withB.select(col(idCol).as("i"), col(vecCol).as("va")), Seq("i"))
+            .join(withB.select(col(idCol).as("j"), col(vecCol).as("vb")), Seq("j"))
+            .select(col("i"), col("j"), VectorSearch.cosine(col("va"), col("vb")).as("cosine"))
             .filter(col("cosine") >= threshold)
         }
   }
@@ -538,11 +514,8 @@ object Dedup {
     pairs.flatMap { case (bx, rxS, by, ryS) =>
       val rx = rxS.iterator.map { case (i, v) => (i, v.toArray) }.toArray
       val ry = if (bx == by) rx else ryS.iterator.map { case (j, v) => (j, v.toArray) }.toArray
-      def norms(a: Array[(Long, Array[Double])]): Array[Double] = a.map { case (_, v) =>
-        var s = 0.0; var k = 0
-        while (k < v.length) { s += v(k) * v(k); k += 1 }
-        math.sqrt(s)
-      }
+      def norms(a: Array[(Long, Array[Double])]): Array[Double] =
+        a.map { case (_, v) => math.sqrt(VectorSearch.arrayDot(v, v)) }
       val nx = norms(rx)
       val ny = if (bx == by) nx else norms(ry)
       val out = Seq.newBuilder[(Long, Long, Double)]
@@ -553,9 +526,7 @@ object Dedup {
         while (b < ry.length) {
           val (jb, vb) = ry(b)
           if (bx != by || ia < jb) { // same-block pairs once; cross-block all
-            var s = 0.0; var k = 0
-            while (k < va.length) { s += va(k) * vb(k); k += 1 }
-            val cos = s / (nx(a) * ny(b))
+            val cos = VectorSearch.arrayDot(va, vb) / (nx(a) * ny(b))
             if (cos >= threshold) out += ((math.min(ia, jb), math.max(ia, jb), cos))
           }
           b += 1

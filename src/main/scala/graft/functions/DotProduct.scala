@@ -9,14 +9,16 @@ import org.apache.spark.sql.types._
   *
   * Why a custom Catalyst `Expression`: Spark's higher-order functions
   * (`zip_with` + `aggregate`) are CodegenFallback — interpreted per row,
-  * ~100× slower on the kNN hot path — and the repo's workaround (an
-  * unrolled `element_at` chain) only works when the dimension is known up
-  * front and builds a 2·dim-node expression tree per call. This expression
-  * is ONE tree node whose `doGenCode` emits a tight Java loop inside
-  * whole-stage codegen, for any dimension.
+  * ~100× slower on the kNN hot path — and an unrolled `element_at` chain
+  * only works when the dimension is known up front, builds a 2·dim-node
+  * expression tree per call and copies a literal operand into every term
+  * (a 64-d query made 1.4 MB task binaries). This expression is ONE tree
+  * node whose `doGenCode` emits a tight Java loop inside whole-stage
+  * codegen, for any dimension.
   *
-  * Semantics match the HOF/unrolled forms bit-for-bit: elements are cast
-  * to double and accumulated LEFT-TO-RIGHT in ascending index order (the
+  * On equal-length arrays the value matches both of those forms
+  * bit-for-bit (`DotProductSpec` keeps them as references): elements are
+  * cast to double and accumulated LEFT-TO-RIGHT in ascending index order (the
   * DuckDB oracles rely on that association), a null element or a length
   * mismatch yields null, and empty arrays dot to 0.0.
   *

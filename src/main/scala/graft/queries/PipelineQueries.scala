@@ -140,7 +140,7 @@ object PipelineQueries {
       val bucketed = VectorSearch.lshBucketed(emb, "vec_id", "embedding", dim,
         numBits = bits, numTables = tables)
       qs.map { case (qid, v) =>
-        VectorSearch.knnApproxBucketed(bucketed, "vec_id", "embedding", v, 1, dim,
+        VectorSearch.knnApproxBucketed(bucketed, "vec_id", "embedding", v, 1,
           numBits = bits, numTables = tables)
           .select(lit(qid).as("qid"), col("vec_id").as("id"),
             CypherFunctions.roundC(col("score"), 4).as("score"))

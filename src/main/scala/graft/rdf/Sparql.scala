@@ -46,6 +46,11 @@ object Sparql {
 
   private val RdfType = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
 
+  /** Edge budget of the driver-side closure in `p+` / `p*` (strings,
+    * ~10 MB); `spark.graft.algo.localSizeBytes=0` turns it off, as it does
+    * every small-input route. */
+  private val ClosureLocalEdges = 100000L
+
   private sealed trait Term
   private final case class V(name: String) extends Term
   /** Constant in full N-Triples term syntax (`<iri>` or `"lit"^^<t>`). */
@@ -523,15 +528,9 @@ object Sparql {
       // Thresholded driver fast-path (the maxFlow discipline,
       // Algorithms.scala): a small edge set pays ~2 Spark jobs per frontier
       // round in the distributed loop — 10-50x the actual closure work.
-      // Budget ≤ 100k edges (strings, ~10 MB); past it the distributed
-      // loop below is the only path that exists. The threshold reads from
-      // spark.graft.sparql.closureLocalEdges so SparqlSpec can pin BOTH
-      // paths on the same data (set 0 to force the distributed loop).
-      val nEdges = e.count()
-      val localMax = triples.sparkSession.conf
-        .get("spark.graft.sparql.closureLocalEdges", "100000").toLong
-      if (nEdges <= localMax) {
-        val spark = triples.sparkSession
+      // Past ClosureLocalEdges the distributed loop below is the only path.
+      val spark = triples.sparkSession
+      if (graft.algo.LocalKernels.localSizeBytes(spark) > 0 && e.count() <= ClosureLocalEdges) {
         val adj = new scala.collection.mutable.HashMap[String, List[String]]()
         e.collect().foreach { r =>
           val (s0, o0) = (r.getString(0), r.getString(1))

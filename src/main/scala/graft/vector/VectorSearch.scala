@@ -11,72 +11,51 @@ import org.apache.spark.sql.functions._
   *  - exact k-NN: a scan + top-k (TakeOrderedAndProject) — the oracle path;
   *  - approximate at scale: random-hyperplane LSH bucketing (cosine) so the
   *    candidate join touches a small fraction of the corpus, then exact
-  *    re-ranking. All similarity math is built-in higher-order functions
-  *    (`zip_with`/`aggregate`) — codegen'd, no UDFs, column-prunable.
+  *    re-ranking.
+  *
+  * Every column dot product is the native `graft_dot` expression
+  * ([[graft.functions.DotProduct]]): one codegen'd tree node for any
+  * dimension, installed by [[graft.GraftExtensions]] on every
+  * [[graft.GraftSession]]. A session built without those extensions fails
+  * at analysis with an unresolved `graft_dot`. The typed kernels share the
+  * array primitives [[arrayDot]], [[planeBits]] and [[lloyd]].
   */
 object VectorSearch {
 
-  /** dot(a,b) in double precision over array<float/double> columns.
-    *
-    * HOF form (`aggregate`/`zip_with`) — correct for any dim, but Spark HOFs
-    * are CodegenFallback (interpreted per row, per element). Use the
-    * `dot(a,b,dim)` overload in anything hot. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
-  /** Unrolled fixed-dimension dot product: a flat codegen'd expression of
-    * `element_at` products (same left-to-right summation order as the HOF
-    * form and the DuckDB oracle, so doubles match bit-for-bit). ~100×
-    * faster than the interpreted HOF path. */
-  def dot(a: Column, b: Column, dim: Int): Column =
-    (1 to dim).map(i =>
-      element_at(a, i).cast("double") * element_at(b, i).cast("double"))
-      .reduce(_ + _)
+  /** dot(a,b) in double precision over numeric array columns: elements
+    * widen to double and accumulate left-to-right (the DuckDB oracles'
+    * association); a null element or a length mismatch gives null. */
+  def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
-  def l2Norm(a: Column, dim: Int): Column = sqrt(dot(a, a, dim))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2Norm(a) * l2Norm(b))
-  def cosine(a: Column, b: Column, dim: Int): Column =
-    dot(a, b, dim) / (l2Norm(a, dim) * l2Norm(b, dim))
 
-  /** Cosine via the NATIVE `graft_dot` Catalyst expression when
-    * [[graft.GraftExtensions]] is on the session: one tree node whose
-    * codegen is a tight loop, any dimension, same left-to-right double
-    * accumulation as the unrolled form — bit-identical results. The
-    * fallback guards the unrolled expression with a both-sizes-equal-`dim`
-    * check so ragged vectors null out on BOTH paths (the HOF `zip_with`
-    * semantics) instead of an over-long vector scoring by its first `dim`
-    * elements only when the extension is absent; a pair of equal-length
-    * vectors of some OTHER dimension scores on the native path and nulls
-    * (conservatively) on the fallback. `dim` is evaluated only on the
-    * fallback, so a caller can pass [[detectDim]]'s job by name. */
-  def cosineBest(spark: org.apache.spark.sql.SparkSession,
-                 a: Column, b: Column, dim: => Int): Column =
-    if (spark.catalog.functionExists("graft_dot"))
-      call_function("graft_dot", a, b) /
-        (sqrt(call_function("graft_dot", a, a)) *
-         sqrt(call_function("graft_dot", b, b)))
-    else { val d = dim; when(size(a) === size(b) && size(a) === d, cosine(a, b, d)) }
-
-  /** Element count of the vector column, from one row (for picking the
-    * unrolled codegen path). */
+  /** Element count of the vector column, from one row — for what needs the
+    * dimension up front (LSH hyperplanes, the broadcast budget). */
   def detectDim(df: DataFrame, vecCol: String): Int = {
     val r = df.select(size(col(vecCol))).limit(1).collect()
     if (r.isEmpty) 0 else r(0).getInt(0)
   }
 
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(aggregate(zip_with(a, b, (x, y) => {
-      val d = x.cast("double") - y.cast("double"); d * d
-    }), lit(0.0), (acc, x) => acc + x))
+  /** The typed kernels' dot product: `a(k) * b(k)` summed left-to-right
+    * over `a`'s length, the same order as `graft_dot`. */
+  def arrayDot(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0; var k = 0
+    while (k < a.length) { s += a(k) * b(k); k += 1 }
+    s
+  }
 
-  def l2Distance(a: Column, b: Column, dim: Int): Column =
-    sqrt((1 to dim).map { i =>
-      val d = element_at(a, i).cast("double") - element_at(b, i).cast("double")
-      d * d
-    }.reduce(_ + _))
+  /** Sign-LSH code of `v` under one table of hyperplanes: bit i is set iff
+    * `planes(i) · v >= 0`. */
+  def planeBits(v: Array[Double], planes: Array[Array[Double]]): Long = {
+    var b = 0L; var i = 0
+    while (i < planes.length) {
+      if (arrayDot(planes(i), v) >= 0) b |= 1L << i
+      i += 1
+    }
+    b
+  }
 
   /** Group-wise embedding centroids, L2-renormalized — cluster
     * representatives / mean pooling (the reduction behind centroid-based
@@ -126,11 +105,8 @@ object VectorSearch {
   def semDedup(emb: DataFrame, idCol: String, vecCol: String,
                k: Int, iters: Int, tau: Double): DataFrame = {
     require(k > 0 && iters >= 0, "k positive, iters non-negative")
-    val spark = emb.sparkSession
-    lazy val dim = detectDim(emb, vecCol) // fallback cosine only
     val v = emb.select(col(idCol).as("__id"),
       col(vecCol).cast("array<double>").as("__e")).localCheckpoint(true)
-    def cos(a: Column, b: Column) = cosineBest(spark, a, b, dim)
     var cents = v.orderBy(col("__id")).limit(k)
       .select((row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy(col("__id"))) - 1)
@@ -139,7 +115,7 @@ object VectorSearch {
     // argmax cosine as ONE struct-max aggregate (score, then -cluster so
     // equal scores pick the smaller cluster id) — no per-vector window
     def assign(c: DataFrame): DataFrame = v.crossJoin(broadcast(c))
-      .withColumn("__s", cos(col("__e"), col("__ce")))
+      .withColumn("__s", cosine(col("__e"), col("__ce")))
       .groupBy(col("__id"))
       .agg(max(struct(col("__s"), (-col("__cl")).as("__nc"))).as("__m"))
       .select(col("__id"), (-col("__m.__nc")).cast("int").as("__cl"))
@@ -164,7 +140,7 @@ object VectorSearch {
       .join(fin.select(col("__cl"), col("__id").as("__j"), col("__e").as("__eb")),
         "__cl")
       .filter(col("__j") < col("__i"))
-      .filter(cos(col("__ea"), col("__eb")) >= tau)
+      .filter(cosine(col("__ea"), col("__eb")) >= tau)
       .select(col("__i")).distinct().withColumn("__d", lit(true))
     fin.select(col("__id"), col("__cl"))
       .join(dups, col("__id") === col("__i"), "left")
@@ -174,11 +150,13 @@ object VectorSearch {
 
   /** Exact top-k by cosine to a literal query vector.
     * `ORDER BY score DESC LIMIT k` compiles to TakeOrderedAndProject —
-    * a single scan, no global sort, per-partition heaps at scale. */
+    * a single scan, no global sort, per-partition heaps at scale. A corpus
+    * vector whose length differs from the query's scores null and sorts
+    * after every scored row. */
   def knnExact(emb: DataFrame, idCol: String, vecCol: String,
                query: Seq[Float], k: Int): DataFrame = {
     val q = typedlit(query)
-    emb.select(col(idCol), cosine(col(vecCol), q, query.length).as("score"))
+    emb.select(col(idCol), cosine(col(vecCol), q).as("score"))
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
   }
@@ -188,8 +166,7 @@ object VectorSearch {
                   queryDf: DataFrame, queryVecCol: String, k: Int): DataFrame = {
     val q = broadcast(queryDf.select(col(queryVecCol).as("_qv")))
     emb.crossJoin(q)
-      .select(col(idCol),
-        cosineBest(emb.sparkSession, col(vecCol), col("_qv"), detectDim(emb, vecCol)).as("score"))
+      .select(col(idCol), cosine(col(vecCol), col("_qv")).as("score"))
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
   }
@@ -202,15 +179,13 @@ object VectorSearch {
     * Scale shape: the anchor set is k-bounded (training pipelines mine per
     * anchor batch), so anchors collect like query vectors (bounded rows —
     * the established seed pattern); each anchor is one corpus scan with
-    * the native `graft_dot` cosine and a distributed TakeOrdered top-k; the
+    * the cosine and a distributed TakeOrdered top-k; the
     * per-anchor rank window runs over the k-row result, never the corpus.
     * Returns (anchor_id, neg_id, score(raw), rank) for rank 1..k. */
   def hardNegatives(emb: DataFrame, idCol: String, vecCol: String,
                     anchorIds: Seq[Long], k: Int,
                     posThreshold: Double): DataFrame = {
     require(anchorIds.nonEmpty && k > 0, "anchorIds nonempty, k positive")
-    val spark = emb.sparkSession
-    lazy val dim = detectDim(emb, vecCol) // fallback cosine only
     val anchors = emb.filter(col(idCol).isin(anchorIds: _*))
       .select(col(idCol), col(vecCol)).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1)))
@@ -222,8 +197,7 @@ object VectorSearch {
     anchors.toSeq.sortBy(_._1).map { case (aid, av) =>
       val q = typedlit(av)
       emb.filter(col(idCol) =!= aid)
-        .select(col(idCol).as("neg_id"),
-          cosineBest(spark, col(vecCol), q, dim).as("score"))
+        .select(col(idCol).as("neg_id"), cosine(col(vecCol), q).as("score"))
         .filter(col("score") < posThreshold)
         .orderBy(col("score").desc, col("neg_id")).limit(k)
         .withColumn("anchor_id", lit(aid))
@@ -278,15 +252,12 @@ object VectorSearch {
     val (mins, maxs) = quantizeMinMax(emb, vecCol, dim)
     val codesDf = quantizedCodes(emb, idCol, vecCol, mins, maxs)
     val qCodes = Array.tabulate(dim)(j => quantizeScalar(query(j).toDouble, mins(j), maxs(j)))
-    val proxy = (0 until dim).collect {
-      case j if qCodes(j) != 0 =>
-        element_at(col("codes"), j + 1).cast("int") * lit(qCodes(j))
-    }.reduceOption(_ + _).getOrElse(lit(0))
-    val topC = codesDf.select(col(idCol), proxy.as("qscore"))
+    // a sum of products of small integers: exact in a double
+    val topC = codesDf.select(col(idCol), dot(col("codes"), typedlit(qCodes)).as("qscore"))
       .orderBy(col("qscore").desc, col(idCol).asc)
       .limit(candidates)
     emb.join(broadcast(topC.select(idCol)), idCol)
-      .select(col(idCol), cosine(col(vecCol), typedlit(query), dim).as("score"))
+      .select(col(idCol), cosine(col(vecCol), typedlit(query)).as("score"))
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
   }
@@ -298,28 +269,8 @@ object VectorSearch {
     Array.fill(numBits)(Array.fill(dim)(rnd.nextGaussian()))
   }
 
-  /** Bucket id = bit-pattern of hyperplane signs. Cosine-similar vectors
-    * collide with high probability; numBits trades recall vs bucket size. */
-  def lshBucket(vecCol: Column, planes: Array[Array[Double]]): Column =
-    planes.zipWithIndex.map { case (p, i) =>
-      when(dot(vecCol, typedlit(p.toSeq), p.length) >= 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
-  /** `lshBucket` with the compact HOF dot product: each plane is ONE array
-    * literal + one interpreted `aggregate` in the plan, instead of dim
-    * unrolled `element_at` terms. ~dim× smaller generated code. Use for
-    * once-per-corpus bucket materialization, where many planes × many bits
-    * would otherwise explode codegen (Janino compiles superlinearly in
-    * method size); keep the unrolled form for per-row hot paths with a
-    * handful of dots. */
-  def lshBucketCompact(vecCol: Column, planes: Array[Array[Double]]): Column =
-    planes.zipWithIndex.map { case (p, i) =>
-      when(dot(vecCol, typedlit(p.toSeq)) >= 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
   /** Per-row sign-LSH buckets for ALL tables in one typed-kernel pass
-    * (HOF plane dots are interpreted per element — see Dedup; a primitive
-    * loop is ~50× faster), eagerly checkpointed. Columns: idCol, vecCol
+    * ([[planeBits]] per table), eagerly checkpointed. Columns: idCol, vecCol
     * (float→double widened), `_buckets` array<long> indexed by table. At
     * 100 TB this table is written out partitioned by (table, bucket) so a
     * probe reads only matching partitions. */
@@ -333,34 +284,17 @@ object VectorSearch {
       .as[(Long, Seq[Double])]
       .map { case (id, vSeq) =>
         val v = vSeq.toArray
-        val bs = bc.value.map { planes =>
-          var b = 0L; var i = 0
-          while (i < planes.length) {
-            val p = planes(i); var d = 0.0; var k2 = 0
-            while (k2 < p.length) { d += p(k2) * v(k2); k2 += 1 }
-            if (d >= 0) b |= (1L << i)
-            i += 1
-          }
-          b
-        }.toSeq
-        (id, vSeq, bs)
+        (id, vSeq, bc.value.map(planeBits(v, _)).toSeq)
       }
       .toDF(idCol, vecCol, "_buckets")
       .localCheckpoint(true)
   }
 
   /** The query vector's bucket per table (driver-side, same plane math). */
-  def queryBuckets(query: Seq[Float], dim: Int, numBits: Int, numTables: Int,
+  def queryBuckets(query: Seq[Float], numBits: Int, numTables: Int,
                    seed: Long): Seq[Long] = {
     val qArr = query.map(_.toDouble).toArray
-    (0 until numTables).map { t =>
-      val planes = hyperplanes(dim, numBits, seed + t)
-      planes.zipWithIndex.map { case (p, i) =>
-        var d = 0.0; var k = 0
-        while (k < p.length) { d += p(k) * qArr(k); k += 1 }
-        if (d >= 0) 1L << i else 0L
-      }.sum
-    }
+    (0 until numTables).map(t => planeBits(qArr, hyperplanes(qArr.length, numBits, seed + t)))
   }
 
   /** ANN sign-LSH sizing, unified with the dedup sizing (r11 verdict task:
@@ -381,9 +315,9 @@ object VectorSearch {
   /** Approximate k-NN over a pre-bucketed corpus (see lshBucketed):
     * candidates collide with the query in ANY table; exact re-rank. */
   def knnApproxBucketed(bucketed: DataFrame, idCol: String, vecCol: String,
-                        query: Seq[Float], k: Int, dim: Int, numBits: Int = 12,
+                        query: Seq[Float], k: Int, numBits: Int = 12,
                         numTables: Int = 4, seed: Long = 42L): DataFrame = {
-    val qb = queryBuckets(query, dim, numBits, numTables, seed)
+    val qb = queryBuckets(query, numBits, numTables, seed)
     val cond = qb.zipWithIndex
       .map { case (b, t) => element_at(col("_buckets"), t + 1) === lit(b) }
       .reduce(_ || _)
@@ -394,10 +328,10 @@ object VectorSearch {
     * `numTables` independent hash tables, then exact re-rank. One-shot form
     * of lshBucketed + knnApproxBucketed (batch callers bucket once). */
   def knnApprox(emb: DataFrame, idCol: String, vecCol: String, query: Seq[Float],
-                k: Int, dim: Int, numBits: Int = 12, numTables: Int = 4,
+                k: Int, numBits: Int = 12, numTables: Int = 4,
                 seed: Long = 42L): DataFrame =
-    knnApproxBucketed(lshBucketed(emb, idCol, vecCol, dim, numBits, numTables, seed),
-      idCol, vecCol, query, k, dim, numBits, numTables, seed)
+    knnApproxBucketed(lshBucketed(emb, idCol, vecCol, query.length, numBits, numTables, seed),
+      idCol, vecCol, query, k, numBits, numTables, seed)
 
   /** IVF-style two-level search: assign vectors to nprobe nearest of
     * `centroids` (small, broadcast), scan only those cells. Centroids come
@@ -407,28 +341,34 @@ object VectorSearch {
                       iters: Int = 5, sampleN: Int = 2000, seed: Long = 42L): Array[Array[Double]] = {
     val sample = emb.select(col(vecCol)).limit(sampleN).collect()
       .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-    if (sample.isEmpty) return Array.empty
+    lloyd(sample, kCells, iters, seed)
+  }
+
+  /** Driver-side Lloyd k-means over a small sample: `k` seeded random
+    * points start, each round assigns every point to its nearest center
+    * (L2, ties to the lower index) and moves each center to its members'
+    * mean; a center with no members stays put. */
+  def lloyd(points: Array[Array[Double]], k: Int, iters: Int,
+            seed: Long): Array[Array[Double]] = {
     val rnd = new scala.util.Random(seed)
-    var cents = rnd.shuffle(sample.toVector).take(math.min(kCells, sample.length)).toArray
+    var cents = rnd.shuffle(points.toVector).take(math.min(k, points.length)).toArray
     for (_ <- 1 to iters) {
-      val assign = sample.groupBy { v =>
-        cents.indices.minBy(i => l2(v, cents(i)))
-      }
-      cents = cents.indices.map { i =>
-        assign.get(i).map { vs =>
-          val s = vs.transpose.map(_.sum / vs.length)
-          s
-        }.getOrElse(cents(i))
-      }.toArray
+      val assign = points.groupBy(v => cents.indices.minBy(i => l2(v, cents(i))))
+      cents = cents.indices.map(i =>
+        assign.get(i).map(vs => vs.transpose.map(_.sum / vs.length))
+          .getOrElse(cents(i))).toArray
     }
     cents
   }
 
-  private def l2(a: Array[Double], b: Array[Double]): Double = {
+  /** Squared L2 distance over `a`'s length. */
+  private def sqDist(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0; var i = 0
     while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
-    math.sqrt(s)
+    s
   }
+
+  private def l2(a: Array[Double], b: Array[Double]): Double = math.sqrt(sqDist(a, b))
 
   /** Assign each vector to its nearest centroid in one typed-kernel pass
     * (eager checkpoint) — the IVF cell table. At 100 TB this is written out
@@ -446,8 +386,7 @@ object VectorSearch {
         var best = 0; var bestD = Double.MaxValue
         var i = 0
         while (i < cs.length) {
-          val c = cs(i); var d = 0.0; var k = 0
-          while (k < c.length) { val x = v(k) - c(k); d += x * x; k += 1 }
+          val d = sqDist(cs(i), v)
           if (d < bestD) { bestD = d; best = i }
           i += 1
         }
@@ -487,16 +426,8 @@ object VectorSearch {
     val sample = emb.select(col(vecCol)).limit(sampleN).collect()
       .map(_.getSeq[Float](0).map(_.toDouble).toArray)
     Array.tabulate(m) { s =>
-      val sub = sample.map(v => java.util.Arrays.copyOfRange(v, s * dsub, (s + 1) * dsub))
-      val rnd = new scala.util.Random(seed + s)
-      var cents = rnd.shuffle(sub.toVector).take(math.min(k, sub.length)).toArray
-      for (_ <- 1 to iters) {
-        val assign = sub.groupBy(v => cents.indices.minBy(i => l2(v, cents(i))))
-        cents = cents.indices.map(i =>
-          assign.get(i).map(vs => vs.transpose.map(_.sum / vs.length))
-            .getOrElse(cents(i))).toArray
-      }
-      cents
+      lloyd(sample.map(v => java.util.Arrays.copyOfRange(v, s * dsub, (s + 1) * dsub)),
+        k, iters, seed + s)
     }
   }
 
@@ -556,12 +487,10 @@ object VectorSearch {
     val m = books.length
     val kCodes = books(0).length
     val dsub = query.length / m
+    val qArr = query.map(_.toDouble).toArray
     val lutFlat = (0 until m).flatMap { s =>
-      books(s).map { ctr =>
-        var d = 0.0; var j = 0
-        while (j < dsub) { d += query(s * dsub + j) * ctr(j); j += 1 }
-        d
-      }
+      val qs = java.util.Arrays.copyOfRange(qArr, s * dsub, (s + 1) * dsub)
+      books(s).map(arrayDot(qs, _))
     }
     val lut = typedlit(lutFlat)
     val proxy = (0 until m).map(s =>
@@ -571,7 +500,7 @@ object VectorSearch {
       .orderBy(col("_adc").desc, col(idCol).asc)
       .limit(candidates)
     emb.join(broadcast(topC.select(idCol)), idCol)
-      .select(col(idCol), cosine(col(vecCol), typedlit(query), query.length).as("score"))
+      .select(col(idCol), cosine(col(vecCol), typedlit(query)).as("score"))
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
   }

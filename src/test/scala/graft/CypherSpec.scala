@@ -83,6 +83,12 @@ class CypherSpec extends SparkSpec {
       "UNION ALL MATCH (p:Person {name: 'Alice'}) RETURN p.name AS n")
       .as[String].collect().toSeq
     assert(r2 == Seq("Alice", "Alice"))
+    // a write clause in a UNION part is rejected by name
+    val w = intercept[IllegalArgumentException] {
+      run("MATCH (p:Person {name: 'Alice'}) RETURN p.name AS n " +
+        "UNION CREATE (q:Person {name: 'Zed'}) RETURN q.name AS n")
+    }
+    assert(w.getMessage.contains("CREATE is not supported"))
   }
 
   test("EXISTS subquery as semi-join") {
@@ -105,7 +111,12 @@ class CypherSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       run("MATCH (p:Person) RETURN [x IN [1] WHERE EXISTS { (p)-[:KNOWS]->(b) WHERE b.age > x }] AS l")
     }
-    assert(e.getMessage.contains("only supported inside WHERE"))
+    assert(e.getMessage.contains("cannot read a list-comprehension, quantifier or reduce variable"))
+    // and so is one in a pattern comprehension's projection
+    val e2 = intercept[IllegalArgumentException] {
+      run("MATCH (p:Person) RETURN [(p)-[:KNOWS]->(b) | EXISTS { (b)-[:WORKS_AT]->(:Company) }] AS l")
+    }
+    assert(e2.getMessage.contains("nor sit in a pattern comprehension's projection"))
   }
 
   test("NOT EXISTS subquery as anti-join") {
@@ -371,6 +382,12 @@ class CypherSpec extends SparkSpec {
       .as[(String, Long)].collect().toSeq
     // all-aggregate subquery: Carol has no KNOWS matches -> n = 0, row kept
     assert(r == Seq(("Alice", 2L), ("Bob", 1L), ("Carol", 0L)))
+    // a write clause inside the subquery is rejected by name
+    val w = intercept[IllegalArgumentException] {
+      run("MATCH (a:Person) CALL { WITH a MATCH (a)-[:KNOWS]->(b) SET b.seen = 1 " +
+        "RETURN count(b) AS n } RETURN a.name AS name, n")
+    }
+    assert(w.getMessage.contains("SET is not supported"))
   }
 
   test("correlated CALL subquery without aggregate drops non-matching rows") {
@@ -410,6 +427,11 @@ class CypherSpec extends SparkSpec {
       "RETURN a.name AS name, n ORDER BY name")
       .as[(String, Int)].collect().toSeq
     assert(r == Seq(("Alice", 1), ("Bob", 1), ("Carol", 0)))
+    // one nested in another's projection is rejected with the rule it breaks
+    val e = intercept[IllegalArgumentException] {
+      run("MATCH (a:Person) RETURN [(a)-[:KNOWS]->(b) | size([(b)-[:KNOWS]->(c) | c.name])] AS l")
+    }
+    assert(e.getMessage.contains("nor sit in another pattern comprehension's projection"))
   }
 
   test("pattern comprehension inside WHERE") {

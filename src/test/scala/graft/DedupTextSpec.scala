@@ -158,7 +158,7 @@ class DedupTextSpec extends SparkSpec {
       (1L, Seq(1.0f, 0.0f, 0.0f, 0.0f)), (2L, Seq(0.95f, 0.05f, 0.0f, 0.0f)),
       (3L, Seq(0.0f, 0.0f, 1.0f, 0.0f))).toDF("vec_id", "embedding")
     val top = VectorSearch.knnApprox(emb, "vec_id", "embedding",
-      Seq(1.0f, 0.0f, 0.0f, 0.0f), 1, dim = 4, numBits = 4, numTables = 3)
+      Seq(1.0f, 0.0f, 0.0f, 0.0f), 1, numBits = 4, numTables = 3)
       .select("vec_id").as[Long].collect().toSeq
     assert(top == Seq(1L))
   }

@@ -1,14 +1,27 @@
 package graft
 
-import graft.vector.VectorSearch
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The native graft_dot Catalyst expression (functions/DotProduct.scala):
   * codegen and interpreted paths, null/mismatch semantics, bit-parity with
-  * the HOF and unrolled forms. SparkSpec sessions load GraftExtensions, so
-  * the function resolves via the registry like any built-in. */
+  * two reference forms built from Spark built-ins. SparkSpec sessions load
+  * GraftExtensions, so the function resolves via the registry like any
+  * built-in. */
 class DotProductSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Reference: `zip_with` products folded left-to-right by `aggregate`. */
+  private def hofDot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, x) => acc + x)
+
+  /** Reference: a `dim`-term chain of `element_at` products, summed left
+    * to right. */
+  private def unrolledDot(a: Column, b: Column, dim: Int): Column =
+    (1 to dim).map(i =>
+      element_at(a, i).cast("double") * element_at(b, i).cast("double"))
+      .reduce(_ + _)
 
   private val rnd = new scala.util.Random(42)
   private lazy val vecs = Seq.tabulate(50)(i =>
@@ -28,13 +41,14 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("bit-identical to the HOF and unrolled forms (codegen path)") {
-    val three = vecs.select(
+    val forms = vecs.select(
       call_function("graft_dot", col("v"), col("v")).as("native"),
-      VectorSearch.dot(col("v"), col("v")).as("hof"),
-      VectorSearch.dot(col("v"), col("v"), 64).as("unrolled"))
-      .as[(Double, Double, Double)].collect()
-    three.foreach { case (n, h, u) =>
-      assert(n == h && n == u) // exact — same left-to-right association
+      hofDot(col("v"), col("v")).as("hof"),
+      unrolledDot(col("v"), col("v"), 64).as("unrolled"),
+      graft.vector.VectorSearch.dot(col("v"), col("v")).as("api"))
+      .as[(Double, Double, Double, Double)].collect()
+    forms.foreach { case (n, h, u, api) =>
+      assert(n == h && n == u && n == api) // exact — same left-to-right association
     }
   }
 

@@ -164,18 +164,28 @@ class PipelineOpsSpec extends SparkSpec {
     val rnd = new scala.util.Random(5)
     val emb = Seq.tabulate(40)(i => (i.toLong, Seq.fill(8)(rnd.nextFloat() - 0.5f)))
       .toDF("vec_id", "embedding")
-    val q = emb.filter(col("vec_id") === 7L)
-    var knn: org.apache.spark.sql.DataFrame = null
-    // the native graft_dot cosine needs no dimension, so no detectDim job
-    assert(jobsDuring {
-      knn = graft.vector.VectorSearch.knnExactFor(emb, "vec_id", "embedding", q, "embedding", 5)
-    } == 0)
-    val qv = q.select("embedding").as[Seq[Float]].head()
-    val want = graft.vector.VectorSearch.knnExact(emb, "vec_id", "embedding", qv, 5)
+    // a ragged corpus against a 4-d query: the 5-d and the 2-d vector score
+    // null and sort after every scored row
+    val ragged = Seq((1L, Seq(1.0f, 0.0f, 0.0f, 0.0f, 5.0f)), (2L, Seq(1.0f, 0.0f)),
+      (3L, Seq(0.0f, 1.0f, 0.0f, 0.0f)), (4L, Seq(1.0f, 1.0f, 0.0f, 0.0f)),
+      (7L, Seq(1.0f, 0.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select(col("vec_id"), round(col("score"), 9)).collect().map(_.toString).toSeq
-    assert(rows(knn) == rows(want))
-    assert(rows(knn).head.startsWith("[7,"), "the query vector is its own nearest")
+    Seq(emb, ragged).foreach { corpus =>
+      val q = corpus.filter(col("vec_id") === 7L)
+      var knn: org.apache.spark.sql.DataFrame = null
+      // the native graft_dot cosine needs no dimension, so no detectDim job
+      assert(jobsDuring {
+        knn = graft.vector.VectorSearch.knnExactFor(corpus, "vec_id", "embedding", q, "embedding", 5)
+      } == 0)
+      val qv = q.select("embedding").as[Seq[Float]].head()
+      val want = graft.vector.VectorSearch.knnExact(corpus, "vec_id", "embedding", qv, 5)
+      assert(rows(knn) == rows(want))
+      assert(rows(knn).head.startsWith("[7,"), "the query vector is its own nearest")
+    }
+    assert(rows(graft.vector.VectorSearch.knnExact(ragged, "vec_id", "embedding",
+      Seq(1.0f, 0.0f, 0.0f, 0.0f), 5)) ==
+      Seq("[7,1.0]", "[4,0.707106781]", "[3,0.0]", "[1,null]", "[2,null]"))
   }
 
   test("token budget: shares sum to 1; sub-linear alpha boosts small strata") {

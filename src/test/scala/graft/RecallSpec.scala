@@ -45,7 +45,7 @@ class RecallSpec extends SparkSpec {
     val bucketed = VectorSearch.lshBucketed(emb, "vec_id", "embedding", dim,
       numBits = 4, numTables = 16).localCheckpoint(true)
     val r = recall(v => VectorSearch.knnApproxBucketed(
-      bucketed, "vec_id", "embedding", v, K, dim, numBits = 4, numTables = 16))
+      bucketed, "vec_id", "embedding", v, K, numBits = 4, numTables = 16))
     info(f"LSH recall@10 = $r%.3f (4 bits x 16 tables)")
     assert(r >= 0.9, f"LSH recall@10 $r%.3f below 0.9 floor")
   }

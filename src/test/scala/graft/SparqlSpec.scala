@@ -183,8 +183,8 @@ class SparqlSpec extends SparkSpec {
   test("closure threshold boundary: driver fast-path == distributed loop") {
     // the maxFlow-style dual-path pin (r12 verdict task #9): the SAME p+
     // and p* queries under the driver fast-path (edge count under the
-    // threshold) and with the threshold forced to 0 (distributed frontier
-    // loop is the only path) must be cell-identical
+    // threshold) and with spark.graft.algo.localSizeBytes=0 (the
+    // distributed frontier loop is the only path) must be cell-identical
     val qs = Seq(
       "SELECT ?s ?o WHERE { ?s gr:KNOWS+ ?o } ORDER BY ?s ?o",
       "SELECT ?s ?o WHERE { ?s gr:KNOWS* ?o . FILTER(?s = \"http://ex.org/node/1\") } ORDER BY ?s ?o")
@@ -199,7 +199,7 @@ class SparqlSpec extends SparkSpec {
     cases.foreach { case (q, data, expected) =>
       val local = Sparql.execute(prefixes + q, data)
         .as[(String, String)].collect().toSeq
-      spark.conf.set("spark.graft.sparql.closureLocalEdges", "0")
+      spark.conf.set("spark.graft.algo.localSizeBytes", "0")
       try {
         val dist = Sparql.execute(prefixes + q, data)
           .as[(String, String)].collect().toSeq
@@ -207,7 +207,7 @@ class SparqlSpec extends SparkSpec {
           s"closure paths diverged across the threshold boundary for: $q\nlocal=$local\ndist=$dist")
         assert(local.nonEmpty, "vacuous boundary check")
         if (expected > 0) assert(local.size == expected)
-      } finally spark.conf.unset("spark.graft.sparql.closureLocalEdges")
+      } finally spark.conf.unset("spark.graft.algo.localSizeBytes")
     }
   }
 
