@@ -134,7 +134,9 @@ object ClusterVerify {
     // BFS, CCNet paragraph dedup (+ CALL twins)
     "q_node2vec_walks", "q_cypher_call_node2vec",
     "q_bidir_bfs", "q_cypher_call_bidirbfs", "q_paragraph_dedup",
-    "q_canonical_dedup")
+    "q_canonical_dedup",
+    // the in-task maxFlow and mst kernels ship to executor JVMs
+    "q_mst", "q_maxflow")
 
   /** Both sessions: the common conf with parallelism pinned to 16. */
   private val pinned: Map[String, String] = Map(

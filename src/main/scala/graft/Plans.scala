@@ -39,7 +39,9 @@ object Plans {
     ("q_cypher_varlength", "varlength", 2, "var-length frontier: last level x edge join + distinct + left-anti join on (start, node) against the union of earlier levels"),
     ("q_cypher_shortestpath", "paths", 2, "targeted path frontier: the last level minus the starts whose reached (start, node) pairs cover every target (a per-start distinct count against a literal), x edge join, left-anti join on (start, node), per-(start, node) struct-min witness"),
     ("q_betweenness", "betweenness_back", 2, "Brandes backward level: level d x edge join x the delta leaf of level d+1 on (seed, node), sigma-ratio sum per (seed, node), left-joined back onto level d"),
-    ("q_sssp_path", "sssp_path", 2, "ssspPath walk: the last vertex x the parent leaf x the distance leaf, one row per round"))
+    ("q_sssp_path", "sssp_path", 2, "ssspPath walk: the last vertex x the parent leaf x the distance leaf, one row per round"),
+    ("q_mst", "mst", 2, "Boruvka contraction: the component map left-joined to the wcc labels of the round's picked component pairs (the pick - a crossing-edge join + struct-min hash aggregate - and the wcc are leaves of their own)"),
+    ("q_maxflow", "maxflow_bfs", 2, "augmenting-path BFS level: the last level (dropped once it holds the sink, a one-row scalar ride) x the spare residual slots, struct-min parent per vertex, left-anti join against the earlier levels"))
 
   /** The plan-shape guards; empty when `df`'s plan passes.
     *

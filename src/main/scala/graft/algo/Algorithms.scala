@@ -1558,143 +1558,82 @@ object Algorithms {
   }
 
   /** Max flow by Edmonds-Karp (reference
-    * `crates/samyama-graph-algorithms/src/flow.rs:16`): BFS shortest
-    * augmenting paths over a residual-capacity table. The residual graph
-    * stays a DataFrame throughout (never collected); each augmentation runs
-    * a distributed BFS with parent tracking and collects only the visited
-    * cone's (vertex, parent, cap) rows to walk the O(depth) path — bounded
-    * by the BFS reach, the same in-memory footprint the reference's
-    * adjacency map commits to. Residual updates are a broadcast join against
-    * the O(depth) path-edge table, lineage cut per augmentation.
-    * Augmenting-path max-flow is inherently round-sequential; use on bounded
-    * subgraphs (the reference is likewise single-machine in-memory here).
-    * Input columns: src, dst, cap. Returns one row (max_flow). */
-  def maxFlow(edges: DataFrame, source: Long, sink: Long,
-              maxAugment: Int = 500, collectThreshold: Long = 200000L,
-              maxVisited: Long = 5000000L): DataFrame = {
+    * `crates/samyama-graph-algorithms/src/flow.rs:16`): BFS-shortest
+    * augmenting paths over a residual-capacity table, one slot per ordered
+    * vertex pair — parallel arcs' capacities summed, plus a zero-capacity
+    * reverse slot for every arc (flow cancellation). Small inputs route to
+    * the in-task kernel ([[LocalKernels.maxFlow]]). Past the gate the
+    * residual stays a DataFrame (never collected): each augmentation is one
+    * [[Rounds]] round whose BFS is a nested frontier loop with parent
+    * tracking; only the visited cone's (vertex, parent, cap) rows reach the
+    * driver, to walk the O(depth) path, and the cone is capped at
+    * [[MaxFlowCone]] vertices. Augmenting-path max-flow is inherently
+    * round-sequential; use it on bounded subgraphs (the reference is
+    * likewise single-machine in-memory here).
+    * Input columns: src, dst, cap (null = 1). Returns one row (max_flow). */
+  def maxFlow(edges: DataFrame, source: Long, sink: Long): DataFrame = {
+    val (e, small) = LocalKernels.gate(edges.select(col("src"), col("dst"), col("cap")))
+    if (small) LocalKernels.maxFlow(e, source, sink)
+    else maxFlowDistributed(e, source, sink)
+  }
+
+  /** The most vertices one augmentation's BFS cone may bring to the driver:
+    * the cone is the BFS reach, which on an unbounded input can exceed it. */
+  private val MaxFlowCone = 5000000L
+
+  private[graft] def maxFlowDistributed(edges: DataFrame, source: Long, sink: Long): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val eps = 1e-9
     val fwd = edges.select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"),
-        coalesce(col("cap"), lit(1.0)).cast("double").as("c"))
-      .groupBy("u", "v").agg(sum("c").as("c"))
-    // Augmenting-path max-flow is round-sequential: every augmentation is a
-    // full BFS + residual update, and no partitioning amortizes that. When
-    // the (already network-extraction-bounded) graph fits comfortably on the
-    // driver, collect it and run the classic O(V·E²) solve there — the same
-    // in-memory commitment the reference makes, minus ~10 Spark jobs per
-    // augmentation of pure overhead. The distributed loop below remains the
-    // path for graphs past the threshold.
-    if (fwd.count() <= collectThreshold) {
-      val es = fwd.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      val residual = scala.collection.mutable.Map.empty[(Long, Long), Double]
-      val adj = scala.collection.mutable.Map.empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
-      def link(u: Long, v: Long): Unit =
-        adj.getOrElseUpdate(u, scala.collection.mutable.ArrayBuffer.empty[Long]) += v
-      es.foreach { case (u, v, c) =>
-        if (!residual.contains((u, v))) { link(u, v) }
-        if (!residual.contains((v, u))) { link(v, u) }
-        residual((u, v)) = residual.getOrElse((u, v), 0.0) + c
-        residual.getOrElseUpdate((v, u), 0.0)
-      }
-      var total = 0.0
-      var found = true
-      while (found) {
-        // BFS shortest augmenting path
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        val queue = scala.collection.mutable.Queue(source)
-        val seen = scala.collection.mutable.Set(source)
-        var hit = false
-        while (queue.nonEmpty && !hit) {
-          val u = queue.dequeue()
-          adj.getOrElse(u, Nil).foreach { v =>
-            if (!seen.contains(v) && residual((u, v)) > eps) {
-              seen += v; parent(v) = u
-              if (v == sink) hit = true else queue.enqueue(v)
-            }
-          }
-        }
-        if (!hit) found = false
-        else {
-          var cur = sink
-          var f = Double.MaxValue
-          while (cur != source) { val p = parent(cur); f = math.min(f, residual((p, cur))); cur = p }
-          cur = sink
-          while (cur != source) {
-            val p = parent(cur)
-            residual((p, cur)) -= f; residual((cur, p)) += f
-            cur = p
-          }
-          total += f
-        }
-      }
-      return spark.range(1).select(lit(total).as("max_flow"))
-    }
-    // residual = forward caps + zero-cap reverse slots (flow cancellation)
-    var residual = fwd.unionByName(
-        fwd.select(col("v").as("u"), col("u").as("v"), lit(0.0).as("c")))
-      .groupBy("u", "v").agg(sum("c").as("c"))
+      coalesce(col("cap"), lit(1.0)).cast("double").as("c"))
+    val residual0 = fwd.unionAll(fwd.select(col("v"), col("u"), lit(0.0)))
+      .groupBy("u", "v").agg(sum("c").as("c0")).withColumn("c", col("c0"))
       .localCheckpoint(true)
-    var total = 0.0
-    var found = true
-    var rounds = 0
-    while (found && rounds < maxAugment) {
-      // distributed BFS from source on spare-capacity edges, keeping for each
-      // newly reached vertex its (min) parent and that parent edge's capacity
-      val live = residual.filter(col("c") > eps)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      var visited = spark.range(1)
-        .select(lit(source).as("id"), lit(-1L).as("parent"), lit(0.0).as("pc"))
-        .localCheckpoint(true)
-      var frontier = visited.select("id")
-      var reachedSink = false
-      var expanding = true
-      while (expanding && !reachedSink) {
-        val next = frontier.join(live, col("id") === col("u"))
-          .groupBy(col("v")).agg(min(struct(col("u"), col("c"))).as("p"))
-          .select(col("v").as("id"), col("p.u").as("parent"), col("p.c").as("pc"))
-          .join(visited.select(col("id").as("_vid")), col("id") === col("_vid"), "left_anti")
-          .localCheckpoint(true)
-        val n = next.count()
-        expanding = n > 0
-        if (expanding) {
-          visited = visited.unionAll(next).localCheckpoint(true)
-          frontier = next.select("id")
-          reachedSink = next.filter(col("id") === sink).count() > 0
-        }
-      }
-      if (!reachedSink) { found = false; live.unpersist(false) }
-      else {
-        // walk sink -> source through the collected parent cone (O(reach)).
-        // The cone is the BFS reach, which on an unbounded input can exceed
-        // the driver — enforce the documented contract (maxFlow runs on
-        // network-extraction-bounded subgraphs) instead of OOMing.
-        val reach = visited.count()
-        require(reach <= maxVisited,
-          s"maxFlow BFS cone has $reach vertices (> maxVisited=$maxVisited); " +
-            "bound the extracted network or raise maxVisited")
-        val parents = visited.collect()
-          .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-        var cur = sink
-        var path = List.empty[(Long, Long, Double)]
-        while (cur != source) {
-          val (p, pc) = parents(cur)
-          path = (p, cur, pc) :: path
-          cur = p
-        }
-        val f = path.map(_._3).min
-        total += f
-        val deltas = path.flatMap { case (u, v, _) => Seq((u, v, -f), (v, u, f)) }
-          .toDF("du", "dv", "delta")
-        residual = residual
-          .join(broadcast(deltas), col("u") === col("du") && col("v") === col("dv"), "left")
-          .select(col("u"), col("v"), (col("c") + coalesce(col("delta"), lit(0.0))).as("c"))
-          .localCheckpoint(true)
-        live.unpersist(false)
-        rounds += 1
-      }
+    // one augmentation per round; `chg` marks the slots it moved, so a
+    // round that finds no augmenting path is the fixpoint
+    Rounds.fold("maxflow", Int.MaxValue, residual0, halt = Some(_.filter(col("chg")))) { (_, res) =>
+      val path = augmentingPath(res, source, sink)
+      val f = path.map(_._3).minOption.getOrElse(0.0)
+      val deltas = path.flatMap { case (u, v, _) => Seq((u, v, -f), (v, u, f)) }
+        .toDF("du", "dv", "delta")
+      res.join(broadcast(deltas), col("u") === col("du") && col("v") === col("dv"), "left")
+        .select(col("u"), col("v"), col("c0"), (col("c") + coalesce(col("delta"), lit(0.0))).as("c"),
+          col("delta").isNotNull.as("chg"))
+    }.filter(col("u") === source)
+      .agg(coalesce(sum(col("c0") - col("c")), lit(0.0)).as("max_flow"))
+  }
+
+  /** A BFS-shortest source → sink path over the residual slots with
+    * capacity to spare, as (u, v, spare) hops from the source; empty when
+    * the sink is unreachable (or is the source). Each newly reached vertex
+    * keeps its smallest-id parent, and the BFS stops at the sink's level. */
+  private def augmentingPath(res: DataFrame, source: Long, sink: Long): List[(Long, Long, Double)] = {
+    val eps = 1e-9
+    val live = res.filter(col("c") > eps).select(col("u"), col("v"), col("c"))
+    val seed = res.sparkSession.range(1).select(lit(source).as("id"),
+      lit(null).cast("long").as("parent"), lit(null).cast("double").as("pc"))
+    val levels = Rounds.levels("maxflow_bfs", Int.MaxValue, seed) { lv =>
+      // a level holding the sink expands no further (one-row scalar ride)
+      val hit = lv.last.filter(col("id") === sink).agg(count(lit(1)).as("_hit"))
+      lv.last.crossJoin(broadcast(hit)).filter(col("_hit") === 0)
+        .join(live, col("id") === col("u"))
+        .groupBy(col("v")).agg(min(struct(col("u"), col("c"))).as("p"))
+        .select(col("v").as("id"), col("p.u").as("parent"), col("p.c").as("pc"))
+        .join(lv.reduce(_ unionAll _).select(col("id").as("_vid")), col("id") === col("_vid"),
+          "left_anti")
     }
-    spark.range(1).select(lit(total).as("max_flow"))
+    val cone = levels.reduce(_ unionAll _)
+    val probe = cone.agg(count(lit(1)), max(col("id") === sink)).head()
+    if (source == sink || !probe.getBoolean(1)) Nil
+    else {
+      val reach = probe.getLong(0)
+      require(reach <= MaxFlowCone,
+        s"maxFlow BFS cone has $reach vertices (> $MaxFlowCone); bound the extracted network")
+      val parents = cone.collect().map(r => r.getLong(0) -> r).toMap
+      Iterator.iterate(sink)(v => parents(v).getLong(1)).takeWhile(_ != source)
+        .map { v => val r = parents(v); (r.getLong(1), v, r.getDouble(2)) }
+        .toList.reverse
+    }
   }
 
   /** Minimum spanning forest by Borůvka (reference Prim
@@ -1706,7 +1645,7 @@ object Algorithms {
     * resulting forest unique — so any correct MST algorithm (the oracle runs
     * Prim) must return the identical edge set.
     * Input columns: src, dst, weight. Returns MST edges (a, b, weight). */
-  def mst(edges: DataFrame, maxRounds: Int = 20): DataFrame = {
+  def mst(edges: DataFrame): DataFrame = {
     // canonicalize ONCE (both paths need it) and gate on the materialized
     // canonical edge set — the raw input is often a multi-join whose
     // join-multiplied size estimate would route a 300-edge graph to the
@@ -1715,7 +1654,7 @@ object Algorithms {
     val (_, small) = LocalKernels.gate(e0) // leaf: the estimate is the real size
     if (small)
       LocalKernels.mst(e0.select(col("a").as("src"), col("b").as("dst"), col("w").as("weight")))
-    else mstCanonical(e0, maxRounds)
+    else mstCanonical(e0)
   }
 
   private def canonicalMinEdges(edges: DataFrame): DataFrame =
@@ -1726,25 +1665,23 @@ object Algorithms {
       .filter(col("a") =!= col("b"))
       .groupBy("a", "b").agg(min("w").as("w"))
 
-  private[graft] def mstDistributed(edges: DataFrame, maxRounds: Int = 20): DataFrame =
-    mstCanonical(canonicalMinEdges(edges).localCheckpoint(true), maxRounds)
+  private[graft] def mstDistributed(edges: DataFrame): DataFrame =
+    mstCanonical(canonicalMinEdges(edges).localCheckpoint(true))
 
-  private def mstCanonical(e0: DataFrame, maxRounds: Int): DataFrame = {
-    val spark = e0.sparkSession
-    var comp = e0.select(explode(array(col("a"), col("b"))).as("id")).distinct()
+  private def mstCanonical(e0: DataFrame): DataFrame = {
+    val picks = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val comp0 = e0.select(explode(array(col("a"), col("b"))).as("id")).distinct()
       .withColumn("comp", col("id")).localCheckpoint(true)
-    var mstEdges = spark.emptyDataFrame
-      .select(lit(0L).as("a"), lit(0L).as("b"), lit(0.0).as("w")).limit(0)
-    var more = true
-    var rounds = 0
-    while (more && rounds < maxRounds) {
-      val crossing = e0
+    // `chg` marks the vertices whose component merged this round; a round
+    // that picks no edge merges none and is the fixpoint
+    Rounds.fold("mst", Int.MaxValue, comp0, halt = Some(_.filter(col("chg")))) { (_, comp) =>
+      // each component's minimum outgoing edge — one hash aggregate, struct
+      // ordering gives the (w, a, b) tie-break; cut, as the contraction and
+      // the final union both read it
+      val pick = e0
         .join(comp.select(col("id").as("a"), col("comp").as("ca")), Seq("a"))
         .join(comp.select(col("id").as("b"), col("comp").as("cb")), Seq("b"))
         .filter(col("ca") =!= col("cb"))
-      // each component's minimum outgoing edge — one hash aggregate, struct
-      // ordering gives the (w, a, b) tie-break
-      val pick = crossing
         .select(explode(array(col("ca"), col("cb"))).as("c"),
           struct(col("w"), col("a"), col("b"), col("ca"), col("cb")).as("e"))
         .groupBy("c").agg(min("e").as("m"))
@@ -1752,22 +1689,18 @@ object Algorithms {
           col("m.ca").as("ca"), col("m.cb").as("cb"))
         .dropDuplicates("a", "b")
         .localCheckpoint(true)
-      more = pick.count() > 0
-      if (more) {
-        mstEdges = mstEdges.unionAll(pick.select(col("a"), col("b"), col("w")))
-          .localCheckpoint(true)
-        // contract: connected components of the picked component-pair graph
-        // (reuses the distributed min-label wcc)
-        val merged = wcc(pick.select(col("ca").as("src"), col("cb").as("dst")))
-        comp = comp.join(merged.select(col("id").as("_c"), col("component")),
-            col("comp") === col("_c"), "left")
-          .select(col("id"), coalesce(col("component"), col("comp")).as("comp"))
-          .localCheckpoint(true)
-      }
-      rounds += 1
+      picks += pick.select(col("a"), col("b"), col("w"))
+      // contract: connected components of the picked component-pair graph,
+      // run to the fixpoint (a capped wcc leaves components unmerged, and
+      // the next round picks their edges again)
+      val merged = wcc(pick.select(col("ca").as("src"), col("cb").as("dst")), Int.MaxValue)
+      comp.join(merged.select(col("id").as("_c"), col("component")),
+          col("comp") === col("_c"), "left")
+        .select(col("id"), coalesce(col("component"), col("comp")).as("ncomp"), col("comp"))
+        .select(col("id"), col("ncomp").as("comp"), (col("ncomp") =!= col("comp")).as("chg"))
     }
     unpersistCheckpoint(e0)
-    mstEdges
+    picks.reduce(_ unionAll _)
   }
 
   /** PCA over a vector column (reference

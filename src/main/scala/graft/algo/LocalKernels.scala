@@ -27,11 +27,12 @@ import scala.reflect.runtime.universe.TypeTag
   * that exists.
   *
   * Every kernel here replicates its distributed twin's OBSERVABLE semantics
-  * bit-for-bit on integer outputs (wcc/cdlp/bfs/mst/varlength) and to
-  * summation-order ULPs on floating outputs (pagerank/sssp — absorbed by
-  * the catalog's 4-6 decimal rounding, same slack the DuckDB oracles rely
-  * on). Differential specs in LocalKernelsSpec enforce this against the
-  * distributed implementations on random graphs.
+  * bit-for-bit on integer outputs (wcc/cdlp/bfs/mst/varlength, maxFlow on
+  * integer capacities) and to summation-order ULPs on floating outputs
+  * (pagerank/sssp — absorbed by the catalog's 4-6 decimal rounding, same
+  * slack the DuckDB oracles rely on). Differential specs in
+  * LocalKernelsSpec enforce this against the distributed implementations
+  * on random graphs.
   *
   * Two pieces own how a small graph is laid out in memory, so no kernel
   * does: ONE in-task entry, [[inTask]], hands a kernel the interned base
@@ -1177,6 +1178,62 @@ object LocalKernels {
         if (ra != rb) { p(ra) = rb; Iterator.single((g.ids(g.src(k)), g.ids(g.dst(k)), w(k))) }
         else Iterator.empty
       }
+    }
+  }
+
+  /** Max flow by Edmonds-Karp in one task — the in-task twin of
+    * [[Algorithms.maxFlow]]'s distributed loop, over the same residual: one
+    * slot per ordered vertex pair, parallel arcs' capacities (`cap`, null =
+    * 1) summed, and a zero-capacity reverse slot for every arc. Each
+    * augmentation takes a BFS-shortest path through slots with more than
+    * 1e-9 to spare. Emits one row (max_flow); 0 when the source is the sink
+    * or either is not a vertex. */
+  def maxFlow(edges: DataFrame, source: Long, sink: Long): DataFrame = {
+    val proj = edges.select(col("src").cast("long"), col("dst").cast("long"),
+      coalesce(col("cap"), lit(1.0)).cast("double"))
+    inTask(proj, Seq("max_flow")) { (g, _) =>
+      // slot keys (u << 32 | v), sorted unique, so slot p is entry p of
+      // the out-rows
+      val fwd = Array.tabulate(g.m)(k => (g.src(k).toLong << 32) | g.dst(k))
+      val keys = uniqueSorted(fwd ++ Array.tabulate(g.m)(k => (g.dst(k).toLong << 32) | g.src(k)))
+      def head(p: Int): Int = (keys(p) >>> 32).toInt
+      val adj = new Csr(g.n, Array.tabulate(keys.length)(head), keys.map(_.toInt), false)
+      val rev = Array.tabulate(keys.length)(p =>
+        java.util.Arrays.binarySearch(keys, (adj.tgt(p).toLong << 32) | head(p)))
+      val spare = new Array[Double](keys.length)
+      var k = 0
+      while (k < g.m) { spare(java.util.Arrays.binarySearch(keys, fwd(k))) += g.weight(k); k += 1 }
+      val s = g.idx(source); val t = g.idx(sink)
+      // via(v): the slot that reached v in this BFS; -1 unreached, and
+      // Int.MaxValue at the source
+      val via = new Array[Int](g.n)
+      val queue = new Array[Int](g.n)
+      def augmentingPath(): Boolean = {
+        java.util.Arrays.fill(via, -1)
+        via(s) = Int.MaxValue
+        queue(0) = s
+        var qh = 0; var qt = 1
+        while (qh < qt && via(t) < 0) {
+          val u = queue(qh); qh += 1
+          var p = adj.off(u)
+          while (p < adj.off(u + 1)) {
+            val v = adj.tgt(p)
+            if (via(v) < 0 && spare(p) > 1e-9) { via(v) = p; queue(qt) = v; qt += 1 }
+            p += 1
+          }
+        }
+        via(t) >= 0
+      }
+      var total = 0.0
+      if (s >= 0 && t >= 0 && s != t) while (augmentingPath()) {
+        var f = Double.MaxValue
+        var v = t
+        while (v != s) { f = math.min(f, spare(via(v))); v = head(via(v)) }
+        v = t
+        while (v != s) { val p = via(v); spare(p) -= f; spare(rev(p)) += f; v = head(p) }
+        total += f
+      }
+      Iterator.single(Tuple1(total))
     }
   }
 

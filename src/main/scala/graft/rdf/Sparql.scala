@@ -525,9 +525,9 @@ object Sparql {
     def closurePairs(iri: String, zero: Boolean): DataFrame = {
       val e = triples.filter(col("p") === iri)
         .select(col("s"), col("o")).distinct().localCheckpoint(true)
-      // Thresholded driver fast-path (the maxFlow discipline,
-      // Algorithms.scala): a small edge set pays ~2 Spark jobs per frontier
-      // round in the distributed loop — 10-50x the actual closure work.
+      // Thresholded driver fast-path: a small edge set pays ~2 Spark jobs
+      // per frontier round in the distributed loop — 10-50x the actual
+      // closure work.
       // Past ClosureLocalEdges the distributed loop below is the only path.
       val spark = triples.sparkSession
       if (graft.algo.LocalKernels.localSizeBytes(spark) > 0 && e.count() <= ClosureLocalEdges) {

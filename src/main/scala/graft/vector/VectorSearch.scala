@@ -474,10 +474,10 @@ object VectorSearch {
   }
 
   /** PQ-ADC search: the per-query lookup table lut(s)(c) = q_s · book(s)(c)
-    * is a tiny literal array; the approximate dot is m element_at adds over
-    * the CODES column (whole-stage codegen, no vector bytes touched), the
-    * top C winners join back to the float vectors (broadcast — C ids) and
-    * re-rank exactly. Generous C recovers the exact top-k — q_knn_pq pins
+    * is a tiny literal array, held once in the plan; the approximate dot
+    * sums the code-th entry of each subspace's slice over the CODES column
+    * (no vector bytes touched), the top C winners join back to the float
+    * vectors (broadcast — C ids) and re-rank exactly. Generous C recovers the exact top-k — q_knn_pq pins
     * that against the exact-kNN oracle; RecallSpec floors the no-re-rank
     * ADC recall. */
   def knnPqEncoded(encoded: DataFrame, emb: DataFrame, idCol: String,
@@ -492,10 +492,11 @@ object VectorSearch {
       val qs = java.util.Arrays.copyOfRange(qArr, s * dsub, (s + 1) * dsub)
       books(s).map(arrayDot(qs, _))
     }
+    // one literal: the codes gather their lut entries and sum left to right
     val lut = typedlit(lutFlat)
-    val proxy = (0 until m).map(s =>
-      element_at(lut, lit(s * kCodes + 1) + element_at(col("codes"), s + 1).cast("int")))
-      .reduce(_ + _)
+    val proxy = aggregate(
+      transform(col("codes"), (c, s) => element_at(lut, s * kCodes + c.cast("int") + 1)),
+      lit(0.0), _ + _)
     val topC = encoded.select(col(idCol), proxy.as("_adc"))
       .orderBy(col("_adc").desc, col(idCol).asc)
       .limit(candidates)

@@ -512,11 +512,13 @@ class AlgorithmsSpec extends SparkSpec {
   }
 
   test("maxFlow: distributed path (threshold 0) needs flow cancellation") {
-    // same network, collectThreshold=0 forces the distributed BFS loop;
+    // same network, localSizeBytes=0 forces the distributed BFS loop;
     // BFS finds 0->1->2->3 first, forcing cancellation via the reverse edge
     val e = Seq((0L, 1L, 3.0), (0L, 2L, 2.0), (1L, 2L, 3.0), (1L, 3L, 2.0), (2L, 3L, 3.0))
       .toDF("src", "dst", "cap")
-    assert(Algorithms.maxFlow(e, 0L, 3L, collectThreshold = 0L).as[Double].head() == 5.0)
+    spark.conf.set("spark.graft.algo.localSizeBytes", "0")
+    try assert(Algorithms.maxFlow(e, 0L, 3L).as[Double].head() == 5.0)
+    finally spark.conf.unset("spark.graft.algo.localSizeBytes")
   }
 
   test("mst: picks the cheap spanning edges, tie-broken lexicographically") {

@@ -7,11 +7,10 @@ import org.apache.logging.log4j.core.appender.AbstractAppender
 /** The approximate kNN rows ship small tasks and print short plans. Each
   * row runs through `SparkEntry.queries` at sf0.001; the spec fails on any
   * `Broadcasting large task binary` WARN from the `DAGScheduler` (Spark
-  * logs it past ~1 MB) and, for the rows whose re-rank or proxy is one
-  * `graft_dot` node, on an executed plan string of 32,768 chars or more
-  * (the cap `GraftSession` sets for plan strings). `q_knn_pq` is held to
-  * the task-binary rule only: its ADC lookup-table gather is one
-  * `element_at` per subspace. `ssspPath`'s distributed walk also ships a
+  * logs it past ~1 MB) and on an executed plan string of 32,768 chars or
+  * more (the cap `GraftSession` sets for plan strings): each row's re-rank
+  * or proxy is one `graft_dot` node, and `q_knn_pq`'s ADC proxy holds its
+  * lookup table as one literal. `ssspPath`'s distributed walk also ships a
   * large binary (its runtime bloom filter); that is not a kNN row and is
   * not covered here. */
 class KnnPlanSizeSpec extends SparkSpec {
@@ -45,17 +44,14 @@ class KnnPlanSizeSpec extends SparkSpec {
     super.afterAll()
   }
 
-  Seq("q_knn_approx" -> true, "q_knn_ivf" -> true, "q_knn_quantized" -> true,
-      "q_knn_pq" -> false).foreach { case (q, capped) =>
-    test(s"$q: no large task binary" + (if (capped) s", executed plan under $planCap chars" else "")) {
+  Seq("q_knn_approx", "q_knn_ivf", "q_knn_quantized", "q_knn_pq").foreach { q =>
+    test(s"$q: no large task binary, executed plan under $planCap chars") {
       largeBinaries.clear()
       val df = SparkEntry.queries(q)(spark, sfDir)
       assert(df.collect().nonEmpty, s"$q returned no rows")
       assert(largeBinaries.isEmpty, s"$q: ${largeBinaries.toArray.mkString("; ")}")
-      if (capped) {
-        val len = df.queryExecution.executedPlan.toString.length
-        assert(len < planCap, s"$q: executed plan is $len chars")
-      }
+      val len = df.queryExecution.executedPlan.toString.length
+      assert(len < planCap, s"$q: executed plan is $len chars")
     }
   }
 }

@@ -346,6 +346,45 @@ class LocalKernelsSpec extends SparkSpec {
     }
   }
 
+  test("mst distributed: an 80-vertex path contracts fully, each edge once") {
+    // every vertex picks its lighter edge, so round 1 picks all 79 and the
+    // contraction must merge an 80-long chain of components in one wcc
+    val e = (1L until 80L).map(i => (i, i + 1, i.toDouble)).toDF("src", "dst", "weight")
+    val loc = sortedRows(LocalKernels.mst(e))
+    spark.conf.set("spark.graft.algo.localSizeBytes", "0")
+    val dist = try sortedRows(Algorithms.mst(e))
+    finally spark.conf.unset("spark.graft.algo.localSizeBytes")
+    assert(loc.length == 79)
+    assert(dist.toSeq == loc.toSeq)
+  }
+
+  test("maxFlow local == distributed, exact (integer capacities)") {
+    // multigraphs with parallel and antiparallel arcs, self-loops and null
+    // capacities (= 1), plus a component the source cannot reach
+    def network(seed: Long): DataFrame = {
+      val rnd = new scala.util.Random(seed)
+      val ids = Array.tabulate(10)(i => 200L + 5L * i)
+      (Seq.fill(36)((ids(rnd.nextInt(10)), ids(rnd.nextInt(10)),
+          if (rnd.nextInt(8) == 0) None else Some(rnd.nextInt(7).toDouble))) ++
+        Seq((900L, 901L, Some(4.0)), (901L, 900L, Some(2.0))))
+        .toDF("src", "dst", "cap")
+    }
+    val flows = for {
+      seed <- Seq(41L, 42L, 43L)
+      (s, t) <- Seq((200L, 245L), (205L, 240L), (200L, 901L), (210L, 210L))
+    } yield {
+      val e = network(seed)
+      val loc = sortedRows(LocalKernels.maxFlow(e, s, t))
+      spark.conf.set("spark.graft.algo.localSizeBytes", "0")
+      val dist = try leakFree(sortedRows(Algorithms.maxFlow(e, s, t)))
+      finally spark.conf.unset("spark.graft.algo.localSizeBytes")
+      assert(loc.toSeq == dist.toSeq, s"seed $seed, $s -> $t")
+      (s, t) -> loc.head
+    }
+    assert(flows.exists { case (_, f) => f != "[0.0]" }) // some network carries flow
+    assert(flows.forall { case ((s, t), f) => (t != 901L && s != t) || f == "[0.0]" })
+  }
+
   test("triangleCount + lcc local == distributed, exact (multigraph rows kept)") {
     // canonical a<b undirected edges WITH duplicates
     val random = Seq(14L, 15L, 16L).map { seed =>

@@ -181,7 +181,7 @@ class SparqlSpec extends SparkSpec {
   }
 
   test("closure threshold boundary: driver fast-path == distributed loop") {
-    // the maxFlow-style dual-path pin (r12 verdict task #9): the SAME p+
+    // the dual-path pin (r12 verdict task #9): the SAME p+
     // and p* queries under the driver fast-path (edge count under the
     // threshold) and with spark.graft.algo.localSizeBytes=0 (the
     // distributed frontier loop is the only path) must be cell-identical
