@@ -6,6 +6,9 @@ import org.apache.spark.sql.SparkSession
   * Harness hygiene: queries run in deterministic sorted order; a warmup query
   * first absorbs JVM/parquet/codegen warmup (not reported); each query runs
   * up to `SPARK_GRAFT_BENCH_REPS` times (default 3) and reports the MIN.
+  * A run is timed from the catalog call until its rows are collected, as
+  * a caller gets them: not `count()`, under which Spark drops a final sort
+  * and which still runs a job over rows the driver already holds.
   *
   * Why min, not median: the only run-to-run variance source in a single-JVM
   * deterministic suite is additive driver-side noise (ContextCleaner drains,
@@ -66,7 +69,7 @@ object Bench {
 
     // warmup: run the first query once, discard the measurement
     ordered.headOption.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+      try fn(spark, sfDir).collect() catch { case _: Throwable => () }
     }
 
     def isolate(gc: Boolean): Unit = {
@@ -89,7 +92,7 @@ object Bench {
              gc: Boolean): Double = {
       isolate(gc)
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch {
+      try { fn(spark, sfDir).collect() } catch {
         case e: Throwable =>
           failed.getOrElseUpdate(name, e.getClass.getName)
           return -1.0

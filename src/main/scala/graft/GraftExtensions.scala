@@ -1,15 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import graft.algo.LocalKernels
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression,
+  ExpressionInfo, InterpretedOrdering, Unevaluable}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Sort}
+import org.apache.spark.sql.catalyst.rules.Rule
 
-/** Session extensions for the engine's native Catalyst expressions —
-  * enable with `spark.sql.extensions=graft.GraftExtensions` (every session
-  * this repo creates does). Currently injects:
+/** Session extensions for the engine's native Catalyst expressions and
+  * rules — enable with `spark.sql.extensions=graft.GraftExtensions` (every
+  * session this repo creates does). Currently injects:
   *
   *   graft_dot(arrayA, arrayB) -> double   (graft.functions.DotProduct)
   *   graft_polyhash(str)       -> bigint   (graft.functions.PolyHash)
+  *   optimizer rule [[SortLocalRelation]]
   *
   * Injection (vs a UDF) keeps the function inside whole-stage codegen and
   * visible to SQL, `call_function`, and EXPLAIN like any built-in.
@@ -18,7 +23,33 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction(GraftExtensions.dotFunction)
     ext.injectFunction(GraftExtensions.polyHashFunction)
+    ext.injectOptimizerRule(SortLocalRelation)
   }
+}
+
+/** Sorts driver-held rows on the driver: when the WHOLE plan is a global
+  * Sort directly over a LocalRelation (a resident kernel hit's rows, with
+  * any projection `ConvertToLocalRelation` already folded in), the rule
+  * replaces both with the relation's rows in sorted order, so `collect()`
+  * is a bare `LocalTableScan` — no range-sampling job, no shuffle, no task.
+  * It matches the root only: a Sort under a Limit stays
+  * `TakeOrderedAndProject`, and one under a join or any other operator is
+  * not touched. Only global sorts over deterministic, evaluable keys fold.
+  * Off when `spark.graft.algo.localSizeBytes <= 0`, and for relations
+  * estimated above it, like every other small-input route. */
+case class SortLocalRelation(spark: SparkSession) extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan match {
+    case Sort(order, true, l: LocalRelation, _) if !l.isStreaming &&
+        order.forall(o => o.deterministic && !o.child.exists(unevaluable)) && {
+          val cap = LocalKernels.localSizeBytes(spark)
+          cap > 0 && l.stats.sizeInBytes <= cap
+        } =>
+      l.copy(data = l.data.sorted(new InterpretedOrdering(order, l.output)))
+    case _ => plan
+  }
+
+  private def unevaluable(e: Expression): Boolean =
+    e.isInstanceOf[Unevaluable] && !e.isInstanceOf[AttributeReference]
 }
 
 object GraftExtensions {

@@ -14,9 +14,14 @@ import scala.reflect.runtime.universe.TypeTag
   * (eager checkpoint + action); on a graph that fits in ONE task that fixed
   * scheduling cost dominates the actual compute by 10-50x. Exactly like a
   * broadcast-join decision, the gate reads the optimizer's size estimate
-  * (free — no job) and routes small inputs to a single `mapPartitions` task
-  * running the classic array kernel ON AN EXECUTOR — nothing is collected
-  * to the driver, and the result is a regular DataFrame. Large inputs keep
+  * (free — no job) and routes small inputs to the classic array kernel.
+  * The first call over an edge projection runs it in a single
+  * `mapPartitions` task that scans the edges — nothing is collected to the
+  * driver, and the result is a regular DataFrame. A later call over the
+  * same file-backed projection in local mode (a resident hit, see
+  * [[inTask]]) runs the kernel on the calling thread over the view already
+  * in this JVM and returns up to 10,000 rows as a local relation: no Spark
+  * job. Large inputs keep
   * the shuffle-join formulation unchanged; the gate never counts a big
   * input (no extra pass over 100 TB — the size estimate alone rejects it).
   *
@@ -127,19 +132,20 @@ object LocalKernels {
 
   // ---- the in-task entry and the resident view cache ---------------------
   //
-  // Every kernel runs through [[inTask]]: ONE task materializes the
-  // kernel's edge projection (src, dst, plus a weight or an edge id),
+  // Every kernel runs through [[inTask]]: on a miss ONE task materializes
+  // the kernel's edge projection (src, dst, plus a weight or an edge id),
   // interns it into its base [[GraphView]] and hands that, with an optional
   // tagged side stream of start and target ids ([[Side]]), to the kernel.
-  // The entry keeps the base view resident (as the reference keeps its
-  // CSR) keyed by (canonicalized projection plan, input files + len +
-  // mtime) — file-backed plans only, so literal or RDD-backed inputs
+  // In local mode the entry keeps the base view resident (as the reference
+  // keeps its CSR) keyed by (canonicalized projection plan, input files +
+  // len + mtime) — file-backed plans only, so literal or RDD-backed inputs
   // (mutated graphs, checkpoints) never false-hit. The task that interned
-  // the view PUTs it, the driver LOOKS IT UP before launching a job: in
+  // the view PUTs it, the driver LOOKS IT UP before planning anything: in
   // local[n] they share the JVM, so a later kernel over the same edges
-  // skips the scan job and the interning and reuses the shaped views and
-  // CSRs memoized on the entry; on a multi-JVM cluster the driver never
-  // sees executor entries and always scans — correct, just not resident.
+  // skips the scan and the interning, reuses the shaped views and CSRs
+  // memoized on the entry, and without a side stream runs no job at all.
+  // On a multi-JVM cluster the driver never sees executor entries, so no
+  // key is computed and every call scans — correct, just not resident.
   // LRU-bounded by the edge entries an entry holds, memoized ones included.
   // Measured worth (4-core host, sf0.01): with the cache off
   // graph_analytics fell from 6.10 to 3.37 statements/s and cypher_read
@@ -177,21 +183,18 @@ object LocalKernels {
   private def residentLookup(key: String): GraphView =
     resident.synchronized(resident.get(key))
 
-  /** Store only when driver and executors share the JVM (local[n]): on a
-    * multi-JVM cluster the driver can never see executor entries, so a
-    * store would be permanently-retained dead weight in executor heaps.
-    * Entries grow as kernels memoize on them: each store re-sums them. */
-  private def residentStore(key: String, g: GraphView): Unit = {
-    val env = org.apache.spark.SparkEnv.get
-    if (env != null && env.executorId == "driver") resident.synchronized {
-      if (!resident.containsKey(key)) {
-        resident.put(key, g)
-        var rows = resident.values.asScala.map(_.rows).sum
-        val it = resident.entrySet().iterator()
-        while (rows > ResidentRowBudget && resident.size() > 1 && it.hasNext) {
-          val x = it.next()
-          if (!x.getKey.equals(key)) { rows -= x.getValue.rows; it.remove() }
-        }
+  /** Called only with a local-mode key ([[inTask]] computes none on a
+    * multi-JVM cluster, where a store would be dead weight in executor
+    * heaps). Entries grow as kernels memoize on them: each store re-sums
+    * them. */
+  private def residentStore(key: String, g: GraphView): Unit = resident.synchronized {
+    if (!resident.containsKey(key)) {
+      resident.put(key, g)
+      var rows = resident.values.asScala.map(_.rows).sum
+      val it = resident.entrySet().iterator()
+      while (rows > ResidentRowBudget && resident.size() > 1 && it.hasNext) {
+        val x = it.next()
+        if (!x.getKey.equals(key)) { rows -= x.getValue.rows; it.remove() }
       }
     }
   }
@@ -231,40 +234,43 @@ object LocalKernels {
     }
   }
 
-  // Pin registry for cache hits: the hit-path plan captures a small
-  // HANDLE (a serializable long wrapper), not the view (capturing it
-  // would serialize up to the full row budget into every task binary).
-  // The registry maps token → (WeakReference(handle), view): the plan's
-  // closure strongly references the handle, so the pinned view stays
+  // Pin registry for hits that still run a task: a side-stream hit pins
+  // the view, a hit with more than [[DriverRows]] rows pins the rows the
+  // kernel computed on the driver. The task's plan captures a small
+  // HANDLE (a serializable long wrapper), not the pinned value (capturing
+  // it would serialize up to the full row budget into every task binary).
+  // The registry maps token → (WeakReference(handle), value): the plan's
+  // closure strongly references the handle, so the pinned value stays
   // resolvable for EXACTLY the lifetime of the returned DataFrame — a
   // hit-path plan executed arbitrarily late, or more than once (show()
-  // then count(), a stage retry), can never lose its view to eviction;
-  // once the DataFrame is GC'd the weak ref clears and the entry is
-  // purged on the next pin() (a fixed-size FIFO of pins could age
-  // a live plan's pin out and turn a cache eviction into a query error —
-  // the hit-path plan's leaf is a 1-row range or the side stream, so there
-  // is no recompute fallback). Pinned values are the resident store's
-  // views, so a live pin costs one map entry, not a second copy; while
-  // pins are live a view can outlast the resident LRU budget — that is
-  // the point (they are reachable through user-held DataFrames regardless).
-  // Hits only happen in local mode (gated in [[inTask]]), where driver and
-  // task share the JVM.
+  // then count(), a stage retry), can never lose it to eviction; once the
+  // DataFrame is GC'd the weak ref clears and the entry is purged on the
+  // next pin() (a fixed-size FIFO of pins could age a live plan's pin out
+  // and turn a cache eviction into a query error — the hit-path plan's
+  // leaf is the side stream or a 1-row range, so there is no recompute
+  // fallback). A pinned view is the resident store's, so a live pin costs
+  // one map entry, not a second copy; while pins are live a view can
+  // outlast the resident LRU budget — that is the point (they are
+  // reachable through user-held DataFrames regardless). Hits only happen
+  // in local mode (gated in [[inTask]]), where driver and task share the
+  // JVM.
   private final class PinHandle(val token: Long) extends Serializable
   private final case class PinEntry(
-    handle: java.lang.ref.WeakReference[PinHandle], view: GraphView)
+    handle: java.lang.ref.WeakReference[PinHandle], value: AnyRef)
   private[this] val pinned = new java.util.HashMap[java.lang.Long, PinEntry]()
   private[this] val pinSeq = new java.util.concurrent.atomic.AtomicLong()
-  private def pin(g: GraphView): PinHandle = pinned.synchronized {
+  private def pin(v: AnyRef): PinHandle = pinned.synchronized {
     val it = pinned.values().iterator()
     while (it.hasNext) if (it.next().handle.get() == null) it.remove()
     val h = new PinHandle(pinSeq.incrementAndGet())
-    pinned.put(h.token, PinEntry(new java.lang.ref.WeakReference(h), g))
+    pinned.put(h.token, PinEntry(new java.lang.ref.WeakReference(h), v))
     h
   }
-  private def pinGet(t: Long, key: String): GraphView = {
-    val g = pinned.synchronized(Option(pinned.get(t)).map(_.view).orNull)
-    if (g != null) g
-    else residentLookup(key) match { // GC-race belt-and-braces
+  private def pinValue(t: Long): AnyRef =
+    pinned.synchronized(Option(pinned.get(t)).map(_.value).orNull)
+  private def pinGet(t: Long, key: String): GraphView = pinValue(t) match {
+    case g: GraphView => g
+    case _ => residentLookup(key) match { // GC-race belt-and-braces
       case null => throw new IllegalStateException(
         s"resident-cache pin $t was garbage-collected and entry $key " +
           "was evicted before the kernel task ran")
@@ -272,31 +278,55 @@ object LocalKernels {
     }
   }
 
-  /** Run `body` in one task over the base view of `proj`'s edges —
-    * columns src and dst (longs) and an optional third column, a double
-    * weight or a long edge id — and, when `side` is given, its (id, tag)
-    * rows; the result's columns are `names`. The view comes from the
-    * resident cache when the same file-backed projection was interned
-    * before in this JVM; only the side stream then rides a job. */
+  /** The most rows a resident hit returns as a local relation. Catalyst
+    * copies a local relation's row sequence in every expression
+    * transform, and a plan that does not fold it ships the rows to tasks,
+    * so past ~10k rows one task over pinned rows is cheaper: at sf0.1,
+    * `q_cypher_call_louvain` (165k rows) took 0.83 s as a local relation
+    * against 0.20 s in a task, and `q_cypher_call_wcc` (16k rows) 0.127 s
+    * against 0.092 s. Every graph_analytics row at sf0.01 returns at most
+    * 5.5k rows. */
+  private val DriverRows = 10000
+
+  /** Run `body` over the base view of `proj`'s edges — columns src and
+    * dst (longs) and an optional third column, a double weight or a long
+    * edge id — and, when `side` is given, its (id, tag) rows; the result's
+    * columns are `names`. A miss runs `body` in one task that scans the
+    * projection. A resident hit (the same file-backed projection was
+    * interned before in this JVM, local mode only) runs no scan: without
+    * a side stream, `body` runs HERE, on the calling thread, so a kernel
+    * failure surfaces from this call, not from an action on the result;
+    * up to [[DriverRows]] rows come back as a local relation, which a
+    * collect reads with no job, and more ride one task that reads them
+    * from a pin. With a side stream, only the side stream rides a job. */
   private def inTask[T <: Product : TypeTag](proj: DataFrame, names: Seq[String],
                                             side: DataFrame = null)
                                            (body: (GraphView, Side) => Iterator[T]): DataFrame = {
     val spark = proj.sparkSession
     implicit val enc: Encoder[T] = Encoders.product[T]
-    val key = cacheKey(proj)
+    val key = if (spark.sparkContext.isLocal) cacheKey(proj) else None
     val third = proj.schema.fields.lift(2).map(_.dataType)
     val weighted = third.contains(DoubleType)
     val withEid = third.contains(LongType)
     val hasSide = side != null
-    val hit = if (!spark.sparkContext.isLocal) None
-              else key.flatMap(k => Option(residentLookup(k)))
-    hit match {
+    key.flatMap(k => Option(residentLookup(k))) match {
+      case Some(g) if !hasSide =>
+        val out = body(g, Side(Array.empty, Array.empty)).toVector
+        if (out.length <= DriverRows) spark.createDataset(out).toDF(names: _*)
+        else {
+          val h = pin(out)
+          spark.range(0, 1, 1, 1).mapPartitions { _ =>
+            pinValue(h.token) match {
+              case rows: Vector[T @unchecked] => rows.iterator
+              case _ => throw new IllegalStateException(
+                s"resident-cache pin ${h.token} was released before the kernel task ran")
+            }
+          }.toDF(names: _*)
+        }
       case Some(g) =>
         val h = pin(g); val k = key.get
-        val rows = if (hasSide) side.repartition(1) else spark.range(0, 1, 1, 1).toDF()
-        rows.mapPartitions { it =>
-          val s = if (hasSide) drain(it, 1, false, false)._2 else Side(Array.empty, Array.empty)
-          body(pinGet(h.token, k), s)
+        side.repartition(1).mapPartitions { it =>
+          body(pinGet(h.token, k), drain(it, 1, false, false)._2)
         }.toDF(names: _*)
       case None =>
         val tagAt = if (hasSide) proj.columns.length else -1

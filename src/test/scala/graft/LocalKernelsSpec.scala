@@ -1,9 +1,13 @@
 package graft
 
 import graft.algo.{Algorithms, LocalKernels}
+import graft.functions.CypherFunctions
 import graft.operators.Traversals
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 
 /** Differential tests: the in-task kernels must reproduce the distributed
   * implementations' observable output — exactly for integer-valued results
@@ -33,6 +37,16 @@ class LocalKernelsSpec extends SparkSpec {
 
   private def sortedRows(df: DataFrame): Array[String] =
     df.collect().map(_.toString).sorted
+
+  /** Runs `f` on a fresh temporary directory and deletes it afterwards. */
+  private def withTempDir[A](prefix: String)(f: java.io.File => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
+      f.delete(): Unit
+    }
+    try f(dir) finally rm(dir)
+  }
 
   test("gate: small inputs route local, localSizeBytes=0 pins distributed") {
     val e = randGraph(1, 20, 60)
@@ -524,11 +538,11 @@ class LocalKernelsSpec extends SparkSpec {
   test("resident cache: file-backed kernels hit the cache and match cold runs") {
     // parquet-backed edges (LocalRelation inputs never cache) — run each
     // kernel twice: run 1 populates the resident cache, run 2 serves from
-    // it. A hit reads no file: its plan's leaves are a 1-row range or the
-    // (local) start/target rows. Both runs must match each other and the
+    // it. A hit reads no file: its plan is the kernel's rows (a local
+    // relation) or, for the path kernels, a task over the (local)
+    // start/target rows. Both runs must match each other and the
     // distributed twin.
-    val dir = java.nio.file.Files.createTempDirectory("graft_rescache").toFile
-    try {
+    withTempDir("graft_rescache") { dir =>
       randGraph(77, 40, 200)
         .withColumn("id", monotonically_increasing_id())
         .withColumn("weight", (pmod(col("src") + col("dst"), lit(7)) + lit(1)).cast("double"))
@@ -586,18 +600,11 @@ class LocalKernelsSpec extends SparkSpec {
       val e2 = spark.read.parquet(s"$dir/e.parquet")
       assert(sortedRows(LocalKernels.wcc(e2)) ===
         distributed(graft.algo.Algorithms.wcc(e2)))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(dir)
     }
   }
 
   test("resident cache: concurrent kernels over one resident view match sequential runs") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rescache_mt").toFile
-    try {
+    withTempDir("graft_rescache_mt") { dir =>
       randGraph(91, 60, 400).write.parquet(s"$dir/e.parquet")
       val e = spark.read.parquet(s"$dir/e.parquet")
       val seeds = Seq(1000L, 1070L, 1140L)
@@ -625,12 +632,111 @@ class LocalKernelsSpec extends SparkSpec {
       assert(got(0) === sequential)
       assert(got(1) === sequential.reverse)
       assert(LocalKernels.residentView(LocalKernels.pairs(e)).exists(_ eq base.get))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
+    }
+  }
+
+  // ---- resident hits: the same rows as the miss, and no job ------------
+
+  /** Every kernel that reads no side stream, over the (src, dst, weight,
+    * cap, a, b) edge frame and a source vertex id. */
+  private val noSideKernels: Seq[(String, (DataFrame, Long) => DataFrame)] = Seq(
+    "pageRank" -> ((e, _) => LocalKernels.pageRank(e, 8, 0.85)),
+    "wcc" -> ((e, _) => LocalKernels.wcc(e)),
+    "cdlp" -> ((e, _) => LocalKernels.cdlp(e, 4)),
+    "lcc" -> ((e, _) => LocalKernels.lcc(e)),
+    "triangleCount" -> ((e, _) => LocalKernels.triangleCount(e)),
+    "bfs" -> ((e, s) => LocalKernels.bfs(e, s, 5)),
+    "sssp" -> ((e, s) => LocalKernels.sssp(e, s, 6)),
+    "kCore" -> ((e, _) => LocalKernels.kCore(e, 2, 4)),
+    "louvainMoves" -> ((e, _) => LocalKernels.louvainMoves(e, 3)),
+    "scc" -> ((e, _) => LocalKernels.scc(e)),
+    "betweennessCentrality" -> ((e, s) => LocalKernels.betweennessCentrality(e, Seq(s, s + 7), 3)),
+    "hits" -> ((e, _) => LocalKernels.hits(e, 5)),
+    "mst" -> ((e, _) => LocalKernels.mst(e)),
+    "maxFlow" -> ((e, s) => LocalKernels.maxFlow(e, s, s + 7)))
+
+  /** Small multigraphs over sparse ids 1000 + 7i, each with a self-loop, a
+    * parallel edge and a vertex that is only ever a destination; integer
+    * weights 1-9 (also the max-flow capacities). */
+  private val multigraphs: Gen[Seq[(Long, Long, Double)]] = for {
+    n <- Gen.choose(2, 12)
+    m <- Gen.choose(1, 30)
+    es <- Gen.listOfN(m, Gen.zip(Gen.choose(0, n - 1), Gen.choose(0, n - 1), Gen.choose(1, 9)))
+  } yield {
+    def id(i: Int): Long = 1000L + 7L * i
+    val base = es.map { case (a, b, w) => (id(a), id(b), w.toDouble) }
+    base ++ Seq((id(0), id(0), 2.0), base.head, (id(1), id(n) + 3, 4.0))
+  }
+
+  test("resident hit == miss for every kernel without a side stream (generated multigraphs)") {
+    // each kernel reads its own copy of the parquet files, so its first
+    // call is a miss (the key holds the file paths) and its second a hit
+    val prop = Prop.forAllNoShrink(multigraphs) { edges =>
+      withTempDir("graft_hitmiss") { dir =>
+        edges.toDF("src", "dst", "weight")
+          .withColumn("cap", col("weight"))
+          .withColumn("a", col("src")).withColumn("b", col("dst"))
+          .coalesce(1).write.parquet(s"$dir/base")
+        val files = dir.toPath.resolve("base")
+        noSideKernels.foreach { case (name, kernel) =>
+          val copy = dir.toPath.resolve(name)
+          java.nio.file.Files.createDirectory(copy)
+          files.toFile.listFiles.foreach(f =>
+            java.nio.file.Files.copy(f.toPath, copy.resolve(f.getName)))
+          val e = spark.read.parquet(copy.toString)
+          val miss = kernel(e, 1000L)
+          assert(miss.inputFiles.nonEmpty, s"$name: the first call was not a miss")
+          val missRows = miss.collect().toSeq
+          val hit = kernel(e, 1000L)
+          assert(hit.inputFiles.isEmpty, s"$name: the second call read the edge files")
+          assert(hit.collect().toSeq == missRows, s"$name: hit != miss on $edges")
+        }
+        true
       }
-      rm(dir)
+    }
+    // no shrinking: each shrink step would rerun every kernel
+    val res = Test.check(Test.Parameters.default.withInitialSeed(Seed(20261020L))
+      .withMinSuccessfulTests(4).withWorkers(1), prop)
+    assert(res.passed, res.status)
+  }
+
+  test("resident hit: no job without a side stream, a bare LocalTableScan; over 10,000 rows or with a side stream, one job") {
+    withTempDir("graft_hitjobs") { dir =>
+      randGraph(31, 30, 120).write.parquet(s"$dir/e.parquet")
+      val e = spark.read.parquet(s"$dir/e.parquet")
+      def wcc = Algorithms.wcc(e).orderBy(col("id"))
+      var miss: Array[Row] = null
+      assert(jobsDuring { miss = wcc.collect() } >= 1, "a miss scans the edges in a job")
+      val hit = wcc
+      assert(jobsDuring(hit.collect()) == 0, "a hit's collect ran a job")
+      assert(hit.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec],
+        hit.queryExecution.executedPlan.toString)
+      assert(hit.collect().toSeq == miss.toSeq)
+      // the Algorithms call itself runs no job either; the catalog's
+      // rounding select folds into the relation with the sort
+      def pr = Algorithms.pageRank(e, 8, 0.85)
+        .select(col("id"), CypherFunctions.roundC(col("rank"), 4).as("rank"))
+        .orderBy(col("id"))
+      var ranks: Array[Row] = null
+      assert(jobsDuring { ranks = pr.collect() } == 0, "a pageRank hit ran a job")
+      assert(pr.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec])
+      assert(ranks.map(_.getLong(0)).toSeq == ranks.map(_.getLong(0)).sorted.toSeq)
+      // past 10,000 rows a hit's rows ride one task instead of the plan
+      spark.range(0, 10500).select((col("id") * 3).as("src"), (col("id") * 3 + 3).as("dst"))
+        .write.parquet(s"$dir/path.parquet")
+      val path = spark.read.parquet(s"$dir/path.parquet")
+      val chain = sortedRows(LocalKernels.wcc(path))
+      assert(chain.length == 10501)
+      val big = LocalKernels.wcc(path)
+      assert(big.inputFiles.isEmpty, "the second call over the path missed")
+      var bigRows: Array[String] = null
+      assert(jobsDuring { bigRows = sortedRows(big) } == 1, "a hit over 10,000 rows runs one task")
+      assert(bigRows === chain)
+      // a path kernel's hit still runs its side stream in a task
+      val starts = Seq(1000L, 1007L).toDF("s0")
+      val vle = LocalKernels.varLengthExpand(e, starts, "s0", 1, 3)
+      assert(vle.inputFiles.isEmpty, "varLengthExpand missed the resident view")
+      assert(jobsDuring(vle.collect()) >= 1, "a side-stream hit ran no job")
     }
   }
 }
