@@ -106,7 +106,7 @@ object ClusterVerify {
     "q_pagerank", "q_ppr", "q_adamic_adar", "q_harmonic_centrality",
     "q_betweenness", "q_ktruss", "q_closeness_centrality", "q_jaccard_sim",
     "q_cdlp", "q_triangle_count",
-    "q_knn_exact", "q_knn_approx", "q_semdedup",
+    "q_knn_exact", "q_knn_filtered", "q_hybrid_rrf", "q_knn_approx", "q_semdedup",
     "q_minhash_lsh", "q_substring_dedup", "q_embedding_centroid",
     "q_dsir_resample", "q_pack_harmonic", "q_incremental_dedup",
     "q_hard_negatives", "q_nb_quality", "q_pipeline_e2e",

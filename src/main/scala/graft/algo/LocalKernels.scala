@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 import scala.reflect.runtime.universe.TypeTag
 
 /** In-task graph kernels for stats-gated small inputs.
@@ -38,6 +39,11 @@ import scala.reflect.runtime.universe.TypeTag
   * slack the DuckDB oracles rely on). Differential specs in
   * LocalKernelsSpec enforce this against the distributed implementations
   * on random graphs.
+  *
+  * The same route and resident store serve the exact k-NN kernel of
+  * [[graft.vector.VectorSearch.knnExactFor]]: [[routed]] drains either a
+  * graph view or a vector block ([[Resident]]), so a repeated vector
+  * search over the same files runs no job either.
   *
   * Two pieces own how a small graph is laid out in memory, so no kernel
   * does: ONE in-task entry, [[inTask]], hands a kernel the interned base
@@ -100,6 +106,10 @@ object LocalKernels {
     * `localSizeBytes=0` turns this gate off too. */
   private[graft] val Superlinear = Caps(Some(1L << 20), 64L << 20, 200000L, 0L, 0L)
 
+  /** The estimate tier alone: no count, no dense tier, so the gate never
+    * runs a job while a frame is built (the exact k-NN route). */
+  private[graft] val Estimate = Caps(None, 0L, 0L, 0L, 0L)
+
   /** Like [[isSmall]] but when the gray zone forces a count, the input is
     * localCheckpointed FIRST and the (possibly materialized) frame is
     * returned for downstream use — an expensive derived input (e.g. a
@@ -130,23 +140,25 @@ object LocalKernels {
     }
   }
 
-  // ---- the in-task entry and the resident view cache ---------------------
+  // ---- the resident store and the routes over it -------------------------
   //
-  // Every kernel runs through [[inTask]]: on a miss ONE task materializes
-  // the kernel's edge projection (src, dst, plus a weight or an edge id),
-  // interns it into its base [[GraphView]] and hands that, with an optional
-  // tagged side stream of start and target ids ([[Side]]), to the kernel.
-  // In local mode the entry keeps the base view resident (as the reference
-  // keeps its CSR) keyed by (canonicalized projection plan, input files +
-  // len + mtime) — file-backed plans only, so literal or RDD-backed inputs
-  // (mutated graphs, checkpoints) never false-hit. The task that interned
-  // the view PUTs it, the driver LOOKS IT UP before planning anything: in
-  // local[n] they share the JVM, so a later kernel over the same edges
-  // skips the scan and the interning, reuses the shaped views and CSRs
-  // memoized on the entry, and without a side stream runs no job at all.
-  // On a multi-JVM cluster the driver never sees executor entries, so no
-  // key is computed and every call scans — correct, just not resident.
-  // LRU-bounded by the edge entries an entry holds, memoized ones included.
+  // Every in-task kernel runs through [[routed]]: on a miss ONE task scans
+  // the kernel's input projection and drains it into a [[Resident]] value
+  // (a graph kernel's base [[GraphView]] — see [[inTask]] — or a kNN
+  // kernel's vector block, see [[graft.vector.VectorSearch]]) that it hands
+  // to the kernel. In local mode the store keeps that value resident (as
+  // the reference keeps its CSR and its in-memory vector index) keyed by
+  // (canonicalized projection plan, input files + len + mtime) —
+  // file-backed plans only, so literal or RDD-backed inputs (mutated
+  // graphs, checkpoints) never false-hit. The task that drained the value
+  // PUTs it, the driver LOOKS IT UP before planning anything: in local[n]
+  // they share the JVM, so a later kernel over the same input skips the
+  // scan and the drain, reuses the shaped views and CSRs memoized on a
+  // view, and without a side stream runs no job at all. On a multi-JVM
+  // cluster the driver never sees executor entries, so no key is computed
+  // and every call scans — correct, just not resident. One LRU for both
+  // kinds, bounded by one budget: the edge entries a view holds, memoized
+  // ones included, and the elements a vector block holds.
   // Measured worth (4-core host, sf0.01): with the cache off
   // graph_analytics fell from 6.10 to 3.37 statements/s and cypher_read
   // from 4.72 to 4.17; without the CSR memo it runs 7.90, not 8.67.
@@ -176,20 +188,29 @@ object LocalKernels {
   /** The side stream's start ids (tag 1) and target ids (tag 2). */
   private final case class Side(starts: Array[Long], targets: Array[Long])
 
+  /** A value the resident store holds: a graph kernel's base [[GraphView]]
+    * or a kNN kernel's vector block. `rows` is its weight against the one
+    * budget — edge entries, or vector elements. */
+  private[graft] trait Resident { def rows: Long }
+
   private[this] val resident =
-    new java.util.LinkedHashMap[String, GraphView](8, 0.75f, true)
+    new java.util.LinkedHashMap[String, Resident](8, 0.75f, true)
   private val ResidentRowBudget = 32L * 1000 * 1000
 
-  private def residentLookup(key: String): GraphView =
-    resident.synchronized(resident.get(key))
+  /** The entry under `key`, when there is one of type `V`. */
+  private def residentLookup[V <: Resident : ClassTag](key: String): Option[V] =
+    resident.synchronized(resident.get(key)) match {
+      case v: V => Some(v)
+      case _ => None
+    }
 
-  /** Called only with a local-mode key ([[inTask]] computes none on a
+  /** Called only with a local-mode key ([[cacheKey]] computes none on a
     * multi-JVM cluster, where a store would be dead weight in executor
     * heaps). Entries grow as kernels memoize on them: each store re-sums
     * them. */
-  private def residentStore(key: String, g: GraphView): Unit = resident.synchronized {
+  private def residentStore(key: String, v: Resident): Unit = resident.synchronized {
     if (!resident.containsKey(key)) {
-      resident.put(key, g)
+      resident.put(key, v)
       var rows = resident.values.asScala.map(_.rows).sum
       val it = resident.entrySet().iterator()
       while (rows > ResidentRowBudget && resident.size() > 1 && it.hasNext) {
@@ -201,12 +222,14 @@ object LocalKernels {
 
   /** The resident base view of a projected edge frame, if one is held. */
   private[graft] def residentView(proj: DataFrame): Option[GraphView] =
-    cacheKey(proj).flatMap(k => Option(residentLookup(k)))
+    cacheKey(proj).flatMap(residentLookup[GraphView])
 
-  /** Cache key for a PROJECTED edge frame, or None when the plan isn't
-    * purely file-backed (LocalRelation / LogicalRDD leaves have
-    * data-invisible canonical forms — never cache those). */
+  /** Resident-store key of a kernel's input projection, or None on a
+    * multi-JVM cluster and when the plan isn't purely file-backed
+    * (LocalRelation / LogicalRDD leaves have data-invisible canonical
+    * forms — never cache those). */
   private def cacheKey(df: DataFrame): Option[String] = {
+    if (!df.sparkSession.sparkContext.isLocal) return None
     val leaves = df.queryExecution.optimizedPlan.collectLeaves()
     val fileBacked = leaves.nonEmpty && leaves.forall { l =>
       val n = l.getClass.getSimpleName
@@ -252,7 +275,7 @@ object LocalKernels {
   // one map entry, not a second copy; while pins are live a view can
   // outlast the resident LRU budget — that is the point (they are
   // reachable through user-held DataFrames regardless). Hits only happen
-  // in local mode (gated in [[inTask]]), where driver and task share the
+  // in local mode (gated in [[cacheKey]]), where driver and task share the
   // JVM.
   private final class PinHandle(val token: Long) extends Serializable
   private final case class PinEntry(
@@ -270,12 +293,10 @@ object LocalKernels {
     pinned.synchronized(Option(pinned.get(t)).map(_.value).orNull)
   private def pinGet(t: Long, key: String): GraphView = pinValue(t) match {
     case g: GraphView => g
-    case _ => residentLookup(key) match { // GC-race belt-and-braces
-      case null => throw new IllegalStateException(
+    case _ => residentLookup[GraphView](key).getOrElse( // GC-race belt-and-braces
+      throw new IllegalStateException(
         s"resident-cache pin $t was garbage-collected and entry $key " +
-          "was evicted before the kernel task ran")
-      case cached => cached
-    }
+          "was evicted before the kernel task ran"))
   }
 
   /** The most rows a resident hit returns as a local relation. Catalyst
@@ -288,30 +309,27 @@ object LocalKernels {
     * 5.5k rows. */
   private val DriverRows = 10000
 
-  /** Run `body` over the base view of `proj`'s edges — columns src and
-    * dst (longs) and an optional third column, a double weight or a long
-    * edge id — and, when `side` is given, its (id, tag) rows; the result's
-    * columns are `names`. A miss runs `body` in one task that scans the
-    * projection. A resident hit (the same file-backed projection was
-    * interned before in this JVM, local mode only) runs no scan: without
-    * a side stream, `body` runs HERE, on the calling thread, so a kernel
-    * failure surfaces from this call, not from an action on the result;
-    * up to [[DriverRows]] rows come back as a local relation, which a
-    * collect reads with no job, and more ride one task that reads them
-    * from a pin. With a side stream, only the side stream rides a job. */
-  private def inTask[T <: Product : TypeTag](proj: DataFrame, names: Seq[String],
-                                            side: DataFrame = null)
-                                           (body: (GraphView, Side) => Iterator[T]): DataFrame = {
+  /** Run `body` over the [[Resident]] value `drain` builds from the rows
+    * of `proj`, the kernel's input projection; the result's columns are
+    * `names`. A miss runs `drain` and `body` in one task over `proj`'s rows
+    * — behind a one-partition shuffle, or with `narrow` (a projection with
+    * no shuffle of its own) in the task that scans it, one job — and, when
+    * `proj` has a [[cacheKey]], keeps the value resident. A
+    * resident hit (the same file-backed projection was drained before in
+    * this JVM, local mode only) runs no scan: `body` runs HERE, on the
+    * calling thread, so a kernel failure surfaces from this call, not from
+    * an action on the result; up to [[DriverRows]] rows come back as a
+    * local relation, which a collect reads with no job, and more ride one
+    * task that reads them from a pin. */
+  private[graft] def routed[V <: Resident : ClassTag, T <: Product : TypeTag](
+      proj: DataFrame, names: Seq[String], narrow: Boolean = false)(drain: Iterator[Row] => V)(
+      body: V => Iterator[T]): DataFrame = {
     val spark = proj.sparkSession
     implicit val enc: Encoder[T] = Encoders.product[T]
-    val key = if (spark.sparkContext.isLocal) cacheKey(proj) else None
-    val third = proj.schema.fields.lift(2).map(_.dataType)
-    val weighted = third.contains(DoubleType)
-    val withEid = third.contains(LongType)
-    val hasSide = side != null
-    key.flatMap(k => Option(residentLookup(k))) match {
-      case Some(g) if !hasSide =>
-        val out = body(g, Side(Array.empty, Array.empty)).toVector
+    val key = cacheKey(proj)
+    key.flatMap(residentLookup[V]) match {
+      case Some(v) =>
+        val out = body(v).toVector
         if (out.length <= DriverRows) spark.createDataset(out).toDF(names: _*)
         else {
           val h = pin(out)
@@ -323,24 +341,49 @@ object LocalKernels {
             }
           }.toDF(names: _*)
         }
+      case None =>
+        (if (narrow) proj.coalesce(1) else proj.repartition(1)).mapPartitions { it =>
+          val v = drain(it)
+          key.foreach(residentStore(_, v))
+          body(v)
+        }.toDF(names: _*)
+    }
+  }
+
+  private val NoSide = Side(Array.empty, Array.empty)
+
+  /** [[routed]] for a graph kernel: `body` gets the base view of `proj`'s
+    * edges — columns src and dst (longs) and an optional third column, a
+    * double weight or a long edge id — and, when `side` is given, its
+    * (id, tag) rows. With a side stream a hit runs `body` in one task over
+    * the side stream alone, the view read from a pin, and a miss scans the
+    * edges and the side stream tagged in one stream. */
+  private def inTask[T <: Product : TypeTag](proj: DataFrame, names: Seq[String],
+                                            side: DataFrame = null)
+                                           (body: (GraphView, Side) => Iterator[T]): DataFrame = {
+    val third = proj.schema.fields.lift(2).map(_.dataType)
+    val weighted = third.contains(DoubleType)
+    val withEid = third.contains(LongType)
+    if (side == null) return routed(proj, names)(drain(_, -1, weighted, withEid)._1)(body(_, NoSide))
+    implicit val enc: Encoder[T] = Encoders.product[T]
+    val key = cacheKey(proj)
+    key.flatMap(residentLookup[GraphView]) match {
       case Some(g) =>
         val h = pin(g); val k = key.get
         side.repartition(1).mapPartitions { it =>
           body(pinGet(h.token, k), drain(it, 1, false, false)._2)
         }.toDF(names: _*)
       case None =>
-        val tagAt = if (hasSide) proj.columns.length else -1
-        val rows = if (!hasSide) proj else {
-          // edges tagged 0 and side ids in one stream: (id, 0, [0], tag)
-          val fill = proj.schema.fields.toSeq.tail.map(f => lit(0).cast(f.dataType))
-          proj.toDF(proj.columns.indices.map(i => s"_c$i"): _*).withColumn("_tag", lit(0))
-            .unionAll(side.select(col("id") +: fill :+ col("tag"): _*))
-        }
-        rows.repartition(1).mapPartitions { it =>
-          val (g, s) = drain(it, tagAt, weighted, withEid)
-          key.foreach(residentStore(_, g))
-          body(g, s)
-        }.toDF(names: _*)
+        // edges tagged 0 and side ids in one stream: (id, 0, [0], tag)
+        val tagAt = proj.columns.length
+        val fill = proj.schema.fields.toSeq.tail.map(f => lit(0).cast(f.dataType))
+        proj.toDF(proj.columns.indices.map(i => s"_c$i"): _*).withColumn("_tag", lit(0))
+          .unionAll(side.select(col("id") +: fill :+ col("tag"): _*))
+          .repartition(1).mapPartitions { it =>
+            val (g, s) = drain(it, tagAt, weighted, withEid)
+            key.foreach(residentStore(_, g))
+            body(g, s)
+          }.toDF(names: _*)
     }
   }
 
@@ -393,7 +436,7 @@ object LocalKernels {
     * writes into a view's arrays or a [[Csr]] from [[out]] ([[triangleSum]]
     * sorts rows of its own); shaped views and CSRs are memoized on it. */
   private[graft] final class GraphView(val ids: Array[Long], val src: Array[Int],
-      val dst: Array[Int], val weight: Array[Double], val eid: Array[Long]) {
+      val dst: Array[Int], val weight: Array[Double], val eid: Array[Long]) extends Resident {
     def n: Int = ids.length
     def m: Int = src.length
     /** Dense index of `id`, or -1 when it is not a vertex. */
@@ -491,7 +534,7 @@ object LocalKernels {
       val ks = Array.range(0, b.m).filter(k => b.src(k) != b.dst(k))
       val live = new Array[Boolean](b.n)
       ks.foreach { k => live(b.src(k)) = true; live(b.dst(k)) = true }
-      def pick[A: scala.reflect.ClassTag](a: Array[A]): Array[A] = if (a == null) null else ks.map(a(_))
+      def pick[A: ClassTag](a: Array[A]): Array[A] = if (a == null) null else ks.map(a(_))
       onto(new GraphView(b.ids, pick(b.src), pick(b.dst), pick(b.weight), pick(b.eid)),
         Array.range(0, b.n).filter(live(_)).map(b.ids(_)))
     }

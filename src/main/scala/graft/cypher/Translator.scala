@@ -307,7 +307,9 @@ final class Translator(g: PropertyGraph, params: Map[String, Any] = Map.empty,
     * A final ORDER BY without SKIP/LIMIT sorts in ONE task
     * (`coalesce(1).sortWithinPartitions`) when the query reads at most
     * `spark.graft.algo.localSizeBytes` — the in-task threshold the algorithm
-    * kernels gate on, like the reference's in-memory `SortOperator`. A global
+    * kernels gate on, like the reference's in-memory `SortOperator` — unless
+    * the frame is driver-held rows (a resident kernel hit's, see
+    * [[sortsOnDriver]]): those sort on the driver with no job. A global
     * `orderBy` plans a range exchange whose partitioner first runs a sampling
     * job that re-executes the whole child, then a shuffle: two extra jobs and
     * a re-scan for a result one task can sort. Larger or unbounded inputs
@@ -331,12 +333,29 @@ final class Translator(g: PropertyGraph, params: Map[String, Any] = Map.empty,
       val keys = orderCols(ret.orderBy, items)
       out =
         if (ret.skip.isEmpty && ret.limit.isEmpty && readsAtMost(out, LocalKernels.localSizeBytes(spark)))
-          out.coalesce(1).sortWithinPartitions(keys: _*)
+          sortsOnDriver(out, keys).getOrElse(out.coalesce(1).sortWithinPartitions(keys: _*))
         else out.orderBy(keys: _*)
     }
     ret.skip.foreach(n => out = out.offset(n.toInt))
     ret.limit.foreach(n => out = out.limit(n.toInt))
     out
+  }
+
+  /** `df.orderBy(keys)` when `df` is only projections and filters over one
+    * local relation and `graft.SortLocalRelation` folds that sort into the
+    * relation, so a collect runs no job; None otherwise (a key outside the
+    * projection, for one, leaves a Project above the Sort, which the rule
+    * does not fold). */
+  private def sortsOnDriver(df: DataFrame, keys: Seq[Column]): Option[DataFrame] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project}
+    def overLocal(p: LogicalPlan): Boolean = p match {
+      case _: LocalRelation => true
+      case Project(_, c) => overLocal(c)
+      case Filter(_, c) => overLocal(c)
+      case _ => false
+    }
+    if (!overLocal(df.queryExecution.analyzed)) None
+    else Some(df.orderBy(keys: _*)).filter(_.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
   }
 
   /** True when the bytes `df` can read — the summed size estimates of its

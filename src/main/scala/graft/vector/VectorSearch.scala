@@ -1,7 +1,14 @@
 package graft.vector
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.algo.LocalKernels
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{Divide, EvalMode, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Vector similarity search (reference: HNSW indexes, `src/vector/index.rs:71-258`,
   * `VectorSearchOperator` `operator.rs:4645-4736`).
@@ -9,6 +16,9 @@ import org.apache.spark.sql.functions._
   * Spark-first re-expression: HNSW is a pointer-chasing in-memory structure
   * that does not distribute; the equivalent capabilities are
   *  - exact k-NN: a scan + top-k (TakeOrderedAndProject) — the oracle path;
+  *    [[knnExactFor]] runs small local-mode inputs as an in-task top-k
+  *    kernel ([[knnTopK]]) whose vector block stays resident, like the
+  *    reference's in-memory index, so a repeated search runs no job;
   *  - approximate at scale: random-hyperplane LSH bucketing (cosine) so the
   *    candidate join touches a small fraction of the corpus, then exact
   *    re-ranking.
@@ -161,14 +171,119 @@ object VectorSearch {
       .limit(k)
   }
 
-  /** Exact top-k where the query vector is a row of another (1-row) DataFrame. */
+  /** Exact top-k where the query vectors are the rows of another DataFrame
+    * (every query row scores against every corpus row, as a cross join
+    * would; the catalog passes one row). The result is what
+    * `emb.crossJoin(q).select(id, cosine).orderBy(score desc, id).limit(k)`
+    * returns, and on a multi-JVM cluster, with the in-task routes off
+    * (`spark.graft.algo.localSizeBytes <= 0`), past that size estimate,
+    * for a non-long id or a vector that is not an array of floats or
+    * doubles it is that plan, the query rows broadcast.
+    *
+    * Otherwise it is the in-task kernel [[knnTopK]], routed like the graph
+    * kernels ([[LocalKernels.routed]]) over a tagged union of the corpus
+    * projection (id, vector) and the query projection (vector): a first
+    * call runs it in one task that scans both, with no broadcast, and a
+    * later call over the same file-backed inputs in this JVM (a resident
+    * hit) runs it here, on the calling thread, and returns its at most `k`
+    * rows, ordered, as a local relation, so a collect runs no job. Neither
+    * route runs a job while the frame is built. A hit that meets a zero
+    * norm under ANSI returns the plan, which raises when it runs. */
   def knnExactFor(emb: DataFrame, idCol: String, vecCol: String,
                   queryDf: DataFrame, queryVecCol: String, k: Int): DataFrame = {
-    val q = broadcast(queryDf.select(col(queryVecCol).as("_qv")))
-    emb.crossJoin(q)
-      .select(col(idCol), cosine(col(vecCol), col("_qv")).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    def plan: DataFrame = {
+      val q = broadcast(queryDf.select(col(queryVecCol).as("_qv")))
+      emb.crossJoin(q)
+        .select(col(idCol), cosine(col(vecCol), col("_qv")).as("score"))
+        .orderBy(col("score").desc, col(idCol).asc)
+        .limit(k)
+    }
+    def typeOf(df: DataFrame, c: String) = df.schema.fields.find(_.name == c).map(_.dataType)
+    def isVec(t: Option[DataType]) = t.exists {
+      case ArrayType(FloatType | DoubleType, _) => true
+      case _ => false
+    }
+    val spark = emb.sparkSession
+    if (k < 0 || !spark.sparkContext.isLocal || !typeOf(emb, idCol).contains(LongType) ||
+        !isVec(typeOf(emb, vecCol)) || !isVec(typeOf(queryDf, queryVecCol))) return plan
+    val both = emb.select(col(idCol), col(vecCol).cast("array<double>"), lit(0))
+      .unionAll(queryDf.select(lit(null).cast("long"), col(queryVecCol).cast("array<double>"), lit(1)))
+    if (!LocalKernels.gate(both, LocalKernels.Estimate)._2) return plan
+    val ansi = spark.conf.get(SQLConf.ANSI_ENABLED.key).toBoolean
+    try LocalKernels.routed(both, Seq(idCol, "score"), narrow = true)(knnBlock)(knnTopK(_, k, ansi))
+    catch { case _: ArithmeticException => plan }
+  }
+
+  /** The corpus and the query vectors of one exact k-NN, as the resident
+    * store holds them: corpus ids (`idNull` marks a null id) with their
+    * vectors and L2 norms, and the query vectors with theirs. A vector that
+    * is null or holds a null element is null here: it scores null against
+    * anything, as `graft_dot` makes it. */
+  private final class KnnBlock(val ids: Array[Long], val idNull: Array[Boolean],
+      val vecs: Array[Array[Double]], val queries: Array[Array[Double]]) extends LocalKernels.Resident {
+    private def norm(v: Array[Double]) = if (v == null) Double.NaN else math.sqrt(arrayDot(v, v))
+    val norms: Array[Double] = vecs.map(norm)
+    val qNorms: Array[Double] = queries.map(norm)
+    val rows: Long = (vecs.iterator ++ queries.iterator).map(v => if (v == null) 1L else v.length + 1L).sum
+  }
+
+  /** [[knnExactFor]]'s union rows — (id, vector, tag), tag 0 a corpus row
+    * and 1 a query row — as a [[KnnBlock]]. */
+  private def knnBlock(it: Iterator[Row]): KnnBlock = {
+    val ids = mutable.ArrayBuilder.make[Long]; val idNull = mutable.ArrayBuilder.make[Boolean]
+    val vecs = mutable.ArrayBuilder.make[Array[Double]]; val queries = mutable.ArrayBuilder.make[Array[Double]]
+    it.foreach { r =>
+      val v = if (r.isNullAt(1)) null else {
+        val xs = r.getSeq[java.lang.Double](1)
+        if (xs.contains(null)) null else xs.iterator.map(_.doubleValue).toArray
+      }
+      if (r.getInt(2) == 1) queries += v
+      else {
+        idNull += r.isNullAt(0); ids += (if (r.isNullAt(0)) 0L else r.getLong(0)); vecs += v
+      }
+    }
+    new KnnBlock(ids.result(), idNull.result(), vecs.result(), queries.result())
+  }
+
+  /** One candidate row of the top-k: an id and a score, either null. */
+  private final case class Scored(id: Long, idNull: Boolean, score: Double, scoreNull: Boolean)
+
+  /** The plan's order: score DESC NULLS LAST (NaN largest, -0.0 = 0.0),
+    * then id ASC NULLS FIRST. */
+  private val ScoredOrder: Ordering[Scored] = (x, y) => {
+    val s =
+      if (x.scoreNull || y.scoreNull) java.lang.Boolean.compare(x.scoreNull, y.scoreNull)
+      else if (x.score == y.score) 0
+      else java.lang.Double.compare(y.score, x.score)
+    if (s != 0) s
+    else if (x.idNull || y.idNull) java.lang.Boolean.compare(y.idNull, x.idNull)
+    else java.lang.Long.compare(x.id, y.id)
+  }
+
+  /** The `k` best (corpus, query) pairs of `b` in [[ScoredOrder]], each
+    * scored as the plan's cosine: `arrayDot(a, q) / (|a| * |q|)`, null for
+    * a null vector or a length mismatch. A zero denominator goes through
+    * Spark's own `Divide`, so it raises `DIVIDE_BY_ZERO` under ANSI
+    * (`ansi`) and is null otherwise. A bounded heap keeps the `k` best. */
+  private def knnTopK(b: KnnBlock, k: Int, ansi: Boolean): Iterator[(Option[Long], Option[Double])] = {
+    val mode = if (ansi) EvalMode.ANSI else EvalMode.LEGACY
+    val worstFirst = new java.util.PriorityQueue[Scored](math.min(k, 1 << 10) + 1, ScoredOrder.reverse)
+    for (j <- b.queries.indices; i <- b.vecs.indices) {
+      val (a, q) = (b.vecs(i), b.queries(j))
+      val score: java.lang.Double =
+        if (a == null || q == null || a.length != q.length) null
+        else {
+          val num = arrayDot(a, q); val den = b.norms(i) * b.qNorms(j)
+          if (den != 0.0) num / den
+          else Divide(Literal(num), Literal(den), mode).eval().asInstanceOf[java.lang.Double]
+        }
+      val c = Scored(b.ids(i), b.idNull(i), if (score == null) 0.0 else score, score == null)
+      if (worstFirst.size < k) worstFirst.add(c)
+      else if (k > 0 && ScoredOrder.lt(c, worstFirst.peek())) { worstFirst.poll(); worstFirst.add(c) }
+    }
+    worstFirst.asScala.toVector.sorted(ScoredOrder).iterator.map { c =>
+      (if (c.idNull) None else Some(c.id), if (c.scoreNull) None else Some(c.score))
+    }
   }
 
   /** Hard-negative mining for retrieval/embedding training: for each anchor

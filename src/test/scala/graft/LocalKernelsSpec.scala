@@ -739,4 +739,26 @@ class LocalKernelsSpec extends SparkSpec {
       assert(jobsDuring(vle.collect()) >= 1, "a side-stream hit ran no job")
     }
   }
+
+  test("CALL algo.wcc … RETURN … ORDER BY at a resident hit: no job, the global sort's rows") {
+    withTempDir("graft_callsort") { dir =>
+      randGraph(41, 25, 60).withColumn("id", monotonically_increasing_id())
+        .withColumn("relationship", lit("E")).write.parquet(s"$dir/e")
+      Seq.tabulate(25)(i => (1000L + 7L * i, Seq("N"))).toDF("id", "labels").write.parquet(s"$dir/n")
+      val g = graft.model.PropertyGraph(spark.read.parquet(s"$dir/n"), spark.read.parquet(s"$dir/e"))
+      val q = "CALL algo.wcc({edgeType: 'E'}) YIELD id, component RETURN id, component ORDER BY id"
+      val miss = graft.cypher.QueryEngine.execute(q, g).collect().toSeq
+      var hit: DataFrame = null
+      var rows: Seq[Row] = null
+      assert(jobsDuring { hit = graft.cypher.QueryEngine.execute(q, g); rows = hit.collect().toSeq } == 0,
+        "a hit's CALL … ORDER BY ran a job")
+      assert(hit.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec],
+        hit.queryExecution.executedPlan.toString)
+      spark.conf.set("spark.graft.algo.localSizeBytes", "0")
+      val global = try graft.cypher.QueryEngine.execute(q, g).collect().toSeq
+      finally spark.conf.unset("spark.graft.algo.localSizeBytes")
+      assert(rows == global)
+      assert(miss == global)
+    }
+  }
 }
